@@ -63,16 +63,19 @@ def test_hyperplane_topk_recall(clustered):
 
 def test_hyperplane_bucket_balance(clustered):
     """±1 hyperplanes must not funnel most vectors into one bucket (the
-    r1 sign-of-first-dims skew failure)."""
+    r1 sign-of-first-dims skew failure). Names resolve as in ``F.col``:
+    a dotted name selects a struct field."""
     from vmware_graph_spark.operators.similarity import hyperplane_bucket
 
-    counts = (
-        clustered.select(hyperplane_bucket("embedding", 16, 6).alias("b"))
-        .groupBy("b")
-        .count()
-        .collect()
-    )
-    assert max(c["count"] for c in counts) <= 0.25 * 200
+    nested = clustered.select(F.struct(F.col("embedding").alias("vec")).alias("embed"))
+    for df, name in ((clustered, "embedding"), (nested, "embed.vec")):
+        counts = (
+            df.select(hyperplane_bucket(name, 16, 6).alias("b"))
+            .groupBy("b")
+            .count()
+            .collect()
+        )
+        assert max(c["count"] for c in counts) <= 0.25 * 200
 
 
 def test_ivf_multiprobe_recall_improves(clustered):

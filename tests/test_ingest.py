@@ -583,6 +583,77 @@ def test_publish_swaps_snapshot_under_live_lineage(spark, tmp_path):
     assert not (tmp_path / "snap.old").exists()
 
 
+def test_publish_crash_between_renames_keeps_previous_graph(spark, tmp_path, monkeypatch):
+    """A publish that dies after moving the live snapshot to ``.old`` but
+    before staging takes its place must not lose the previous graph:
+    ``read`` restores it, and the next publish completes cleanly."""
+    import os
+
+    from vmware_graph_spark.store import graph
+    from vmware_graph_spark.store.graph import GraphStore
+
+    path = str(tmp_path / "snap")
+    s1 = GraphStore(spark)
+    s1.upsert_nodes("Vcenterserver", spark.createDataFrame([("vc1",)], ["uid"]))
+    s1.publish(path)
+
+    real_rename = os.rename
+
+    def crash_on_swap_in(src, dst):
+        if src.endswith(".staging"):
+            raise OSError("simulated crash between the publish renames")
+        real_rename(src, dst)
+
+    s2 = GraphStore(spark)
+    s2.upsert_nodes("Vcenterserver", spark.createDataFrame([("vc2",)], ["uid"]))
+    monkeypatch.setattr(graph.os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError, match="simulated crash"):
+        s2.publish(path)
+    monkeypatch.undo()
+    assert not (tmp_path / "snap").exists()  # the crash window
+
+    prev = GraphStore.read(spark, path)
+    assert {r.uid for r in prev.vertices("Vcenterserver").collect()} == {"vc1"}
+
+    s2.publish(path)
+    out = GraphStore.read(spark, path)
+    assert {r.uid for r in out.vertices("Vcenterserver").collect()} == {"vc2"}
+    assert not (tmp_path / "snap.staging").exists()
+    assert not (tmp_path / "snap.old").exists()
+
+
+def test_edge_pairs_is_materialized_on_return(spark):
+    """On a checkpointing store ``edge_pairs`` hands back an already
+    materialized frame: a later action reads the checkpoint blocks in
+    one single-stage job instead of re-running the edge-batch union and
+    its distinct (write() fans out over plans that share this frame)."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    store = GraphStore(spark)
+    store.add_edges(
+        spark.createDataFrame(
+            [("Vswitch", "s1", "ON_HOST", "Vspherehost", "h1"),
+             ("Vspherehost", "h2", "ON_HOST", "Vswitch", "s2"),
+             ("Vswitch", "s1", "ON_HOST", "Vspherehost", "h1")],
+            ["src_label", "src_key", "rel_type", "dst_label", "dst_key"],
+        )
+    )
+    pairs = store.edge_pairs("Vswitch", "Vspherehost")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "edge-pairs-materialized"
+    sc.setJobGroup(group, "action on edge_pairs output")
+    try:
+        rows = pairs.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert {(r.a_key, r.b_key) for r in rows} == {("s1", "h1"), ("s2", "h2")}
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+
 def test_cli_refresh_accepts_real_xlsx(spark, tmp_path, capsys):
     """`python -m vmware_graph_spark refresh export.xlsx snap/` works
     end-to-end with a genuine .xlsx workbook and a partial sheet set

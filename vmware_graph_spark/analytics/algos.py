@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -385,6 +385,40 @@ def _pagerank_round(
     ).localCheckpoint(eager=True)
 
 
+def _pagerank_iterate(
+    vertices: DataFrame,
+    edges: DataFrame,
+    *,
+    out_agg: Column,
+    init_rank: Column,
+    iters: int,
+    contrib_sql: str,
+    dangling_sql: str,
+    update_sql: str,
+) -> DataFrame:
+    """The loop every PageRank variant shares, over the caller's pinned
+    ``vertices`` (hashed on id): pin the edges hashed on src, pin and
+    count the per-src ``out_agg`` table (one job materializing both
+    pins), materialize ``init_rank`` as the round-0 ranks, then run
+    ``iters`` :func:`_pagerank_round` calls. Returns (id, rank)."""
+    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
+    out_tab = edges.groupBy("src").agg(out_agg).localCheckpoint(eager=False)
+    out_tab.count()
+    ranks = vertices.select("id", init_rank.alias("rank")).localCheckpoint(eager=True)
+    for _ in range(iters):
+        ranks = _pagerank_round(
+            vertices,
+            edges,
+            ranks,
+            out_tab,
+            contrib_sql=contrib_sql,
+            dangling_sql=dangling_sql,
+            update_sql=update_sql,
+        )
+    return ranks
+
+
 def pagerank(
     vertices: DataFrame,
     edges: DataFrame,
@@ -415,32 +449,22 @@ def pagerank(
     p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     vertices = vertices.repartition(p, "id").localCheckpoint(eager=False)
     n = vertices.count()
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=False)
-    )
-    out_deg.count()
-    ranks = vertices.select("id", F.lit(1.0).alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
     # Dangling mass stays in the plan: a 1-row aggregate broadcast into
     # the update — no driver collect, one job per iteration. The round
     # itself is one templated SQL statement (see _pagerank_round).
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            vertices,
-            edges,
-            ranks,
-            out_deg,
-            contrib_sql="r.rank / o.out_deg",
-            dangling_sql="coalesce(sum(r2.rank), 0.0D)",
-            update_sql=(
-                f"{1.0 - damping!r}D + {damping!r}D * "
-                f"(coalesce(c.in_sum, 0.0D) + dg.__dangling / {float(n)!r}D)"
-            ),
-        )
-    return ranks
+    return _pagerank_iterate(
+        vertices,
+        edges,
+        out_agg=F.count("*").alias("out_deg"),
+        init_rank=F.lit(1.0),
+        iters=iters,
+        contrib_sql="r.rank / o.out_deg",
+        dangling_sql="coalesce(sum(r2.rank), 0.0D)",
+        update_sql=(
+            f"{1.0 - damping!r}D + {damping!r}D * "
+            f"(coalesce(c.in_sum, 0.0D) + dg.__dangling / {float(n)!r}D)"
+        ),
+    )
 
 
 def pagerank_fixed(
@@ -474,29 +498,20 @@ def pagerank_fixed(
     vertices = vertices.repartition(p, "id").localCheckpoint(eager=False)
     n = vertices.count()
     base = (100 - damping_pct) * scale // 100
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=False)
+    ranks = _pagerank_iterate(
+        vertices,
+        edges,
+        out_agg=F.count("*").alias("out_deg"),
+        init_rank=F.lit(scale).cast("long"),
+        iters=iters,
+        contrib_sql="r.rank div o.out_deg",
+        dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
+        update_sql=(
+            f"CAST({base} + (({damping_pct} * "
+            f"(coalesce(c.in_sum, cast(0 as long))"
+            f" + (dg.__dangling div {n}))) div 100) AS LONG)"
+        ),
     )
-    out_deg.count()
-    ranks = vertices.select("id", F.lit(scale).cast("long").alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            vertices,
-            edges,
-            ranks,
-            out_deg,
-            contrib_sql="r.rank div o.out_deg",
-            dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
-            update_sql=(
-                f"CAST({base} + (({damping_pct} * "
-                f"(coalesce(c.in_sum, cast(0 as long))"
-                f" + (dg.__dangling div {n}))) div 100) AS LONG)"
-            ),
-        )
     return ranks.select("id", F.col("rank").alias("rank_micros"))
 
 
@@ -524,29 +539,20 @@ def pagerank_weighted_fixed(
     vertices = vertices.repartition(p, "id").localCheckpoint(eager=False)
     n = vertices.count()
     base = (100 - damping_pct) * scale // 100
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_w = (
-        edges.groupBy("src")
-        .agg(F.sum("w").cast("long").alias("out_w"))
-        .localCheckpoint(eager=False)
+    ranks = _pagerank_iterate(
+        vertices,
+        edges,
+        out_agg=F.sum("w").cast("long").alias("out_w"),
+        init_rank=F.lit(scale).cast("long"),
+        iters=iters,
+        contrib_sql="(r.rank * e.w) div o.out_w",
+        dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
+        update_sql=(
+            f"CAST({base} + (({damping_pct} * "
+            f"(coalesce(c.in_sum, cast(0 as long))"
+            f" + (dg.__dangling div {n}))) div 100) AS LONG)"
+        ),
     )
-    out_w.count()
-    ranks = vertices.select("id", F.lit(scale).cast("long").alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            vertices,
-            edges,
-            ranks,
-            out_w,
-            contrib_sql="(r.rank * e.w) div o.out_w",
-            dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
-            update_sql=(
-                f"CAST({base} + (({damping_pct} * "
-                f"(coalesce(c.in_sum, cast(0 as long))"
-                f" + (dg.__dangling div {n}))) div 100) AS LONG)"
-            ),
-        )
     return ranks.select("id", F.col("rank").alias("rank_micros"))
 
 
@@ -656,32 +662,21 @@ def personalized_pagerank_fixed(
         .join(F.broadcast(seed_flags), "id", "left")
         .localCheckpoint(eager=False)
     )
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=False)
+    ranks = _pagerank_iterate(
+        v,
+        edges,
+        out_agg=F.count("*").alias("out_deg"),
+        init_rank=F.when(F.col("__seed"), F.lit(scale)).otherwise(F.lit(0)).cast("long"),
+        iters=iters,
+        contrib_sql="r.rank div o.out_deg",
+        dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
+        update_sql=(
+            f"CAST((CASE WHEN v.__seed THEN {base} ELSE 0 END) + "
+            f"(({damping_pct} * (coalesce(c.in_sum, cast(0 as long))"
+            f" + (case when v.__seed then dg.__dangling div {s_n}"
+            f" else cast(0 as long) end))) div 100) AS LONG)"
+        ),
     )
-    out_deg.count()
-    ranks = v.select(
-        "id",
-        F.when(F.col("__seed"), F.lit(scale)).otherwise(F.lit(0)).cast("long").alias("rank"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            v,
-            edges,
-            ranks,
-            out_deg,
-            contrib_sql="r.rank div o.out_deg",
-            dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
-            update_sql=(
-                f"CAST((CASE WHEN v.__seed THEN {base} ELSE 0 END) + "
-                f"(({damping_pct} * (coalesce(c.in_sum, cast(0 as long))"
-                f" + (case when v.__seed then dg.__dangling div {s_n}"
-                f" else cast(0 as long) end))) div 100) AS LONG)"
-            ),
-        )
     return ranks.select("id", F.col("rank").alias("rank_micros"))
 
 

@@ -26,6 +26,7 @@ embarrassingly parallel, no driver iteration, 100 TB-safe.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -95,8 +96,6 @@ class RefreshResult:
         self._store = store
         self.orphans = orphans
         self._finish_edges = _finish_edges
-        import threading
-
         self._finish_lock = threading.Lock()
 
     @property

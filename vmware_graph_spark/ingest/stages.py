@@ -39,6 +39,7 @@ from vmware_graph_spark.functions.scalar import (
     split_literal,
     try_int,
 )
+from vmware_graph_spark.operators.merge import _bt
 from vmware_graph_spark.store.graph import GraphStore, node_key
 
 UID = "VI SDK UUID"
@@ -72,12 +73,6 @@ def _dim(store: GraphStore, df: DataFrame, label: str, name_expr, extra=None) ->
     for k, e in (extra or {}).items():
         cols.append(e.alias(k))
     store.upsert_nodes(label, df.select(*cols).filter(F.col("name").isNotNull()).distinct())
-
-
-def _bt(name: str) -> str:
-    """Backtick-quote an identifier for SQL-string expression building
-    (RVTools column names carry spaces and '#')."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 class _Raw(str):

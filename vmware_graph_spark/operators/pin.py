@@ -32,10 +32,9 @@ DISK_ONLY rather than MEMORY_*: pinned frames here are bounded but not
 tiny (≤ √(2·token mass) histogram rows; batch-sized dedup derivations),
 and a disk read is still ~100× cheaper than re-running the corpus-wide
 explode/groupBy that produced them. Iterative per-round truncation
-(analytics/algos) keeps localCheckpoint: there the lineage CHAIN is the
-problem (it grows per iteration until analysis dominates), recompute
-from the full chain is exactly what must never happen, and on a cluster
-those call sites document reliable ``checkpoint()`` as the swap-in.
+calls ``localCheckpoint`` directly: there the lineage CHAIN is the
+problem, and recompute from the full chain is exactly what must never
+happen (DEPLOY.md, "Reliable checkpoint dir", has the cluster swap-in).
 """
 
 from __future__ import annotations
@@ -107,27 +106,3 @@ def pinned_lazy(df: DataFrame) -> DataFrame:
     Registered for :func:`release_pins` like every pin."""
     return _register(df.persist(StorageLevel.DISK_ONLY))
 
-
-def iterpin(df: DataFrame) -> DataFrame:
-    """Per-round lineage TRUNCATION for iterative algorithms (k-truss,
-    CC, PageRank-style loops): ``localCheckpoint(eager=True)``. Here
-    the growing lineage CHAIN is the problem — analysis cost compounds
-    per round and a recompute from the full chain is exactly what must
-    never happen — so truncation is intended, not an oversight.
-    Cluster deployment note (same contract as analytics/algos.py):
-    localCheckpoint blocks live on executors and are lost with them; on
-    a multi-executor cluster swap this body for reliable
-    ``df.checkpoint()`` with ``spark.sparkContext.setCheckpointDir`` on
-    shared storage — identical semantics, failure-safe blocks."""
-    return df.localCheckpoint(eager=True)
-
-
-def iterpin_lazy(df: DataFrame) -> DataFrame:
-    """Lazy variant of :func:`iterpin` for iterative loops whose round
-    output is consumed exactly once by the next round's plan build
-    (PQ codebook refinement, NN-Descent rounds): lineage TRUNCATION is
-    the point — without it each round's plan embeds every prior
-    round — but deferring materialization keeps the whole loop one job
-    chain. Same cluster note as iterpin: swap for reliable
-    ``df.checkpoint()`` on shared storage off-box."""
-    return df.localCheckpoint(eager=False)

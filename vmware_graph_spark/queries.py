@@ -1763,10 +1763,6 @@ def ingest_vcluster_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     return store.vertices("Vcentercluster").select(
@@ -1812,10 +1808,6 @@ def ingest_version_split_stage(spark, sf_dir):
             (F.col("r_regionkey") + 14000000).cast("string"),
         ).alias("VI SDK Server type"),
     )
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     stage_vcenter_version(store, {"vInfo": vinfo})
@@ -1871,10 +1863,6 @@ def ingest_ntp_classify_stage(spark, sf_dir):
         F.col("s_name").alias("Host"),
         ntp.alias("NTP Server(s)"),
     )
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     store.upsert_nodes("Vspherehost", hosts)
     stage_ntp(store, {"vHost": sheet})
@@ -1926,10 +1914,6 @@ def ingest_rp_hierarchy_stage(spark, sf_dir):
         )
 
     vrp = sheet(base).unionByName(sheet(child))
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     stage_vrp(store, {"vRP": vrp})
@@ -2060,10 +2044,6 @@ def ingest_vhost_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vhost
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     stage_vhost(store, {"vHost": _vhost_sheet(spark, sf_dir)})
@@ -2208,10 +2188,6 @@ def ingest_vswitch_jumbo_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vswitch
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     _seed_hosts(spark, sf_dir, store)
@@ -2374,10 +2350,6 @@ def ingest_vinfo_conditional_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vinfo_vms
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     r = load_table(spark, sf_dir, "region")
@@ -2568,10 +2540,6 @@ def ingest_vdatastore_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vdatastore
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     _seed_hosts(spark, sf_dir, store)
@@ -2711,10 +2679,6 @@ def ingest_vdisk_path_parse_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vdisk
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     _seed_vm_ds_host(spark, sf_dir, store)
     stage_vdisk(store, {"vDisk": _vdisk_sheet(spark, sf_dir)})
@@ -2964,10 +2928,6 @@ def ingest_vport_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vport, stage_vswitch
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     _seed_hosts(spark, sf_dir, store)
@@ -3010,10 +2970,6 @@ def ingest_vnic_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vnic, stage_vswitch
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     _seed_hosts(spark, sf_dir, store)
@@ -3053,10 +3009,6 @@ def ingest_vnetwork_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vnetwork
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     _seed_vm_ds_host(spark, sf_dir, store)
@@ -3092,10 +3044,6 @@ def ingest_vpartition_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vpartition
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     _seed_vm_ds_host(spark, sf_dir, store)
@@ -3121,10 +3069,6 @@ def ingest_vsnapshot_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vsnapshot
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     _seed_vm_ds_host(spark, sf_dir, store)
@@ -3159,10 +3103,6 @@ def ingest_vhost_domain_stage(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vhost
     from vmware_graph_spark.store.graph import GraphStore, US
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     seeds = spark.createDataFrame(
@@ -3208,10 +3148,6 @@ def snapshot_write_read_roundtrip(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     path = tempfile.mkdtemp(prefix="vgs_snapshot_")
@@ -3248,10 +3184,6 @@ def ingest_progress_counts(spark, sf_dir):
     from vmware_graph_spark.ingest.stages import stage_vcluster
     from vmware_graph_spark.store.graph import GraphStore
 
-    # isolated few-stage run: with lazy per-label flushing the merge
-    # chains stay shallow, so skipping lineage cuts entirely is the
-    # fastest shape (measured ~20% over checkpoint_every=2 at sf0.1);
-    # full refreshes keep checkpointing for their deep chains.
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
     counts = store.counts()

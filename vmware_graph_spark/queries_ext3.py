@@ -743,10 +743,6 @@ _BLOOM_M = 131072  # bits
 _BLOOM_K = 3  # hash functions
 
 
-def _bloom_pos_sql(seed: str, key: str) -> str:
-    return f"('0x' || substr(md5('{seed}:' || {key}), 1, 8))::BIGINT % {_BLOOM_M}"
-
-
 _BLOOM_SQL = f"""
     WITH ok AS (
       SELECT DISTINCT o_custkey AS k FROM orders

@@ -164,11 +164,8 @@ def k_truss_part_cooccurrence(spark, sf_dir):
             .filter(F.col("sup") >= _TRUSS_K - 2)
             .select("a", "b")
         )
-        # iterative per-round truncation — same exemption class as
-        # analytics/algos.py; iterpin documents the cluster swap-in
-        from vmware_graph_spark.operators.pin import iterpin
-
-        e = iterpin(e)
+        # per-round lineage truncation (cluster swap-in: DEPLOY.md)
+        e = e.localCheckpoint(eager=True)
     final_sup = support(e)
     return (
         e.join(final_sup, ["a", "b"], "left")

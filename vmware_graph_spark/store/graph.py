@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from vmware_graph_spark.operators.merge import (
     EDGE_COLS,
     PROPS_COL,
+    _bt,
     merge_edges,
     merge_edges_with_props,
     merge_nodes,
@@ -150,8 +151,6 @@ def _fuse_batches(
     4 identical-schema Vportgroup upserts; dimension labels collect a
     dozen across a refresh.)
     """
-    from vmware_graph_spark.operators.merge import _bt
-
     runs: list[list[tuple[DataFrame, bool]]] = []
     sig = None
     for updates, oco in pend:
@@ -189,6 +188,17 @@ def _fuse_batches(
     return out
 
 
+def _recover_publish(path: str) -> None:
+    """Finish a ``publish`` that died between its two renames: the live
+    snapshot was already moved to ``path.old`` but staging never took
+    its place. Restoring ``.old`` keeps the previous graph readable —
+    without it ``read`` would see no snapshot, and the next refresh
+    would run as a first build and delete ``.old`` on publish."""
+    backup = path.rstrip("/") + ".old"
+    if not os.path.isdir(path) and os.path.isdir(backup):
+        os.rename(backup, path)
+
+
 class GraphStore:
     """In-memory (lazy DataFrame) snapshot of the property graph.
 
@@ -196,11 +206,14 @@ class GraphStore:
     one DataFrame per label plus a list of edge batches that
     ``edges()`` merges/canonicalizes on demand. Everything is lazy —
     a refresh builds one big DAG and materializes at write time.
+
+    ``checkpoint=False`` skips the lineage cuts, the fastest shape for
+    an isolated few-stage run, whose merge chains stay shallow
+    (measured ~20% faster at sf0.1 than cutting every second
+    read-back); full refreshes keep the default for their deep chains.
     """
 
-    def __init__(
-        self, spark: SparkSession, *, checkpoint: bool = True, checkpoint_every: int = 1
-    ):
+    def __init__(self, spark: SparkSession, *, checkpoint: bool = True):
         self.spark = spark
         self._vertices: dict[str, DataFrame] = {}
         # label → [(updates, on_create_only)] not yet merged: upserts
@@ -219,43 +232,14 @@ class GraphStore:
         # Upserts compose: without lineage truncation the plan for label
         # L after stage N embeds every prior stage's joins, and Catalyst
         # analysis cost grows super-linearly (a 15-stage ingest never
-        # finishes analyzing). localCheckpoint (eager=False — defers
-        # computation, so the refresh stays one job chain) is the
-        # single-JVM analog of persisting stage outputs; on a cluster
-        # the snapshot writer (``write``) plays the same role.
-        #
-        # The cut itself is not free: the .rdd conversion inside
-        # localCheckpoint runs full physical planning of the chain so
-        # far (~95% of a measured single-stage ingest was driver-side
-        # planning, not execution). ``checkpoint_every`` trades cut
-        # frequency against plan depth: >1 skips cuts until a label has
-        # accumulated that many upserts. Measured on the full 2-pass
-        # 12-sheet refresh at sf0.01, every=1 wins (172 s vs 178 s at 2,
-        # 211 s at 4 — deeper uncut chains make every *subsequent*
-        # analysis pass costlier), while isolated single-stage runs
-        # prefer 4 by ~15%. Default 1; raise only for few-stage flows.
+        # finishes analyzing). Every read-back is therefore cut with
+        # localCheckpoint (eager=False — defers computation, so the
+        # refresh stays one job chain; DEPLOY.md has the cluster
+        # swap-in).
         self._checkpoint = checkpoint
-        self._every = max(1, checkpoint_every)
-        self._since_cut: dict[str, int] = {}
-        # Lazy cuts handed to CALLERS (edge_pairs) get embedded in
-        # multiple downstream plans — several label chains plus the
-        # edge union. write()'s concurrent fan-out materializes those
-        # plans from 8 threads at once, and a still-unmaterialized
-        # shared cut would be computed racily/redundantly by whichever
-        # threads hit it first (round-8 ADVICE #3). Tracked here so
-        # write() can materialize each one ONCE, serially, pre-fan-out.
-        self._shared_cuts: list[DataFrame] = []
 
-    def _cut(self, df: DataFrame, label: str | None = None) -> DataFrame:
-        if not self._checkpoint:
-            return df
-        if label is not None:
-            n = self._since_cut.get(label, 0) + 1
-            if n < self._every:
-                self._since_cut[label] = n
-                return df
-            self._since_cut[label] = 0
-        return df.localCheckpoint(eager=False)
+    def _cut(self, df: DataFrame, *, eager: bool = False) -> DataFrame:
+        return df.localCheckpoint(eager=eager) if self._checkpoint else df
 
     # -- vertices ----------------------------------------------------------
 
@@ -286,7 +270,7 @@ class GraphStore:
                 on_create_only=on_create_only,
                 assume_unique_existing=cur is not None,
             )
-        self._vertices[label] = self._cut(cur, label)
+        self._vertices[label] = self._cut(cur)
 
     def vertices(self, label: str) -> DataFrame | None:
         self._flush(label)
@@ -325,8 +309,6 @@ class GraphStore:
         else:
             extra = [c for c in cols if c not in EDGE_COLS]
             if extra:
-                from vmware_graph_spark.operators.merge import _bt
-
                 pairs = ", ".join(
                     "'" + c.replace("'", "''") + f"', cast({_bt(c)} AS string)"
                     for c in extra
@@ -396,11 +378,12 @@ class GraphStore:
         # plan, and without a cut every later edges()/edge_pairs call
         # would re-execute the whole batch union nested inside it —
         # measured 3× slower on the vDisk stage than the canonical
-        # edges() path this method replaces.
-        out = self._cut(fwd.unionByName(rev).distinct())
-        if self._checkpoint:  # plain plans need no pre-materialization
-            self._shared_cuts.append(out)
-        return out
+        # edges() path this method replaces. The cut is EAGER: several
+        # label chains plus the edge union embed the result, and a lazy
+        # cut would be computed by whichever of write()'s concurrent
+        # writers reached it first, racily and redundantly (round-8
+        # ADVICE #3). The frame is small (distinct key pairs).
+        return self._cut(fwd.unionByName(rev).distinct(), eager=True)
 
     def edges_with_props(self) -> DataFrame:
         """The canonical edge table WITH its ``props`` string map —
@@ -488,16 +471,6 @@ class GraphStore:
             jobs.append((label, df, cols))
         edges = self.edges_with_props()
 
-        # Materialize cuts that MULTIPLE fan-out plans embed (the
-        # edge_pairs hop outputs) once, serially, before the threads
-        # start — first-touch from 8 threads at once would compute the
-        # same shared subtree racily/redundantly (round-8 ADVICE #3).
-        # These frames are small (distinct key pairs), so the count is
-        # cheap; after it, every thread reads the checkpoint blocks.
-        for cut in self._shared_cuts:
-            cut.count()
-        self._shared_cuts.clear()
-
         def _write_label(job):
             label, df, cols = job
             w = df.write.mode("overwrite")
@@ -536,6 +509,7 @@ class GraphStore:
         files mid-scan. On a cluster the same pattern is a new snapshot
         prefix plus a pointer flip — never overwrite-in-place.
         """
+        _recover_publish(path)
         staging = path.rstrip("/") + ".staging"
         backup = path.rstrip("/") + ".old"
         for d in (staging, backup):
@@ -550,6 +524,7 @@ class GraphStore:
 
     @classmethod
     def read(cls, spark: SparkSession, path: str) -> "GraphStore":
+        _recover_publish(path)
         store = cls(spark)
         vdir = os.path.join(path, "vertices")
         if os.path.isdir(vdir):
