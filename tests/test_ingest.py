@@ -191,11 +191,20 @@ def test_hw_version_edges(built):
     assert (k("vm-uuid-2", "uid-1"), "11") in hw
 
 
+def _props_comparable(df):
+    """Map columns can't go through set operations; compare props as
+    their sorted entry arrays."""
+    return df.withColumn("props", F.array_sort(F.map_entries("props")))
+
+
 def test_hw_version_edge_props_written_and_reread(built, spark, tmp_path):
     """The one reference edge property (HW_VERSION.upgradestatus,
     refresh-vmware.cypher:187,212) is first-class: packed at ingest,
-    persisted by write(), restored by read() — round-2 VERDICT #1."""
-    from vmware_graph_spark.store.graph import GraphStore
+    persisted by write(), restored by read() — round-2 VERDICT #1.
+    ``read`` serves the written edge table as-is (no re-merge): its
+    ``edges()`` and ``edges_with_props()`` hold exactly the in-memory
+    store's rows, undirected types included."""
+    from vmware_graph_spark.store.graph import UNDIRECTED_TYPES, GraphStore
 
     store, _ = built
     path = str(tmp_path / "snap_props")
@@ -210,6 +219,82 @@ def test_hw_version_edge_props_written_and_reread(built, spark, tmp_path):
     # prop-less edges round-trip with an EMPTY map, not null
     bare = back.edges_with_props().filter(F.col("rel_type") == "IN_FOLDER").first()
     assert bare.props == {}
+
+    mem, disk = store.edges(), back.edges()
+    assert disk.filter(F.col("rel_type").isin(*UNDIRECTED_TYPES)).count() > 0
+    assert mem.exceptAll(disk).count() == 0 and disk.exceptAll(mem).count() == 0
+    mem_p = _props_comparable(store.edges_with_props())
+    disk_p = _props_comparable(back.edges_with_props())
+    assert mem_p.exceptAll(disk_p).count() == 0
+    assert disk_p.exceptAll(mem_p).count() == 0
+
+
+def test_read_store_add_edges_still_merges(spark, tmp_path):
+    """A store built from a read snapshot keeps full MERGE semantics: a
+    duplicate edge and a reversed undirected edge collapse into the
+    published rows, and a re-asserted edge property is last-writer-wins."""
+    from vmware_graph_spark.store.graph import EDGE_SCHEMA, GraphStore
+
+    cols = ["src_label", "src_key", "rel_type", "dst_label", "dst_key"]
+    s1 = GraphStore(spark)
+    s1.add_edges(spark.createDataFrame(
+        [("Vdatastore", "ds1", "ON_DATASTORE", "Virtualdisk", "d1")], cols
+    ))
+    s1.add_edges(spark.createDataFrame(
+        [("Virtualmachine", "vm1", "HW_VERSION", "Vhwver", "14", "Pending")],
+        cols + ["upgradestatus"],
+    ))
+    path = str(tmp_path / "snap")
+    s1.write(path)
+
+    back = GraphStore.read(spark, path)
+    back.add_edges(spark.createDataFrame(
+        [("Virtualdisk", "d1", "ON_DATASTORE", "Vdatastore", "ds1")], EDGE_SCHEMA
+    ))
+    back.add_edges(spark.createDataFrame(
+        [("Virtualmachine", "vm1", "HW_VERSION", "Vhwver", "14", "Done")],
+        cols + ["upgradestatus"],
+    ))
+    assert {tuple(r) for r in back.edges().collect()} == {
+        ("Vdatastore", "ds1", "ON_DATASTORE", "Virtualdisk", "d1"),
+        ("Virtualmachine", "vm1", "HW_VERSION", "Vhwver", "14"),
+    }
+    props = {r.rel_type: r.props for r in back.edges_with_props().collect()}
+    assert props == {"ON_DATASTORE": {}, "HW_VERSION": {"upgradestatus": "Done"}}
+
+
+def test_all_vertex_keys_equal_node_key(spark, tmp_path):
+    """The one-statement ``all_vertex_keys`` gives ``node_key`` per
+    label — including NULL for a composite key with a null component."""
+    import os
+
+    from vmware_graph_spark.store.graph import LABEL_KEYS, GraphStore, node_key
+
+    path = str(tmp_path / "snap")
+    vdir = os.path.join(path, "vertices")
+    spark.createDataFrame([("vc1",), ("vc2",)], "uid string").write.parquet(
+        os.path.join(vdir, "Vcenterserver")
+    )
+    spark.createDataFrame(
+        [("c1", "vc1", "x"), ("c2", None, "y")], "name string, managedby string, ha string"
+    ).write.parquet(os.path.join(vdir, "Vcentercluster"))
+    store = GraphStore.read(spark, path)
+
+    got = store.all_vertex_keys()
+    want = None
+    for label in store.labels():
+        part = store.vertices(label).select(
+            F.lit(label).alias("label"), node_key(*LABEL_KEYS[label]).alias("key")
+        )
+        want = part if want is None else want.unionByName(part)
+    assert got.columns == ["label", "key"]
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert {(r.label, r.key) for r in got.collect()} == {
+        ("Vcenterserver", "vc1"),
+        ("Vcenterserver", "vc2"),
+        ("Vcentercluster", k("c1", "vc1")),
+        ("Vcentercluster", None),
+    }
 
 
 def test_esx_version_build_split(built):
@@ -652,6 +737,80 @@ def test_edge_pairs_is_materialized_on_return(spark):
     jobs = tracker.getJobIdsForGroup(group)
     assert len(jobs) == 1, jobs
     assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+
+def _small_snapshot_store(spark):
+    from vmware_graph_spark.store.graph import GraphStore
+
+    store = GraphStore(spark)
+    store.upsert_nodes("Vcenterserver", spark.createDataFrame([("vc1",)], ["uid"]))
+    store.upsert_nodes(
+        "Vcentercluster", spark.createDataFrame([("c1", "vc1")], ["name", "managedby"])
+    )
+    store.add_edges(spark.createDataFrame(
+        [("Vcentercluster", k("c1", "vc1"), "CONTROLLED_BY_VC", "Vcenterserver", "vc1")],
+        ["src_label", "src_key", "rel_type", "dst_label", "dst_key"],
+    ))
+    return store
+
+
+def test_write_and_read_jobs_keep_callers_job_group(spark, tmp_path):
+    """The concurrent label writes and opens run on pool threads; every
+    Spark job they submit still carries the caller's job group."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    store = _small_snapshot_store(spark)
+    path = str(tmp_path / "snap")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    group = "snapshot-write-read"
+    sc.setJobGroup(group, "write + read a snapshot")
+    try:
+        store.write(path)
+        GraphStore.read(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup(group)) >= 3  # 2 label writes + edges
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_analytics_views_on_read_store_submits_no_jobs(spark, tmp_path):
+    """A read snapshot's analytics views are plain scans: building them
+    plans only and submits no Spark job (a re-merge of the published
+    edge table cut under AQE would run its dedup shuffle as a job)."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    path = str(tmp_path / "snap")
+    _small_snapshot_store(spark).write(path)
+    back = GraphStore.read(spark, path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "analytics-views-on-read"
+    sc.setJobGroup(group, "analytics_views on a read snapshot")
+    try:
+        v, e = back.analytics_views()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup(group) == []
+    assert v.count() == 2 and e.count() == 1
+
+
+def test_store_import_leaves_pandas_unloaded():
+    """pandas loads only inside the mapInPandas bodies that use it."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys, vmware_graph_spark.store.graph; "
+        "sys.exit('pandas' in sys.modules)"
+    )
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")])}
+    assert subprocess.run([sys.executable, "-c", code], env=env).returncode == 0
 
 
 def test_cli_refresh_accepts_real_xlsx(spark, tmp_path, capsys):

@@ -23,8 +23,11 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import ThreadPoolExecutor, as_completed
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +35,7 @@ from vmware_graph_spark.operators.merge import (
     EDGE_COLS,
     PROPS_COL,
     _bt,
+    _norm_props,
     merge_edges,
     merge_edges_with_props,
     merge_nodes,
@@ -188,6 +192,37 @@ def _fuse_batches(
     return out
 
 
+T = TypeVar("T")
+
+
+def _fan_out(spark: SparkSession, tasks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run ``tasks`` concurrently on a small bounded pool; results in
+    task order. Each task is one tiny Spark job (a label write, a
+    label's schema inference), so serial submission is pure scheduler
+    latency — jobs from several threads share the scheduler (FAIR/FIFO
+    both fine for jobs with disjoint outputs). Each task inherits the
+    caller's local properties (job group, description, scheduler pool),
+    which pinned-thread pool workers would otherwise drop.
+
+    as_completed + cancel-on-first-failure: a failing task aborts the
+    still-queued ones instead of burning the full fan-out cost before
+    surfacing the error (round-8 ADVICE #3). Already-running jobs
+    finish (Spark jobs aren't interruptible from here); queued ones
+    never start."""
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        # wrap per task: each wrap clones the properties, so concurrent
+        # tasks never share (and race on) one JVM Properties object
+        futs = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
+        try:
+            for f in as_completed(futs):
+                f.result()
+        except BaseException:
+            for f in futs:
+                f.cancel()
+            raise
+    return [f.result() for f in futs]
+
+
 def _recover_publish(path: str) -> None:
     """Finish a ``publish`` that died between its two renames: the live
     snapshot was already moved to ``path.old`` but staging never took
@@ -279,20 +314,21 @@ class GraphStore:
     def labels(self) -> list[str]:
         return sorted(set(self._vertices) | set(self._pending))
 
-    def vertex_keys(self, label: str) -> DataFrame:
-        """(label, key) pairs for a label — the edge-table id space."""
-        self._flush(label)
-        keys = LABEL_KEYS[label]
-        return self._vertices[label].select(
-            F.lit(label).alias("label"), node_key(*keys).alias("key")
-        )
-
     def all_vertex_keys(self) -> DataFrame:
-        out = None
-        for label in self.labels():
-            part = self.vertex_keys(label)
-            out = part if out is None else out.unionByName(part)
-        return out
+        """(label, key) pairs for every vertex — the edge-table id
+        space — as ONE ``UNION ALL`` statement: one analysis instead of
+        one ``unionByName`` re-analysis per label. The key is
+        ``node_key``'s (``chr(31)`` is ``US``), NULL when any component is."""
+        frames, parts = {}, []
+        for i, label in enumerate(self.labels()):
+            frames[f"v{i}"] = self.vertices(label)
+            key = ", chr(31), ".join(
+                f"CAST({_bt(k)} AS STRING)" for k in LABEL_KEYS[label]
+            )
+            parts.append(
+                f"SELECT '{label}' AS label, concat({key}) AS `key` FROM {{v{i}}}"
+            )
+        return self.spark.sql(" UNION ALL ".join(parts), **frames)
 
     # -- edges -------------------------------------------------------------
 
@@ -390,7 +426,7 @@ class GraphStore:
         same rows as ``edges()`` plus per-edge properties merged
         per-key across batches (operators.merge.merge_edges_with_props).
         This is the surface the snapshot writer persists."""
-        if getattr(self, "_edges_props_cache", None) is not None:
+        if self._edges_props_cache is not None:
             return self._edges_props_cache
         batch = self._union_edge_batches()
         if batch is None:
@@ -452,13 +488,8 @@ class GraphStore:
         publish, skip on every read after.
         """
         # flush serially (mutates shared state), then submit the ~42
-        # per-label write JOBS concurrently: each is tiny, so serial
-        # submission is pure scheduler latency — concurrent submission
-        # is the standard Spark pattern (jobs from multiple threads
-        # share the scheduler; FAIR/FIFO both fine for write-only jobs
-        # with disjoint outputs). Measured at sf0.01: publish 17 s → ~6 s.
-        from concurrent.futures import ThreadPoolExecutor, as_completed
-
+        # per-label write jobs concurrently (see _fan_out). Measured at
+        # sf0.01: publish 17 s → ~6 s.
         jobs = []
         for label in self.labels():
             self._flush(label)
@@ -471,8 +502,7 @@ class GraphStore:
             jobs.append((label, df, cols))
         edges = self.edges_with_props()
 
-        def _write_label(job):
-            label, df, cols = job
+        def _write_label(label, df, cols):
             w = df.write.mode("overwrite")
             if cols:
                 w = w.partitionBy(*cols)
@@ -483,22 +513,10 @@ class GraphStore:
                 os.path.join(path, "edges")
             )
 
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            futs = [pool.submit(_write_label, j) for j in jobs]
-            futs.append(pool.submit(_write_edges))
-            try:
-                # as_completed + cancel-on-first-failure: a failing
-                # publish aborts the still-queued writes instead of
-                # burning the full fan-out cost before surfacing the
-                # error (round-8 ADVICE #3). Already-running jobs
-                # finish (Spark jobs aren't interruptible from here);
-                # queued ones never start.
-                for f in as_completed(futs):
-                    f.result()
-            except BaseException:
-                for f in futs:
-                    f.cancel()
-                raise
+        _fan_out(
+            self.spark,
+            [lambda j=j: _write_label(*j) for j in jobs] + [_write_edges],
+        )
 
     def publish(self, path: str) -> None:
         """Write the snapshot to a staging dir, then swap it into place.
@@ -524,19 +542,35 @@ class GraphStore:
 
     @classmethod
     def read(cls, spark: SparkSession, path: str) -> "GraphStore":
+        """Open a published snapshot as plain scans. Label directories
+        open concurrently (each runs a schema-inference job).
+
+        ``write`` is the only writer of ``edges/`` and it persists
+        ``edges_with_props()``: null keys dropped, undirected types
+        canonicalized, one row per 5-tuple. So both edge caches are
+        plain projections of the scan — no re-merge, no lineage cut. The
+        scan is also queued as an edge batch, so a later ``add_edges``
+        re-merges the union with full MERGE semantics."""
         _recover_publish(path)
         store = cls(spark)
         vdir = os.path.join(path, "vertices")
         if os.path.isdir(vdir):
-            for label in sorted(os.listdir(vdir)):
-                store._vertices[label] = spark.read.parquet(os.path.join(vdir, label))
+            labels = sorted(os.listdir(vdir))
+            dfs = _fan_out(
+                spark,
+                [lambda d=os.path.join(vdir, lb): spark.read.parquet(d) for lb in labels],
+            )
+            store._vertices.update(zip(labels, dfs))
         edir = os.path.join(path, "edges")
         if os.path.isdir(edir):
             # Explicit schema: a snapshot written from an edge-less graph
             # has no parquet data files to infer from. Pre-props
             # snapshots simply yield an all-null props column, which
-            # add_edges normalizes to empty maps.
-            store.add_edges(spark.read.schema(EDGE_SCHEMA_PROPS).parquet(edir))
+            # _norm_props turns into empty maps.
+            edges = spark.read.schema(EDGE_SCHEMA_PROPS).parquet(edir)
+            store.add_edges(edges)
+            store._edges_cache = edges.select(*EDGE_COLS)
+            store._edges_props_cache = _norm_props(edges)
         return store
 
     # -- versioned snapshots (time travel) ---------------------------------
@@ -617,22 +651,16 @@ class GraphStore:
 
     def counts(self) -> dict[str, int]:
         """Per-label node counts + edge count (the reference's RETURN
-        count(…) progress lines, cypher:54,224) in ONE Spark job: each
-        table contributes a 1-row aggregate and the union collects
-        once — label subtrees execute in parallel instead of serially
-        (round-2 VERDICT minor: one-job-per-label)."""
-        parts = [
-            self.vertices(label)
-            .agg(F.count("*").alias("n"))
-            .select(F.lit(f"v:{label}").alias("metric"), "n")
-            for label in self.labels()
-        ]
-        parts.append(
-            self.edges().agg(F.count("*").alias("n")).select(
-                F.lit("edges").alias("metric"), "n"
-            )
-        )
-        allc = parts[0]
-        for p in parts[1:]:
-            allc = allc.unionByName(p)
+        count(…) progress lines, cypher:54,224) in ONE action: each
+        table contributes a 1-row aggregate to one ``UNION ALL``
+        statement that collects once, so the label subtrees execute in
+        parallel instead of serially (round-2 VERDICT minor:
+        one-job-per-label). Under AQE each branch's aggregate still runs
+        as its own job."""
+        frames = {"edges": self.edges()}
+        parts = ["SELECT 'edges' AS metric, count(*) AS n FROM {edges}"]
+        for i, label in enumerate(self.labels()):
+            frames[f"v{i}"] = self.vertices(label)
+            parts.append(f"SELECT 'v:{label}' AS metric, count(*) AS n FROM {{v{i}}}")
+        allc = self.spark.sql(" UNION ALL ".join(parts), **frames)
         return {r["metric"]: r["n"] for r in allc.collect()}
