@@ -36,7 +36,7 @@ def test_leakage_safe_split_vs_naive_split_fixture(spark):
     """On a fixture with one near-dup pair, the naive doc_id split can
     separate the pair (keys chosen so it does), while the cluster-keyed
     assignment keeps them together by construction."""
-    from vmware_graph_spark.analytics.algos import connected_components_star
+    from vmware_graph_spark.analytics.algos import connected_components
     from vmware_graph_spark.functions.sketch import hash_split
     from vmware_graph_spark.operators.dedup import minhash_lsh_pairs
 
@@ -50,7 +50,7 @@ def test_leakage_safe_split_vs_naive_split_fixture(spark):
     )
     got = {(r.id_a, r.id_b) for r in pairs.select("id_a", "id_b").collect()}
     assert (1, 8) in got
-    cc = connected_components_star(
+    cc = connected_components(
         docs.select(F.col("doc_id").alias("id")),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
     )

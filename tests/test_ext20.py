@@ -49,7 +49,7 @@ def test_jsd_extremes_disjoint_and_identical(spark, tmp_path):
 
 
 def test_cluster_size_histogram_conserves_totals(spark):
-    from vmware_graph_spark.analytics.algos import connected_components_star
+    from vmware_graph_spark.analytics.algos import connected_components
     from vmware_graph_spark.operators.dedup import minhash_lsh_pairs
     from vmware_graph_spark.queries_ext20 import dedup_cluster_size_histogram
     from vmware_graph_spark.sources.tables import load_table
@@ -61,7 +61,7 @@ def test_cluster_size_histogram_conserves_totals(spark):
         d, "doc_id", "text", n=3, num_hashes=8, bands=4, verify_threshold=0.4
     )
     n_clusters = (
-        connected_components_star(
+        connected_components(
             d.select(F.col("doc_id").alias("id")),
             pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         )
@@ -485,7 +485,7 @@ def test_cc_star_local_finish_matches_pure_dataflow(spark):
     """The driver-side union-find finish (bounded collect) must label
     exactly like the pure large-star/small-star fixpoint — and the
     dataflow path stays exercised by forcing local_finish_edges=0."""
-    from vmware_graph_spark.analytics.algos import connected_components_star
+    from vmware_graph_spark.analytics.algos import connected_components
 
     # chain + triangle + isolated vertices, string ids
     edges = spark.createDataFrame(
@@ -497,11 +497,11 @@ def test_cc_star_local_finish_matches_pure_dataflow(spark):
     )
     local = {
         (r.id, r.component)
-        for r in connected_components_star(vertices, edges).collect()
+        for r in connected_components(vertices, edges).collect()
     }
     dataflow = {
         (r.id, r.component)
-        for r in connected_components_star(
+        for r in connected_components(
             vertices, edges, local_finish_edges=0
         ).collect()
     }

@@ -50,7 +50,7 @@ def test_connected_components_raises_when_truncated(spark):
     v = spark.createDataFrame([(str(i),) for i in range(6)], ["id"])
     e = spark.createDataFrame([(str(i), str(i + 1)) for i in range(5)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(v, e, max_iters=1)
+        connected_components(v, e, max_iters=1, local_finish_edges=0)
 
 
 def test_pagerank_matches_numpy_reference(spark):
@@ -92,44 +92,30 @@ def test_pagerank_rank_mass_conserved(spark):
 
 
 def test_star_cc_matches_min_label(spark):
-    """large-star/small-star CC labels == min-label CC labels on a
-    multi-component graph."""
-    from vmware_graph_spark.analytics.algos import (
-        connected_components,
-        connected_components_star,
-    )
-
+    """Star-contraction CC labels every vertex with its component's
+    minimum id on a multi-component graph (hand-derived map)."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")], "src string, dst string"
     )
-    ids = [(x,) for x in "abcdefg"]
-    vertices = spark.createDataFrame(ids, "id string")
-    star = {(r.id, r.component) for r in connected_components_star(vertices, edges).collect()}
-    prop = {(r.id, r.component) for r in connected_components(vertices, edges).collect()}
-    assert star == prop
-    assert ("g", "g") in star  # isolated vertex labels itself
+    vertices = spark.createDataFrame([(x,) for x in "abcdefg"], "id string")
+    got = {r.id: r.component for r in connected_components(vertices, edges).collect()}
+    # f has only a self-loop and g no edge: both label themselves.
+    assert got == {
+        "a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f", "g": "g"
+    }
 
 
 def test_star_cc_beats_diameter_bound(spark):
-    """A 64-node path has diameter 63: min-label with 10 iters must
-    raise, star CC converges in O(log n) rounds and labels everything
-    with the path's minimum id."""
-    import pytest as _pytest
-
-    from vmware_graph_spark.analytics.algos import (
-        connected_components,
-        connected_components_star,
-    )
-
+    """A 64-node path has diameter 63, yet the pure star-contraction
+    dataflow (no union-find finish) converges in 10 rounds and labels
+    everything with the path's minimum id."""
     n = 64
     ids = [f"v{i:03d}" for i in range(n)]
     edges = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(n - 1)], "src string, dst string"
     )
     vertices = spark.createDataFrame([(x,) for x in ids], "id string")
-    with _pytest.raises(RuntimeError):
-        connected_components(vertices, edges, max_iters=10)
-    got = connected_components_star(vertices, edges, max_iters=10)
+    got = connected_components(vertices, edges, max_iters=10, local_finish_edges=0)
     assert {r.component for r in got.collect()} == {"v000"}
 
 
@@ -245,6 +231,9 @@ def test_k_core_cascade_needs_multiple_rounds(spark):
     # fixed-round mode after 1 round still holds the inner path b-c-d.
     one = {r["id"] for r in k_core(e, 2, rounds=1).collect()}
     assert one == {"b", "c", "d"}
+    # fixpoint mode capped below the cascade depth raises, not truncates.
+    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
+        k_core(e, 2, max_iters=1)
 
 
 def test_k_core_ignores_parallel_edges_and_self_loops(spark):

@@ -11,11 +11,12 @@ Edges are treated as undirected for CC/degrees; PageRank is directed.
 
 Scale notes: each iteration is one shuffle on vertex id. Lineage is cut
 with localCheckpoint per iteration (on a cluster: reliable checkpoint
-dir) — without it the plan doubles every round. Convergence uses a
-count of changed labels, which AQE executes as a cheap partial agg.
-For web-scale graphs swap the label-propagation loop for the
-large-star/small-star algorithm (Kiveris et al., "Connected Components
-in MapReduce and Beyond") — same DataFrame skeleton, fewer rounds.
+dir) — without it the plan doubles every round. Loops that run to a
+fixpoint gate on a cheap count (or count+sum) and confirm with one exact
+probe (``_same_rows``). Connected components is large-star/small-star
+contraction (Kiveris et al., "Connected Components in MapReduce and
+Beyond") — O(log n) rounds whatever the diameter, finished by a bounded
+driver-side union-find.
 """
 
 from __future__ import annotations
@@ -84,89 +85,6 @@ def _sym(edges: DataFrame) -> DataFrame:
     ).select("e.src", "e.dst")
 
 
-def connected_components(
-    vertices: DataFrame, edges: DataFrame, *, max_iters: int = 20
-) -> DataFrame:
-    """Min-label propagation: component id = min vertex id (lexicographic).
-
-    Returns (id, component). Deterministic: labels are ids, min is total.
-    Raises if the label propagation has not converged within
-    ``max_iters`` — a silent partial result would be wrong for any graph
-    whose diameter exceeds the cap. (The O(log n)-round large-star/
-    small-star variant is the swap-in for web-scale diameters.)
-
-    Contract: ``vertices`` must cover every edge endpoint (both in-tree
-    callers derive it that way); output rows are anchored on the vertex
-    table.
-    """
-    # LAZY checkpoints + a FULL-count convergence probe: the probe job
-    # is the single action per iteration — it materializes the round's
-    # checkpoint blocks as a side effect (a full count computes every
-    # partition, so no localCheckpoint block can be left unmaterialized
-    # — a limit(1) short-circuit would be unsafe here) and reads the
-    # convergence signal from the same pass.
-    #
-    # CO-PARTITIONED round shape (guide §2.4 — establish the
-    # partitioning once, reuse it every round): both loop tables are
-    # hash-laid-out ONCE up front — sym by src (hashpartitioning(src)
-    # satisfies ClusteredDistribution([src, dst]), so the edge dedup
-    # runs partition-local behind the same single exchange) and labels
-    # by id. Each round then needs exactly ONE exchange (the
-    # neighbor-min aggregation re-keys src→dst); the sym⋈labels probe
-    # and the labels⟕nbr_min merge are both exchange-free because
-    # every operand already hashes on the join key, and checkpoints
-    # preserve the layout into the next round. The former union-agg
-    # shape re-exchanged sym per round AND paid a second old-vs-new
-    # join for the changed count; here the old label rides the merge
-    # row, so the convergence count folds into the round's only
-    # materializing action.
-    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        _sym(edges)
-        .repartition(p, "src")
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        vertices.select("id", F.col("id").alias("component"))
-        .repartition(p, "id")
-        .localCheckpoint(eager=False)
-    )
-    changed = -1
-    spark = vertices.sparkSession
-    for _ in range(max_iters):
-        # candidate = min(own label, min over neighbors' labels). The
-        # whole round body is ONE templated spark.sql call: the
-        # DataFrame-API form (join → groupBy/agg → join → select) ran
-        # eager analysis on every intermediate, and ~70% of a round's
-        # wall at bench scale was that driver-side planning, not the
-        # count job (measured r13: round construction 0.31-0.53 s vs
-        # 0.11 s execution). Identical logical plan, one analysis.
-        step = spark.sql(
-            """
-            SELECT l.id, l.component AS __old,
-                   least(l.component, coalesce(m.__nbr, l.component)) AS component
-            FROM {labels} l LEFT JOIN (
-              SELECT s.dst AS id, min(l2.component) AS __nbr
-              FROM {sym} s JOIN {labels} l2 ON s.src = l2.id
-              GROUP BY s.dst
-            ) m ON l.id = m.id
-            """,
-            labels=labels,
-            sym=sym,
-        ).localCheckpoint(eager=False)
-        changed = step.filter(F.col("component") != F.col("__old")).count()
-        labels = step.select("id", "component")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} iterations; "
-            "raise max_iters (diameter exceeds cap)"
-        )
-    return labels
-
-
 def label_propagation(
     vertices: DataFrame, edges: DataFrame, *, iters: int = 3
 ) -> DataFrame:
@@ -188,8 +106,8 @@ def label_propagation(
     join-aggregate skeleton as PageRank, lineage-cut per round.
     Isolated vertices keep their own label.
     """
-    # Co-partitioned loop layout (guide §2.4, the connected_components
-    # shape): sym hash(dst) — the vote probe's join key — and labels
+    # Co-partitioned loop layout (guide §2.4, the pagerank shape): sym
+    # hash(dst) — the vote probe's join key — and labels
     # hash(id), both established once (hash(dst) also satisfies the
     # edge dedup's (src, dst) clustering). Per round the probe join and
     # the winners merge are exchange-free; the single exchange is the
@@ -438,14 +356,14 @@ def pagerank(
     # n-count it already pays; the out_deg count materializes both the
     # edges pin (its input) and itself in one job.
     #
-    # CO-PARTITIONED layout (guide §2.4, same shape as
-    # connected_components): edges hash on src, vertices/ranks hash on
-    # id, established ONCE at pin time and preserved by every round's
-    # checkpoint — the edges⋈ranks probe, the out_deg join (and its
-    # aggregation, which runs exchange-free behind the src layout), the
-    # dangling anti-join and the vertices⟕contribs merge are then all
-    # exchange-free; the only per-round exchange is the contribution
-    # aggregation re-keying src→dst.
+    # CO-PARTITIONED layout (guide §2.4): edges hash on src,
+    # vertices/ranks hash on id, established ONCE at pin time and
+    # preserved by every round's checkpoint — the edges⋈ranks probe,
+    # the out_deg join (and its aggregation, which runs exchange-free
+    # behind the src layout), the dangling anti-join and the
+    # vertices⟕contribs merge are then all exchange-free; the only
+    # per-round exchange is the contribution aggregation re-keying
+    # src→dst.
     p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     vertices = vertices.repartition(p, "id").localCheckpoint(eager=False)
     n = vertices.count()
@@ -737,26 +655,37 @@ def _unionfind_labels(pairs: list[tuple]) -> dict:
     }
 
 
-def connected_components_star(
+def _same_rows(a: DataFrame, b: DataFrame) -> bool:
+    """Exact fixpoint probe: True iff ``a`` and ``b`` hold the same
+    multiset of rows. One job — the two-sided ``exceptAll``, each side
+    cut at its first row. Loops call it only in rounds that a cheap
+    count (or count+sum) gate already says may be the fixpoint."""
+    diff = a.exceptAll(b).limit(1).unionAll(b.exceptAll(a).limit(1)).limit(1)
+    return diff.count() == 0
+
+
+def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     *,
     max_iters: int = 25,
     local_finish_edges: int = 100_000,
 ) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14).
+    """Connected components of the undirected graph by large-star/
+    small-star contraction (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14).
 
-    Alternates the two star contractions until the edge set reaches its
-    fixpoint — O(log n) rounds regardless of graph diameter, which is
-    the property that makes this the 100 TB path where min-label
-    propagation (``connected_components``) needs O(diameter) shuffles.
-    Returns (id, component) with component = min vertex id, identical
-    labeling to ``connected_components``. Raises if not converged.
+    Returns (id, component) with component = the minimum vertex id of
+    the component. Deterministic: labels are ids, min is total.
+    Contract: ``vertices`` must cover every edge endpoint; output rows
+    are anchored on the vertex table. Alternates the two star
+    contractions until the edge set reaches its fixpoint — O(log n)
+    rounds regardless of graph diameter — and raises if ``max_iters``
+    rounds do not reach it (a silent partial result would be wrong).
 
     Once the (distinct, contracted) edge set fits ``local_finish_edges``
-    — at entry for LSH-sparse pair graphs, or after a round or two of
-    contraction otherwise — the remainder finishes as a driver-side
+    — at entry for small or LSH-sparse graphs, or after a round or two
+    of contraction otherwise — the remainder finishes as a driver-side
     union-find instead of paying ~4 jobs per further round: each star
     round costs checkpoint+count actions that dominate wall-clock when
     the frontier is small relative to the cluster, and the bound keeps
@@ -764,11 +693,11 @@ def connected_components_star(
     construction. Labeling is identical (min id per component). Set
     ``local_finish_edges=0`` to force pure dataflow to the fixpoint.
     """
-    # LAZY checkpoint folded into the count action (the min-label CC
-    # shape): the count materializes the checkpoint blocks as a side
-    # effect, so edge prep is ONE job instead of two (eager checkpoint
-    # then a count over the cached blocks). A full count touches every
-    # partition, so no block is left unmaterialized.
+    # LAZY checkpoint folded into the count action: the count
+    # materializes the checkpoint blocks as a side effect, so edge prep
+    # is ONE job instead of two (eager checkpoint then a count over the
+    # cached blocks). A full count touches every partition, so no block
+    # is left unmaterialized.
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -776,62 +705,45 @@ def connected_components_star(
         .localCheckpoint(eager=False)
     )
     e_cnt = e.count()
-
-    def _finish_local(cur: DataFrame) -> DataFrame:
-        comp = _unionfind_labels([(r.u, r.v) for r in cur.collect()])
-        id_type = cur.schema["u"].dataType
-        schema = T.StructType(
-            [T.StructField("id", id_type), T.StructField("component", id_type)]
-        )
-        labels_df = vertices.sparkSession.createDataFrame(
-            list(comp.items()), schema
-        )
-        return (
-            vertices.join(F.broadcast(labels_df), "id", "left")
-            .select(
-                "id", F.coalesce("component", F.col("id")).alias("component")
-            )
-        )
-
-    converged = False
+    labels = None
     for _ in range(max_iters):
         if 0 < e_cnt <= local_finish_edges:
-            return _finish_local(e)
-        if e_cnt == 0:
-            converged = True  # no edges — every vertex is a singleton
+            comp = _unionfind_labels([(r.u, r.v) for r in e.collect()])
+            id_type = e.schema["u"].dataType
+            schema = T.StructType(
+                [T.StructField("id", id_type), T.StructField("component", id_type)]
+            )
+            labels = F.broadcast(
+                vertices.sparkSession.createDataFrame(list(comp.items()), schema)
+            )
             break
+        if e_cnt == 0:
+            break  # no edges — every vertex is a singleton
         # Lazy checkpoint + the count as the round's single
         # materializing action (one job per round instead of two).
         new_e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         # Cheap gate first: distinct edge SETS can't be equal if their
         # counts differ, and early contraction rounds always shrink the
-        # set — the exact (two-sided exceptAll) fixpoint check only
-        # runs in rounds where the count is stable. Same convergence
-        # point, ~one scan instead of three for most rounds. Both sides
-        # of the exceptAll read already-materialized checkpoint blocks
-        # (this round's count and last round's).
+        # set — the exact probe only runs in rounds where the count is
+        # stable. Same convergence point, ~one scan instead of three for
+        # most rounds. Both sides of the probe read already-materialized
+        # checkpoint blocks (this round's count and last round's).
         new_cnt = new_e.count()
-        same = False
-        if new_cnt == e_cnt:
-            diff = (
-                new_e.exceptAll(e).limit(1)
-                .unionAll(e.exceptAll(new_e).limit(1))
-                .limit(1)
-            )
-            same = diff.count() == 0
+        same = new_cnt == e_cnt and _same_rows(new_e, e)
         e, e_cnt = new_e, new_cnt
         if same:
-            converged = True
             break
-    if not converged:
+    else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} rounds"
+            f"connected_components did not converge in {max_iters} rounds; "
+            "raise max_iters"
         )
-    # Fixpoint edges form stars (node → component root). Roots and
-    # isolated vertices label themselves.
-    labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
-        F.col("u").alias("id"), "component"
-    )
+    if labels is None:
+        # Fixpoint edges form stars (node → component root). Roots and
+        # isolated vertices label themselves.
+        labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
+            F.col("u").alias("id"), "component"
+        )
     return (
         vertices.join(labels, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
@@ -986,10 +898,10 @@ def weighted_sssp(
     style. Returns (id, landmark, dist) for REACHABLE pairs only.
 
     Each round is one equi-join + one min-aggregate, both hashed on the
-    vertex id — O(longest-shortest-path) rounds, the same tradeoff as
-    min-label CC (use it on bounded-diameter graphs; raise
-    ``max_iters`` for long chains). Convergence is checked exactly
-    (``exceptAll`` fixpoint, like connected_components_star), and
+    vertex id — O(longest-shortest-path) rounds (use it on
+    bounded-diameter graphs; raise ``max_iters`` for long chains).
+    Convergence is checked exactly (``_same_rows``, as in
+    connected_components), and
     non-convergence raises instead of returning wrong distances —
     negative-weight cycles can never converge and are therefore
     surfaced, not silently looped over."""
@@ -999,8 +911,8 @@ def weighted_sssp(
     # materializes it; a single consumer stage per round, so no
     # concurrent-materialization race.
     #
-    # CO-PARTITIONED layout (guide §2.4, the connected_components
-    # shape): edges hash(src), dist hash(id) — the relaxation probe is
+    # CO-PARTITIONED layout (guide §2.4, the pagerank shape): edges
+    # hash(src), dist hash(id) — the relaxation probe is
     # then exchange-free every round, the relaxed candidates take ONE
     # repartition to hash(id) (which satisfies the (id, landmark)
     # aggregation clustering, so the min-agg runs partition-local
@@ -1048,18 +960,11 @@ def weighted_sssp(
         # only GROWS and each pair's dist only DECREASES under min-plus
         # relaxation, so the state can't be a fixpoint unless both the
         # pair count and the total distance are unchanged — one
-        # aggregate per round. The exact two-sided exceptAll probe runs
+        # aggregate per round. The exact _same_rows probe runs
         # only in (count, sum)-stable rounds, which outside pathological
         # sum collisions is the convergence round itself.
         new_stats = new.agg(F.count("*"), F.sum("dist")).first()
-        same = False
-        if tuple(new_stats) == tuple(stats):
-            diff = (
-                new.exceptAll(dist).limit(1)
-                .unionAll(dist.exceptAll(new).limit(1))
-                .limit(1)
-            )
-            same = diff.count() == 0
+        same = tuple(new_stats) == tuple(stats) and _same_rows(new, dist)
         dist, stats = new, new_stats
         if same:
             return dist

@@ -31,6 +31,59 @@ def two_hop_motif(
     return ab.join(bc, "b").select("a", "b", "c")
 
 
+def _hop_frontier(
+    vertices: DataFrame,
+    edges: DataFrame,
+    seeds: DataFrame,
+    *,
+    max_hops: int,
+    directed: bool,
+) -> DataFrame:
+    """The frontier loop behind ``shortest_paths`` and ``bfs_distances``.
+
+    ``seeds`` holds the distinct hop-0 keys: ``id`` first, then any
+    source columns carried along each path (``landmark``). Returns the
+    visited set — the key columns plus ``dist``, the fewest hops from
+    the seed — restricted to ``vertices``. Each hop is one SQL
+    statement: expand the frontier, anti-join the visited set on the
+    full key, one shuffle keyed on vertex id.
+    """
+    e = edges.select("src", "dst")
+    if not directed:
+        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    e = e.distinct().localCheckpoint(eager=True)
+
+    keys = ", ".join(seeds.columns)
+    carried = "".join(f", f.{c}" for c in seeds.columns[1:])
+    visited = seeds.withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
+    frontier = visited
+    spark = vertices.sparkSession
+    for hop in range(1, max_hops + 1):
+        # One templated SQL per hop, and ONE materialization per hop:
+        # nxt stays lazy inside the union's eager checkpoint, and the
+        # next frontier is a filter over the new checkpoint's blocks,
+        # so nothing recomputes.
+        nxt = spark.sql(
+            f"""
+            SELECT {keys}, {hop} AS dist FROM (
+              SELECT DISTINCT e.dst AS id{carried}
+              FROM {{e}} e JOIN {{frontier}} f ON e.src = f.id
+            ) n LEFT ANTI JOIN {{visited}} v USING ({keys})
+            """,
+            e=e,
+            frontier=frontier,
+            visited=visited,
+        )
+        # Union first, then isEmpty: the last hop (empty nxt) writes the
+        # visited set once more, but probing nxt before the union would
+        # cost an extra job on every hop to save that one write.
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        frontier = visited.filter(F.col("dist") == hop)
+        if frontier.isEmpty():
+            break
+    return visited.join(vertices.select("id"), "id", "left_semi")
+
+
 def shortest_paths(
     vertices: DataFrame,
     edges: DataFrame,
@@ -49,45 +102,11 @@ def shortest_paths(
     per vertex forces a wide row and defeats column pruning, while rows
     shuffle-partition evenly and unreachable pairs cost nothing. State
     is the per-(vertex, landmark) visited set; each hop is one shuffle
-    keyed on vertex id, lineage cut per hop (same frontier discipline
-    as ``bfs_distances``).
+    keyed on vertex id, lineage cut per hop (the ``bfs_distances`` loop
+    keyed on (id, landmark)).
     """
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint(eager=True)
-
-    visited = (
-        landmarks.select("id")
-        .distinct()
-        .select("id", F.col("id").alias("landmark"))
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    spark = vertices.sparkSession
-    for hop in range(1, max_hops + 1):
-        # One templated SQL per hop, and ONE materialization per hop:
-        # nxt stays lazy inside the union's eager checkpoint (it used to
-        # be checkpointed separately — two full writes of the frontier),
-        # and the next frontier is a filter over the new checkpoint's
-        # blocks, so nothing recomputes (r13 driver/job-cost cut).
-        nxt = spark.sql(
-            f"""
-            SELECT id, landmark, {hop} AS dist FROM (
-              SELECT DISTINCT e.dst AS id, f.landmark
-              FROM {{e}} e JOIN {{frontier}} f ON e.src = f.id
-            ) n LEFT ANTI JOIN {{visited}} v USING (id, landmark)
-            """,
-            e=e,
-            frontier=frontier,
-            visited=visited,
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("dist") == hop)
-        if frontier.isEmpty():
-            break
-    return visited.join(vertices.select("id"), "id", "left_semi")
+    seeds = landmarks.select("id").distinct().select("id", F.col("id").alias("landmark"))
+    return _hop_frontier(vertices, edges, seeds, max_hops=max_hops, directed=directed)
 
 
 def bfs_distances(
@@ -104,36 +123,8 @@ def bfs_distances(
     hop is one shuffle on vertex id, lineage cut per hop. Unreached
     vertices are omitted (Cypher path-match semantics, not ∞ rows).
     """
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint(eager=True)
-
-    visited = (
-        sources.select("id").distinct().withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
-    )
-    frontier = visited
-    spark = vertices.sparkSession
-    for hop in range(1, max_hops + 1):
-        # Same shape as shortest_paths: one SQL per hop, one
-        # materialization per hop (nxt lazy inside the union
-        # checkpoint; next frontier filters the checkpoint blocks).
-        nxt = spark.sql(
-            f"""
-            SELECT id, {hop} AS dist FROM (
-              SELECT DISTINCT e.dst AS id
-              FROM {{e}} e JOIN {{frontier}} f ON e.src = f.id
-            ) n LEFT ANTI JOIN {{visited}} v USING (id)
-            """,
-            e=e,
-            frontier=frontier,
-            visited=visited,
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("dist") == hop)
-        if frontier.isEmpty():
-            break
-    return visited.join(vertices.select("id"), "id", "left_semi")
+    seeds = sources.select("id").distinct()
+    return _hop_frontier(vertices, edges, seeds, max_hops=max_hops, directed=directed)
 
 
 # ---------------------------------------------------------------------------

@@ -3273,11 +3273,8 @@ def grouping_sets_nation_status_revenue(spark, sf_dir):
 )
 def connected_components_star_bipartite(spark, sf_dir):
     """Large-star/small-star CC (Kiveris et al. SoCC'14) on the same
-    bipartite graph as connected_components_bipartite — the O(log n)-
-    round 100 TB path, oracle-checked to produce the identical
-    labeling."""
-    from vmware_graph_spark.analytics.algos import connected_components_star
-
+    bipartite graph as connected_components_bipartite: both entries run
+    ``connected_components``, each checked by its own oracle."""
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     cid = F.concat(F.lit("c"), F.col("c_custkey"))
@@ -3288,7 +3285,7 @@ def connected_components_star_bipartite(spark, sf_dir):
         .distinct()
     )
     edges = c.select(cid.alias("src"), nid.alias("dst"))
-    return connected_components_star(vertices, edges)
+    return connected_components(vertices, edges)
 
 
 @query(
@@ -4677,15 +4674,13 @@ def near_dedup_clusters(spark, sf_dir):
     prep keeps is_canonical rows. The oracle replays the pair SQL and
     closes it with a recursive-CTE transitive closure. Scale: the pair
     graph is LSH-sparse, and the star contraction is O(log n) rounds."""
-    from vmware_graph_spark.analytics.algos import connected_components_star
-
     d = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
         d, "doc_id", "text", n=3, num_hashes=8, bands=4, verify_threshold=0.4
     )
     vertices = d.select(F.col("doc_id").alias("id"))
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    cc = connected_components_star(vertices, edges)
+    cc = connected_components(vertices, edges)
     return cc.select(
         F.col("id").alias("doc_id"),
         "component",

@@ -896,7 +896,7 @@ def dedup_keep_best_quality(spark, sf_dir):
     over the component assignment, so swapping policies costs one
     column ordering, not a new pipeline.
     """
-    from vmware_graph_spark.analytics.algos import connected_components_star
+    from vmware_graph_spark.analytics.algos import connected_components
     from vmware_graph_spark.operators.dedup import minhash_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
@@ -905,7 +905,7 @@ def dedup_keep_best_quality(spark, sf_dir):
     )
     vertices = d.select(F.col("doc_id").alias("id"))
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    cc = connected_components_star(vertices, edges)
+    cc = connected_components(vertices, edges)
     comp = cc.select(F.col("id").alias("doc_id"), "component").join(
         d.select("doc_id", "n_chars"), "doc_id"
     )

@@ -71,7 +71,7 @@ def leakage_safe_split_documents(spark, sf_dir):
     Scale: the pair graph is LSH-sparse (never all-pairs), star CC is
     O(log n) rounds, and the split itself is a zero-shuffle projection
     on the component key."""
-    from vmware_graph_spark.analytics.algos import connected_components_star
+    from vmware_graph_spark.analytics.algos import connected_components
     from vmware_graph_spark.functions.sketch import hash_split
     from vmware_graph_spark.operators.dedup import minhash_lsh_pairs
 
@@ -79,7 +79,7 @@ def leakage_safe_split_documents(spark, sf_dir):
     pairs = minhash_lsh_pairs(
         d, "doc_id", "text", n=3, num_hashes=8, bands=4, verify_threshold=0.4
     )
-    cc = connected_components_star(
+    cc = connected_components(
         d.select(F.col("doc_id").alias("id")),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
     )

@@ -186,14 +186,14 @@ def dedup_cluster_size_histogram(spark, sf_dir):
     families whose LSH buckets need the skew caps?). Reuses the
     LSH-sparse pair graph + O(log n) star CC; the histogram itself is
     two small-key aggregations."""
-    from vmware_graph_spark.analytics.algos import connected_components_star
+    from vmware_graph_spark.analytics.algos import connected_components
     from vmware_graph_spark.operators.dedup import minhash_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
         d, "doc_id", "text", n=3, num_hashes=8, bands=4, verify_threshold=0.4
     )
-    cc = connected_components_star(
+    cc = connected_components(
         d.select(F.col("doc_id").alias("id")),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
     )
