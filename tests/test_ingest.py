@@ -7,6 +7,8 @@ fixtures build the graph once.
 
 from __future__ import annotations
 
+import importlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -377,6 +379,137 @@ def test_tenant_scoping_other_tenant_untouched(refreshed):
     assert vms2 == {"vm-uuid-5"}
     hosts2 = {r.objid for r in store.vertices("Vspherehost").collect() if r.managedby == "uid-2"}
     assert hosts2 == {"host-4"}
+
+
+def _two_step_edges(spark, prev, curr, tenants):
+    """The refreshed edge table built as two merges: prev's merged edges
+    minus every edge incident to a marked node, then curr's merged
+    edges added after them."""
+    from vmware_graph_spark.operators.snapshot import sweep_edges
+    from vmware_graph_spark.store.graph import LABEL_KEYS, GraphStore, node_key
+
+    marked = spark.createDataFrame([], "label string, key string")
+    for label in prev.labels():
+        v = prev.vertices(label)
+        if "managedby" in v.columns:
+            marked = marked.unionByName(
+                v.filter(F.col("managedby").isin(tenants)).select(
+                    F.lit(label).alias("label"), node_key(*LABEL_KEYS[label]).alias("key")
+                )
+            )
+    ref = GraphStore(spark)
+    ref.add_edges(sweep_edges(prev.edges_with_props(), marked))
+    ref.add_edges(curr.edges_with_props())
+    return ref.edges_with_props()
+
+
+def _edge_rows(df):
+    return {
+        (r.src_label, r.src_key, r.rel_type, r.dst_label, r.dst_key, tuple(sorted(r.props.items())))
+        for r in df.collect()
+    }
+
+
+def test_refresh_edges_equal_two_step_merge(spark, built, refreshed):
+    """One ordered merge over [swept prev batches, curr batches] gives
+    the edge table of merging curr first and that result after prev."""
+    store_a, _ = built
+    curr = run_ingest(spark, fixtures.workbook(spark, "Aprime"), fixtures.seeds(spark))
+    ref = _two_step_edges(spark, store_a, curr, ["uid-1"])
+    got = _edge_rows(refreshed.store.edges_with_props())
+    assert got == _edge_rows(ref)
+    assert any(props for *_, props in got)
+
+
+def _vm_store(spark, vms, edge_batches):
+    """A built store: Virtualmachine rows (uuid, managedby) plus one
+    HW_VERSION edge batch per (vm uuid, managedby, upgradestatus) list,
+    every label already flushed."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    store = GraphStore(spark)
+    store.upsert_nodes(
+        "Virtualmachine", spark.createDataFrame(vms, "uuid string, managedby string")
+    )
+    for batch in edge_batches:
+        store.add_edges(
+            spark.createDataFrame(
+                [("Virtualmachine", k(u, m), "HW_VERSION", "Vhwver", "14", s) for u, m, s in batch],
+                "src_label string, src_key string, rel_type string, dst_label string, "
+                "dst_key string, upgradestatus string",
+            )
+        )
+    for label in store.labels():
+        store.vertices(label)
+    return store
+
+
+def _small_refresh_case(spark):
+    """prev asserts vm-1's edge prop in two batches and holds an edge of
+    the marked vm-2; curr re-asserts vm-2 edge-less, drops vm-3 and
+    overrides vm-1's prop with a smaller value (vm-1 is uid-2's, so
+    never marked)."""
+    prev = _vm_store(
+        spark,
+        [("vm-1", "uid-2"), ("vm-2", "uid-1"), ("vm-3", "uid-1")],
+        [
+            [("vm-1", "uid-2", "Pending"), ("vm-2", "uid-1", "Pending")],
+            [("vm-1", "uid-2", "Done")],
+        ],
+    )
+    curr = _vm_store(spark, [("vm-2", "uid-1")], [[("vm-1", "uid-2", "Alpha")]])
+    sheets = {"vCluster": spark.createDataFrame([("uid-1",)], "`VI SDK UUID` string")}
+    return prev, curr, sheets
+
+
+def test_refresh_prop_override_equals_two_step_merge(spark, monkeypatch):
+    """A prop prev asserted in two batches is overridden by curr's
+    later, smaller value; the marked vm-2's prev edge is swept."""
+    refresh_mod = importlib.import_module("vmware_graph_spark.ingest.refresh")
+    prev, curr, sheets = _small_refresh_case(spark)
+    monkeypatch.setattr(refresh_mod, "run_ingest", lambda *a, **kw: curr)
+    res = refresh_mod.refresh(spark, sheets, prev=prev)
+    got = _edge_rows(res.store.edges_with_props())
+    assert got == _edge_rows(_two_step_edges(spark, prev, curr, ["uid-1"]))
+    assert got == {
+        ("Virtualmachine", k("vm-1", "uid-2"), "HW_VERSION", "Vhwver", "14", (("upgradestatus", "Alpha"),))
+    }
+
+
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (its result, the
+    ids of the Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_refresh_orphans_only_runs_tenant_collect_only(spark, monkeypatch):
+    """Callers that read only ``orphans`` pay no edge work: on built
+    stores ``refresh`` submits the jobs of the tenant collect and no
+    other (under AQE that one collect is a shuffle-map job plus a
+    result job). The result is a plain dataclass."""
+    refresh_mod = importlib.import_module("vmware_graph_spark.ingest.refresh")
+    prev, curr, sheets = _small_refresh_case(spark)
+    monkeypatch.setattr(refresh_mod, "run_ingest", lambda *a, **kw: curr)
+    _, collect_jobs = _group_jobs(
+        spark,
+        "tenant-collect",
+        lambda: sheets["vCluster"].select("VI SDK UUID").distinct().collect(),
+    )
+    res, refresh_jobs = _group_jobs(
+        spark, "refresh-orphans-only", lambda: refresh_mod.refresh(spark, sheets, prev=prev)
+    )
+    assert len(refresh_jobs) == len(collect_jobs) >= 1
+    assert {(r.label, r.key) for r in res.orphans.collect()} == {
+        ("Virtualmachine", k("vm-3", "uid-1"))
+    }
+    assert res == refresh_mod.RefreshResult(res.store, res.orphans)
 
 
 def test_read_workbook_dir_mixed_formats(spark, tmp_path):

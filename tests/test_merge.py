@@ -75,14 +75,14 @@ def _edge(spark, src, rel, dst):
 
 def test_undirected_edge_canonicalizes_both_directions(spark):
     e = _edge(spark, "a", "T", "b").unionByName(_edge(spark, "b", "T", "a"))
-    out = merge_edges(None, e, undirected_types=["T"])
+    out = merge_edges(e, undirected_types=["T"])
     assert out.count() == 1
     assert rows(out, "src_key", "dst_key") == [("a", "b")]
 
 
 def test_directed_edge_keeps_both_directions(spark):
     e = _edge(spark, "a", "T", "b").unionByName(_edge(spark, "b", "T", "a"))
-    out = merge_edges(None, e)
+    out = merge_edges(e)
     assert out.count() == 2
 
 
@@ -98,13 +98,6 @@ def test_canonical_edges_comma_keys_do_not_collide(spark):
     )
     out = canonical_edges(e, ["T"])
     assert out.distinct().count() == 2
-
-
-def test_edge_props_last_writer_wins(spark):
-    e1 = _edge(spark, "vm", "HW_VERSION", "v7").withColumn("upgradestatus", F.lit("none"))
-    e2 = _edge(spark, "vm", "HW_VERSION", "v7").withColumn("upgradestatus", F.lit("pending"))
-    out = merge_edges(e1, e2, prop_cols=["upgradestatus"])
-    assert rows(out, "src_key", "upgradestatus") == [("vm", "pending")]
 
 
 def test_merge_edges_with_props_dedups_and_merges_maps(spark):
@@ -129,7 +122,7 @@ def test_merge_edges_with_props_dedups_and_merges_maps(spark):
             )
         , allowMissingColumns=True)
     )
-    out = merge_edges_with_props(None, e).collect()
+    out = merge_edges_with_props(e).collect()
     assert len(out) == 1
     assert out[0]["props"] == {"upgradestatus": "Pending", "checked": "true"}
 
@@ -146,7 +139,7 @@ def test_merge_edges_with_props_undirected_canonicalizes(spark):
             )
         )
     )
-    out = merge_edges_with_props(None, e, undirected_types=["T"]).collect()
+    out = merge_edges_with_props(e, undirected_types=["T"]).collect()
     assert len(out) == 1
     assert (out[0]["src_key"], out[0]["dst_key"]) == ("a", "b")
     assert out[0]["props"] == {"w": "2"}
@@ -155,7 +148,7 @@ def test_merge_edges_with_props_undirected_canonicalizes(spark):
 def test_merge_edges_with_props_empty_map_for_bare_edges(spark):
     from vmware_graph_spark.operators.merge import merge_edges_with_props
 
-    out = merge_edges_with_props(None, _edge(spark, "a", "T", "b")).collect()
+    out = merge_edges_with_props(_edge(spark, "a", "T", "b")).collect()
     assert out[0]["props"] == {}
 
 
@@ -175,23 +168,8 @@ def test_merge_edges_with_props_last_batch_wins(spark):
             .withColumn("__batch_ord", F.lit(1))
         )
     )
-    out = merge_edges_with_props(None, batches, order_col="__batch_ord").collect()
+    out = merge_edges_with_props(batches, order_col="__batch_ord").collect()
     assert len(out) == 1
-    assert out[0]["props"] == {"upgradestatus": "None"}
-
-
-def test_merge_edges_with_props_updates_beat_existing(spark):
-    """``existing`` is the older snapshot: an update asserting a
-    lexicographically-smaller value still replaces it."""
-    from vmware_graph_spark.operators.merge import merge_edges_with_props
-
-    prev = _edge(spark, "vm", "HW_VERSION", "v7").withColumn(
-        "props", F.create_map(F.lit("upgradestatus"), F.lit("Pending"))
-    )
-    curr = _edge(spark, "vm", "HW_VERSION", "v7").withColumn(
-        "props", F.create_map(F.lit("upgradestatus"), F.lit("None"))
-    )
-    out = merge_edges_with_props(prev, curr).collect()
     assert out[0]["props"] == {"upgradestatus": "None"}
 
 
@@ -327,29 +305,10 @@ def test_merge_edges_spread_identical_rows_single_exchange(spark):
     df = spark.createDataFrame(
         rows, "src_label string, src_key string, rel_type string, dst_label string, dst_key string"
     ).coalesce(1)
-    plain = merge_edges(None, df, undirected_types=["REL"])
-    spread = merge_edges(None, df, undirected_types=["REL"], spread=True)
+    plain = merge_edges(df, undirected_types=["REL"])
+    spread = merge_edges(df, undirected_types=["REL"], spread=True)
     assert spread.exceptAll(plain).count() == 0
     assert plain.exceptAll(spread).count() == 0
     plan = spread._jdf.queryExecution().executedPlan().toString()
     n_exchanges = len(re.findall(r"\bExchange (hash|range|Single)", plan))
     assert n_exchanges == 1, plan[:2000]
-
-
-def test_refresh_result_store_is_lazy_and_idempotent(spark):
-    """RefreshResult defers the final store's edge sweep to first
-    .store access; repeated access returns the same store and the
-    finisher runs once (second access must not re-append edge batches)."""
-    from vmware_graph_spark.ingest.refresh import RefreshResult
-    from vmware_graph_spark.store.graph import GraphStore
-
-    final = GraphStore(spark)
-    calls = []
-
-    def _finish(store):
-        calls.append(1)
-
-    res = RefreshResult(final, spark.createDataFrame([], "label string, key string"), _finish)
-    assert not calls  # construction must not run the finisher
-    assert res.store is final and calls == [1]
-    assert res.store is final and calls == [1]  # idempotent

@@ -11,9 +11,12 @@ Equivalent dataflow without mutable flags (SURVEY §2.9):
    natural key; survivors = per-column merge(prev, curr) minus orphans
    (re-asserted nodes keep properties the new run didn't set — exactly
    Cypher MERGE…SET on a pre-existing node);
-4. edges: ALL prev edges incident to a marked (tenant-owned) node are
-   dropped — the reference deletes every relationship of marked nodes,
-   not just orphans' (cypher:30-31) — then current edges are merged in.
+4. edges: each prev edge batch loses ALL edges incident to a marked
+   (tenant-owned) node — the reference deletes every relationship of
+   marked nodes, not just orphans' (cypher:30-31). The swept prev
+   batches, then this run's batches, are queued in that order on the
+   refreshed store, whose one ``edges_with_props()`` merge applies
+   last-writer-wins per property across all of them.
 
 Labels without a ``managedby`` column (dimension nodes, Vfolder,
 Virtualdisk, Vmadapter, Vpartition, Vsnapshot) are never swept, exactly
@@ -26,8 +29,8 @@ embarrassingly parallel, no driver iteration, 100 TB-safe.
 
 from __future__ import annotations
 
-import threading
-from collections.abc import Callable, Mapping
+from collections.abc import Mapping
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,44 +71,12 @@ def run_ingest(
     return store
 
 
+@dataclass
 class RefreshResult:
-    """Refresh outcome: the post-sweep store plus the orphan id set.
+    """Refresh outcome: the post-sweep store plus the orphan id set."""
 
-    ``store`` is assembled LAZILY on first access. Its edge tables are
-    built from ``sweep_edges`` over BOTH snapshots' full edge unions —
-    ~11 s of pure driver-side plan construction at sf0.1 (the edge
-    batches are lazy-checkpoint chains, and ``edges_with_props`` flushes
-    and re-plans every one of them) — and consumers that only read
-    ``orphans`` (the sweep audit query, the incremental diff paths)
-    never execute any of it. Accessing ``.store`` builds exactly the
-    store the former eager field held: node tables were attached during
-    the label loop; only the edge sweep + merge moves to first use.
-
-    Constructible as ``RefreshResult(store, orphans)`` — the init
-    parameter is named ``store`` (API compatibility with the pre-lazy
-    dataclass; ADVICE r12). The finisher runs exactly once even under
-    concurrent first accesses (lock-guarded swap).
-    """
-
-    def __init__(
-        self,
-        store: GraphStore,
-        orphans: DataFrame,  # (label, key) removed by the sweep
-        _finish_edges: "Callable[[GraphStore], None] | None" = None,
-    ) -> None:
-        self._store = store
-        self.orphans = orphans
-        self._finish_edges = _finish_edges
-        self._finish_lock = threading.Lock()
-
-    @property
-    def store(self) -> GraphStore:
-        if self._finish_edges is not None:
-            with self._finish_lock:
-                if self._finish_edges is not None:
-                    fin, self._finish_edges = self._finish_edges, None
-                    fin(self._store)
-        return self._store
+    store: GraphStore
+    orphans: DataFrame  # (label, key) removed by the sweep
 
 
 def _empty_ids(spark: SparkSession) -> DataFrame:
@@ -166,11 +137,11 @@ def refresh(
         marked = marked.unionByName(part)
 
     # edge refresh: drop every prev edge incident to a marked node
-    # (cypher:30-31), then merge the rebuilt edges in. Props ride along
-    # (sweep_edges anti-joins preserve every edge column). Deferred to
-    # first ``.store`` access — see RefreshResult.
-    def _finish_edges(final_store: GraphStore) -> None:
-        final_store.add_edges(sweep_edges(prev.edges_with_props(), marked))
-        final_store.add_edges(curr.edges_with_props())
-
-    return RefreshResult(final, orphans, _finish_edges)
+    # (cypher:30-31), then queue this run's raw batches after them. The
+    # sweep tests both endpoints, so sweeping before canonicalization
+    # drops the same edges; one ordered merge in edges_with_props()
+    # then equals merging curr first and that result after prev.
+    final._edge_batches = [
+        sweep_edges(b, marked) for b in prev._edge_batches
+    ] + curr._edge_batches
+    return RefreshResult(final, orphans)

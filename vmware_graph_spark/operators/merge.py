@@ -212,18 +212,14 @@ def canonical_edges(edges: DataFrame, undirected_types: Sequence[str] = ()) -> D
 
 
 def merge_edges(
-    existing: DataFrame | None,
     updates: DataFrame,
     *,
     undirected_types: Sequence[str] = (),
-    prop_cols: Sequence[str] = (),
     spread: bool = False,
 ) -> DataFrame:
-    """Relationship MERGE (M4): distinct edge per (endpoints, type).
-
-    Edge properties (only ``HW_VERSION.upgradestatus`` in the reference,
-    refresh-vmware.cypher:187,212) ride along; when the same edge is
-    asserted twice with different props, last-writer-wins applies.
+    """Relationship MERGE (M4): distinct edge per (endpoints, type),
+    projected to the 5-tuple. Edge properties take
+    ``merge_edges_with_props``.
 
     ``spread=True`` (opt-in — the partition-count probe plans the
     updates lineage, so it must stay off the driver-planning-bound
@@ -250,14 +246,7 @@ def merge_edges(
             updates = updates.repartition(
                 target, F.col("src_key"), F.col("dst_key")
             )
-    if existing is not None:
-        existing = canonical_edges(existing, undirected_types)
-    if not prop_cols:
-        cur = updates.select(*EDGE_COLS).distinct()
-        if existing is None:
-            return cur
-        return existing.select(*EDGE_COLS).unionByName(cur).distinct()
-    return upsert_last_writer_wins(existing, updates, EDGE_COLS)
+    return updates.select(*EDGE_COLS).distinct()
 
 
 PROPS_COL = "props"
@@ -278,7 +267,6 @@ ORDER_COL = "__batch_ord"
 
 
 def merge_edges_with_props(
-    existing: DataFrame | None,
     updates: DataFrame,
     *,
     undirected_types: Sequence[str] = (),
@@ -291,10 +279,9 @@ def merge_edges_with_props(
     generic map keeps the canonical edge schema fixed while any rel
     type can carry typed ride-alongs. Merge discipline: edge identity
     is the 5-tuple; per PROPERTY the LAST batch to assert a value wins
-    (Cypher ``SET`` is last-writer-wins) — ``existing`` is ordered
-    before all ``updates``, and within ``updates`` an optional
-    ``order_col`` carries the batch sequence (GraphStore tags each
-    ``add_edges`` call, see ``_union_edge_batches``). Within one batch,
+    (Cypher ``SET`` is last-writer-wins) — an optional ``order_col``
+    carries the batch sequence (GraphStore tags each ``add_edges``
+    call, see ``_union_edge_batches``). Within one batch,
     ties break on the greatest value so the result is deterministic —
     in the reference each edge prop is asserted by exactly one ingest
     statement, so that tie-break never fires on real workbooks.
@@ -322,11 +309,6 @@ def merge_edges_with_props(
     # canonicalization CASE chain.
     updates = _drop_null_keys(updates, ["src_key", "dst_key"])
     updates = _norm_props(canonical_edges(updates, undirected_types), keep=(ORDER_COL,))
-    if existing is not None:
-        existing = _norm_props(canonical_edges(existing, undirected_types))
-        updates = existing.withColumn(ORDER_COL, F.lit(-1).cast("long")).unionByName(
-            updates
-        )
     kv = updates.select(
         *EDGE_COLS, ORDER_COL, F.explode_outer(PROPS_COL).alias("pk", "pv")
     )

@@ -804,7 +804,7 @@ def merge_edges_undirected_canonical(spark, sf_dir):
         F.when(F.col("l_linenumber") % 2 == 1, F.col("src_label")).otherwise(F.col("dst_label")).alias("dst_label"),
         F.when(F.col("l_linenumber") % 2 == 1, F.col("src_key")).otherwise(F.col("dst_key")).alias("dst_key"),
     )
-    return merge_edges(None, flipped, undirected_types=["SUPPLIES"], spread=True)
+    return merge_edges(flipped, undirected_types=["SUPPLIES"], spread=True)
 
 
 @query(

@@ -234,6 +234,16 @@ def _recover_publish(path: str) -> None:
         os.rename(backup, path)
 
 
+def _latest(base: str) -> int | None:
+    """The version the ``_LATEST`` pointer under ``base`` names, or
+    ``None`` without one. ``publish_version`` is its only writer."""
+    ptr = os.path.join(base, "_LATEST")
+    if not os.path.isfile(ptr):
+        return None
+    with open(ptr) as f:
+        return int(f.read().strip())
+
+
 class GraphStore:
     """In-memory (lazy DataFrame) snapshot of the property graph.
 
@@ -382,7 +392,7 @@ class GraphStore:
             self._edges_cache = self.spark.createDataFrame([], EDGE_SCHEMA)
             return self._edges_cache
         self._edges_cache = self._cut(
-            merge_edges(None, batch.select(*EDGE_COLS), undirected_types=UNDIRECTED_TYPES)
+            merge_edges(batch.select(*EDGE_COLS), undirected_types=UNDIRECTED_TYPES)
         )
         return self._edges_cache
 
@@ -434,7 +444,6 @@ class GraphStore:
             return self._edges_props_cache
         self._edges_props_cache = self._cut(
             merge_edges_with_props(
-                None,
                 batch,
                 undirected_types=UNDIRECTED_TYPES,
                 order_col="__batch_ord",
@@ -617,10 +626,8 @@ class GraphStore:
         pointer (falling back to the highest directory if the pointer
         is missing). Raises if the version doesn't exist."""
         if version is None:
-            ptr = os.path.join(base, "_LATEST")
-            if os.path.isfile(ptr):
-                version = int(open(ptr).read().strip())
-            else:
+            version = _latest(base)
+            if version is None:
                 vs = cls.versions(base)
                 if not vs:
                     raise FileNotFoundError(f"no published versions under {base}")
@@ -637,8 +644,7 @@ class GraphStore:
         if keep < 1:
             raise ValueError("vacuum: keep must be >= 1")
         vs = GraphStore.versions(base)
-        ptr = os.path.join(base, "_LATEST")
-        latest = int(open(ptr).read().strip()) if os.path.isfile(ptr) else None
+        latest = _latest(base)
         removed = []
         for v in vs[:-keep] if keep < len(vs) else []:
             if v == latest:
