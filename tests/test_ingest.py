@@ -164,6 +164,46 @@ def test_domain_two_hop_drops_unseeded(built):
     assert (k("host-1", "uid-1"), "Acme Corp") in comp
 
 
+def test_seedless_ingest_never_merges_whole_edge_table(spark, monkeypatch):
+    """Ingest stages read a hop through ``edge_pairs`` only: a seedless
+    build of workbook A completes with ``GraphStore.edges`` raising."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    def _no_merge(self):
+        raise AssertionError("an ingest stage merged the whole edge table")
+
+    monkeypatch.setattr(GraphStore, "edges", _no_merge)
+    store = run_ingest(spark, fixtures.workbook(spark, "A"))
+    assert store.vertices("Vspherehost").count() == 4
+
+
+def test_domain_hop_reads_only_domain_company_pairs(spark, built):
+    """The domain tail's hop is (cd:Clientdomain)--(co:Company): a
+    seeded domain whose only Company edge has a null key stays
+    unmatched (the edge merge drops that edge), and an ``OF_COMPANY``
+    edge between two other labels is no hop."""
+    _, edges = built
+    seeds = fixtures.seeds(spark)
+    seeds["clientdomain"] = seeds["clientdomain"].union(
+        spark.createDataFrame([("other.example",)], ["name"])
+    )
+    seeds["seed_edges"] = seeds["seed_edges"].union(
+        spark.createDataFrame(
+            [("Clientdomain", "other.example", "OF_COMPANY", "Company", None),
+             ("Vcenterserver", "Globex", "OF_COMPANY", "Vfolder", "corp.example")],
+            "src_label string, src_key string, rel_type string, "
+            "dst_label string, dst_key string",
+        )
+    )
+    store = run_ingest(spark, fixtures.workbook(spark, "A"), seeds)
+    got = {
+        (r.src_label, r.src_key, r.rel_type, r.dst_label, r.dst_key)
+        for r in store.edges().collect()
+    }
+    for rel in ("OF_DOMAIN", "ESX_HOST_FOR"):
+        assert edge_set(got, rel) == edge_set(edges, rel), rel
+
+
 def test_datastore_host_explode_trim(built):
     _, edges = built
     conn = edge_set(edges, "CONNECTED_DATASTORE")
@@ -491,21 +531,21 @@ def _group_jobs(spark, group, fn):
 
 def test_refresh_orphans_only_runs_tenant_collect_only(spark, monkeypatch):
     """Callers that read only ``orphans`` pay no edge work: on built
-    stores ``refresh`` submits the jobs of the tenant collect and no
-    other (under AQE that one collect is a shuffle-map job plus a
-    result job). The result is a plain dataclass."""
+    stores ``refresh`` submits one job, the tenant collect (the list is
+    de-duplicated on the driver, so no shuffle-map job runs). The
+    result is a plain dataclass."""
     refresh_mod = importlib.import_module("vmware_graph_spark.ingest.refresh")
     prev, curr, sheets = _small_refresh_case(spark)
     monkeypatch.setattr(refresh_mod, "run_ingest", lambda *a, **kw: curr)
     _, collect_jobs = _group_jobs(
         spark,
         "tenant-collect",
-        lambda: sheets["vCluster"].select("VI SDK UUID").distinct().collect(),
+        lambda: sheets["vCluster"].select("VI SDK UUID").collect(),
     )
     res, refresh_jobs = _group_jobs(
         spark, "refresh-orphans-only", lambda: refresh_mod.refresh(spark, sheets, prev=prev)
     )
-    assert len(refresh_jobs) == len(collect_jobs) >= 1
+    assert len(refresh_jobs) == len(collect_jobs) == 1
     assert {(r.label, r.key) for r in res.orphans.collect()} == {
         ("Virtualmachine", k("vm-3", "uid-1"))
     }

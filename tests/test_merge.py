@@ -219,50 +219,76 @@ def test_salted_join_spreads_hot_key(spark):
     assert salted_join(big, small, ["k"], salts=8).count() == 100
 
 
-def test_fuse_batches_equivalent_to_sequential_merges(spark):
-    """Store-level batching: fusing consecutive same-schema update
-    batches must be BIT-identical to merging them one at a time, for
-    both MERGE…SET and ON CREATE SET, including intra-batch dup
-    resolution and cross-batch override order."""
-    from vmware_graph_spark.operators.merge import merge_nodes
-    from vmware_graph_spark.store.graph import _fuse_batches
-
+def test_merge_run_equals_sequential_merges(spark):
+    """A run of same-column update batches merges in one pick exactly
+    as the batches merge one at a time (the reference), for MERGE…SET
+    and ON CREATE SET, with no existing table, an existing table on the
+    same columns and one on different columns: intra-batch duplicates,
+    null keys and cross-batch override order included, and the column
+    order kept."""
     keys = ["k"]
     b1 = spark.createDataFrame(
-        [(1, "a1", 10), (2, "b1", 20), (2, "b1x", 21), (3, "c1", 30)],
+        [(1, "a1", 10), (2, "b1", 20), (2, "b1x", 21), (3, "c1", 30),
+         (None, "n1", 99)],
         ["k", "name", "v"],
     )
-    b2 = spark.createDataFrame(
-        [(2, "b2", 22), (4, "d2", 40)], ["k", "name", "v"]
-    )
+    b2 = spark.createDataFrame([(2, "b2", 22), (4, "d2", 40)], ["k", "name", "v"])
     b3 = spark.createDataFrame(
-        [(1, "a3", 11), (4, "d3", 41), (5, "e3", 50)], ["k", "name", "v"]
+        [("e3", 5, 50), ("a3", 1, 11), ("d3", 4, 41)], ["name", "k", "v"]
     )
-    for oco in (False, True):
-        pend = [(b, oco) for b in (b1, b2, b3)]
-        seq = None
-        for updates, flag in pend:
-            seq = merge_nodes(seq, updates, keys, on_create_only=flag)
-        fused_pend = _fuse_batches(pend, keys)
-        assert len(fused_pend) == 1  # all three fuse into one
-        fused = None
-        for updates, flag in fused_pend:
-            fused = merge_nodes(fused, updates, keys, on_create_only=flag)
-        a = sorted(tuple(r) for r in seq.collect())
-        b = sorted(tuple(r) for r in fused.collect())
-        assert a == b, (oco, a, b)
+    same = spark.createDataFrame(
+        [("e0", 0, 1), ("e6", 60, 6), ("n0", 1, None)], ["name", "v", "k"]
+    )
+    other = spark.createDataFrame(
+        [(1, "x1"), (6, "x6"), (None, "xn")], ["k", "extra"]
+    )
+    for existing in (None, same, other):
+        for oco in (False, True):
+            seq = existing
+            for b in (b1, b2, b3):
+                seq = merge_nodes(seq, b, keys, on_create_only=oco)
+            run = merge_nodes(existing, [b1, b2, b3], keys, on_create_only=oco)
+            assert run.columns == seq.columns, (oco, run.columns, seq.columns)
+            a = sorted(map(tuple, seq.collect()), key=repr)
+            b = sorted(map(tuple, run.collect()), key=repr)
+            assert a == b, (existing and existing.columns, oco, a, b)
 
 
-def test_fuse_batches_breaks_runs_on_flag_or_schema_change(spark):
-    from vmware_graph_spark.store.graph import _fuse_batches
+def _windows(df):
+    return df._jdf.queryExecution().executedPlan().toString().count("Window [")
 
-    s1 = spark.createDataFrame([(1, "x")], ["k", "name"])
-    s2 = spark.createDataFrame([(1, 9)], ["k", "v"])
-    pend = [(s1, False), (s1, False), (s1, True), (s2, True), (s1, False)]
-    fused = _fuse_batches(pend, ["k"])
-    # runs: [s1,s1]/False → 1, [s1]/True, [s2]/True, [s1]/False
-    assert len(fused) == 4
-    assert [f for _, f in fused] == [False, True, True, False]
+
+def test_graphstore_flush_runs_equal_sequential_merges(spark):
+    """Upserts queued as [s1, s1, s2, s1] (two column sets) read back
+    once equal merging them one at a time; a two-batch same-column run
+    onto a stored label with those columns adds ONE pick window."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    label, keys = "Vcenterserver", ["uid"]
+    cols = ["uid", "name", "v"]
+    s1a = spark.createDataFrame(
+        [("u1", "a", 1), ("u2", "bx", 2), ("u2", "b", 2)], cols
+    )
+    s1b = spark.createDataFrame([("u2", "c", 3), ("u3", "d", None)], cols)
+    s2 = spark.createDataFrame([("u1", "x"), ("u4", "y")], ["uid", "extra"])
+    s1c = spark.createDataFrame([("u4", "e", 5), (None, "n", 0)], cols)
+
+    store, seq = GraphStore(spark, checkpoint=False), None
+    for b in (s1a, s1b, s2, s1c):
+        store.upsert_nodes(label, b)
+        seq = merge_nodes(seq, b, keys)
+    got = store.vertices(label)
+    assert got.columns == seq.columns
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, seq.collect()), key=repr
+    )
+
+    store = GraphStore(spark, checkpoint=False)
+    store.upsert_nodes(label, s1a)
+    before = _windows(store.vertices(label))
+    store.upsert_nodes(label, s1b)
+    store.upsert_nodes(label, s1c)
+    assert _windows(store.vertices(label)) == before + 1
 
 
 def test_node_key_null_propagation_and_int_rendering(spark):

@@ -414,14 +414,14 @@ _hostile_name = st.text(alphabet=_hostile_char, min_size=1, max_size=12).filter(
     ),
 )
 def test_merge_helpers_escape_hostile_column_names(spark, names, rows):
-    """_drop_null_keys and _dedup_one_per_key over hostile identifiers
+    """_drop_null_keys and _pick over hostile identifiers
     behave exactly like the column-object logic run on a sanitized-name
     TWIN of the same data (the twin never parses a hostile name, so it
     is a pure-semantics reference)."""
     from vmware_graph_spark.operators.merge import (
         _PICK,
-        _dedup_one_per_key,
         _drop_null_keys,
+        _pick,
     )
 
     key, vals = names[0], names[1:]
@@ -441,19 +441,22 @@ def test_merge_helpers_escape_hostile_column_names(spark, names, rows):
     want = _nsort(safe.filter(F.col("k").isNotNull()).collect())
     assert got == want
 
-    got2 = _nsort(_dedup_one_per_key(df, [key]).collect())
+    got2 = _nsort(_pick([df], [key]).collect())
     from pyspark.sql import Window
 
     w = Window.partitionBy("k").orderBy(
         *[F.col(f"v{i}").asc_nulls_last() for i in range(len(vals))]
     )
     want2 = _nsort(
-        safe.withColumn(_PICK, F.row_number().over(w))
+        safe.filter(F.col("k").isNotNull())
+        .withColumn(_PICK, F.row_number().over(w))
         .filter(F.col(_PICK) == 1)
         .drop(_PICK)
         .collect()
     )
     assert got2 == want2
+    # a run of frames goes through the tagged union's projections
+    assert _nsort(_pick([df, df], [key]).collect()) == want2
 
 
 @PROP

@@ -34,6 +34,9 @@ def main() -> None:
     from vmware_graph_spark.session import get_spark
     from vmware_graph_spark.sources import tables as T
 
+    # a small driver heap: the JVM grows toward its cap, and at the
+    # engine's 12g default one sf0.1 ingest run reached 13.5 GB RSS
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     spark = get_spark("ab-rebalance")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(10_000).write.format("noop").mode("overwrite").save()

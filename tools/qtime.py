@@ -33,6 +33,9 @@ def main() -> None:
     from vmware_graph_spark.queries import QUERIES
     from vmware_graph_spark.session import get_spark
 
+    # a small driver heap: the JVM grows toward its cap, and at the
+    # engine's 12g default one sf0.1 ingest run reached 13.5 GB RSS
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     spark = get_spark("qtime")
     spark.sparkContext.setLogLevel("ERROR")
     # warm codegen + noop commit path once (mirrors bench.py)

@@ -94,8 +94,10 @@ def refresh(
         return RefreshResult(curr, _empty_ids(spark))
 
     # tenant scope: the vCluster sheet names the vCenters being
-    # refreshed (cypher:26-28); tiny driver-side list by construction.
-    tenants = [r[0] for r in sheets["vCluster"].select(UID).distinct().collect()]
+    # refreshed (cypher:26-28); tiny driver-side list by construction,
+    # de-duplicated here: a Spark distinct would add a shuffle-map job.
+    # A null UID names no tenant (``managedby IN (NULL)`` matches nothing).
+    tenants = sorted({r[0] for r in sheets["vCluster"].select(UID).collect()} - {None})
 
     final = GraphStore(spark)
     orphan_parts: list[DataFrame] = []

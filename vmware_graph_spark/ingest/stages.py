@@ -463,23 +463,16 @@ def stage_vhost(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         )
     )
 
-    # domain tail (:100-103): 2-hop MATCH through the seeded
-    # Clientdomain—Company edge; inner semantics drop unseeded domains.
+    # domain tail (:100-103): 2-hop MATCH (cd:Clientdomain)--(co:Company)
+    # through the seeded edge; inner semantics drop unseeded domains.
+    # The hop reads edge_pairs, and drops null-keyed pairs as the
+    # canonical edge merge does.
     cd = store.vertices("Clientdomain")
-    comp_edges = (
-        store.edges()
-        .filter(
-            (F.col("rel_type") == "OF_COMPANY")
-            | ((F.col("src_label") == "Clientdomain") & (F.col("dst_label") == "Company"))
-            | ((F.col("src_label") == "Company") & (F.col("dst_label") == "Clientdomain"))
-        )
-    )
     if cd is not None:
         dom = F.coalesce(F.col("Domain"), F.lit("None Provided"))
-        sym = comp_edges.select(
-            F.when(F.col("src_label") == "Clientdomain", F.col("src_key")).otherwise(F.col("dst_key")).alias("__cdkey"),
-            F.when(F.col("src_label") == "Clientdomain", F.col("dst_key")).otherwise(F.col("src_key")).alias("__cokey"),
-        ).distinct()
+        sym = store.edge_pairs("Clientdomain", "Company").selectExpr(
+            "a_key AS __cdkey", "b_key AS __cokey"
+        ).filter("__cdkey IS NOT NULL AND __cokey IS NOT NULL")
         tail = (
             joined.select("*", dom.alias("__dom"))
             .join(cd.select(F.col("name").alias("__dom")), "__dom")

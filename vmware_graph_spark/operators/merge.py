@@ -6,7 +6,8 @@ form ``(a)-[:T]-(b)`` which matches either direction. Re-expressed for
 Spark's immutable, snapshot-oriented model:
 
 - node MERGE  → deterministic last-writer-wins dedup on the key columns
-  (window + row_number, never bare dropDuplicates — SURVEY "hard parts").
+  (window + row_number, never bare dropDuplicates — SURVEY "hard parts");
+  a run of same-column batches is ONE window over their tagged union.
 - MERGE…SET   → updates overwrite matched rows (new source wins).
 - MERGE…ON CREATE SET → existing rows win; source only fills gaps.
 - rel MERGE   → append + distinct on (src, rel_type, dst), with
@@ -22,10 +23,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _PICK = "__merge_pick"
+_PICK_ORD = "__pick_ord"
 
 
 def _bt(name: str) -> str:
@@ -45,29 +47,50 @@ def _drop_null_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     return df.filter(" AND ".join(f"{_bt(k)} IS NOT NULL" for k in keys))
 
 
-def _dedup_one_per_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """One row per key, deterministically: duplicates within a batch are
-    resolved by a total ordering over all non-key columns (the
-    reference's row order is spreadsheet order, which Spark must not
-    depend on). One SQL-string window (see _drop_null_keys note)."""
-    value_cols = [c for c in df.columns if c not in keys]
+def _pick(
+    frames: Sequence[DataFrame], keys: Sequence[str], latest_first: bool = True
+) -> DataFrame:
+    """One row per non-null key from a run of frames with one column
+    set, in the first frame's column order: ONE window over their union
+    keeps ``row_number() = 1`` by (frame position, latest or earliest
+    first; then every value column ASC NULLS LAST), which equals
+    merging the frames one after another. The value order breaks ties
+    inside a frame deterministically (the reference's row order is
+    spreadsheet order, which Spark must not depend on). Key-only frames
+    take a ``distinct``. SQL strings throughout (see _drop_null_keys)."""
+    cols = frames[0].columns
+    value_cols = [c for c in cols if c not in keys]
+    tag = len(frames) > 1 and bool(value_cols)
+    proj = [_bt(c) for c in cols]
+    run = None
+    for i, df in enumerate(frames):
+        df = _drop_null_keys(df, keys)
+        if len(frames) > 1:
+            # positional union below: align every frame to one order
+            df = df.selectExpr(*proj, *([f"{i} AS {_PICK_ORD}"] if tag else []))
+        run = df if run is None else df.union(run)
     if not value_cols:
-        return df.distinct()
+        return run.distinct()
     part = ", ".join(_bt(k) for k in keys)
-    order = ", ".join(f"{_bt(c)} ASC NULLS LAST" for c in value_cols)
-    rn = F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY {order})")
-    return df.withColumn(_PICK, rn).filter(F.col(_PICK) == 1).drop(_PICK)
+    order = [f"{_bt(c)} ASC NULLS LAST" for c in value_cols]
+    if tag:
+        order.insert(0, f"{_PICK_ORD} {'DESC' if latest_first else 'ASC'}")
+    rn = F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY {', '.join(order)})")
+    return run.withColumn(_PICK, rn).filter(f"{_bt(_PICK)} = 1").selectExpr(*proj)
 
 
 def upsert_last_writer_wins(
     existing: DataFrame | None,
-    updates: DataFrame,
+    updates: DataFrame | Sequence[DataFrame],
     keys: Sequence[str],
     *,
     updates_win: bool = True,
     assume_unique_existing: bool = False,
 ) -> DataFrame:
     """Core upsert: one row per key, per-COLUMN merge semantics.
+
+    ``updates`` is one frame or a run of frames with one column set,
+    equal to upserting the frames one after another.
 
     ``updates_win=True``  → MERGE … SET   (refresh-vmware.cypher:35,39-40):
     for a matched key, every property the update batch *carries* (i.e.
@@ -80,45 +103,28 @@ def upsert_last_writer_wins(
     (refresh-vmware.cypher:284-287): matched keys keep ALL existing
     properties; only brand-new keys take the update values.
 
-    Shape: when the two schemas carry the SAME column set, per-column
-    merge degenerates to whole-row pick and the whole upsert fuses into
-    ONE union + window shuffle (the winner-preference tag leads the
-    ordering, the deterministic value-column order breaks intra-batch
-    ties exactly as ``_dedup_one_per_key`` would). Differing schemas
-    take the general path: one window dedup per non-unique input + one
+    Shape: when ``existing`` carries the run's column set, per-column
+    merge degenerates to whole-row pick: ``existing`` joins the run as
+    frame 0 and the whole upsert is ONE ``_pick`` (union + window
+    shuffle), keys first, then ``existing``'s value columns. Differing
+    schemas take the general path: one pick per input and one
     full-outer hash join on the key. ``assume_unique_existing=True``
     (safe for merge outputs being re-merged, e.g. GraphStore chains)
-    skips re-deduplicating ``existing`` there — one less shuffle and a
-    much shallower plan across a 15-stage ingest.
+    skips re-picking ``existing`` there — one less shuffle and a much
+    shallower plan across a 15-stage ingest.
     """
-    updates = _drop_null_keys(updates, keys)
+    run = [updates] if isinstance(updates, DataFrame) else list(updates)
     if existing is None:
-        return _dedup_one_per_key(updates, keys)
-    if set(updates.columns) == set(existing.columns):
-        # one union + one window, both as SQL strings — this helper
-        # runs twice per label per refresh, and the per-value-column
-        # Column-object order chain was a top remaining
-        # plan-construction cost (round-8 profile: refresh() compose
-        # held ~29k py4j roundtrips, mostly here)
-        both = updates.selectExpr("*", "1 AS __from_updates").unionByName(
-            _drop_null_keys(existing, keys).selectExpr("*", "0 AS __from_updates")
-        )
+        return _pick(run, keys, updates_win)
+    if set(run[0].columns) == set(existing.columns):
         value_cols = [c for c in existing.columns if c not in keys]
-        part = ", ".join(_bt(k) for k in keys)
-        pref = "__from_updates " + ("DESC" if updates_win else "ASC")
-        order = ", ".join(
-            [pref] + [f"{_bt(c)} ASC NULLS LAST" for c in value_cols]
-        )
-        rn = F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY {order})")
-        return (
-            both.withColumn(_PICK, rn)
-            .filter(f"{_bt(_PICK)} = 1")
-            .selectExpr(*[_bt(c) for c in (*keys, *value_cols)])
-        )
-    updates = _dedup_one_per_key(updates, keys)
-    existing = _drop_null_keys(existing, keys)
-    if not assume_unique_existing:
-        existing = _dedup_one_per_key(existing, keys)
+        head = existing.selectExpr(*[_bt(c) for c in (*keys, *value_cols)])
+        return _pick([head, *run], keys, updates_win)
+    updates = _pick(run, keys, updates_win)
+    if assume_unique_existing:
+        existing = _drop_null_keys(existing, keys)
+    else:
+        existing = _pick([existing], keys)
 
     u_cols = [c for c in updates.columns if c not in keys]
     e_cols = [c for c in existing.columns if c not in keys]
@@ -155,7 +161,7 @@ def upsert_last_writer_wins(
 
 def merge_nodes(
     existing: DataFrame | None,
-    updates: DataFrame,
+    updates: DataFrame | Sequence[DataFrame],
     keys: Sequence[str],
     *,
     on_create_only: bool = False,
