@@ -339,6 +339,91 @@ def test_all_vertex_keys_equal_node_key(spark, tmp_path):
     }
 
 
+def test_add_edges_projects_one_rel_and_explodes_many(spark):
+    """``_add_edges``: one rel is a plain projection, a fan sharing its
+    source is ONE explode with the source projected outside it, a fan
+    of several sources carries them inside, a NULL ``CASE`` key drops
+    the edge, and an ``extra`` column lands in ``props``."""
+    from vmware_graph_spark.ingest.stages import _add_edges
+    from vmware_graph_spark.store.graph import GraphStore, _key_sql
+
+    df = spark.createDataFrame(
+        [("a", "x", "1"), ("b", None, "2")], "id string, dim string, n string"
+    )
+    store = GraphStore(spark, checkpoint=False)
+    vm = ("Vm", _key_sql("id"))
+
+    def plan():
+        return store._edge_batches[-1]._jdf.queryExecution().optimizedPlan().toString()
+
+    _add_edges(store, df, (*vm, "HAS_N", "Num", _key_sql("n")), extra=["n AS qty"])
+    assert "Generate" not in plan()
+    _add_edges(
+        store, df,
+        (*vm, "R1", "D1", _key_sql("dim")),
+        (*vm, "R2", "D2", _key_sql("n")),
+        (*vm, "R3", "D3", "CASE WHEN n <> '1' THEN concat(id, 'c') END"),
+    )
+    gen = [line for line in plan().splitlines() if "Generate" in line]
+    assert len(gen) == 1 and "R3" in gen[0]
+    assert "Vm" not in gen[0] and "sl," not in gen[0]
+    _add_edges(
+        store, df,
+        (*vm, "R4", "D4", _key_sql("n")),
+        ("N", _key_sql("n"), "R5", "Vm", _key_sql("id")),
+    )
+    gen = [line for line in plan().splitlines() if "Generate" in line]
+    assert len(gen) == 1 and "Vm" in gen[0] and "sl," in gen[0]
+
+    assert {tuple(r) for r in store.edges().collect()} == {
+        ("Vm", "a", "HAS_N", "Num", "1"),
+        ("Vm", "b", "HAS_N", "Num", "2"),
+        ("Vm", "a", "R1", "D1", "x"),
+        ("Vm", "a", "R2", "D2", "1"),
+        ("Vm", "b", "R2", "D2", "2"),
+        ("Vm", "b", "R3", "D3", "bc"),
+        ("Vm", "a", "R4", "D4", "1"),
+        ("Vm", "b", "R4", "D4", "2"),
+        ("N", "1", "R5", "Vm", "a"),
+        ("N", "2", "R5", "Vm", "b"),
+    }
+    props = {
+        (r.rel_type, r.src_key): r.props
+        for r in store.edges_with_props().collect()
+        if r.props
+    }
+    assert props == {("HAS_N", "a"): {"qty": "1"}, ("HAS_N", "b"): {"qty": "2"}}
+
+
+def test_vinfo_stage_py4j_round_trips_bounded(spark, monkeypatch):
+    """Plan construction of the vInfo stage, counted as driver→JVM
+    round trips at the py4j seam perfbench traces, stays bounded: the
+    stage builds its plans from SQL strings, not Column chains (whose
+    every call is a round trip)."""
+    from py4j.java_gateway import GatewayClient
+
+    from tests.conftest import SF_SMALL
+    from vmware_graph_spark.ingest.stages import STAGES, stage_vinfo_vms
+    from vmware_graph_spark.queries import _workbook
+    from vmware_graph_spark.store.graph import GraphStore
+
+    sheets = _workbook(spark, SF_SMALL)
+    store = GraphStore(spark)
+    for stage in STAGES[: STAGES.index(stage_vinfo_vms)]:
+        stage(store, sheets)
+    calls = []
+    send = GatewayClient.send_command
+
+    def counting(client, *a, **kw):
+        calls.append(1)
+        return send(client, *a, **kw)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    stage_vinfo_vms(store, sheets)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 1200, len(calls)
+
+
 def test_esx_version_build_split(built):
     store, edges = built
     builds = {r.build for r in store.vertices("Vsphereesxbuild").collect()}

@@ -59,16 +59,22 @@ segment = st.from_regex(r"[A-Za-z0-9 _.-]{1,8}", fullmatch=True)
 def test_path_parent_plus_leaf_reassembles(spark, seg_lists):
     """parent + '/' + leaf == path for every well-formed absolute path
     (the structural computation the reference's replace() trick gets
-    wrong on repeated segments — including those generated here)."""
+    wrong on repeated segments — including those generated here), and
+    ingest's ``_PARENT_SQL`` computes the same parent."""
+    from vmware_graph_spark.ingest.stages import _PARENT_SQL
+
     paths = ["/" + "/".join(segs) for segs in seg_lists]
     df = spark.createDataFrame([(p,) for p in paths], "path string")
     rows = df.select(
         "path",
         path_parent("path").alias("parent"),
         path_last("path").alias("leaf"),
+        F.expr(_PARENT_SQL.format("path")).alias("sql_parent"),
     ).collect()
     for r in rows:
         assert r.parent + "/" + r.leaf == r.path
+        # ingest's SQL form of the parent rule is the same function
+        assert r.sql_parent == r.parent
 
 
 edge_id = st.from_regex(r"[a-z]{1,6}", fullmatch=True)
@@ -521,12 +527,11 @@ def test_canonical_edges_hostile_prop_column(spark, prop_name, rows):
     ),
 )
 def test_key_sql_matches_node_key_on_hostile_names(spark, names, rows):
-    """ingest/stages._key_sql (the selectExpr twin of store.node_key)
+    """store.graph._key_sql (the selectExpr twin of store.node_key)
     must produce node_key's exact null-propagating concat semantics for
     ANY sheet column name — RVTools headers already carry spaces, '#'
     and parens; this pins backtick escaping for the rest."""
-    from vmware_graph_spark.ingest.stages import _key_sql
-    from vmware_graph_spark.store.graph import node_key
+    from vmware_graph_spark.store.graph import _key_sql, node_key
 
     a, b = names[0], names[1]
     from pyspark.sql.types import StringType, StructField, StructType

@@ -118,9 +118,8 @@ def refresh(
             if c is None:
                 orphans_l = marked
             else:
-                orphans_l = snapshot_diff(
-                    marked, c, keys, tenant_col="managedby", tenants=tenants
-                )
+                # marked is already tenant-scoped
+                orphans_l = snapshot_diff(marked, c, keys, tenant_col=None)
             orphan_parts.append(
                 orphans_l.select(F.lit(label).alias("label"), node_key(*keys).alias("key"))
             )

@@ -10,13 +10,23 @@ see SURVEY §0.2 (bug ledger) — and two documented divergences:
   mixes (name,cluster,dc,vc) [cypher:66] and (path,vc) [cypher:199];
   under the reference's keying, equally-named pools at different depths
   of the same cluster collapse into one node — ours stay distinct.
-- parent paths are computed structurally (functions.scalar.path_parent)
-  instead of ``replace(path,'/'+name,'')`` [cypher:64,216-217], which
-  corrupts paths whose leaf repeats an interior segment.
+- parent paths are computed structurally (the ``path_parent`` shape:
+  every segment but the last) instead of ``replace(path,'/'+name,'')``
+  [cypher:64,216-217], which corrupts paths whose leaf repeats an
+  interior segment.
 
 Cypher MATCH = inner join (rows without a match are silently dropped);
 OPTIONAL MATCH = left join; MERGE on a null key fails the row (we drop
 it). All three semantics live in operators.merge / plain joins here.
+
+One idiom: every stage body is SQL strings. Projections and filters
+are ``selectExpr``/``filter`` strings, join conditions are ``F.expr``
+strings, edge keys are built by ``_key_sql`` (store.graph, the SQL twin
+of ``node_key``), single-key dimension MERGEs fuse through
+``_dims_tagged``, and every edge batch is queued by ``_add_edges``. The
+one Column expression is the IPv4 classification in
+``_server_list_stage``: ``rlike_full(…, IPV4_RE)`` keeps the regex a
+Python string, where a SQL literal would need it re-escaped.
 
 Scale notes: every MATCH against a dimension label is a broadcast join
 (dim tables are ≪ MB). The only large-large joins are rows⋈VM and
@@ -26,71 +36,73 @@ every stage, so AQE reuses the exchange where plans allow.
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vmware_graph_spark.functions.scalar import (
-    IPV4_RE,
-    path_last,
-    path_parent,
-    rlike_full,
-    split_literal,
-    try_int,
-)
+from vmware_graph_spark.functions.scalar import IPV4_RE, rlike_full
 from vmware_graph_spark.operators.merge import _bt
-from vmware_graph_spark.store.graph import GraphStore, node_key
+from vmware_graph_spark.store.graph import GraphStore, _key_sql, _Raw
 
 UID = "VI SDK UUID"
 SERVER = "VI SDK Server"
 
+# functions.scalar.path_parent as SQL: every '/' segment of column
+# ``{0}`` but the last (the structural parent, see the module doc)
+_PARENT_SQL = (
+    "array_join(slice(split({0}, '/'), 1,"
+    " greatest(size(split({0}, '/')) - 1, 1)), '/')"
+)
 
-def _edges(
+
+def _add_edges(
+    store: GraphStore,
     df: DataFrame,
-    src_label: str,
-    src_key,
-    rel_type: str,
-    dst_label: str,
-    dst_key,
-    props: Mapping[str, F.Column] | None = None,
-) -> DataFrame:
-    cols = [
-        F.lit(src_label).alias("src_label"),
-        src_key.alias("src_key"),
-        F.lit(rel_type).alias("rel_type"),
-        F.lit(dst_label).alias("dst_label"),
-        dst_key.alias("dst_key"),
-    ]
-    for name, expr in (props or {}).items():
-        cols.append(expr.alias(name))
-    return df.select(*cols)
+    *rels: tuple[str, str, str, str, str],
+    extra: Sequence[str] = (),
+) -> None:
+    """Queue ONE edge batch of ``rels`` read off ``df``. Each rel is
+    ``(src_label, src_key_sql, rel_type, dst_label, dst_key_sql)`` with
+    the keys as SQL expressions (``_key_sql`` or a computed column); a
+    conditional rel is a ``CASE WHEN … END`` key, and the store's merge
+    drops the row where it is NULL, as it drops any null-keyed edge.
 
-
-def _dim(store: GraphStore, df: DataFrame, label: str, name_expr, extra=None) -> None:
-    """MERGE a single-key dimension label from an expression column."""
-    cols = [name_expr.alias("name")]
-    for k, e in (extra or {}).items():
-        cols.append(e.alias(k))
-    store.upsert_nodes(label, df.select(*cols).filter(F.col("name").isNotNull()).distinct())
-
-
-class _Raw(str):
-    """Explicit marker for a pre-built SQL expression passed to
-    :func:`_key_sql`. Anything NOT wrapped is treated as a column NAME
-    and backticked — a sheet column whose name happens to start with
-    '(' can therefore never be injected as raw SQL (round-7 ADVICE)."""
-
-
-def _key_sql(*cols: str) -> str:
-    """SQL-string twin of :func:`node_key` for the selectExpr-built fan
-    batches: NULL if any component is null (concat semantics), chr(31)
-    separator. ``cols`` are column NAMES (backticked here) or
-    :class:`_Raw`-wrapped SQL expressions (passed through verbatim)."""
-    qs = [c if isinstance(c, _Raw) else _bt(c) for c in cols]
-    if len(qs) == 1:
-        return f"cast({qs[0]} AS string)"
-    return "concat(" + ", chr(31), ".join(f"cast({q} AS string)" for q in qs) + ")"
+    One rel is a plain projection. Several are one tagged
+    ``explode(array(struct…))`` (rel_type and dst label ride as data),
+    so a fan of k rels costs one plan subtree, not k sheet scans. When
+    every rel shares its source, the source label and key are projected
+    once outside the struct. ``extra`` holds ``"<sql> AS <prop>"`` items
+    of a one-rel batch; the store packs them into the edge's ``props``
+    (the HW_VERSION ``upgradestatus`` path, cypher:187,212)."""
+    if len(rels) == 1:
+        sl, sk, r, dl, dk = rels[0]
+        store.add_edges(
+            df.selectExpr(
+                f"'{sl}' AS src_label", f"{sk} AS src_key", f"'{r}' AS rel_type",
+                f"'{dl}' AS dst_label", f"{dk} AS dst_key", *extra,
+            )
+        )
+        return
+    assert not extra, "edge properties ride only on a one-rel batch"
+    if len({rel[:2] for rel in rels}) == 1:
+        head = [f"'{rels[0][0]}' AS src_label", f"{rels[0][1]} AS src_key"]
+        fan = ", ".join(
+            f"struct('{r}' AS r, '{dl}' AS l, {dk} AS k)" for _, _, r, dl, dk in rels
+        )
+        out = ["src_label", "src_key", "__p.r AS rel_type", "__p.l AS dst_label",
+               "__p.k AS dst_key"]
+    else:
+        head = []
+        fan = ", ".join(
+            f"struct('{sl}' AS sl, {sk} AS sk, '{r}' AS r, '{dl}' AS dl, {dk} AS dk)"
+            for sl, sk, r, dl, dk in rels
+        )
+        out = ["__p.sl AS src_label", "__p.sk AS src_key", "__p.r AS rel_type",
+               "__p.dl AS dst_label", "__p.dk AS dst_key"]
+    store.add_edges(
+        df.selectExpr(*head, f"explode(array({fan})) AS __p").selectExpr(*out)
+    )
 
 
 def _dims_tagged(store: GraphStore, df: DataFrame, specs) -> None:
@@ -102,7 +114,7 @@ def _dims_tagged(store: GraphStore, df: DataFrame, specs) -> None:
     shuffles become 1, and the whole fan is TWO selectExpr strings
     instead of k column chains. ``specs`` = [(label, name_sql), ...]
     with ``name_sql`` a SQL expression string; labels with extra
-    properties or non-string keys keep their own ``_dim``."""
+    properties or non-string keys keep their own upsert."""
     fan = ", ".join(
         f"struct('{label}' AS l, {name_sql} AS name)" for label, name_sql in specs
     )
@@ -169,15 +181,8 @@ def stage_vcluster(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
             "`DRS enabled` AS drs",
         ),
     )
-    store.add_edges(
-        row.selectExpr(
-            "'Vcentercluster' AS src_label",
-            f"{_key_sql('Name', UID)} AS src_key",
-            "'CONTROLLED_BY_VC' AS rel_type",
-            "'Vcenterserver' AS dst_label",
-            f"{_key_sql(UID)} AS dst_key",
-        )
-    )
+    _add_edges(store, row, ("Vcentercluster", _key_sql("Name", UID), "CONTROLLED_BY_VC",
+                            "Vcenterserver", _key_sql(UID)))
 
 
 # --------------------------------------------------------------------------
@@ -210,21 +215,11 @@ def stage_vcenter_version(store: GraphStore, sheets: Mapping[str, DataFrame]) ->
         parts.selectExpr("vname AS name").filter("name IS NOT NULL").distinct(),
     )
     store.upsert_nodes("Vcenterbuild", parts.selectExpr("build").distinct())
-    # both edge families on one tagged explode (src label+key ride as
-    # struct fields)
-    fan = ", ".join(
-        [
-            f"struct('Vcenterbuild' AS sl, {_key_sql('build')} AS sk, "
-            f"'BUILD_OF' AS r, 'Vcenterversion' AS dl, {_key_sql('vname')} AS dk)",
-            f"struct('Vcenterserver' AS sl, {_key_sql('uid')} AS sk, "
-            f"'IS_VCENTER_BUILD' AS r, 'Vcenterbuild' AS dl, {_key_sql('build')} AS dk)",
-        ]
-    )
-    store.add_edges(
-        parts.selectExpr(f"explode(array({fan})) AS __p").selectExpr(
-            "__p.sl AS src_label", "__p.sk AS src_key",
-            "__p.r AS rel_type", "__p.dl AS dst_label", "__p.dk AS dst_key",
-        )
+    _add_edges(
+        store, parts,
+        ("Vcenterbuild", _key_sql("build"), "BUILD_OF", "Vcenterversion", _key_sql("vname")),
+        ("Vcenterserver", _key_sql("uid"), "IS_VCENTER_BUILD", "Vcenterbuild",
+         _key_sql("build")),
     )
 
 
@@ -257,8 +252,8 @@ def stage_vrp(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     )
     # MATCH vc by name AND vcc by (cluster, uid) — inner joins (:59)
     joined = (
-        parsed.join(vc, parsed[SERVER] == vc.__vcname)
-        .join(vcc, (F.col("cluster") == vcc.__ccname) & (F.col(UID) == vcc.__ccuid), "inner")
+        parsed.join(vc, F.expr(f"{_bt(SERVER)} = __vcname"))
+        .join(vcc, F.expr(f"cluster = __ccname AND {_bt(UID)} = __ccuid"), "inner")
         .drop("__ccname")
     )
     store.upsert_nodes(
@@ -267,28 +262,18 @@ def stage_vrp(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
             "datacenter AS name", f"{_bt(UID)} AS managedby"
         ).distinct(),
     )
-    # both DC edge families on one tagged explode
-    dc_key_sql = _key_sql("datacenter", UID)
-    fan = ", ".join(
-        [
-            f"struct('Vcentercluster' AS sl, {_key_sql('cluster', UID)} AS sk, "
-            f"'LOCATED_IN_DC' AS r, 'Vspheredatacenter' AS dl, {dc_key_sql} AS dk)",
-            f"struct('Vspheredatacenter' AS sl, {dc_key_sql} AS sk, "
-            f"'CONTROLLED_BY_VC' AS r, 'Vcenterserver' AS dl, {_key_sql(UID)} AS dk)",
-        ]
-    )
-    store.add_edges(
-        joined.selectExpr(f"explode(array({fan})) AS __p").selectExpr(
-            "__p.sl AS src_label", "__p.sk AS src_key",
-            "__p.r AS rel_type", "__p.dl AS dst_label", "__p.dk AS dst_key",
-        )
+    dc_key = _key_sql("datacenter", UID)
+    _add_edges(
+        store, joined,
+        ("Vcentercluster", _key_sql("cluster", UID), "LOCATED_IN_DC", "Vspheredatacenter",
+         dc_key),
+        ("Vspheredatacenter", dc_key, "CONTROLLED_BY_VC", "Vcenterserver", _key_sql(UID)),
     )
     # structural path parse (documented divergence — see module doc)
     pools = joined.selectExpr(
         "*",
         "element_at(split(resourcepool, '/'), -1) AS pool",
-        "array_join(slice(split(resourcepool, '/'), 1,"
-        " greatest(size(split(resourcepool, '/')) - 1, 1)), '/') AS parentpath",
+        f"{_PARENT_SQL.format('resourcepool')} AS parentpath",
     ).filter("pool <> ''")
     store.upsert_nodes(
         "Vresourcepool",
@@ -303,15 +288,8 @@ def stage_vrp(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
             "`Mem Configured` AS memcfg",
         ),
     )
-    store.add_edges(
-        pools.selectExpr(
-            "'Vresourcepool' AS src_label",
-            f"{_key_sql(SERVER, 'Resource pool')} AS src_key",
-            "'MEMBER_OF_CLUSTER' AS rel_type",
-            "'Vcentercluster' AS dst_label",
-            f"{_key_sql('cluster', UID)} AS dst_key",
-        )
-    )
+    _add_edges(store, pools, ("Vresourcepool", _key_sql(SERVER, "Resource pool"),
+                              "MEMBER_OF_CLUSTER", "Vcentercluster", _key_sql("cluster", UID)))
     # parent pool self-join (:70-71): parent node exists iff another row
     # of this sheet claims the parent's full path (within the same vc).
     with_parent = pools.selectExpr(
@@ -325,15 +303,8 @@ def stage_vrp(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         f"{_bt(SERVER)} AS vc", "`Resource pool` AS parent_path"
     ).distinct()
     linked = with_parent.join(parents, ["vc", "parent_path"], "inner")
-    store.add_edges(
-        linked.selectExpr(
-            "'Vresourcepool' AS src_label",
-            f"{_key_sql('vc', 'path')} AS src_key",
-            "'CHILD_RESOURCE_POOL' AS rel_type",
-            "'Vresourcepool' AS dst_label",
-            f"{_key_sql('vc', 'parent_path')} AS dst_key",
-        )
-    )
+    _add_edges(store, linked, ("Vresourcepool", _key_sql("vc", "path"), "CHILD_RESOURCE_POOL",
+                               "Vresourcepool", _key_sql("vc", "parent_path")))
 
 
 # --------------------------------------------------------------------------
@@ -344,15 +315,13 @@ def stage_vrp(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
 def stage_vhost(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:73-103."""
     row = sheets["vHost"]
-    vc = store.vertices("Vcenterserver").select(F.col("name").alias("__vcname"), F.col("uid").alias("__vcuid"))
-    vcc = store.vertices("Vcentercluster").select(
-        F.col("name").alias("__ccname"), F.col("managedby").alias("__ccuid")
+    vc = store.vertices("Vcenterserver").selectExpr("name AS __vcname", "uid AS __vcuid")
+    vcc = store.vertices("Vcentercluster").selectExpr(
+        "name AS __ccname", "managedby AS __ccuid"
     )
-    joined = (
-        row.join(vc, row[SERVER] == vc.__vcname)
-        .join(vcc, (row["Cluster"] == vcc.__ccname) & (row[UID] == vcc.__ccuid))
+    joined = row.join(vc, F.expr(f"{_bt(SERVER)} = __vcname")).join(
+        vcc, F.expr(f"Cluster = __ccname AND {_bt(UID)} = __ccuid")
     )
-    host_key = node_key(F.col("Object ID"), F.col(UID))
     store.upsert_nodes(
         "Vspherehost",
         joined.selectExpr(
@@ -371,20 +340,19 @@ def stage_vhost(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
             "`Service tag` AS servicetag",
         ),
     )
-    host_key_sql = _key_sql("Object ID", UID)
+    host_key = _key_sql("Object ID", UID)
 
-    # SQL-string twins of the dim expressions (the split delimiter has
-    # no regex metacharacters, so SQL split == split_literal here)
+    # the split delimiter has no regex metacharacters, so SQL split is
+    # Cypher's literal split here
     esx_ver_sql = _Raw("(split(`ESX Version`, ' build-')[0])")
     esx_build_sql = _Raw("(split(`ESX Version`, ' build-')[1])")
     vendor_sql = _Raw("(coalesce(Vendor, 'None Provided'))")
     model_sql = _Raw("(coalesce(Model, 'None Provided'))")
     bios_ver_sql = _Raw("(coalesce(`BIOS Version`, 'None Provided'))")
 
-    # six plain string dims fuse through ONE tagged explode + distinct
-    # (the stage_vinfo_vms _dims_tagged pattern); Vsphereesxbuild
-    # (build key) and Biosversion (two-column key) keep their own
-    # upserts below
+    # seven plain string dims fuse through ONE tagged explode + distinct;
+    # Vsphereesxbuild (build key) and Biosversion (two-column key) keep
+    # their own upserts below
     _dims_tagged(
         store,
         joined,
@@ -410,58 +378,35 @@ def stage_vhost(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     )
 
     # one edge batch for the eleven per-host rels (two structural +
-    # nine dims): rel_type/dst_label ride as data columns through a
-    # single explode instead of eleven sheet-scanning selects (same
-    # fusion as stage_vinfo_vms; null dim values yield null dst_key,
-    # dropped by merge like before) — the whole fan is one selectExpr
-    # string
-    host_fan = ", ".join(
-        f"struct('{rel}' AS r, '{label}' AS l, {k} AS k)"
-        for rel, label, k in [
-            # the two structural rels ride the same fan as the nine
-            # dim rels (round 8 — they were separate batches)
-            ("CONTROLLED_BY_VC", "Vcenterserver", _key_sql(UID)),
-            ("MEMBER_OF_CLUSTER", "Vcentercluster", _key_sql("Cluster", UID)),
-            ("CONFIG_STATUS", "Vconfigstatus", _key_sql("Config status")),
-            ("IN_CPU_POW_MGMT", "Vspherecpupwrmgpol",
-             _key_sql("Current CPU power man. policy")),
-            ("IN_HOST_POW_PLCY", "Vspherehostpwrmgpol", _key_sql("Host Power Policy")),
-            ("HAS_CPU", "Cpumodel", _key_sql("CPU Model")),
-            ("IS_ESX_BUILD", "Vsphereesxbuild", _key_sql(esx_build_sql)),
-            ("IS_ESX_VERSION", "Vsphereesxversion", _key_sql(esx_ver_sql)),
-            ("MANUFACTURED_BY", "Crmmanufacturer", _key_sql(vendor_sql)),
-            ("ASSET_MODEL", "Crmmodel", _key_sql(model_sql)),
-            ("BIOS_VERSION", "Biosversion", _key_sql(bios_ver_sql, "BIOS Date")),
-        ]
+    # nine dims); a null dim value yields a null dst_key, which the
+    # merge drops
+    _add_edges(
+        store, joined,
+        *[
+            ("Vspherehost", host_key, rel, label, key)
+            for rel, label, key in [
+                ("CONTROLLED_BY_VC", "Vcenterserver", _key_sql(UID)),
+                ("MEMBER_OF_CLUSTER", "Vcentercluster", _key_sql("Cluster", UID)),
+                ("CONFIG_STATUS", "Vconfigstatus", _key_sql("Config status")),
+                ("IN_CPU_POW_MGMT", "Vspherecpupwrmgpol",
+                 _key_sql("Current CPU power man. policy")),
+                ("IN_HOST_POW_PLCY", "Vspherehostpwrmgpol", _key_sql("Host Power Policy")),
+                ("HAS_CPU", "Cpumodel", _key_sql("CPU Model")),
+                ("IS_ESX_BUILD", "Vsphereesxbuild", _key_sql(esx_build_sql)),
+                ("IS_ESX_VERSION", "Vsphereesxversion", _key_sql(esx_ver_sql)),
+                ("MANUFACTURED_BY", "Crmmanufacturer", _key_sql(vendor_sql)),
+                ("ASSET_MODEL", "Crmmodel", _key_sql(model_sql)),
+                ("BIOS_VERSION", "Biosversion", _key_sql(bios_ver_sql, "BIOS Date")),
+            ]
+        ],
     )
-    store.add_edges(
-        joined.selectExpr(
-            "'Vspherehost' AS src_label",
-            f"{host_key_sql} AS src_key",
-            f"explode(array({host_fan})) AS __p",
-        ).selectExpr(
-            "src_label", "src_key",
-            "__p.r AS rel_type", "__p.l AS dst_label", "__p.k AS dst_key",
-        )
-    )
-    store.add_edges(
-        joined.selectExpr(
-            "'Vsphereesxbuild' AS src_label",
-            f"{_key_sql(esx_build_sql)} AS src_key",
-            "'BUILD_OF' AS rel_type",
-            "'Vsphereesxversion' AS dst_label",
-            f"{_key_sql(esx_ver_sql)} AS dst_key",
-        )
-    )
-    store.add_edges(
-        joined.selectExpr(
-            "'Biosversion' AS src_label",
-            f"{_key_sql(bios_ver_sql, 'BIOS Date')} AS src_key",
-            "'MANUFACTURED_BY' AS rel_type",
-            "'Crmmanufacturer' AS dst_label",
-            f"{_key_sql(vendor_sql)} AS dst_key",
-        )
-    )
+    # the two dim-to-dim rels stay one-rel batches: their literal labels
+    # let label-filtered reads (edge_pairs, the graph queries) prune
+    # them, which a mixed-source fan's data-borne labels would not
+    _add_edges(store, joined, ("Vsphereesxbuild", _key_sql(esx_build_sql), "BUILD_OF",
+                               "Vsphereesxversion", _key_sql(esx_ver_sql)))
+    _add_edges(store, joined, ("Biosversion", _key_sql(bios_ver_sql, "BIOS Date"),
+                               "MANUFACTURED_BY", "Crmmanufacturer", _key_sql(vendor_sql)))
 
     # domain tail (:100-103): 2-hop MATCH (cd:Clientdomain)--(co:Company)
     # through the seeded edge; inner semantics drop unseeded domains.
@@ -469,19 +414,19 @@ def stage_vhost(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     # canonical edge merge does.
     cd = store.vertices("Clientdomain")
     if cd is not None:
-        dom = F.coalesce(F.col("Domain"), F.lit("None Provided"))
         sym = store.edge_pairs("Clientdomain", "Company").selectExpr(
             "a_key AS __cdkey", "b_key AS __cokey"
         ).filter("__cdkey IS NOT NULL AND __cokey IS NOT NULL")
         tail = (
-            joined.select("*", dom.alias("__dom"))
-            .join(cd.select(F.col("name").alias("__dom")), "__dom")
-            .join(sym, node_key("__dom") == sym.__cdkey)
+            joined.selectExpr("*", "coalesce(Domain, 'None Provided') AS __dom")
+            .join(cd.selectExpr("name AS __dom"), "__dom")
+            .join(sym, F.expr(f"{_key_sql('__dom')} = __cdkey"))
         )
-        store.add_edges(_edges(tail, "Vspherehost", host_key, "OF_DOMAIN",
-                               "Clientdomain", node_key("__dom")))
-        store.add_edges(_edges(tail, "Vspherehost", host_key, "ESX_HOST_FOR",
-                               "Company", F.col("__cokey")))
+        _add_edges(
+            store, tail,
+            ("Vspherehost", host_key, "OF_DOMAIN", "Clientdomain", _key_sql("__dom")),
+            ("Vspherehost", host_key, "ESX_HOST_FOR", "Company", "__cokey"),
+        )
 
 
 # --------------------------------------------------------------------------
@@ -506,21 +451,19 @@ def _server_list_stage(
         "objid AS __objid", "name AS __hname", "managedby AS __huid"
     )
     # MATCH {objid, name} (:107) — objid + name equality, any tenant
-    j = row.join(
-        hosts,
-        (row["Object ID"] == hosts.__objid) & (row["Host"] == hosts.__hname),
-    )
+    j = row.join(hosts, F.expr("`Object ID` = __objid AND Host = __hname"))
     entries = (
-        j.filter(F.col(col).isNotNull())
+        j.filter(f"{_bt(col)} IS NOT NULL")
         .selectExpr(
             "__objid", "__huid", f"explode(split({_bt(col)}, ',')) AS raw"
         )
         .selectExpr("__objid", "__huid", "trim(raw) AS address")
     )
-    is_ip = rlike_full(F.col("address"), IPV4_RE)
+    # the stages' one Column expression (module doc): the regex stays
+    # a Python string
     classified = entries.select(
         "__objid", "__huid",
-        F.when(is_ip, F.lit("ip")).otherwise(F.lit("fqdn")).alias("kind"),
+        F.when(rlike_full("address", IPV4_RE), "ip").otherwise("fqdn").alias("kind"),
         "address",
     )
     store.upsert_nodes(
@@ -531,15 +474,8 @@ def _server_list_stage(
             "CASE WHEN kind = 'fqdn' THEN address END AS fqdn",
         ).distinct(),
     )
-    store.add_edges(
-        classified.selectExpr(
-            "'Vspherehost' AS src_label",
-            f"{_key_sql('__objid', '__huid')} AS src_key",
-            f"'{rel}' AS rel_type",
-            f"'{label}' AS dst_label",
-            f"{_key_sql('kind', 'address')} AS dst_key",
-        )
-    )
+    _add_edges(store, classified, ("Vspherehost", _key_sql("__objid", "__huid"), rel, label,
+                                   _key_sql("kind", "address")))
 
 
 def stage_ntp(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
@@ -573,20 +509,26 @@ def _rows_host_cluster(store: GraphStore, row: DataFrame) -> DataFrame:
         "a_key AS __hkey", "b_key AS __ckey"
     )
     linked = hosts.join(hop, "__hkey").join(clusters, "__ckey")
-    return (
-        row.join(
-            linked,
-            (row["Host"] == linked.__hname)
-            & (row["Cluster"] == linked.__cname)
-            & (row[UID] == linked.__cuid),
-        )
+    return row.join(
+        linked, F.expr(f"Host = __hname AND Cluster = __cname AND {_bt(UID)} = __cuid")
     )
+
+
+def _rows_switch(store: GraphStore, row: DataFrame) -> DataFrame:
+    """``_rows_host_cluster`` plus MATCH (vsw:Vswitch {name:Switch,
+    host:Host}) [cypher:157,169], carrying the switch key ``__swkey``."""
+    j = _rows_host_cluster(store, row)
+    vsw = store.vertices("Vswitch").selectExpr(
+        "name AS __swname", "host AS __swhost",
+        f"{_key_sql('name', 'host')} AS __swkey",
+    )
+    return j.join(vsw, F.expr("Switch = __swname AND Host = __swhost"))
 
 
 def stage_vswitch(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:142-152 (+ the J6 Jumboframes theta join)."""
     j = _rows_host_cluster(store, sheets["vSwitch"])
-    sw_key_sql = _key_sql("Switch", "Host")
+    sw_key = _key_sql("Switch", "Host")
     store.upsert_nodes(
         "Vswitch",
         j.selectExpr(
@@ -609,52 +551,24 @@ def stage_vswitch(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         "Vlbpolicy",
         j.selectExpr("Policy AS name").filter("name IS NOT NULL").distinct(),
     )
-    # both per-switch edge families on ONE tagged explode (the vInfo
-    # fan pattern): null Policy nulls that struct's dst_key → dropped
-    fan = ", ".join(
-        [
-            "struct('VSWITCH_FOR_HOST' AS r, 'Vspherehost' AS l, __hkey AS k)",
-            "struct('LOAD_BALANCING_POLICY' AS r, 'Vlbpolicy' AS l, "
-            "cast(Policy AS string) AS k)",
-        ]
-    )
-    store.add_edges(
-        j.selectExpr(
-            "'Vswitch' AS src_label",
-            f"{sw_key_sql} AS src_key",
-            f"explode(array({fan})) AS __p",
-        ).selectExpr(
-            "src_label", "src_key",
-            "__p.r AS rel_type", "__p.l AS dst_label", "__p.k AS dst_key",
-        )
+    _add_edges(
+        store, j,
+        ("Vswitch", sw_key, "VSWITCH_FOR_HOST", "Vspherehost", "__hkey"),
+        ("Vswitch", sw_key, "LOAD_BALANCING_POLICY", "Vlbpolicy", _key_sql("Policy")),
     )
     # Jumboframes (:151-152): cartesian with the 1-row seed, theta mtu>=9000
     jumbo = store.vertices("Jumboframes")
     if jumbo is not None:
         big = j.filter("try_cast(MTU AS int) >= 9000").crossJoin(
-            F.broadcast(
-                jumbo.filter(F.col("name") == "enabled").selectExpr("name AS __jmb")
-            )
+            F.broadcast(jumbo.filter("name = 'enabled'").selectExpr("name AS __jmb"))
         )
-        store.add_edges(
-            big.selectExpr(
-                "'Vswitch' AS src_label",
-                f"{sw_key_sql} AS src_key",
-                "'HAS_JUMBO_FRAMES' AS rel_type",
-                "'Jumboframes' AS dst_label",
-                "cast(__jmb AS string) AS dst_key",
-            )
-        )
+        _add_edges(store, big, ("Vswitch", sw_key, "HAS_JUMBO_FRAMES", "Jumboframes",
+                                _key_sql("__jmb")))
 
 
 def stage_vport(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:155-163."""
-    j = _rows_host_cluster(store, sheets["vPort"])
-    vsw = store.vertices("Vswitch").selectExpr(
-        "name AS __swname", "host AS __swhost",
-        f"{_key_sql('name', 'host')} AS __swkey",
-    )
-    j = j.join(vsw, (j["Switch"] == vsw.__swname) & (j["Host"] == vsw.__swhost))
+    j = _rows_switch(store, sheets["vPort"])
     pol_sql = _Raw("(coalesce(Policy, 'None Provided'))")
     store.upsert_nodes(
         "Vportgroup",
@@ -677,39 +591,21 @@ def stage_vport(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         "Vlbpolicy",
         j.selectExpr(f"{pol_sql} AS name").distinct(),
     )
-    # the three edge families on ONE tagged explode; src label AND key
-    # ride as struct fields (two come from Vhostportgroup, one from the
-    # matched Vswitch)
-    pg_key_sql = _key_sql("Port Group", "Host", UID)
-    fan = ", ".join(
-        [
-            f"struct('Vhostportgroup' AS sl, {pg_key_sql} AS sk, 'HOST_PG_FOR' AS r, "
-            f"'Vportgroup' AS dl, {_key_sql('Port Group', UID)} AS dk)",
-            f"struct('Vhostportgroup' AS sl, {pg_key_sql} AS sk, 'STANDARD_PG_ON' AS r, "
-            "'Vspherehost' AS dl, __hkey AS dk)",
-            "struct('Vswitch' AS sl, __swkey AS sk, 'LOAD_BALANCING_POLICY' AS r, "
-            f"'Vlbpolicy' AS dl, {_key_sql(pol_sql)} AS dk)",
-        ]
-    )
-    store.add_edges(
-        j.selectExpr(f"explode(array({fan})) AS __p").selectExpr(
-            "__p.sl AS src_label", "__p.sk AS src_key",
-            "__p.r AS rel_type", "__p.dl AS dst_label", "__p.dk AS dst_key",
-        )
+    pg_key = _key_sql("Port Group", "Host", UID)
+    _add_edges(
+        store, j,
+        ("Vhostportgroup", pg_key, "HOST_PG_FOR", "Vportgroup", _key_sql("Port Group", UID)),
+        ("Vhostportgroup", pg_key, "STANDARD_PG_ON", "Vspherehost", "__hkey"),
+        ("Vswitch", "__swkey", "LOAD_BALANCING_POLICY", "Vlbpolicy", _key_sql(pol_sql)),
     )
 
 
 def stage_vnic(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:166-176."""
-    j = _rows_host_cluster(store, sheets["vNIC"])
-    vsw = store.vertices("Vswitch").selectExpr(
-        "name AS __swname", "host AS __swhost",
-        f"{_key_sql('name', 'host')} AS __swkey",
-    )
-    j = j.join(vsw, (j["Switch"] == vsw.__swname) & (j["Host"] == vsw.__swhost))
+    j = _rows_switch(store, sheets["vNIC"])
     speed_sql = _Raw("(coalesce(Speed, 'No link'))")
     driver_sql = _Raw("(coalesce(Driver, 'None Provided'))")
-    nic_key_sql = _key_sql("Network Device", "Host")
+    nic_key = _key_sql("Network Device", "Host")
     store.upsert_nodes(
         "Vmnic",
         j.selectExpr(
@@ -722,25 +618,12 @@ def stage_vnic(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     )
     # the two string dims fuse through one tagged distinct
     _dims_tagged(store, j, [("Vmnicdriver", driver_sql), ("Vmnicspeed", speed_sql)])
-    # the four edge families on ONE tagged explode (three from Vmnic,
-    # one from the matched Vswitch)
-    fan = ", ".join(
-        [
-            f"struct('Vmnic' AS sl, {nic_key_sql} AS sk, 'USES_DRIVER' AS r, "
-            f"'Vmnicdriver' AS dl, {_key_sql(driver_sql)} AS dk)",
-            f"struct('Vmnic' AS sl, {nic_key_sql} AS sk, 'LINK_SPEED' AS r, "
-            f"'Vmnicspeed' AS dl, {_key_sql(speed_sql)} AS dk)",
-            f"struct('Vmnic' AS sl, {nic_key_sql} AS sk, 'PNIC_OF_HOST' AS r, "
-            "'Vspherehost' AS dl, __hkey AS dk)",
-            "struct('Vswitch' AS sl, __swkey AS sk, 'NETWORK_ADAPTERS' AS r, "
-            f"'Vmnic' AS dl, {nic_key_sql} AS dk)",
-        ]
-    )
-    store.add_edges(
-        j.selectExpr(f"explode(array({fan})) AS __p").selectExpr(
-            "__p.sl AS src_label", "__p.sk AS src_key",
-            "__p.r AS rel_type", "__p.dl AS dst_label", "__p.dk AS dst_key",
-        )
+    _add_edges(
+        store, j,
+        ("Vmnic", nic_key, "USES_DRIVER", "Vmnicdriver", _key_sql(driver_sql)),
+        ("Vmnic", nic_key, "LINK_SPEED", "Vmnicspeed", _key_sql(speed_sql)),
+        ("Vmnic", nic_key, "PNIC_OF_HOST", "Vspherehost", "__hkey"),
+        ("Vswitch", "__swkey", "NETWORK_ADAPTERS", "Vmnic", nic_key),
     )
 
 
@@ -760,9 +643,8 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     fqdn := row.`DNS Name`.
     """
     row = sheets["vInfo"]
-    vm_key = node_key(F.col("VM UUID"), F.col(UID))
-    folder_head = F.element_at(split_literal(F.col("Folder"), "/"), 2)
-    rp_cluster = F.element_at(split_literal(F.col("Resource pool"), "/"), 3)
+    vm_key = _key_sql("VM UUID", UID)
+    vm = ("Virtualmachine", vm_key)
 
     store.upsert_nodes(
         "Virtualmachine",
@@ -785,51 +667,47 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     )
 
     # Vcpus dim: name = CPUs + ' vCPUs' (Cypher int+string concat), qty prop
-    vcpu_name = F.concat(F.col("CPUs").cast("string"), F.lit(" vCPUs"))
-    _dim(store, row, "Vcpus", vcpu_name, extra={"qty": try_int(F.col("CPUs"))})
-    hw_name = try_int(F.col("HW version"))
+    vcpu_name = _Raw("(concat(cast(CPUs AS string), ' vCPUs'))")
     store.upsert_nodes(
-        "Vhwver", row.select(hw_name.alias("name")).filter(hw_name.isNotNull()).distinct()
+        "Vcpus",
+        row.selectExpr(f"{vcpu_name} AS name", "try_cast(CPUs AS int) AS qty")
+        .filter("name IS NOT NULL")
+        .distinct(),
+    )
+    hw_name = _Raw("(try_cast(`HW version` AS int))")
+    store.upsert_nodes(
+        "Vhwver", row.selectExpr(f"{hw_name} AS name").filter("name IS NOT NULL").distinct()
     )
     # HW_VERSION carries the one edge property in the whole reference
     # (cypher:187,212 SET r.upgradestatus) — first-class via the store's
     # props map; readable off a written snapshot (edges_with_props).
-    store.add_edges(
-        _edges(
-            row, "Virtualmachine", vm_key, "HW_VERSION", "Vhwver", node_key(hw_name),
-            props={"upgradestatus": F.col("HW upgrade status")},
-        )
-    )
+    _add_edges(store, row, (*vm, "HW_VERSION", "Vhwver", _key_sql(hw_name)),
+               extra=["`HW upgrade status` AS upgradestatus"])
 
     # FOREACH-CASE conditionals (M6, :199-203) → filtered sub-upserts
-    rp_cond = F.col("Resource pool").isNotNull() & (F.size(split_literal(F.col("Resource pool"), "/")) > 4)
-    rp_rows = row.filter(rp_cond)
+    rp_cond = "`Resource pool` IS NOT NULL AND size(split(`Resource pool`, '/')) > 4"
     store.upsert_nodes(
         "Vresourcepool",
-        rp_rows.select(
-            F.col(SERVER).alias("vc"),
-            F.col("Resource pool").alias("path"),
-            path_last("Resource pool").alias("name"),
+        row.filter(rp_cond).selectExpr(
+            f"{_bt(SERVER)} AS vc",
+            "`Resource pool` AS path",
+            "element_at(split(`Resource pool`, '/'), -1) AS name",
         ),
     )
-    fl_cond = F.col("Folder").isNotNull() & (F.size(split_literal(F.col("Folder"), "/")) > 2)
-    fl_rows = row.filter(fl_cond)
+    fl_cond = "Folder IS NOT NULL AND size(split(Folder, '/')) > 2"
     store.upsert_nodes(
         "Vfolder",
-        fl_rows.select(F.col("Folder").alias("path"), path_last("Folder").alias("name")),
+        row.filter(fl_cond).selectExpr(
+            "Folder AS path", "element_at(split(Folder, '/'), -1) AS name"
+        ),
     )
 
-    # ONE tagged explode for the ten per-VM edge families (five state
-    # dims, HAS_VCPUS, two OS rels, the two M6 conditional rels):
-    # rel_type/dst_label ride as data columns; a null dst_key — null
-    # dim value, or a FOREACH-CASE condition that's false — drops the
-    # row in merge exactly like the former per-rel filters did. One
-    # plan subtree + one edge batch where there were ten (round-6: 11
-    # subtrees fused to 3; round-7 finishes the job — py4j plan
-    # chatter and the edges() union width both shrink ~3×). The
-    # matching node upserts for the plain string dims fuse the same
-    # way (_dims_tagged); Vcpus keeps its own _dim (extra qty prop)
-    # and Vhwver its own upsert (int key).
+    # ONE edge batch for the ten per-VM edge families (five state dims,
+    # HAS_VCPUS, two OS rels, the two M6 conditional rels); a null
+    # dst_key — null dim value, or a FOREACH-CASE condition that's
+    # false — drops the row in merge. The matching node upserts for the
+    # plain string dims fuse the same way (_dims_tagged); Vcpus and
+    # Vhwver keep their own upserts (qty prop, int key).
     state_dims = [
         ("CONNECTION_STATE", "Vconnectionstate", "Connection state"),
         ("CONFIG_STATUS", "Vconfigstatus", "Config status"),
@@ -845,42 +723,14 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         [(label, _bt(col)) for _rel, label, col in state_dims]
         + [("Vmos", _bt(col)) for _rel, col in os_dims],
     )
-    vm_key_sql = _key_sql("VM UUID", UID)
-    rp_cond_sql = (
-        f"{_bt('Resource pool')} IS NOT NULL "
-        f"AND size(split({_bt('Resource pool')}, '/')) > 4"
-    )
-    fl_cond_sql = (
-        f"{_bt('Folder')} IS NOT NULL AND size(split({_bt('Folder')}, '/')) > 2"
-    )
-    vcpu_name_sql = _Raw("(concat(cast(CPUs AS string), ' vCPUs'))")
-    fan = ", ".join(
-        [
-            f"struct('{rel}' AS r, '{label}' AS l, {_key_sql(col)} AS k)"
-            for rel, label, col in state_dims
-        ]
-        + [f"struct('HAS_VCPUS' AS r, 'Vcpus' AS l, {_key_sql(vcpu_name_sql)} AS k)"]
-        + [
-            f"struct('{rel}' AS r, 'Vmos' AS l, {_key_sql(col)} AS k)"
-            for rel, col in os_dims
-        ]
-        + [
-            "struct('IN_RESOURCE_POOL' AS r, 'Vresourcepool' AS l, "
-            f"CASE WHEN {rp_cond_sql} THEN "
-            f"{_key_sql(SERVER, 'Resource pool')} END AS k)",
-            "struct('IN_FOLDER' AS r, 'Vfolder' AS l, "
-            f"CASE WHEN {fl_cond_sql} THEN {_key_sql('Folder')} END AS k)",
-        ]
-    )
-    store.add_edges(
-        row.selectExpr(
-            "'Virtualmachine' AS src_label",
-            f"{vm_key_sql} AS src_key",
-            f"explode(array({fan})) AS __p",
-        ).selectExpr(
-            "src_label", "src_key",
-            "__p.r AS rel_type", "__p.l AS dst_label", "__p.k AS dst_key",
-        )
+    _add_edges(
+        store, row,
+        *[(*vm, rel, label, _key_sql(col)) for rel, label, col in state_dims],
+        (*vm, "HAS_VCPUS", "Vcpus", _key_sql(vcpu_name)),
+        *[(*vm, rel, "Vmos", _key_sql(col)) for rel, col in os_dims],
+        (*vm, "IN_RESOURCE_POOL", "Vresourcepool",
+         f"CASE WHEN {rp_cond} THEN {_key_sql(SERVER, 'Resource pool')} END"),
+        (*vm, "IN_FOLDER", "Vfolder", f"CASE WHEN {fl_cond} THEN {_key_sql('Folder')} END"),
     )
 
     # Network #1-4 fan-out (:204-211): nulls coalesce to 'Not
@@ -892,7 +742,7 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         f"coalesce({_bt(f'Network #{i}')}, 'Not Configured')" for i in (1, 2, 3, 4)
     )
     net_rows = row.selectExpr(
-        f"{vm_key_sql} AS __vmk",
+        f"{vm_key} AS __vmk",
         f"{_bt(UID)} AS __uid",
         f"explode(array({nets})) AS __net",
     )
@@ -900,15 +750,8 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         "Vportgroup",
         net_rows.selectExpr("__net AS name", "__uid AS managedby").distinct(),
     )
-    store.add_edges(
-        net_rows.selectExpr(
-            "'Virtualmachine' AS src_label",
-            "__vmk AS src_key",
-            "'IN_PORTGROUP' AS rel_type",
-            "'Vportgroup' AS dst_label",
-            f"{_key_sql('__net', '__uid')} AS dst_key",
-        )
-    )
+    _add_edges(store, net_rows, ("Virtualmachine", "__vmk", "IN_PORTGROUP", "Vportgroup",
+                                 _key_sql("__net", "__uid")))
 
     # hierarchy tail (:213-223) — all lookups against the store state
     # AFTER this stage's upserts (Cypher sees its own MERGEs).
@@ -923,48 +766,47 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     # wrong after UDFs/opaque nodes; hint when you know a side is
     # small). Measured at sf0.1: 6 Exchange+Sort pairs drop out of the
     # stage plan.
-    folders = F.broadcast(
-        store.vertices("Vfolder").select(F.col("path").alias("__flpath"))
-    )
+    folders = F.broadcast(store.vertices("Vfolder").selectExpr("path AS __flpath"))
     pools = F.broadcast(
-        store.vertices("Vresourcepool").select(
-            F.col("vc").alias("__rpvc"), F.col("path").alias("__rppath")
-        )
+        store.vertices("Vresourcepool").selectExpr("vc AS __rpvc", "path AS __rppath")
     )
     vdc = F.broadcast(
-        store.vertices("Vspheredatacenter").select(
-            F.col("name").alias("__dcname"), F.col("managedby").alias("__dcuid")
+        store.vertices("Vspheredatacenter").selectExpr(
+            "name AS __dcname", "managedby AS __dcuid"
         )
     )
     vcc = F.broadcast(
-        store.vertices("Vcentercluster").select(
-            F.col("name").alias("__ccname"), F.col("managedby").alias("__ccuid")
-        )
+        store.vertices("Vcentercluster").selectExpr("name AS __ccname", "managedby AS __ccuid")
     )
-
+    uid, server = _bt(UID), _bt(SERVER)
     t = (
-        row.select(
+        row.selectExpr(
             "*",
-            vm_key.alias("__vmkey"),
-            folder_head.alias("__fhead"),
-            rp_cluster.alias("__rpcluster"),
+            f"{vm_key} AS __vmkey",
+            "element_at(split(Folder, '/'), 2) AS __fhead",
+            "element_at(split(`Resource pool`, '/'), 3) AS __rpcluster",
         )
         # OPTIONAL MATCH vdc / vcc (:180-181)
-        .join(vdc, (F.col("__fhead") == vdc.__dcname) & (F.col(UID) == vdc.__dcuid), "left")
-        .join(vcc, (F.col("__rpcluster") == vcc.__ccname) & (F.col(UID) == vcc.__ccuid), "left")
+        .join(vdc, F.expr(f"__fhead = __dcname AND {uid} = __dcuid"), "left")
+        .join(vcc, F.expr(f"__rpcluster = __ccname AND {uid} = __ccuid"), "left")
         # OPTIONAL MATCH vfl {path:Folder} (:214)
-        .join(folders, F.col("Folder") == folders.__flpath, "left")
+        .join(folders, F.expr("Folder = __flpath"), "left")
         # OPTIONAL MATCH vrp {path:Resource pool} (:215) — scoped to vc
-        .join(pools, (F.col("Resource pool") == pools.__rppath) & (F.col(SERVER) == pools.__rpvc), "left")
+        .join(pools, F.expr(f"`Resource pool` = __rppath AND {server} = __rpvc"), "left")
     )
-    pf = pools.select(F.col("__rpvc").alias("__pvc"), F.col("__rppath").alias("__prppath"))
-    ff = folders.select(F.col("__flpath").alias("__pflpath"))
+    pf = pools.selectExpr("__rpvc AS __pvc", "__rppath AS __prppath")
+    ff = folders.selectExpr("__flpath AS __pflpath")
     t = (
-        t.withColumn("__flparent", F.when(F.col("__flpath").isNotNull(), path_parent("__flpath")))
-        .withColumn("__rpparent", F.when(F.col("__rppath").isNotNull(), path_parent("__rppath")))
+        t.selectExpr(
+            "*",
+            f"CASE WHEN __flpath IS NOT NULL THEN {_PARENT_SQL.format('__flpath')} END"
+            " AS __flparent",
+            f"CASE WHEN __rppath IS NOT NULL THEN {_PARENT_SQL.format('__rppath')} END"
+            " AS __rpparent",
+        )
         # OPTIONAL MATCH parent folder / pool (:216-217)
-        .join(ff, F.col("__flparent") == ff.__pflpath, "left")
-        .join(pf, (F.col("__rpparent") == pf.__prppath) & (F.col(SERVER) == pf.__pvc), "left")
+        .join(ff, F.expr("__flparent = __pflpath"), "left")
+        .join(pf, F.expr(f"__rpparent = __prppath AND {server} = __pvc"), "left")
     )
 
     has_fl, has_pfl = "__flpath IS NOT NULL", "__pflpath IS NOT NULL"
@@ -976,40 +818,27 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     rp_key = _key_sql(SERVER, "__rppath")
     prp_key = _key_sql(SERVER, "__prppath")
 
-    # one tagged explode for the six hierarchy rels: src/dst label AND
-    # src key ride as struct fields; a false OPTIONAL-MATCH condition
-    # nulls both keys, which merge drops — identical rows to the six
-    # former filter+select batches, one plan subtree + edge batch
-    def _h(cond, sl, sk, r, dl, dk):
-        return (
-            f"struct('{sl}' AS sl, CASE WHEN {cond} THEN {sk} END AS sk, "
-            f"'{r}' AS r, '{dl}' AS dl, CASE WHEN {cond} THEN {dk} END AS dk)"
-        )
-
-    hfan = ", ".join(
-        [
-            _h(f"{has_fl} AND {has_pfl}", "Vfolder", fl_key,
-               "IN_FOLDER", "Vfolder", pfl_key),
-            _h(f"{has_fl} AND NOT ({has_pfl}) AND {has_dc}", "Vfolder", fl_key,
-               "LOCATED_IN_DC", "Vspheredatacenter", dc_key),
-            _h(f"NOT ({has_fl}) AND {has_dc}", "Virtualmachine", "__vmkey",
-               "LOCATED_IN_DC", "Vspheredatacenter", dc_key),
-            _h(f"{has_rp} AND {has_prp}", "Vresourcepool", rp_key,
-               "CHILD_RESOURCE_OF", "Vresourcepool", prp_key),
-            _h(f"{has_cc} AND {has_rp} AND NOT ({has_prp})", "Vresourcepool", rp_key,
-               "LOCATED_IN_CLUSTER", "Vcentercluster", cc_key),
-            _h(f"{has_cc} AND NOT ({has_rp})", "Virtualmachine", "__vmkey",
-               "LOCATED_IN_CLUSTER", "Vcentercluster", cc_key),
-        ]
-    )
-    store.add_edges(
-        t.selectExpr(f"explode(array({hfan})) AS __p").selectExpr(
-            "__p.sl AS src_label",
-            "__p.sk AS src_key",
-            "__p.r AS rel_type",
-            "__p.dl AS dst_label",
-            "__p.dk AS dst_key",
-        )
+    # one edge batch for the six hierarchy rels: a false OPTIONAL-MATCH
+    # condition nulls both keys, which merge drops
+    _add_edges(
+        store, t,
+        *[
+            (sl, f"CASE WHEN {cond} THEN {sk} END", r, dl, f"CASE WHEN {cond} THEN {dk} END")
+            for cond, sl, sk, r, dl, dk in [
+                (f"{has_fl} AND {has_pfl}", "Vfolder", fl_key,
+                 "IN_FOLDER", "Vfolder", pfl_key),
+                (f"{has_fl} AND NOT ({has_pfl}) AND {has_dc}", "Vfolder", fl_key,
+                 "LOCATED_IN_DC", "Vspheredatacenter", dc_key),
+                (f"NOT ({has_fl}) AND {has_dc}", "Virtualmachine", "__vmkey",
+                 "LOCATED_IN_DC", "Vspheredatacenter", dc_key),
+                (f"{has_rp} AND {has_prp}", "Vresourcepool", rp_key,
+                 "CHILD_RESOURCE_OF", "Vresourcepool", prp_key),
+                (f"{has_cc} AND {has_rp} AND NOT ({has_prp})", "Vresourcepool", rp_key,
+                 "LOCATED_IN_CLUSTER", "Vcentercluster", cc_key),
+                (f"{has_cc} AND NOT ({has_rp})", "Virtualmachine", "__vmkey",
+                 "LOCATED_IN_CLUSTER", "Vcentercluster", cc_key),
+            ]
+        ],
     )
 
 
@@ -1018,13 +847,30 @@ def stage_vinfo_vms(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
 # --------------------------------------------------------------------------
 
 
+def _rows_vm(store: GraphStore, row: DataFrame) -> DataFrame:
+    """MATCH the row's VM {uuid:`VM UUID`, managedby:uid}, carrying the
+    VM key ``__vmkey``."""
+    vms = store.vertices("Virtualmachine").selectExpr(
+        "uuid AS __vmuuid", "managedby AS __vmuid",
+        f"{_key_sql('uuid', 'managedby')} AS __vmkey",
+    )
+    return row.join(vms, F.expr(f"`VM UUID` = __vmuuid AND {_bt(UID)} = __vmuid"))
+
+
+def _rows_vc_vm(store: GraphStore, row: DataFrame) -> DataFrame:
+    """MATCH (vc {name:`VI SDK Server`}), then ``_rows_vm``
+    [cypher:255,267,274]."""
+    vc = store.vertices("Vcenterserver").selectExpr("name AS __vcname")
+    return _rows_vm(store, row.join(vc, F.expr(f"{_bt(SERVER)} = __vcname")))
+
+
 def stage_vdatastore(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:228-240. Bug §0.2.4 (`ds.verion` typo) is
     fixed: the property is ``version``."""
     row = sheets["vDatastore"]
     vc = store.vertices("Vcenterserver").selectExpr("uid AS __vcuid")
-    j = row.join(vc, row[UID] == vc.__vcuid)
-    ds_key_sql = _key_sql("URL")
+    j = row.join(vc, F.expr(f"{_bt(UID)} = __vcuid"))
+    ds_key = _key_sql("URL")
     store.upsert_nodes(
         "Vdatastore",
         j.selectExpr(
@@ -1043,29 +889,16 @@ def stage_vdatastore(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None
         ),
     )
     # both string dims through one tagged distinct, both per-datastore
-    # edge families on one tagged explode (null dim → null dst_key →
-    # dropped in merge, same as the former _dim filters)
+    # edge families in one batch (null dim → null dst_key → dropped in
+    # merge)
     _dims_tagged(
         store, j,
         [("Vconfigstatus", _bt("Config status")), ("Vdatastoretype", "Type")],
     )
-    fan = ", ".join(
-        [
-            "struct('CONFIG_STATUS' AS r, 'Vconfigstatus' AS l, "
-            f"{_key_sql('Config status')} AS k)",
-            "struct('DATASTORE_TYPE' AS r, 'Vdatastoretype' AS l, "
-            f"{_key_sql('Type')} AS k)",
-        ]
-    )
-    store.add_edges(
-        j.selectExpr(
-            "'Vdatastore' AS src_label",
-            f"{ds_key_sql} AS src_key",
-            f"explode(array({fan})) AS __p",
-        ).selectExpr(
-            "src_label", "src_key",
-            "__p.r AS rel_type", "__p.l AS dst_label", "__p.k AS dst_key",
-        )
+    _add_edges(
+        store, j,
+        ("Vdatastore", ds_key, "CONFIG_STATUS", "Vconfigstatus", _key_sql("Config status")),
+        ("Vdatastore", ds_key, "DATASTORE_TYPE", "Vdatastoretype", _key_sql("Type")),
     )
     # hosts explode + trim (:237-239) — join hosts by (trimmed name, uid)
     hosts = store.vertices("Vspherehost").selectExpr(
@@ -1081,29 +914,17 @@ def stage_vdatastore(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None
         )
         .selectExpr("URL", "__uid", "trim(raw) AS __hname")
         .join(hosts, ["__hname"])
-        .filter(F.col("__uid") == F.col("__huid"))
+        .filter("__uid = __huid")
     )
-    store.add_edges(
-        exploded.selectExpr(
-            "'Vspherehost' AS src_label",
-            "__hkey AS src_key",
-            "'CONNECTED_DATASTORE' AS rel_type",
-            "'Vdatastore' AS dst_label",
-            f"{_key_sql('URL')} AS dst_key",
-        )
-    )
+    _add_edges(store, exploded, ("Vspherehost", "__hkey", "CONNECTED_DATASTORE", "Vdatastore",
+                                 ds_key))
 
 
 def stage_vdisk(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:243-251: virtual disks + the datastore-name
     path parse ``[dsname] vm/vm.vmdk`` (§2.10-5) with the J5
     existence-qualified datastore join."""
-    row = sheets["vDisk"]
-    vms = store.vertices("Virtualmachine").selectExpr(
-        "uuid AS __vmuuid", "managedby AS __vmuid",
-        f"{_key_sql('uuid', 'managedby')} AS __vmkey",
-    )
-    j = row.join(vms, (row["VM UUID"] == vms.__vmuuid) & (row[UID] == vms.__vmuid))
+    j = _rows_vm(store, sheets["vDisk"])
     store.upsert_nodes(
         "Virtualdisk",
         j.selectExpr(
@@ -1117,15 +938,8 @@ def stage_vdisk(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
             "Template AS template",
         ),
     )
-    store.add_edges(
-        j.selectExpr(
-            "'Virtualdisk' AS src_label",
-            f"{_key_sql('Path')} AS src_key",
-            "'VDISK_FOR_VM' AS rel_type",
-            "'Virtualmachine' AS dst_label",
-            "__vmkey AS dst_key",
-        )
-    )
+    _add_edges(store, j, ("Virtualdisk", _key_sql("Path"), "VDISK_FOR_VM", "Virtualmachine",
+                          "__vmkey"))
     # J5 (:250): ds {name,managedby} connected (any edge) to host
     # {name:Host,managedby} — the hop reads edge_pairs (raw-batch label
     # filter), not the full canonical edge merge
@@ -1152,38 +966,22 @@ def stage_vdisk(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         )
         .join(
             qualified,
-            (F.col("__parsed_ds") == qualified.__dsname)
-            & (F.col("__uid") == qualified.__dsuid)
-            & (F.col("Host") == qualified.__hname)
-            & (F.col("__uid") == qualified.__huid2),
+            F.expr(
+                "__parsed_ds = __dsname AND __uid = __dsuid"
+                " AND Host = __hname AND __uid = __huid2"
+            ),
         )
         .select("__vdkey", "__dskey")
         .distinct()
     )
-    store.add_edges(
-        withds.selectExpr(
-            "'Virtualdisk' AS src_label",
-            "__vdkey AS src_key",
-            "'ON_DATASTORE' AS rel_type",
-            "'Vdatastore' AS dst_label",
-            "__dskey AS dst_key",
-        )
-    )
+    _add_edges(store, withds, ("Virtualdisk", "__vdkey", "ON_DATASTORE", "Vdatastore",
+                               "__dskey"))
 
 
 def stage_vnetwork(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:254-263."""
-    row = sheets["vNetwork"]
-    vms = store.vertices("Virtualmachine").selectExpr(
-        "uuid AS __vmuuid", "managedby AS __vmuid",
-        f"{_key_sql('uuid', 'managedby')} AS __vmkey",
-    )
-    vc = store.vertices("Vcenterserver").selectExpr("name AS __vcname")
-    j = (
-        row.join(vc, row[SERVER] == vc.__vcname)
-        .join(vms, (row["VM UUID"] == vms.__vmuuid) & (row[UID] == vms.__vmuid))
-    )
-    ad_key_sql = _key_sql("Mac Address", "VM UUID")
+    j = _rows_vc_vm(store, sheets["vNetwork"])
+    ad_key = _key_sql("Mac Address", "VM UUID")
     store.upsert_nodes(
         "Vmadapter",
         j.selectExpr(
@@ -1197,22 +995,10 @@ def stage_vnetwork(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         "Vmadaptertype",
         j.selectExpr("Adapter AS name").filter("name IS NOT NULL").distinct(),
     )
-    # both per-adapter edge families on one tagged explode
-    fan = ", ".join(
-        [
-            "struct('ADAPTER_FOR' AS r, 'Virtualmachine' AS l, __vmkey AS k)",
-            f"struct('ADAPTER_TYPE' AS r, 'Vmadaptertype' AS l, {_key_sql('Adapter')} AS k)",
-        ]
-    )
-    store.add_edges(
-        j.selectExpr(
-            "'Vmadapter' AS src_label",
-            f"{ad_key_sql} AS src_key",
-            f"explode(array({fan})) AS __p",
-        ).selectExpr(
-            "src_label", "src_key",
-            "__p.r AS rel_type", "__p.l AS dst_label", "__p.k AS dst_key",
-        )
+    _add_edges(
+        store, j,
+        ("Vmadapter", ad_key, "ADAPTER_FOR", "Virtualmachine", "__vmkey"),
+        ("Vmadapter", ad_key, "ADAPTER_TYPE", "Vmadaptertype", _key_sql("Adapter")),
     )
     # portgroup tail (:261-263): MATCH Vhostportgroup {name:Network,host,managedby}
     pg = store.vertices("Vhostportgroup").selectExpr(
@@ -1220,32 +1006,14 @@ def stage_vnetwork(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
         f"{_key_sql('name', 'host', 'managedby')} AS __pgkey",
     )
     tail = j.join(
-        pg,
-        (j["Network"] == pg.__pgname) & (j["Host"] == pg.__pghost) & (j[UID] == pg.__pguid),
+        pg, F.expr(f"Network = __pgname AND Host = __pghost AND {_bt(UID)} = __pguid")
     )
-    store.add_edges(
-        tail.selectExpr(
-            "'Vmadapter' AS src_label",
-            f"{ad_key_sql} AS src_key",
-            "'IN_PORTGROUP' AS rel_type",
-            "'Vhostportgroup' AS dst_label",
-            "__pgkey AS dst_key",
-        )
-    )
+    _add_edges(store, tail, ("Vmadapter", ad_key, "IN_PORTGROUP", "Vhostportgroup", "__pgkey"))
 
 
 def stage_vpartition(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:266-270."""
-    row = sheets["vPartition"]
-    vms = store.vertices("Virtualmachine").selectExpr(
-        "uuid AS __vmuuid", "managedby AS __vmuid",
-        f"{_key_sql('uuid', 'managedby')} AS __vmkey",
-    )
-    vc = store.vertices("Vcenterserver").selectExpr("name AS __vcname")
-    j = (
-        row.join(vc, row[SERVER] == vc.__vcname)
-        .join(vms, (row["VM UUID"] == vms.__vmuuid) & (row[UID] == vms.__vmuid))
-    )
+    j = _rows_vc_vm(store, sheets["vPartition"])
     store.upsert_nodes(
         "Vpartition",
         j.selectExpr(
@@ -1256,29 +1024,13 @@ def stage_vpartition(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None
             "`Free %` AS free",
         ),
     )
-    store.add_edges(
-        j.selectExpr(
-            "'Vpartition' AS src_label",
-            f"{_key_sql('Disk', 'VM UUID')} AS src_key",
-            "'PARTITION_FOR' AS rel_type",
-            "'Virtualmachine' AS dst_label",
-            "__vmkey AS dst_key",
-        )
-    )
+    _add_edges(store, j, ("Vpartition", _key_sql("Disk", "VM UUID"), "PARTITION_FOR",
+                          "Virtualmachine", "__vmkey"))
 
 
 def stage_vsnapshot(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
     """refresh-vmware.cypher:273-277."""
-    row = sheets["vSnapshot"]
-    vms = store.vertices("Virtualmachine").selectExpr(
-        "uuid AS __vmuuid", "managedby AS __vmuid",
-        f"{_key_sql('uuid', 'managedby')} AS __vmkey",
-    )
-    vc = store.vertices("Vcenterserver").selectExpr("name AS __vcname")
-    j = (
-        row.join(vc, row[SERVER] == vc.__vcname)
-        .join(vms, (row["VM UUID"] == vms.__vmuuid) & (row[UID] == vms.__vmuid))
-    )
+    j = _rows_vc_vm(store, sheets["vSnapshot"])
     store.upsert_nodes(
         "Vsnapshot",
         j.selectExpr(
@@ -1289,15 +1041,8 @@ def stage_vsnapshot(store: GraphStore, sheets: Mapping[str, DataFrame]) -> None:
             "`Size MB (total)` AS size",
         ),
     )
-    store.add_edges(
-        j.selectExpr(
-            "'Vsnapshot' AS src_label",
-            f"{_key_sql('Name', 'VM UUID')} AS src_key",
-            "'SNAPSHOT_OF' AS rel_type",
-            "'Virtualmachine' AS dst_label",
-            "__vmkey AS dst_key",
-        )
-    )
+    _add_edges(store, j, ("Vsnapshot", _key_sql("Name", "VM UUID"), "SNAPSHOT_OF",
+                          "Virtualmachine", "__vmkey"))
 
 
 # The reference's statement order (pass 1) — later stages join against

@@ -23,7 +23,6 @@ def snapshot_diff(
     keys: Sequence[str],
     *,
     tenant_col: str | None = "managedby",
-    tenants: Sequence[str] | None = None,
 ) -> DataFrame:
     """Rows of ``prev`` absent from ``curr`` — the swept orphans (J7/D2).
 
@@ -34,11 +33,8 @@ def snapshot_diff(
     """
     scoped = prev
     if tenant_col and tenant_col in prev.columns:
-        if tenants is not None:
-            scoped = prev.filter(F.col(tenant_col).isin(list(tenants)))
-        else:
-            tenant_keys = curr.select(tenant_col).distinct()
-            scoped = prev.join(F.broadcast(tenant_keys), on=tenant_col, how="left_semi")
+        tenant_keys = curr.select(tenant_col).distinct()
+        scoped = prev.join(F.broadcast(tenant_keys), on=tenant_col, how="left_semi")
     return scoped.join(curr.select(*keys).distinct(), on=list(keys), how="left_anti")
 
 

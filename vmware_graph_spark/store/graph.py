@@ -14,9 +14,10 @@ Design for 100 TB:
   dst_label, dst_key)`` partitioned by rel_type on disk, so motif/hop
   queries prune to the relationship types they touch.
 - node identity in the edge table is the label + a single string key:
-  ``concat_ws(US, natural key cols)`` (US = unit separator, cannot occur
-  in RVTools cell values), keeping the edge schema fixed while labels
-  keep composite natural keys.
+  the natural key cols joined by US (unit separator, cannot occur in
+  RVTools cell values; NULL if any col is), keeping the edge schema
+  fixed while labels keep composite natural keys. ``node_key`` (Column)
+  and ``_key_sql`` (SQL string) below are its two encoders.
 """
 
 from __future__ import annotations
@@ -130,9 +131,8 @@ def node_key(*cols) -> F.Column:
     which operators.merge then drops). ``concat`` (unlike concat_ws)
     already returns NULL when any argument is NULL, so interleaving the
     separator gives the exact semantics in one expression — ~3× fewer
-    py4j roundtrips than the former isNull-chain + CASE (this helper is
-    the hottest plan-construction site in a full ingest; round-6
-    VERDICT #6)."""
+    py4j roundtrips than the former isNull-chain + CASE (round-6
+    VERDICT #6). :func:`_key_sql` is its SQL-string twin."""
     cs = [F.col(c) if isinstance(c, str) else c for c in cols]
     parts: list[F.Column] = []
     for i, c in enumerate(cs):
@@ -140,6 +140,24 @@ def node_key(*cols) -> F.Column:
             parts.append(F.lit(US))
         parts.append(c.cast("string"))
     return F.concat(*parts)
+
+
+class _Raw(str):
+    """Explicit marker for a pre-built SQL expression passed to
+    :func:`_key_sql`. Anything NOT wrapped is treated as a column NAME
+    and backticked — a sheet column whose name happens to start with
+    '(' can therefore never be injected as raw SQL (round-7 ADVICE)."""
+
+
+def _key_sql(*cols: str) -> str:
+    """SQL-string twin of :func:`node_key`: NULL if any component is
+    null (concat semantics), ``chr(31)`` (``US``) separator. ``cols``
+    are column NAMES (backticked here) or :class:`_Raw`-wrapped SQL
+    expressions (passed through verbatim)."""
+    qs = [c if isinstance(c, _Raw) else _bt(c) for c in cols]
+    if len(qs) == 1:
+        return f"cast({qs[0]} AS string)"
+    return "concat(" + ", chr(31), ".join(f"cast({q} AS string)" for q in qs) + ")"
 
 
 T = TypeVar("T")
@@ -278,15 +296,13 @@ class GraphStore:
         """(label, key) pairs for every vertex — the edge-table id
         space — as ONE ``UNION ALL`` statement: one analysis instead of
         one ``unionByName`` re-analysis per label. The key is
-        ``node_key``'s (``chr(31)`` is ``US``), NULL when any component is."""
+        ``_key_sql``'s, NULL when any component is."""
         frames, parts = {}, []
         for i, label in enumerate(self.labels()):
             frames[f"v{i}"] = self.vertices(label)
-            key = ", chr(31), ".join(
-                f"CAST({_bt(k)} AS STRING)" for k in LABEL_KEYS[label]
-            )
             parts.append(
-                f"SELECT '{label}' AS label, concat({key}) AS `key` FROM {{v{i}}}"
+                f"SELECT '{label}' AS label, {_key_sql(*LABEL_KEYS[label])} AS `key` "
+                f"FROM {{v{i}}}"
             )
         return self.spark.sql(" UNION ALL ".join(parts), **frames)
 
