@@ -570,16 +570,19 @@ def _vm_store(spark, vms, edge_batches):
 
 
 def _small_refresh_case(spark):
-    """prev asserts vm-1's edge prop in two batches and holds an edge of
-    the marked vm-2; curr re-asserts vm-2 edge-less, drops vm-3 and
-    overrides vm-1's prop with a smaller value (vm-1 is uid-2's, so
-    never marked)."""
+    """prev asserts vm-1's and vm-4's edge prop in two of its three
+    batches, the later with the smaller value, and holds an edge of the
+    marked vm-2; curr re-asserts vm-2 edge-less, drops vm-3, overrides
+    vm-1's prop with a smaller value and leaves vm-4's alone (vm-1 and
+    vm-4 are uid-2's, so never marked)."""
     prev = _vm_store(
         spark,
-        [("vm-1", "uid-2"), ("vm-2", "uid-1"), ("vm-3", "uid-1")],
+        [("vm-1", "uid-2"), ("vm-2", "uid-1"), ("vm-3", "uid-1"), ("vm-4", "uid-2")],
         [
-            [("vm-1", "uid-2", "Pending"), ("vm-2", "uid-1", "Pending")],
+            [("vm-1", "uid-2", "Pending"), ("vm-2", "uid-1", "Pending"),
+             ("vm-4", "uid-2", "Pending")],
             [("vm-1", "uid-2", "Done")],
+            [("vm-4", "uid-2", "Done")],
         ],
     )
     curr = _vm_store(spark, [("vm-2", "uid-1")], [[("vm-1", "uid-2", "Alpha")]])
@@ -589,7 +592,9 @@ def _small_refresh_case(spark):
 
 def test_refresh_prop_override_equals_two_step_merge(spark, monkeypatch):
     """A prop prev asserted in two batches is overridden by curr's
-    later, smaller value; the marked vm-2's prev edge is swept."""
+    later, smaller value; on an edge curr does not re-assert, prev's
+    later, smaller value wins (the swept prev union keeps each batch's
+    order); the marked vm-2's prev edge is swept."""
     refresh_mod = importlib.import_module("vmware_graph_spark.ingest.refresh")
     prev, curr, sheets = _small_refresh_case(spark)
     monkeypatch.setattr(refresh_mod, "run_ingest", lambda *a, **kw: curr)
@@ -597,8 +602,23 @@ def test_refresh_prop_override_equals_two_step_merge(spark, monkeypatch):
     got = _edge_rows(res.store.edges_with_props())
     assert got == _edge_rows(_two_step_edges(spark, prev, curr, ["uid-1"]))
     assert got == {
-        ("Virtualmachine", k("vm-1", "uid-2"), "HW_VERSION", "Vhwver", "14", (("upgradestatus", "Alpha"),))
+        ("Virtualmachine", k("vm-1", "uid-2"), "HW_VERSION", "Vhwver", "14", (("upgradestatus", "Alpha"),)),
+        ("Virtualmachine", k("vm-4", "uid-2"), "HW_VERSION", "Vhwver", "14", (("upgradestatus", "Done"),)),
     }
+
+
+def test_refresh_sweeps_multi_batch_prev_once(spark, monkeypatch):
+    """An in-memory prev's three edge batches are swept as one union:
+    the refreshed edge union's optimized plan holds the sweep's two
+    joins, not two per prev batch (a LeftAnti join would be pushed into
+    every union branch)."""
+    refresh_mod = importlib.import_module("vmware_graph_spark.ingest.refresh")
+    prev, curr, sheets = _small_refresh_case(spark)
+    assert len(prev._edge_batches) == 3
+    monkeypatch.setattr(refresh_mod, "run_ingest", lambda *a, **kw: curr)
+    res = refresh_mod.refresh(spark, sheets, prev=prev)
+    plan = res.store._union_edge_batches()._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join ") == 2 and plan.count("Join LeftOuter") == 2, plan
 
 
 def _group_jobs(spark, group, fn):

@@ -175,8 +175,8 @@ def test_merge_edges_with_props_last_batch_wins(spark):
 
 def test_graphstore_edge_props_last_add_wins(spark):
     """Through the store: two add_edges calls asserting the same edge
-    prop — edges_with_props carries the LATER call's value (batches are
-    order-tagged by _union_edge_batches)."""
+    prop — edges_with_props carries the LATER call's value (add_edges
+    stamps each batch with its assertion order)."""
     from vmware_graph_spark.store.graph import GraphStore
 
     gs = GraphStore(spark)

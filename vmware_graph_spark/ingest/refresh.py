@@ -11,12 +11,14 @@ Equivalent dataflow without mutable flags (SURVEY §2.9):
    natural key; survivors = per-column merge(prev, curr) minus orphans
    (re-asserted nodes keep properties the new run didn't set — exactly
    Cypher MERGE…SET on a pre-existing node);
-4. edges: each prev edge batch loses ALL edges incident to a marked
-   (tenant-owned) node — the reference deletes every relationship of
-   marked nodes, not just orphans' (cypher:30-31). The swept prev
-   batches, then this run's batches, are queued in that order on the
-   refreshed store, whose one ``edges_with_props()`` merge applies
-   last-writer-wins per property across all of them.
+4. edges: prev's edge batches, as one union, lose ALL edges incident
+   to a marked (tenant-owned) node — the reference deletes every
+   relationship of marked nodes, not just orphans' (cypher:30-31), in
+   one statement. The swept union, then this run's batches, are queued
+   on the refreshed store. Every row keeps its batch's assertion order
+   (``__batch_ord``, stamped by ``GraphStore.add_edges``), so the one
+   ``edges_with_props()`` merge applies last-writer-wins per property
+   across all of them.
 
 Labels without a ``managedby`` column (dimension nodes, Vfolder,
 Virtualdisk, Vmadapter, Vpartition, Vsnapshot) are never swept, exactly
@@ -38,7 +40,7 @@ from pyspark.sql import functions as F
 from vmware_graph_spark.ingest.stages import STAGE_SHEETS, STAGES, UID
 from vmware_graph_spark.operators.merge import merge_nodes
 from vmware_graph_spark.operators.snapshot import snapshot_diff, sweep_edges
-from vmware_graph_spark.store.graph import LABEL_KEYS, GraphStore, node_key
+from vmware_graph_spark.store.graph import LABEL_KEYS, GraphStore, _vertex_keys
 
 SEED_LABELS = {"clientdomain": "Clientdomain", "company": "Company", "jumboframes": "Jumboframes"}
 
@@ -79,10 +81,6 @@ class RefreshResult:
     orphans: DataFrame  # (label, key) removed by the sweep
 
 
-def _empty_ids(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "label string, key string")
-
-
 def refresh(
     spark: SparkSession,
     sheets: Mapping[str, DataFrame],
@@ -91,7 +89,7 @@ def refresh(
 ) -> RefreshResult:
     curr = run_ingest(spark, sheets, seeds)
     if prev is None:
-        return RefreshResult(curr, _empty_ids(spark))
+        return RefreshResult(curr, _vertex_keys(spark, {}))
 
     # tenant scope: the vCluster sheet names the vCenters being
     # refreshed (cypher:26-28); tiny driver-side list by construction,
@@ -100,8 +98,8 @@ def refresh(
     tenants = sorted({r[0] for r in sheets["vCluster"].select(UID).collect()} - {None})
 
     final = GraphStore(spark)
-    orphan_parts: list[DataFrame] = []
-    marked_parts: list[DataFrame] = []
+    orphan_rows: dict[str, DataFrame] = {}
+    marked_rows: dict[str, DataFrame] = {}
 
     for label in sorted(set(prev.labels()) | set(curr.labels())):
         keys = LABEL_KEYS[label]
@@ -109,20 +107,11 @@ def refresh(
         if p is None:
             final._vertices[label] = c
             continue
-        swept = "managedby" in p.columns
-        if swept:
+        if "managedby" in p.columns:
             marked = p.filter(F.col("managedby").isin(tenants))
-            marked_parts.append(
-                marked.select(F.lit(label).alias("label"), node_key(*keys).alias("key"))
-            )
-            if c is None:
-                orphans_l = marked
-            else:
-                # marked is already tenant-scoped
-                orphans_l = snapshot_diff(marked, c, keys, tenant_col=None)
-            orphan_parts.append(
-                orphans_l.select(F.lit(label).alias("label"), node_key(*keys).alias("key"))
-            )
+            # marked is already tenant-scoped
+            orphans_l = marked if c is None else snapshot_diff(marked, c, keys, tenant_col=None)
+            marked_rows[label], orphan_rows[label] = marked, orphans_l
             merged = merge_nodes(p, c, keys) if c is not None else p
             final._vertices[label] = merged.join(
                 orphans_l.select(*keys).distinct(), list(keys), "left_anti"
@@ -130,19 +119,13 @@ def refresh(
         else:
             final._vertices[label] = merge_nodes(p, c, keys) if c is not None else p
 
-    orphans = _empty_ids(spark)
-    for part in orphan_parts:
-        orphans = orphans.unionByName(part)
-    marked = _empty_ids(spark)
-    for part in marked_parts:
-        marked = marked.unionByName(part)
-
     # edge refresh: drop every prev edge incident to a marked node
-    # (cypher:30-31), then queue this run's raw batches after them. The
-    # sweep tests both endpoints, so sweeping before canonicalization
-    # drops the same edges; one ordered merge in edges_with_props()
-    # then equals merging curr first and that result after prev.
-    final._edge_batches = [
-        sweep_edges(b, marked) for b in prev._edge_batches
-    ] + curr._edge_batches
-    return RefreshResult(final, orphans)
+    # (cypher:30-31) with one sweep of prev's union, then queue this
+    # run's raw batches after it. The sweep tests both endpoints, so
+    # sweeping before canonicalization drops the same edges; one
+    # ordered merge in edges_with_props() then equals merging curr
+    # first and that result after prev. No cut here: even a lazy one
+    # runs shuffle jobs under AQE (see GraphStore).
+    swept = sweep_edges(prev._union_edge_batches(), _vertex_keys(spark, marked_rows))
+    final._edge_batches = [swept, *curr._edge_batches]
+    return RefreshResult(final, _vertex_keys(spark, orphan_rows))

@@ -286,8 +286,8 @@ def merge_edges_with_props(
     type can carry typed ride-alongs. Merge discipline: edge identity
     is the 5-tuple; per PROPERTY the LAST batch to assert a value wins
     (Cypher ``SET`` is last-writer-wins) — an optional ``order_col``
-    carries the batch sequence (GraphStore tags each ``add_edges``
-    call, see ``_union_edge_batches``). Within one batch,
+    carries the batch sequence (``GraphStore.add_edges`` stamps each
+    batch with its process-wide assertion order). Within one batch,
     ties break on the greatest value so the result is deterministic —
     in the reference each edge prop is asserted by exactly one ingest
     statement, so that tie-break never fires on real workbooks.

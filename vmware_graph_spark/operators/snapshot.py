@@ -41,18 +41,22 @@ def snapshot_diff(
 def sweep_edges(edges: DataFrame, orphan_ids: DataFrame) -> DataFrame:
     """Drop edges incident (either endpoint) to orphaned vertices (D1).
 
-    ``orphan_ids`` must have columns (label, key). Two anti-joins — the
-    Cypher ``OPTIONAL MATCH (n)-[r]-() DELETE r`` on marked nodes
-    (refresh-vmware.cypher:30-31).
+    ``orphan_ids`` must have columns (label, key). The Cypher
+    ``OPTIONAL MATCH (n)-[r]-() DELETE r`` on marked nodes
+    (refresh-vmware.cypher:30-31) as ONE statement: per endpoint, a left
+    join that keeps the rows it did not match — an anti-join written so
+    that Catalyst leaves it above a union of edge batches. A LeftAnti
+    join is pushed into every union branch (PushDownLeftSemiAntiJoin),
+    which would sweep a refreshed store's prev batches one by one.
+    ``edges`` keeps its column order.
     """
-    src_gone = orphan_ids.select(
-        F.col("label").alias("src_label"), F.col("key").alias("src_key")
-    )
-    dst_gone = orphan_ids.select(
-        F.col("label").alias("dst_label"), F.col("key").alias("dst_key")
-    )
-    return edges.join(src_gone, ["src_label", "src_key"], "left_anti").join(
-        dst_gone, ["dst_label", "dst_key"], "left_anti"
+    return edges.sparkSession.sql(
+        "SELECT e.* FROM {e} e "
+        "LEFT JOIN {ids} s ON s.label = e.src_label AND s.key = e.src_key "
+        "LEFT JOIN {ids} d ON d.label = e.dst_label AND d.key = e.dst_key "
+        "WHERE s.key IS NULL AND d.key IS NULL",
+        e=edges,
+        ids=orphan_ids,
     )
 
 

@@ -1692,10 +1692,12 @@ def _sheet_fixture(fn):
     replan the whole fixture subtree per upsert/edge batch —
     measured ~35% of stage-query wall time at sf0.1 is exactly that
     repeated Catalyst analysis. ``localCheckpoint(eager=False)`` turns
-    the fixture into a flat LogicalRDD while keeping the refresh a
-    single job chain. The REAL ingest path (workbook parquet sheets,
-    ``sources/workbook.py``) is deliberately NOT cut: parquet scans are
-    already flat and must keep column pruning / filter pushdown.
+    the fixture into a flat LogicalRDD. It is not free: with AQE on,
+    taking the cut runs the fixture's shuffle stages as jobs (only the
+    final stage waits for the first action). The REAL ingest path
+    (workbook parquet sheets, ``sources/workbook.py``) is deliberately
+    NOT cut: parquet scans are already flat and must keep column
+    pruning / filter pushdown.
 
     Memoized per (session, sheet, sf, kwargs): the checkpoint call
     itself runs full physical planning of the fixture subtree, and the

@@ -10,12 +10,14 @@ as header-named rows whose cells are effectively string-or-null
 - a *workbook directory* of ``<sheet>.parquet`` or ``<sheet>.csv``
   files (the fixture/production lakehouse path — at 100 TB the export
   lands as columnar files, never a single XLSX);
-- a real ``.xlsx`` workbook: pandas/openpyxl when installed, else a
-  self-contained stdlib OOXML reader (``zipfile`` + ``ElementTree``
-  over ``xl/worksheets/sheetN.xml`` + the shared-strings table) — a
+- a real ``.xlsx`` workbook through a self-contained stdlib OOXML
+  reader (``zipfile`` + ``ElementTree`` over
+  ``xl/worksheets/sheetN.xml`` + the shared-strings table) — a
   first-run user with a genuine RVTools export is never stub-blocked
-  (round-2 VERDICT "What's missing" #2). A single XLSX is a zip, not
-  splittable, so the one-workbook read is driver-side by nature;
+  (round-2 VERDICT "What's missing" #2), and a cell reads as its
+  stored text on every host (openpyxl would turn date-formatted cells
+  into datetimes). A single XLSX is a zip, not splittable, so the
+  one-workbook read is driver-side by nature;
 - MANY workbooks (one RVTools export per vCenter — the real
   multi-tenant shape) via ``read_xlsx_many``: a ``binaryFile`` scan
   fans the zips out across executors and an Arrow-batched
@@ -201,27 +203,13 @@ def read_workbook_xlsx(
     spark: SparkSession, path: str, *, sheets: tuple[str, ...] = SHEETS
 ) -> dict[str, DataFrame]:
     """Read a real RVTools ``.xlsx`` → one all-string DataFrame per
-    sheet. Uses pandas+openpyxl when installed; otherwise the stdlib
-    OOXML parser above — either way a genuine export loads without
-    extra dependencies. The single-workbook read is driver-side (an
-    XLSX zip is not splittable); for fleets of exports use
+    sheet through the stdlib OOXML parser above, the one
+    ``read_xlsx_many`` runs per workbook. The single-workbook read is driver-side (an XLSX
+    zip is not splittable); for fleets of exports use
     ``read_xlsx_many``."""
-    try:
-        import openpyxl  # noqa: F401
-        import pandas as pd
-
-        out: dict[str, DataFrame] = {}
-        with pd.ExcelFile(path) as xf:
-            for sheet in sheets:
-                if sheet in xf.sheet_names:
-                    pdf = xf.parse(sheet, dtype=str)
-                    out[sheet] = spark.createDataFrame(pdf)
-        return out
-    except ImportError:
-        pass
     with open(path, "rb") as f:
         parsed = parse_xlsx(f.read(), sheets)
-    out = {}
+    out: dict[str, DataFrame] = {}
     for sheet, (header, body) in parsed.items():
         schema = ", ".join(f"`{h}` string" for h in header)
         out[sheet] = spark.createDataFrame(body, schema)

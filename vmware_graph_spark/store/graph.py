@@ -22,6 +22,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 from collections.abc import Callable, Mapping, Sequence
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 
 from vmware_graph_spark.operators.merge import (
     EDGE_COLS,
+    ORDER_COL,
     PROPS_COL,
     _bt,
     _norm_props,
@@ -160,6 +162,29 @@ def _key_sql(*cols: str) -> str:
     return "concat(" + ", chr(31), ".join(f"cast({q} AS string)" for q in qs) + ")"
 
 
+def _vertex_keys(spark: SparkSession, frames: Mapping[str, DataFrame]) -> DataFrame:
+    """(label, key) for every row of each ``label → frame`` as ONE
+    ``UNION ALL`` statement: one analysis instead of one ``unionByName``
+    re-analysis per label. The key is ``_key_sql``'s, NULL when any
+    component is."""
+    if not frames:
+        return spark.createDataFrame([], "label string, key string")
+    views = {f"v{i}": df for i, df in enumerate(frames.values())}
+    return spark.sql(
+        " UNION ALL ".join(
+            f"SELECT '{label}' AS label, {_key_sql(*LABEL_KEYS[label])} AS `key` FROM {{{v}}}"
+            for label, v in zip(frames, views)
+        ),
+        **views,
+    )
+
+
+# Assertion order of edge batches, process-wide: a batch queued later
+# than another, by any store, carries a larger ``__batch_ord``. So a
+# refreshed store can queue prev's batches as one swept frame ahead of
+# this run's, and the per-property merge still sees every batch's order.
+_BATCH_ORD = itertools.count()
+
 T = TypeVar("T")
 
 
@@ -247,9 +272,12 @@ class GraphStore:
         # L after stage N embeds every prior stage's joins, and Catalyst
         # analysis cost grows super-linearly (a 15-stage ingest never
         # finishes analyzing). Every read-back is therefore cut with
-        # localCheckpoint (eager=False — defers computation, so the
-        # refresh stays one job chain; DEPLOY.md has the cluster
-        # swap-in).
+        # localCheckpoint (DEPLOY.md has the cluster swap-in). A cut is
+        # never free: even with eager=False, AQE (session.get_spark
+        # turns it on) runs the plan's shuffle stages as jobs when the
+        # cut is taken (a two-shuffle plan ran 2 jobs; 0 with AQE off).
+        # So no cut belongs inside refresh(), whose orphans-only
+        # callers pay one job.
         self._checkpoint = checkpoint
 
     def _cut(self, df: DataFrame, *, eager: bool = False) -> DataFrame:
@@ -294,17 +322,8 @@ class GraphStore:
 
     def all_vertex_keys(self) -> DataFrame:
         """(label, key) pairs for every vertex — the edge-table id
-        space — as ONE ``UNION ALL`` statement: one analysis instead of
-        one ``unionByName`` re-analysis per label. The key is
-        ``_key_sql``'s, NULL when any component is."""
-        frames, parts = {}, []
-        for i, label in enumerate(self.labels()):
-            frames[f"v{i}"] = self.vertices(label)
-            parts.append(
-                f"SELECT '{label}' AS label, {_key_sql(*LABEL_KEYS[label])} AS `key` "
-                f"FROM {{v{i}}}"
-            )
-        return self.spark.sql(" UNION ALL ".join(parts), **frames)
+        space — as one ``_vertex_keys`` statement."""
+        return _vertex_keys(self.spark, {lb: self.vertices(lb) for lb in self.labels()})
 
     # -- edges -------------------------------------------------------------
 
@@ -314,7 +333,10 @@ class GraphStore:
         endpoints are dropped (Cypher MERGE on a null property fails
         the row). Any column beyond the 5-tuple that isn't already a
         ``props`` map is packed into one (null values dropped) — the
-        M4 edge-property path (refresh-vmware.cypher:187,212)."""
+        M4 edge-property path (refresh-vmware.cypher:187,212). The
+        batch is stamped with its assertion order (``_BATCH_ORD``) as
+        ``__batch_ord``, which the per-property merge reads as Cypher
+        SET's last-writer-wins."""
         cols = edges.columns
         if PROPS_COL in cols:
             props = f"cast({PROPS_COL} AS map<string,string>)"
@@ -329,37 +351,31 @@ class GraphStore:
             else:
                 props = "cast(map() as map<string,string>)"
         self._edge_batches.append(
-            edges.selectExpr(*EDGE_COLS, f"{props} AS {PROPS_COL}")
+            edges.selectExpr(
+                *EDGE_COLS, f"{props} AS {PROPS_COL}", f"{next(_BATCH_ORD)}L AS {ORDER_COL}"
+            )
         )
         self._edges_cache = None
         self._edges_props_cache = None
 
-    def _union_edge_batches(self) -> DataFrame | None:
-        """Union of all ``add_edges`` batches, each tagged with its
-        append index as ``__batch_ord`` so per-property merges honor
-        last-writer-wins (Cypher SET semantics) across batches."""
+    def _union_edge_batches(self) -> DataFrame:
+        """Every queued edge batch as ONE ``UNION ALL`` statement, each
+        row carrying its batch's ``__batch_ord`` (an empty frame of that
+        schema without batches). Columns are selected by name, so no
+        batch's column order matters to the positional union."""
         if not self._edge_batches:
-            return None
-        tagged = [
-            b.withColumn("__batch_ord", F.lit(i).cast("long"))
-            for i, b in enumerate(self._edge_batches)
-        ]
-        batch = tagged[0]
-        for b in tagged[1:]:
-            batch = batch.unionByName(b)
-        return batch
+            return self.spark.createDataFrame([], f"{EDGE_SCHEMA_PROPS}, {ORDER_COL} bigint")
+        cols = ", ".join([*EDGE_COLS, PROPS_COL, ORDER_COL])
+        views = {f"b{i}": b for i, b in enumerate(self._edge_batches)}
+        return self.spark.sql(
+            " UNION ALL ".join(f"SELECT {cols} FROM {{{b}}}" for b in views), **views
+        )
 
     def edges(self) -> DataFrame:
         """The canonical, deduplicated edge table (5-tuple identity)."""
-        if self._edges_cache is not None:
-            return self._edges_cache
-        batch = self._union_edge_batches()
-        if batch is None:
-            self._edges_cache = self.spark.createDataFrame([], EDGE_SCHEMA)
-            return self._edges_cache
-        self._edges_cache = self._cut(
-            merge_edges(batch.select(*EDGE_COLS), undirected_types=UNDIRECTED_TYPES)
-        )
+        if self._edges_cache is None:
+            batch = self._union_edge_batches().select(*EDGE_COLS)
+            self._edges_cache = self._cut(merge_edges(batch, undirected_types=UNDIRECTED_TYPES))
         return self._edges_cache
 
     def edge_pairs(self, a_label: str, b_label: str) -> DataFrame:
@@ -378,15 +394,15 @@ class GraphStore:
         invalidates the edges() cache. Null-keyed endpoints pass
         through; callers that could emit them drop them, as the merged
         path did."""
-        batch = self._union_edge_batches()
-        if batch is None:
+        if not self._edge_batches:
             return self.spark.createDataFrame([], "a_key string, b_key string")
-        fwd = batch.filter(
-            (F.col("src_label") == a_label) & (F.col("dst_label") == b_label)
-        ).select(F.col("src_key").alias("a_key"), F.col("dst_key").alias("b_key"))
-        rev = batch.filter(
-            (F.col("src_label") == b_label) & (F.col("dst_label") == a_label)
-        ).select(F.col("dst_key").alias("a_key"), F.col("src_key").alias("b_key"))
+        pairs = self.spark.sql(
+            f"SELECT src_key AS a_key, dst_key AS b_key FROM {{e}} "
+            f"WHERE src_label = '{a_label}' AND dst_label = '{b_label}' UNION "
+            f"SELECT dst_key AS a_key, src_key AS b_key FROM {{e}} "
+            f"WHERE src_label = '{b_label}' AND dst_label = '{a_label}'",
+            e=self._union_edge_batches(),
+        )
         # CUT before returning: the caller's edge batch EMBEDS this
         # plan, and without a cut every later edges()/edge_pairs call
         # would re-execute the whole batch union nested inside it —
@@ -395,27 +411,24 @@ class GraphStore:
         # label chains plus the edge union embed the result, and a lazy
         # cut would be computed by whichever of write()'s concurrent
         # writers reached it first, racily and redundantly (round-8
-        # ADVICE #3). The frame is small (distinct key pairs).
-        return self._cut(fwd.unionByName(rev).distinct(), eager=True)
+        # ADVICE #3). A lazy cut would not save the jobs either: under
+        # AQE it runs the distinct's shuffle stage when taken. The frame
+        # is small (distinct key pairs).
+        return self._cut(pairs, eager=True)
 
     def edges_with_props(self) -> DataFrame:
         """The canonical edge table WITH its ``props`` string map —
         same rows as ``edges()`` plus per-edge properties merged
         per-key across batches (operators.merge.merge_edges_with_props).
         This is the surface the snapshot writer persists."""
-        if self._edges_props_cache is not None:
-            return self._edges_props_cache
-        batch = self._union_edge_batches()
-        if batch is None:
-            self._edges_props_cache = self.spark.createDataFrame([], EDGE_SCHEMA_PROPS)
-            return self._edges_props_cache
-        self._edges_props_cache = self._cut(
-            merge_edges_with_props(
-                batch,
-                undirected_types=UNDIRECTED_TYPES,
-                order_col="__batch_ord",
+        if self._edges_props_cache is None:
+            self._edges_props_cache = self._cut(
+                merge_edges_with_props(
+                    self._union_edge_batches(),
+                    undirected_types=UNDIRECTED_TYPES,
+                    order_col=ORDER_COL,
+                )
             )
-        )
         return self._edges_props_cache
 
     # -- GraphFrames-style analytics views ---------------------------------
