@@ -199,6 +199,24 @@ def test_streaming_late_drops_are_real_and_output_matches_closed_form(spark, tmp
     assert got == exp
 
 
+def test_fresh_dir_is_removed_at_exit(tmp_path):
+    """A working dir from ``tmpcache.fresh_dir`` lives under the
+    cache root, so it is gone once the process that made it exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "from vmware_graph_spark.tmpcache import fresh_dir; print(fresh_dir('vgs_x_'))"
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": repo}
+    made = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True
+    ).stdout.strip()
+    assert made.startswith(str(tmp_path)) and os.path.basename(made).startswith("vgs_x_")
+    assert not os.path.exists(made)
+    assert os.listdir(tmp_path) == []
+
+
 def test_streaming_late_audit_registry_query_end_to_end(spark):
     """Round-5 regression guard: invoke the REGISTRY entry (not the
     kernel) so cache-path refactors in the wrapper can't silently

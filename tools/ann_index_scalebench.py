@@ -11,26 +11,27 @@ Per tier: index build wall (train + assign + cluster-partitioned
 write), fixed 100-query probe wall reading ONLY the index, probe row
 count (100 × k), and a determinism check (second probe identical).
 
+The committed 100× tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
+
 Usage: python tools/ann_index_scalebench.py [out_json] [copies...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 SRC = "/root/testdata/sf0.1/embeddings.parquet"
 ROOT = "/tmp/vgs_ann_index_sb"
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "/tmp/ann_index_scalebench.json"
-    copies = [int(c) for c in sys.argv[2:]] or [1, 10, 100]
+    words, copies = h.cli([1, 10, 100])
 
     from pyspark.sql import functions as F
 
@@ -38,11 +39,8 @@ def main() -> None:
         ann_topk_against_index,
         write_ann_index,
     )
-    from vmware_graph_spark.session import get_spark, tune
 
-    spark = get_spark("ann-index-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("ann-index-scalebench")
 
     base = spark.read.parquet(SRC)
     queries = base.filter(F.col("vec_id") % 20 == 0).select(
@@ -65,19 +63,15 @@ def main() -> None:
         )
         n_vec = corpus.count()
         idx = os.path.join(ROOT, f"idx_{n}")
-        if os.path.isdir(idx):
-            shutil.rmtree(idx)
+        shutil.rmtree(idx, ignore_errors=True)
         os.makedirs(idx)
 
-        t0 = time.time()
-        write_ann_index(corpus, idx, "vec_id", "embedding", "label")
-        build_s = round(time.time() - t0, 2)
-
-        t0 = time.time()
-        out1 = ann_topk_against_index(
-            spark, idx, queries, "vec_id", "embedding", k=5
-        ).collect()
-        probe_s = round(time.time() - t0, 2)
+        with h.timed() as build:
+            write_ann_index(corpus, idx, "vec_id", "embedding", "label")
+        with h.timed() as probe:
+            out1 = ann_topk_against_index(
+                spark, idx, queries, "vec_id", "embedding", k=5
+            ).collect()
 
         out2 = ann_topk_against_index(
             spark, idx, queries, "vec_id", "embedding", k=5
@@ -89,17 +83,14 @@ def main() -> None:
         entry = {
             "corpus_vectors": n_vec,
             "queries": n_q,
-            "build_s": build_s,
-            "probe_s": probe_s,
+            "build_s": build.s,
+            "probe_s": probe.s,
             "probe_rows": len(out1),
             "probe_deterministic": bool(same),
         }
-        report["copies"][f"{n}"] = entry
-        print(json.dumps({f"{n}": entry}), file=sys.stderr)
+        h.progress(report["copies"], f"{n}", entry)
 
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("ann_index_scalebench", report, words[0] if words else None)
 
 
 if __name__ == "__main__":

@@ -19,8 +19,8 @@ The ordering claim this measures: extraction runs at the PAGE grain
 (linear, codegen), iteration at the HOST grain (the graph the fixpoint
 shuffles is pages/hosts-times smaller) — the only sane order at 100 TB.
 
-Appends ``boilerplate`` and ``host_authority`` sections to
-CRAWL_SCALEBENCH.json with --merge, else writes
+Sets the ``boilerplate`` and ``host_authority`` sections of
+CRAWL_SCALEBENCH.json with --merge, else writes them to
 /tmp/boilerplate_scalebench.json.
 
 Usage: python tools/boilerplate_scalebench.py [--merge] [n_pages...]
@@ -28,12 +28,11 @@ Usage: python tools/boilerplate_scalebench.py [--merge] [n_pages...]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 #: fixed prose for the content block: 38 chars, no specials.
 CONTENT_TEXT = "lorem ipsum dolor sit amet consectetur"
@@ -120,17 +119,10 @@ def main() -> None:
         url_host,
         url_scheme,
     )
-    from vmware_graph_spark.session import get_spark, tune
 
-    tiers = [int(c) for c in sys.argv[1:] if not c.startswith("-")] or [
-        200_000,
-        2_000_000,
-    ]
-
+    _words, tiers = h.cli([200_000, 2_000_000])
     load_at_start = round(os.getloadavg()[0], 2)
-    spark = get_spark("boilerplate-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("boilerplate-scalebench")
 
     report: dict = {"load_1m_at_start": load_at_start, "tiers": {}}
 
@@ -147,20 +139,19 @@ def main() -> None:
             .select(_fixture_page_html(text=F.lit(CONTENT_TEXT)).alias("html"))
         )
 
-        t0 = time.time()
-        blocks = pages.select(F.explode(html_blocks("html")).alias("frag")).select(
-            F.length(html_to_text("frag")).alias("bn"),
-            anchor_text_chars("frag").alias("a"),
-        ).filter(F.col("bn") > 0)
-        cls = blocks.withColumn("cls", classify_block(F.col("bn"), F.col("a")))
-        agg = cls.agg(
-            F.count("*").alias("blocks"),
-            F.sum((F.col("cls") == "content").cast("long")).alias("content"),
-            F.sum(
-                F.when(F.col("cls") == "content", F.col("bn")).otherwise(F.lit(0))
-            ).alias("content_chars"),
-        ).collect()[0]
-        wall = round(time.time() - t0, 2)
+        with h.timed() as t:
+            blocks = pages.select(F.explode(html_blocks("html")).alias("frag")).select(
+                F.length(html_to_text("frag")).alias("bn"),
+                anchor_text_chars("frag").alias("a"),
+            ).filter(F.col("bn") > 0)
+            cls = blocks.withColumn("cls", classify_block(F.col("bn"), F.col("a")))
+            agg = cls.agg(
+                F.count("*").alias("blocks"),
+                F.sum((F.col("cls") == "content").cast("long")).alias("content"),
+                F.sum(
+                    F.when(F.col("cls") == "content", F.col("bn")).otherwise(F.lit(0))
+                ).alias("content_chars"),
+            ).collect()[0]
 
         want_blocks, want_content, want_chars = _expected_block_totals(n)
         assert agg["blocks"] == want_blocks, (agg["blocks"], want_blocks)
@@ -169,14 +160,13 @@ def main() -> None:
             agg["content_chars"], want_chars,
         )
 
-        report["tiers"][str(n)] = {
+        h.progress(report["tiers"], str(n), {
             "pages": n,
-            "wall_s": wall,
-            "pages_per_s": round(n / wall, 0),
+            "wall_s": t.s,
+            "pages_per_s": round(n / t.s, 0),
             "blocks": int(agg["blocks"]),
             "content_blocks": int(agg["content"]),
-        }
-        print(json.dumps({str(n): report["tiers"][str(n)]}), file=sys.stderr)
+        })
 
     # ---- (b) host authority: page-grain extract, host-grain iterate ---
     n_pages = 1_500_000  # 15 pages/host primary, 5/host secondary
@@ -202,34 +192,33 @@ def main() -> None:
         body.alias("html"),
     )
 
-    t0 = time.time()
-    links = pages.select(
-        url_scheme("url").alias("s"),
-        url_host("url").alias("src_host"),
-        F.explode(extract_links("html")).alias("l"),
-    )
-    resolved = links.select(
-        "src_host",
-        url_host(resolve_href(F.col("s"), F.col("src_host"), F.col("l.href"))).alias(
-            "dst_host"
-        ),
-    ).filter(F.col("dst_host").isNotNull() & (F.col("src_host") != F.col("dst_host")))
-    edges = resolved.groupBy(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    ).agg(F.count("*").cast("long").alias("w"))
-    edges = edges.persist()
-    n_edges = edges.count()
-    t_extract = round(time.time() - t0, 2)
+    with h.timed() as t:
+        links = pages.select(
+            url_scheme("url").alias("s"),
+            url_host("url").alias("src_host"),
+            F.explode(extract_links("html")).alias("l"),
+        )
+        resolved = links.select(
+            "src_host",
+            url_host(resolve_href(F.col("s"), F.col("src_host"), F.col("l.href"))).alias(
+                "dst_host"
+            ),
+        ).filter(F.col("dst_host").isNotNull() & (F.col("src_host") != F.col("dst_host")))
+        edges = resolved.groupBy(
+            F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
+        ).agg(F.count("*").cast("long").alias("w"))
+        edges = edges.persist()
+        n_edges = edges.count()
+    t_extract = t.s
 
     vertices = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    t1 = time.time()
-    ranks = pagerank_weighted_fixed(vertices, edges, iters=4)
-    got = {r["id"]: r["rank_micros"] for r in ranks.collect()}
-    t_rank = round(time.time() - t1, 2)
+    with h.timed() as rank_t:
+        ranks = pagerank_weighted_fixed(vertices, edges, iters=4)
+        got = {r["id"]: r["rank_micros"] for r in ranks.collect()}
     edges.unpersist()
 
     want, want_edges = _host_pagerank_reference(n_pages, N_HOSTS)
@@ -237,35 +226,25 @@ def main() -> None:
     # 2H minus the k ≡ 4 (mod H/2) collisions where both targets
     # coincide and the two classes contract into one weighted edge
     assert n_edges == want_edges, (n_edges, want_edges)
-    mismatch = [h for h in want if got.get(h) != want[h]]
+    mismatch = [host for host in want if got.get(host) != want[host]]
     assert not mismatch, (len(mismatch), mismatch[:3])
 
-    report["host_authority"] = {
+    h.progress(report, "host_authority", {
         "pages": n_pages,
         "hosts": N_HOSTS,
         "edges": int(n_edges),
         "extract_contract_wall_s": t_extract,
-        "pagerank4_wall_s": t_rank,
+        "pagerank4_wall_s": rank_t.s,
         "pages_per_s_extract": round(n_pages / t_extract, 0),
         "rank_exact_vs_reference": True,
-    }
-    print(json.dumps({"host_authority": report["host_authority"]}), file=sys.stderr)
+    })
 
-    if "--merge" in sys.argv:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "CRAWL_SCALEBENCH.json",
-        )
-        with open(path) as f:
-            doc = json.load(f)
-        doc["boilerplate"] = {k_: v for k_, v in report.items() if k_ != "host_authority"}
-        doc["host_authority"] = report["host_authority"]
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=2)
-    else:
-        with open("/tmp/boilerplate_scalebench.json", "w") as f:
-            json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    host_authority = report.pop("host_authority")
+    h.write_report(
+        "boilerplate_scalebench",
+        {"boilerplate": report, "host_authority": host_authority},
+        artifact="CRAWL_SCALEBENCH.json",
+    )
 
 
 if __name__ == "__main__":

@@ -164,11 +164,8 @@ def full_suite() -> tuple[str, ...]:
 
 
 def main() -> int:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo not in sys.path:
-        sys.path.insert(0, repo)
-    import selfcheck
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools import selfcheck
 
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     names = full_suite() if "--full" in sys.argv else FAMILY_REPRESENTATIVES

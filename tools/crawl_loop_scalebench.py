@@ -25,22 +25,21 @@ width, wave count, Hamilton allocation over a 1M-slot budget) is
 compared row-for-row against a DuckDB integer recompute from first
 principles — 0 differences required.
 
-Appends ``crawl_loop`` + ``crawl_loop_giant_host`` sections to
-CRAWL_SCALEBENCH.json with --merge, else writes
+Sets the ``crawl_loop`` and ``crawl_loop_giant_host`` sections of
+CRAWL_SCALEBENCH.json with --merge, else writes them to
 /tmp/crawl_loop_scalebench.json.
 
-Usage: python tools/crawl_loop_scalebench.py [--merge] [n_seeds]
+Usage: python tools/crawl_loop_scalebench.py [--merge] [n_seeds [n_giant_seeds]]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 N_HOSTS = 10_000
 BUDGET = 1_000_000
@@ -49,6 +48,36 @@ IDX = "/tmp/vgs_crawl_loop_idx"
 # Crawl-delay by host class (h % 4) -> wave width max(1, floor(8/d))
 DELAYS = [1, 2, 4, 8]
 WIDTHS = [8, 4, 2, 1]
+
+
+def _duck_per_host(eligible_sql: str) -> str:
+    """DuckDB recompute, from first principles, of every per-host row
+    (host, eligible, width, waves, Hamilton allocation) the loop yields.
+    ``eligible_sql`` gives one ``(h, width)`` row per eligible seed, with
+    ``h`` the host string."""
+    return f"""
+        WITH e AS ({eligible_sql}),
+        wd AS (
+          SELECT h, CAST(count(*) AS BIGINT) AS n, CAST(width AS BIGINT) AS width
+          FROM e GROUP BY h, width
+        ),
+        tot AS (SELECT sum(n) AS w FROM wd),
+        base AS (
+          SELECT h, n, width, ({BUDGET} * n) // w AS b, ({BUDGET} * n) % w AS rem
+          FROM wd, tot
+        ),
+        rk AS (
+          -- remainder ties break on the HOST STRING (the engine's
+          -- key), not a numeric id: 'h10' < 'h2'
+          SELECT *, row_number() OVER (ORDER BY rem DESC, h) AS r,
+                 (SELECT {BUDGET} - sum(b) FROM base) AS leftover
+          FROM base
+        )
+        SELECT h AS host, n, width,
+               CAST(CEIL(CAST(n AS DOUBLE) / width) AS BIGINT) AS n_waves,
+               CAST(b + CASE WHEN r <= leftover THEN 1 ELSE 0 END AS BIGINT)
+        FROM rk
+    """
 
 
 def main() -> None:
@@ -64,65 +93,62 @@ def main() -> None:
         write_crawled_urls,
     )
     from vmware_graph_spark.operators.rank import exact_global_rank
-    from vmware_graph_spark.session import get_spark, tune
 
-    args = [int(c) for c in sys.argv[1:] if not c.startswith("-")]
+    _words, args = h.cli()
     n_seeds = args[0] if args else 5_000_000
 
     load_at_start = round(os.getloadavg()[0], 2)
-    spark = get_spark("crawl-loop-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("crawl-loop-scalebench")
 
     def run_arm(seeds, robots, n_rule_rows, duck_sql, *, index_seeds):
         """Run the composed loop over `seeds` and compare every per-host
         row against the DuckDB recompute. Returns (loop_s, got_rows)."""
         shutil.rmtree(IDX, ignore_errors=True)
-        t0 = time.time()
-        write_crawled_urls(index_seeds.select("canon"), IDX)
-        index_build_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            write_crawled_urls(index_seeds.select("canon"), IDX)
+        index_build_s = t.s
 
-        t0 = time.time()
-        rules = parse_robots(robots, "examplebot")
-        delays = parse_robots_delays(robots, "examplebot")
-        gated = robots_filter(
-            seeds, rules, rules_rows=n_rule_rows
-        ).filter(F.col("fetch_allowed")).drop("fetch_allowed")
-        frontier = frontier_against_crawled(spark, IDX, gated)
-        width = F.greatest(
-            F.lit(1).cast("bigint"),
-            F.floor(F.lit(8.0) / F.coalesce(F.col("crawl_delay"), F.lit(1.0))),
-        )
-        sched = frontier.join(F.broadcast(delays), "host", "left").select(
-            "host",
-            "canon",
-            width.alias("width"),
-            F.conv(F.substring(F.md5("canon"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("ord"),
-        )
-        r = exact_global_rank(
-            sched, ["ord", "canon"], rank_col="rn", partition_cols=["host"]
-        )
-        waves = r.select(
-            "host",
-            "width",
-            (((F.col("rn") - 1) / F.col("width")).cast("bigint") + 1).alias(
-                "wave"
-            ),
-        )
-        per_host = waves.groupBy("host", "width").agg(
-            F.count("*").cast("bigint").alias("n_eligible"),
-            F.max("wave").cast("bigint").alias("n_waves"),
-        )
-        alloc = apportion_budget(
-            per_host.select("host", F.col("n_eligible").alias("weight")), BUDGET
-        )
-        got = sorted(
-            (r.host, r.n_eligible, r.width, r.n_waves, r.alloc)
-            for r in per_host.join(alloc.select("host", "alloc"), "host").collect()
-        )
-        loop_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            rules = parse_robots(robots, "examplebot")
+            delays = parse_robots_delays(robots, "examplebot")
+            gated = robots_filter(
+                seeds, rules, rules_rows=n_rule_rows
+            ).filter(F.col("fetch_allowed")).drop("fetch_allowed")
+            frontier = frontier_against_crawled(spark, IDX, gated)
+            width = F.greatest(
+                F.lit(1).cast("bigint"),
+                F.floor(F.lit(8.0) / F.coalesce(F.col("crawl_delay"), F.lit(1.0))),
+            )
+            sched = frontier.join(F.broadcast(delays), "host", "left").select(
+                "host",
+                "canon",
+                width.alias("width"),
+                F.conv(F.substring(F.md5("canon"), 1, 15), 16, 10)
+                .cast("bigint")
+                .alias("ord"),
+            )
+            r = exact_global_rank(
+                sched, ["ord", "canon"], rank_col="rn", partition_cols=["host"]
+            )
+            waves = r.select(
+                "host",
+                "width",
+                (((F.col("rn") - 1) / F.col("width")).cast("bigint") + 1).alias(
+                    "wave"
+                ),
+            )
+            per_host = waves.groupBy("host", "width").agg(
+                F.count("*").cast("bigint").alias("n_eligible"),
+                F.max("wave").cast("bigint").alias("n_waves"),
+            )
+            alloc = apportion_budget(
+                per_host.select("host", F.col("n_eligible").alias("weight")), BUDGET
+            )
+            got = sorted(
+                (r.host, r.n_eligible, r.width, r.n_waves, r.alloc)
+                for r in per_host.join(alloc.select("host", "alloc"), "host").collect()
+            )
+        loop_s = t.s
 
         want = sorted(tuple(r) for r in duckdb.sql(duck_sql).fetchall())
         diffs = sum(1 for a, b in zip(got, want) if a != b) + abs(
@@ -142,48 +168,25 @@ def main() -> None:
             F.lit(".example.com/a/"), i.cast("string"),
         ).alias("canon"),
     )
-    k = F.col("id")
     robots = spark.range(N_HOSTS).select(
-        F.concat(F.lit("h"), k.cast("string")).alias("host"),
+        F.concat(F.lit("h"), i.cast("string")).alias("host"),
         F.concat(
             F.lit("User-agent: examplebot\nCrawl-delay: "),
             F.element_at(
                 F.array(*[F.lit(str(d)) for d in DELAYS]),
-                (k % 4).cast("int") + 1,
+                (i % 4).cast("int") + 1,
             ),
             F.lit("\nDisallow: /a/\nAllow: /a/*"),
-            (k % 7).cast("string"), F.lit("$\n"),
+            (i % 7).cast("string"), F.lit("$\n"),
         ).alias("robots_txt"),
     )
-    duck_main = f"""
-        WITH e AS (
-          SELECT (i % {N_HOSTS}) AS h FROM range({n_seeds}) t(i)
-          WHERE i % 10 = (i % {N_HOSTS}) % 7 AND i % 4 <> 0
-        ),
-        agg AS (SELECT h, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY h),
-        wd AS (
-          SELECT h, n,
-                 CAST(CASE h % 4 WHEN 0 THEN 8 WHEN 1 THEN 4
-                      WHEN 2 THEN 2 ELSE 1 END AS BIGINT) AS width
-          FROM agg
-        ),
-        tot AS (SELECT sum(n) AS w FROM wd),
-        base AS (
-          SELECT h, n, width, ({BUDGET} * n) // w AS b, ({BUDGET} * n) % w AS rem
-          FROM wd, tot
-        ),
-        rk AS (
-          -- remainder ties break on the HOST STRING (the engine's
-          -- key), not the numeric id: 'h10' < 'h2'
-          SELECT *, row_number() OVER (ORDER BY rem DESC, ('h' || h)) AS r,
-                 (SELECT {BUDGET} - sum(b) FROM base) AS leftover
-          FROM base
-        )
-        SELECT 'h' || h AS host, n, width,
-               CAST(CEIL(CAST(n AS DOUBLE) / width) AS BIGINT) AS n_waves,
-               CAST(b + CASE WHEN r <= leftover THEN 1 ELSE 0 END AS BIGINT)
-        FROM rk
-    """
+    duck_main = _duck_per_host(f"""
+        SELECT 'h' || (i % {N_HOSTS}) AS h,
+               CASE (i % {N_HOSTS}) % 4 WHEN 0 THEN 8 WHEN 1 THEN 4
+                    WHEN 2 THEN 2 ELSE 1 END AS width
+        FROM range({n_seeds}) t(i)
+        WHERE i % 10 = (i % {N_HOSTS}) % 7 AND i % 4 <> 0
+    """)
     idx_s, loop_s, got = run_arm(
         seeds, robots, 2 * N_HOSTS, duck_main,
         index_seeds=seeds.filter(i % 4 == 0),
@@ -220,36 +223,18 @@ def main() -> None:
     )
     grobots = spark.createDataFrame(
         [
-            (h, "User-agent: examplebot\nCrawl-delay: 2\n"
-                "Disallow: /a/\nAllow: /a/*0$\n")
-            for h in ("giant", "side0", "side1")
+            (host, "User-agent: examplebot\nCrawl-delay: 2\n"
+                   "Disallow: /a/\nAllow: /a/*0$\n")
+            for host in ("giant", "side0", "side1")
         ],
         "host string, robots_txt string",
     )
-    duck_giant = f"""
-        WITH e AS (
-          SELECT CASE WHEN i % 101 = 0 THEN 'side' || (i % 2)
-                      ELSE 'giant' END AS h
-          FROM range({n_giant}) t(i)
-          WHERE i % 10 = 0 AND i % 4 <> 0
-        ),
-        agg AS (SELECT h, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY h),
-        wd AS (SELECT h, n, CAST(4 AS BIGINT) AS width FROM agg),
-        tot AS (SELECT sum(n) AS w FROM wd),
-        base AS (
-          SELECT h, n, width, ({BUDGET} * n) // w AS b, ({BUDGET} * n) % w AS rem
-          FROM wd, tot
-        ),
-        rk AS (
-          SELECT *, row_number() OVER (ORDER BY rem DESC, h) AS r,
-                 (SELECT {BUDGET} - sum(b) FROM base) AS leftover
-          FROM base
-        )
-        SELECT h AS host, n, width,
-               CAST(CEIL(CAST(n AS DOUBLE) / width) AS BIGINT) AS n_waves,
-               CAST(b + CASE WHEN r <= leftover THEN 1 ELSE 0 END AS BIGINT)
-        FROM rk
-    """
+    duck_giant = _duck_per_host(f"""
+        SELECT CASE WHEN i % 101 = 0 THEN 'side' || (i % 2)
+                    ELSE 'giant' END AS h, 4 AS width
+        FROM range({n_giant}) t(i)
+        WHERE i % 10 = 0 AND i % 4 <> 0
+    """)
     gidx_s, gloop_s, ggot = run_arm(
         gseeds, grobots, 6, duck_giant,
         index_seeds=gseeds.filter(i % 4 == 0),
@@ -271,25 +256,11 @@ def main() -> None:
     assert report_giant["alloc_total"] == BUDGET
     shutil.rmtree(IDX, ignore_errors=True)
 
-    if "--merge" in sys.argv:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "CRAWL_SCALEBENCH.json",
-        )
-        with open(path) as f:
-            doc = json.load(f)
-        doc["crawl_loop"] = report_main
-        doc["crawl_loop_giant_host"] = report_giant
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=2)
-    else:
-        with open("/tmp/crawl_loop_scalebench.json", "w") as f:
-            json.dump(
-                {"crawl_loop": report_main, "crawl_loop_giant_host": report_giant},
-                f, indent=2,
-            )
-    print(json.dumps({"crawl_loop": report_main,
-                      "crawl_loop_giant_host": report_giant}))
+    h.write_report(
+        "crawl_loop_scalebench",
+        {"crawl_loop": report_main, "crawl_loop_giant_host": report_giant},
+        artifact="CRAWL_SCALEBENCH.json",
+    )
 
 
 if __name__ == "__main__":

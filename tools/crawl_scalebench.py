@@ -19,18 +19,21 @@ Measured per scale N in {1, 10, 100} (copies):
 - ``url_canon_s``: 4 raw spellings per page canonicalized + grouped
   (one narrow shuffle on the canonical key).
 
+The committed 100x tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
+
 Usage: python tools/crawl_scalebench.py [out_json] [copies...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 FLEET = "/tmp/vgs_warc_fleet"
 SRC_SF = os.environ.get("CRAWL_SRC_SF", "/root/testdata/sf0.1")
@@ -78,102 +81,93 @@ def build_fleet(n_copies: int) -> int:
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "/tmp/crawl_scalebench.json"
-    copies = [int(c) for c in sys.argv[2:]] or [1, 10, 100]
+    words, copies = h.cli([1, 10, 100])
 
     from pyspark.sql import functions as F
 
     from vmware_graph_spark.functions.text import html_to_text, lang_id, n_tokens
-    from vmware_graph_spark.functions.url import url_canonical, url_host
-    from vmware_graph_spark.session import get_spark, tune
-    from vmware_graph_spark.sources.warc import read_warc
+    from vmware_graph_spark.functions.url import (
+        extract_hrefs,
+        resolve_href,
+        url_canonical,
+        url_host,
+        url_scheme,
+    )
+    from vmware_graph_spark.sources.warc import read_warc, read_warc_stream
 
-    spark = get_spark("crawl-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("crawl-scalebench")
 
     report: dict = {"load_1m_at_start": round(os.getloadavg()[0], 2), "copies": {}}
     for n in copies:
-        t0 = time.time()
-        n_pages = build_fleet(n)
-        build_s = round(time.time() - t0, 1)
+        with h.timed(1) as t:
+            n_pages = build_fleet(n)
+        build_s = t.s
         glob = f"{FLEET}/plain/*.warc"
         gz_glob = f"{FLEET}/gz/*.warc.gz"
         n_archives = n * SHARDS_PER_COPY
 
-        t0 = time.time()
-        decoded_rows = read_warc(spark, glob).count()
-        decode_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            decoded_rows = read_warc(spark, glob).count()
+        decode_s = t.s
 
         # Gzipped twin (per-member compression — the Common Crawl
         # layout): same records, same file grain; the delta is pure
         # decompression cost inside the executor-side parser.
-        t0 = time.time()
-        gz_rows = read_warc(spark, gz_glob).count()
-        gz_decode_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            gz_rows = read_warc(spark, gz_glob).count()
+        gz_decode_s = t.s
         assert gz_rows == decoded_rows, (gz_rows, decoded_rows)
-        gz_bytes = sum(
-            os.path.getsize(os.path.join(f"{FLEET}/gz", f))
-            for f in os.listdir(f"{FLEET}/gz")
-        )
-        plain_bytes = sum(
-            os.path.getsize(os.path.join(f"{FLEET}/plain", f))
-            for f in os.listdir(f"{FLEET}/plain")
-        )
+        gz_bytes = h.du_bytes(f"{FLEET}/gz")
+        plain_bytes = h.du_bytes(f"{FLEET}/plain")
 
-        t0 = time.time()
-        recs = read_warc(spark, glob)
-        t = html_to_text(F.col("body").cast("string"))
-        page = recs.filter(F.col("http_status") == 200).select(
-            url_host("uri").alias("host"), t.alias("t")
-        )
-        scored = page.select(
-            "host",
-            n_tokens("t").cast("bigint").alias("n_toks"),
-            lang_id("t").alias("lang_pred"),
-        )
-        rollup = (
-            scored.filter(F.col("n_toks") >= 5)
-            .groupBy("host")
-            .agg(
-                F.count("*").alias("n_pages"),
-                F.sum("n_toks").alias("total_toks"),
-                F.countDistinct("lang_pred").alias("n_langs"),
+        with h.timed() as t:
+            recs = read_warc(spark, glob)
+            text = html_to_text(F.col("body").cast("string"))
+            page = recs.filter(F.col("http_status") == 200).select(
+                url_host("uri").alias("host"), text.alias("t")
             )
-        )
-        hosts = rollup.count()
-        pipeline_s = round(time.time() - t0, 2)
-
-        t0 = time.time()
-        recs = read_warc(spark, glob).select("uri")
-        variants = recs.select(
-            F.explode(
-                F.array(
-                    F.col("uri"),
-                    F.concat(F.col("uri"), F.lit("&utm_campaign=x")),
-                    F.concat(F.upper(F.col("uri")), F.lit("#frag")),
-                    F.regexp_replace("uri", "^http:", "https:"),
+            scored = page.select(
+                "host",
+                n_tokens("t").cast("bigint").alias("n_toks"),
+                lang_id("t").alias("lang_pred"),
+            )
+            rollup = (
+                scored.filter(F.col("n_toks") >= 5)
+                .groupBy("host")
+                .agg(
+                    F.count("*").alias("n_pages"),
+                    F.sum("n_toks").alias("total_toks"),
+                    F.countDistinct("lang_pred").alias("n_langs"),
                 )
-            ).alias("url")
-        )
-        canon = (
-            variants.select(url_canonical("url").alias("c"))
-            .groupBy("c")
-            .agg(F.count("*").alias("n"))
-        )
-        canon_groups = canon.count()
-        url_s = round(time.time() - t0, 2)
+            )
+            hosts = rollup.count()
+        pipeline_s = t.s
+
+        with h.timed() as t:
+            recs = read_warc(spark, glob).select("uri")
+            variants = recs.select(
+                F.explode(
+                    F.array(
+                        F.col("uri"),
+                        F.concat(F.col("uri"), F.lit("&utm_campaign=x")),
+                        F.concat(F.upper(F.col("uri")), F.lit("#frag")),
+                        F.regexp_replace("uri", "^http:", "https:"),
+                    )
+                ).alias("url")
+            )
+            canon = (
+                variants.select(url_canonical("url").alias("c"))
+                .groupBy("c")
+                .agg(F.count("*").alias("n"))
+            )
+            canon_groups = canon.count()
+        url_s = t.s
 
         stream_entry = None
         if n >= 10:
             # Streaming twin at scale: 8 archives per micro-batch →
             # n batches; per-batch cost should stay flat (stateless
             # projection, the parser is the same function object).
-            import shutil as _sh
-            import tempfile
-
-            from vmware_graph_spark.sources.warc import read_warc_stream
-
             run = tempfile.mkdtemp(prefix="vgs_crawl_stream_")
             recs_s = read_warc_stream(spark, glob, max_files_per_trigger=8)
             t_s = html_to_text(F.col("body").cast("string"))
@@ -181,16 +175,16 @@ def main() -> None:
                 url_host("uri").alias("host"),
                 n_tokens(t_s).cast("bigint").alias("n_toks"),
             )
-            t0 = time.time()
-            q = (
-                page_s.writeStream.format("parquet")
-                .option("path", os.path.join(run, "sink"))
-                .option("checkpointLocation", os.path.join(run, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(1800)
-            stream_wall = round(time.time() - t0, 2)
+            with h.timed() as t:
+                q = (
+                    page_s.writeStream.format("parquet")
+                    .option("path", os.path.join(run, "sink"))
+                    .option("checkpointLocation", os.path.join(run, "ckpt"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination(1800)
+            stream_wall = t.s
             n_batches = max(1, n_archives // 8)
             sunk = spark.read.parquet(os.path.join(run, "sink")).count()
             stream_entry = {
@@ -199,55 +193,47 @@ def main() -> None:
                 "per_batch_s": round(stream_wall / n_batches, 3),
                 "rows_sunk": sunk,
             }
-            _sh.rmtree(run, ignore_errors=True)
+            shutil.rmtree(run, ignore_errors=True)
 
         # Link-frontier discovery at scale: pages replicated in-engine
         # (explode over a copy index, tenant-shifted ids), then the full
         # harvest -> resolve -> canonicalize -> distinct -> anti-join.
-        from vmware_graph_spark.functions.url import (
-            extract_hrefs,
-            resolve_href,
-            url_canonical,
-            url_host,
-            url_scheme,
-        )
-
-        t0 = time.time()
-        base = spark.read.parquet(f"{SRC_SF}/documents.parquet").select("doc_id")
-        d = base.select(
-            "doc_id", F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("c")
-        ).select((F.col("doc_id") + F.col("c") * 1_000_000).alias("doc_id"))
-        kk = (F.col("doc_id") % 5).cast("string")
-        kn = ((F.col("doc_id") + 1) % 5).cast("string")
-        ii = F.col("doc_id").cast("string")
-        inx = (F.col("doc_id") + 1).cast("string")
-        pages_f = d.select(
-            F.concat(
-                F.lit("http://www.site"), kk, F.lit(".example.com/a/"), ii
-            ).alias("url"),
-            F.concat(
-                F.lit('<html><body><a href="http://www.site'), kn,
-                F.lit(".example.com/a/"), inx,
-                F.lit('?utm_source=x">n</a><a href="/b/'), ii,
-                F.lit('#f">r</a></body></html>'),
-            ).alias("html"),
-        )
-        crawled = pages_f.select(url_canonical("url").alias("canon"))
-        hrefs = pages_f.select(
-            url_scheme("url").alias("s"),
-            url_host("url").alias("h"),
-            F.explode(extract_hrefs("html")).alias("href"),
-        )
-        resolved = hrefs.select(
-            resolve_href(F.col("s"), F.col("h"), F.col("href")).alias("r")
-        ).filter(F.col("r").isNotNull())
-        frontier_n = (
-            resolved.select(url_canonical("r").alias("canon"))
-            .distinct()
-            .join(crawled, "canon", "left_anti")
-            .count()
-        )
-        frontier_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            base = spark.read.parquet(f"{SRC_SF}/documents.parquet").select("doc_id")
+            d = base.select(
+                "doc_id", F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("c")
+            ).select((F.col("doc_id") + F.col("c") * 1_000_000).alias("doc_id"))
+            kk = (F.col("doc_id") % 5).cast("string")
+            kn = ((F.col("doc_id") + 1) % 5).cast("string")
+            ii = F.col("doc_id").cast("string")
+            inx = (F.col("doc_id") + 1).cast("string")
+            pages_f = d.select(
+                F.concat(
+                    F.lit("http://www.site"), kk, F.lit(".example.com/a/"), ii
+                ).alias("url"),
+                F.concat(
+                    F.lit('<html><body><a href="http://www.site'), kn,
+                    F.lit(".example.com/a/"), inx,
+                    F.lit('?utm_source=x">n</a><a href="/b/'), ii,
+                    F.lit('#f">r</a></body></html>'),
+                ).alias("html"),
+            )
+            crawled = pages_f.select(url_canonical("url").alias("canon"))
+            hrefs = pages_f.select(
+                url_scheme("url").alias("s"),
+                url_host("url").alias("h"),
+                F.explode(extract_hrefs("html")).alias("href"),
+            )
+            resolved = hrefs.select(
+                resolve_href(F.col("s"), F.col("h"), F.col("href")).alias("r")
+            ).filter(F.col("r").isNotNull())
+            frontier_n = (
+                resolved.select(url_canonical("r").alias("canon"))
+                .distinct()
+                .join(crawled, "canon", "left_anti")
+                .count()
+            )
+        frontier_s = t.s
 
         entry = {
             "archives": n_archives,
@@ -273,12 +259,9 @@ def main() -> None:
         }
         if stream_entry is not None:
             entry["streaming"] = stream_entry
-        report["copies"][f"{n}"] = entry
-        print(json.dumps({f"{n}": entry}), file=sys.stderr)
+        h.progress(report["copies"], f"{n}", entry)
 
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("crawl_scalebench", report, words[0] if words else None)
 
 
 if __name__ == "__main__":

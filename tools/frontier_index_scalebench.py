@@ -10,21 +10,23 @@ the fresh half). Probe/extend growth across 100× corpus growth should
 be bounded by the index COLUMN SCAN, not by rewrite (the index is
 never rewritten); decisions are asserted exactly at every tier.
 
-Appends a ``frontier_index`` section to CRAWL_SCALEBENCH.json when run
-with --merge, else writes /tmp/frontier_index_scalebench.json.
+Sets the ``frontier_index`` section of CRAWL_SCALEBENCH.json when run
+with --merge, else writes it to /tmp/frontier_index_scalebench.json.
+
+The committed 6M-URL tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
 
 Usage: python tools/frontier_index_scalebench.py [--merge]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 IDX_ROOT = "/tmp/vgs_frontier_idx"
 WAVE = 20_000
@@ -38,11 +40,8 @@ def main() -> None:
         frontier_against_crawled,
         write_crawled_urls,
     )
-    from vmware_graph_spark.session import get_spark, tune
 
-    spark = get_spark("frontier-index-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("frontier-index-scalebench")
 
     def urls(lo: int, hi: int):
         return spark.range(lo, hi).select(
@@ -57,21 +56,18 @@ def main() -> None:
         idx = os.path.join(IDX_ROOT, str(corpus))
         shutil.rmtree(idx, ignore_errors=True)
 
-        t0 = time.time()
-        write_crawled_urls(urls(0, corpus), idx)
-        build_s = round(time.time() - t0, 2)
+        with h.timed() as build:
+            write_crawled_urls(urls(0, corpus), idx)
 
         # fixed wave: WAVE/2 already crawled + WAVE/2 genuinely new
         wave = urls(corpus - WAVE // 2, corpus + WAVE // 2)
 
-        t0 = time.time()
-        n_new = frontier_against_crawled(spark, idx, wave).count()
-        probe_s = round(time.time() - t0, 2)
+        with h.timed() as probe:
+            n_new = frontier_against_crawled(spark, idx, wave).count()
         assert n_new == WAVE // 2, (corpus, n_new)
 
-        t0 = time.time()
-        extend_crawled_urls(spark, wave, idx)
-        extend_s = round(time.time() - t0, 2)
+        with h.timed() as extend:
+            extend_crawled_urls(spark, wave, idx)
 
         # post-extend: same wave now fully crawled; index grew by the
         # fresh half only (idempotent overlap handling at scale)
@@ -79,31 +75,18 @@ def main() -> None:
         n_rows = spark.read.parquet(f"{idx}/urls.parquet").count()
         assert n_rows == corpus + WAVE // 2, (corpus, n_rows)
 
-        report["tiers"][str(corpus)] = {
+        h.progress(report["tiers"], str(corpus), {
             "corpus_urls": corpus,
-            "build_s": build_s,
-            "probe_s": probe_s,
-            "extend_s": extend_s,
+            "build_s": build.s,
+            "probe_s": probe.s,
+            "extend_s": extend.s,
             "wave_new_found": n_new,
             "rows_after_extend": n_rows,
-        }
-        print(json.dumps({str(corpus): report["tiers"][str(corpus)]}), file=sys.stderr)
+        })
         shutil.rmtree(idx, ignore_errors=True)
 
-    if "--merge" in sys.argv:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "CRAWL_SCALEBENCH.json",
-        )
-        with open(path) as f:
-            doc = json.load(f)
-        doc["frontier_index"] = report
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=2)
-    else:
-        with open("/tmp/frontier_index_scalebench.json", "w") as f:
-            json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("frontier_index_scalebench", {"frontier_index": report},
+                   artifact="CRAWL_SCALEBENCH.json")
 
 
 if __name__ == "__main__":

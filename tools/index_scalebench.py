@@ -22,29 +22,23 @@ docs. At EVERY size tier, measure with the SAME fixed workloads:
   claim has a number.
 - ``index_mb``: on-disk footprint after the tier's growth.
 
+The committed 100x tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
+
 Usage: python tools/index_scalebench.py [out_json]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 IDX = "/tmp/vgs_dedup_index"
-
-
-def _du_mb(path: str) -> float:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return round(total / 1e6, 1)
 
 
 def _perturbed_copies(docs, n_from: int, n_to: int, *, every: int, tag: str):
@@ -53,33 +47,27 @@ def _perturbed_copies(docs, n_from: int, n_to: int, *, every: int, tag: str):
     tools/scalebench.build_scaled (distinct content, same shape)."""
     from pyspark.sql import functions as F
 
-    parts = []
-    for i in range(n_from, n_to):
-        parts.append(
-            docs.withColumn("doc_id", F.col("doc_id") + F.lit(i * 1_000_000))
-            .withColumn(
-                "text",
-                F.array_join(
-                    F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda x, j: F.when(
-                            j % every == 0, F.concat(x, F.lit(f"~{tag}{i}"))
-                        ).otherwise(x),
-                    ),
-                    " ",
-                ),
-            )
+    def suffixed(i):
+        return F.array_join(
+            F.transform(
+                F.split(F.col("text"), " "),
+                lambda x, j: F.when(
+                    j % every == 0, F.concat(x, F.lit(f"~{tag}{i}"))
+                ).otherwise(x),
+            ),
+            " ",
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+
+    return h.shifted_copies(
+        docs, range(n_from, n_to), doc_id=h.shift("doc_id", 1_000_000), text=suffixed
+    )
 
 
 def measure_tier(spark, docs, tier: str, copy_idx: int) -> dict:
     from pyspark.sql import functions as F
 
     from vmware_graph_spark.operators.dedup import (
+        compact_dedup_index,
         dedup_against_index,
         extend_dedup_index,
     )
@@ -94,9 +82,8 @@ def measure_tier(spark, docs, tier: str, copy_idx: int) -> dict:
         )
         .localCheckpoint(eager=True)
     )
-    t0 = time.time()
-    extend_dedup_index(ext, IDX, "doc_id", "text")
-    extend_s = round(time.time() - t0, 2)
+    with h.timed() as extend:
+        extend_dedup_index(ext, IDX, "doc_id", "text")
     release_pins()
 
     # fixed 1k-doc PROBE batch: 500 near-dups (every 10th token
@@ -109,47 +96,38 @@ def measure_tier(spark, docs, tier: str, copy_idx: int) -> dict:
         docs.filter(F.col("doc_id") % 7 == 3).limit(500), 801, 802, every=1, tag="q"
     ).withColumn("doc_id", F.col("doc_id") + 60_000_000)
     probe = near.unionByName(novel).localCheckpoint(eager=True)
-    t0 = time.time()
-    decisions = (
-        dedup_against_index(probe, spark, IDX, "doc_id", "text")
-        .select(
-            F.when(F.col("exact_dup"), "exact_dup")
-            .when(F.col("near_dup"), "near_dup")
-            .otherwise("kept")
-            .alias("decision")
+    with h.timed() as probe_t:
+        decisions = (
+            dedup_against_index(probe, spark, IDX, "doc_id", "text")
+            .select(
+                F.when(F.col("exact_dup"), "exact_dup")
+                .when(F.col("near_dup"), "near_dup")
+                .otherwise("kept")
+                .alias("decision")
+            )
+            .groupBy("decision")
+            .count()
+            .collect()
         )
-        .groupBy("decision")
-        .count()
-        .collect()
-    )
-    probe_s = round(time.time() - t0, 2)
     release_pins()
 
-    from vmware_graph_spark.operators.dedup import compact_dedup_index
-
-    t0 = time.time()
-    compact_dedup_index(spark, IDX)
-    compact_s = round(time.time() - t0, 2)
+    with h.timed() as compact:
+        compact_dedup_index(spark, IDX)
 
     sizes = spark.read.parquet(f"{IDX}/sizes.parquet").select("id").distinct().count()
     return {
         "indexed_docs": sizes,
-        "index_mb": _du_mb(IDX),
-        "extend_fixed_batch_s": extend_s,
-        "probe_fixed_batch_s": probe_s,
+        "index_mb": round(h.du_bytes(IDX) / 1e6, 1),
+        "extend_fixed_batch_s": extend.s,
+        "probe_fixed_batch_s": probe_t.s,
         "probe_decisions": {r["decision"]: r["count"] for r in decisions},
-        "compact_s": compact_s,
+        "compact_s": compact.s,
     }
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "/tmp/index_scalebench.json"
-
-    from vmware_graph_spark.session import get_spark, tune
-
-    spark = get_spark("index-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    words, _tiers = h.cli()
+    spark = h.spark("index-scalebench")
 
     from vmware_graph_spark.operators.dedup import (
         extend_dedup_index,
@@ -163,34 +141,31 @@ def main() -> None:
 
     report: dict = {"load_1m_at_start": round(os.getloadavg()[0], 2), "tiers": {}}
 
-    t0 = time.time()
-    write_dedup_index(docs, IDX, "doc_id", "text")
-    report["build_1x_s"] = round(time.time() - t0, 1)
+    with h.timed(1) as t:
+        write_dedup_index(docs, IDX, "doc_id", "text")
+    report["build_1x_s"] = t.s
     report["tiers"]["1x"] = measure_tier(spark, docs, "1", 900)
 
-    t0 = time.time()
-    extend_dedup_index(
-        _perturbed_copies(docs, 1, 10, every=3, tag="c"), IDX, "doc_id", "text"
-    )
-    release_pins()
-    report["grow_to_10x_s"] = round(time.time() - t0, 1)
-    report["tiers"]["10x"] = measure_tier(spark, docs, "10", 910)
-
-    t0 = time.time()
-    for lo in range(10, 100, 30):  # three bulk extends, bounded plans
+    with h.timed(1) as t:
         extend_dedup_index(
-            _perturbed_copies(docs, lo, min(lo + 30, 100), every=3, tag="c"),
-            IDX,
-            "doc_id",
-            "text",
+            _perturbed_copies(docs, 1, 10, every=3, tag="c"), IDX, "doc_id", "text"
         )
         release_pins()
-    report["grow_to_100x_s"] = round(time.time() - t0, 1)
-    report["tiers"]["100x"] = measure_tier(spark, docs, "100", 920)
+    report["grow_to_10x_s"] = t.s
+    report["tiers"]["10x"] = measure_tier(spark, docs, "10", 910)
 
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    with h.timed(1) as t:
+        for lo in range(10, 100, 30):  # three bulk extends, bounded plans
+            extend_dedup_index(
+                _perturbed_copies(docs, lo, min(lo + 30, 100), every=3, tag="c"),
+                IDX,
+                "doc_id",
+                "text",
+            )
+            release_pins()
+    report["grow_to_100x_s"] = t.s
+    report["tiers"]["100x"] = measure_tier(spark, docs, "100", 920)
+    h.write_report("index_scalebench", report, words[0] if words else None)
 
 
 if __name__ == "__main__":

@@ -25,19 +25,21 @@ Per scale, two measurements:
    shows which stage's EXECUTION grows with volume, which the lazy
    headline run cannot attribute.
 
+The committed 100× tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
+
 Usage: python tools/ingest_scalebench.py [out_json] [scales...]
        scales from {1,10,100}; default all three.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 SCALED = "/tmp/vgs_ingest_scale"
 SNAP = "/tmp/vgs_ingest_snap"
@@ -51,32 +53,20 @@ def build_scaled(spark, n_copies: int = 10) -> None:
     the vInfo fixture; names collide across copies (real estates have
     duplicate VM names) while UUIDs — derived from the key — stay
     unique."""
-    from pyspark.sql import functions as F
-
     base = "/root/testdata/sf0.1"
-    if os.path.isdir(SCALED):
-        shutil.rmtree(SCALED)
-    os.makedirs(SCALED, exist_ok=True)
-    for t in COPY_AS_IS:
-        spark.read.parquet(f"{base}/{t}.parquet").write.mode("overwrite").parquet(
-            f"{SCALED}/{t}.parquet"
-        )
-    for t, key in SHIFT.items():
+    shutil.rmtree(SCALED, ignore_errors=True)
+    for t in COPY_AS_IS + list(SHIFT):
         df = spark.read.parquet(f"{base}/{t}.parquet")
-        parts = [
-            df.withColumn(key, F.col(key) + F.lit(i * 10_000_000))
-            for i in range(n_copies)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("overwrite").parquet(f"{SCALED}/{t}.parquet")
+        if t in SHIFT:
+            df = h.shifted_copies(
+                df, range(n_copies), **{SHIFT[t]: h.shift(SHIFT[t], 10_000_000)}
+            )
+        df.write.mode("overwrite").parquet(f"{SCALED}/{t}.parquet")
 
 
 def _fresh_snap(tag: str) -> str:
     d = f"{SNAP}_{tag}"
-    if os.path.isdir(d):
-        shutil.rmtree(d)
+    shutil.rmtree(d, ignore_errors=True)
     return d
 
 
@@ -88,22 +78,19 @@ def headline(spark, sf_dir: str, tag: str) -> dict:
 
     snap = _fresh_snap(tag)
 
-    t0 = time.time()
-    store = run_ingest(spark, _workbook(spark, sf_dir))
-    store.publish(snap)
-    cold_s = round(time.time() - t0, 1)
+    with h.timed(1) as cold:
+        run_ingest(spark, _workbook(spark, sf_dir)).publish(snap)
     counts = GraphStore.read(spark, snap).counts()
 
-    t0 = time.time()
-    prev = GraphStore.read(spark, snap)
-    res = refresh(spark, _workbook(spark, sf_dir, prime=True), prev=prev)
-    orphans = res.orphans.count()
-    res.store.publish(snap)
-    refresh_s = round(time.time() - t0, 1)
+    with h.timed(1) as ref:
+        prev = GraphStore.read(spark, snap)
+        res = refresh(spark, _workbook(spark, sf_dir, prime=True), prev=prev)
+        orphans = res.orphans.count()
+        res.store.publish(snap)
 
     return {
-        "cold_build_s": cold_s,
-        "refresh_sweep_s": refresh_s,
+        "cold_build_s": cold.s,
+        "refresh_sweep_s": ref.s,
         "orphans_swept": orphans,
         "labels": len([k for k in counts if k != "edges"]),
         "nodes": sum(v for k, v in counts.items() if k != "edges"),
@@ -127,45 +114,35 @@ def per_stage(spark, sf_dir: str) -> dict[str, float]:
         if STAGE_SHEETS[stage] not in sheets:
             continue
         seen_batches = len(store._edge_batches)
-        t0 = time.time()
-        stage(store, sheets)
-        # force exactly what this stage queued: its pending label
-        # merges (flush + materialize) and its new edge batches
-        for label in list(store._pending):
-            store.vertices(label).write.format("noop").mode("overwrite").save()
-        for b in store._edge_batches[seen_batches:]:
-            b.write.format("noop").mode("overwrite").save()
-        out[stage.__name__] = round(time.time() - t0, 2)
+        with h.timed() as t:
+            stage(store, sheets)
+            # force exactly what this stage queued: its pending label
+            # merges (flush + materialize) and its new edge batches
+            for label in list(store._pending):
+                store.vertices(label).write.format("noop").mode("overwrite").save()
+            for b in store._edge_batches[seen_batches:]:
+                b.write.format("noop").mode("overwrite").save()
+        out[stage.__name__] = t.s
     return out
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "/tmp/ingest_scalebench.json"
-    scales = [int(s) for s in sys.argv[2:]] or [1, 10, 100]
-
-    from vmware_graph_spark.session import get_spark, tune
-
-    spark = get_spark("ingest-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    words, scales = h.cli([1, 10, 100])
+    spark = h.spark("ingest-scalebench")
 
     dirs = {1: "/root/testdata/sf0.01", 10: "/root/testdata/sf0.1", 100: SCALED}
     report: dict = {"scales": {}, "load_1m_at_start": round(os.getloadavg()[0], 2)}
     if 100 in scales:
-        t0 = time.time()
-        build_scaled(spark)
-        report["build_100x_s"] = round(time.time() - t0, 1)
+        with h.timed(1) as t:
+            build_scaled(spark)
+        report["build_100x_s"] = t.s
 
     for s in scales:
         print(f"== scale {s}x ({dirs[s]}) ==", file=sys.stderr)
         entry = headline(spark, dirs[s], f"s{s}")
         entry["per_stage_forced_s"] = per_stage(spark, dirs[s])
-        report["scales"][f"{s}x"] = entry
-        print(json.dumps({f"{s}x": entry}), file=sys.stderr)
-
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+        h.progress(report["scales"], f"{s}x", entry)
+    h.write_report("ingest_scalebench", report, words[0] if words else None)
 
 
 if __name__ == "__main__":

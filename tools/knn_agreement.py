@@ -15,37 +15,29 @@ Usage: python tools/knn_agreement.py [sf_dir] [out_json]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/vgs_scale"
-    out_json = sys.argv[2] if len(sys.argv) > 2 else "/tmp/knn_agreement.json"
 
     from vmware_graph_spark.queries import QUERIES
-    from vmware_graph_spark.session import get_spark, tune
 
-    spark = get_spark("knn-agreement")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    t0 = time.time()
-    brute = QUERIES["knn_label_noise_audit"](spark, sf_dir).toPandas()
-    t_brute = round(time.time() - t0, 1)
-    t0 = time.time()
-    appx = QUERIES["knn_label_noise_audit_nn_descent"](spark, sf_dir).toPandas()
-    t_appx = round(time.time() - t0, 1)
+    spark = h.spark("knn-agreement")
+    with h.timed(1) as t_brute:
+        brute = QUERIES["knn_label_noise_audit"](spark, sf_dir).toPandas()
+    with h.timed(1) as t_appx:
+        appx = QUERIES["knn_label_noise_audit_nn_descent"](spark, sf_dir).toPandas()
     m = appx.merge(brute, on="vec_id", suffixes=("_a", "_e"))
     out = {
         "sf_dir": sf_dir,
         "n_vectors": len(m),
-        "brute_s": t_brute,
-        "nn_descent_s": t_appx,
+        "brute_s": t_brute.s,
+        "nn_descent_s": t_appx.s,
         "flag_agreement_thr0.7": round(
             float(((m.disagreement_a >= 0.7) == (m.disagreement_e >= 0.7)).mean()), 4
         ),
@@ -53,9 +45,7 @@ def main() -> None:
             float((m.disagreement_a - m.disagreement_e).abs().mean()), 4
         ),
     }
-    with open(out_json, "w") as f:
-        json.dump(out, f, indent=2)
-    print(json.dumps(out))
+    h.write_report("knn_agreement", out, *sys.argv[2:3])
 
 
 if __name__ == "__main__":

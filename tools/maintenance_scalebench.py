@@ -19,21 +19,23 @@ MAINT_SRC_SF):
 
 Each stage asserts its exactly-derivable output count, so the measured
 rows double as correctness checks at scale (the crawl_scalebench
-discipline). Appends a ``maintenance`` section to CRAWL_SCALEBENCH.json
-with --merge, else writes /tmp/maintenance_scalebench.json.
+discipline). Sets the ``maintenance`` section of CRAWL_SCALEBENCH.json
+with --merge, else writes it to /tmp/maintenance_scalebench.json.
+
+The committed 100x tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
 
 Usage: python tools/maintenance_scalebench.py [--merge] [copies...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 SRC_SF = os.environ.get("MAINT_SRC_SF", "/root/testdata/sf0.1")
 FLEET = "/tmp/vgs_sitemap_fleet"
@@ -48,16 +50,10 @@ def main() -> None:
         recrawl_priority,
         resolve_redirects,
     )
-    from vmware_graph_spark.session import get_spark, tune
     from vmware_graph_spark.sources.sitemap import read_sitemaps, write_sitemap_files
 
-    copies = [int(c) for c in sys.argv[2:] if not c.startswith("-")] or [1, 10, 100]
-    if len(sys.argv) > 1 and not sys.argv[1].startswith("-"):
-        copies = [int(c) for c in sys.argv[1:] if not c.startswith("-")]
-
-    spark = get_spark("maintenance-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    _words, copies = h.cli([1, 10, 100])
+    spark = h.spark("maintenance-scalebench")
 
     import duckdb
 
@@ -72,22 +68,22 @@ def main() -> None:
         entry: dict = {}
 
         # -- sitemap fleet decode -----------------------------------------
-        t0 = time.time()
-        if os.path.isdir(FLEET):
-            shutil.rmtree(FLEET)
-        for c in range(n):
-            shards = {f"c{c:03d}_s{i}": [] for i in range(SHARDS_PER_COPY)}
-            for did in ids:
-                tid = did + c * 1_000_000
-                shards[f"c{c:03d}_s{did % SHARDS_PER_COPY}"].append(
-                    {"loc": f"http://www.site{tid % 5}.example.com/a/{tid}",
-                     "lastmod": "2026-01-01", "priority": f"{(tid % 10) / 10:.1f}"}
-                )
-            write_sitemap_files(shards, FLEET, index_name=None, gzip_files=True)
-        entry["build_fleet_s"] = round(time.time() - t0, 1)
-        t0 = time.time()
-        got = read_sitemaps(spark, f"{FLEET}/*.xml.gz").filter("kind = 'url'").count()
-        entry["sitemap_decode_s"] = round(time.time() - t0, 2)
+        with h.timed(1) as t:
+            if os.path.isdir(FLEET):
+                shutil.rmtree(FLEET)
+            for c in range(n):
+                shards = {f"c{c:03d}_s{i}": [] for i in range(SHARDS_PER_COPY)}
+                for did in ids:
+                    tid = did + c * 1_000_000
+                    shards[f"c{c:03d}_s{did % SHARDS_PER_COPY}"].append(
+                        {"loc": f"http://www.site{tid % 5}.example.com/a/{tid}",
+                         "lastmod": "2026-01-01", "priority": f"{(tid % 10) / 10:.1f}"}
+                    )
+                write_sitemap_files(shards, FLEET, index_name=None, gzip_files=True)
+        entry["build_fleet_s"] = t.s
+        with h.timed() as t:
+            got = read_sitemaps(spark, f"{FLEET}/*.xml.gz").filter("kind = 'url'").count()
+        entry["sitemap_decode_s"] = t.s
         entry["sitemap_files"] = n * SHARDS_PER_COPY
         entry["sitemap_entries"] = got
         assert got == n1 * n, (got, n1 * n)
@@ -101,89 +97,76 @@ def main() -> None:
         i = F.col("id").cast("string")
 
         # -- recrawl scheduling --------------------------------------------
-        t0 = time.time()
-        h = d.select(
-            "id", F.explode(F.array(*[F.lit(v) for v in range(4)])).alias("v")
-        )
-        version = sum(
-            [F.when((F.col("v") >= k) & ((F.col("id") + k * k) % 4 == 0), 1)
-             .otherwise(0) for k in (1, 2, 3)],
-            F.lit(0),
-        )
-        hist = h.select(
-            F.concat(F.lit("http://h/"), i).alias("url"),
-            (F.to_timestamp(F.lit("2026-06-01 00:00:00"))
-             + F.make_dt_interval(F.col("v") * 7)).alias("fetch_ts"),
-            F.md5(F.concat(i, F.lit("|"), version.cast("string"))).alias("fp"),
-        )
-        out = recrawl_priority(hist, F.lit("2026-08-16"))
-        n_urls = out.count()
-        entry["recrawl_s"] = round(time.time() - t0, 2)
+        with h.timed() as t:
+            fetches = d.select(
+                "id", F.explode(F.array(*[F.lit(v) for v in range(4)])).alias("v")
+            )
+            version = sum(
+                [F.when((F.col("v") >= k) & ((F.col("id") + k * k) % 4 == 0), 1)
+                 .otherwise(0) for k in (1, 2, 3)],
+                F.lit(0),
+            )
+            hist = fetches.select(
+                F.concat(F.lit("http://h/"), i).alias("url"),
+                (F.to_timestamp(F.lit("2026-06-01 00:00:00"))
+                 + F.make_dt_interval(F.col("v") * 7)).alias("fetch_ts"),
+                F.md5(F.concat(i, F.lit("|"), version.cast("string"))).alias("fp"),
+            )
+            out = recrawl_priority(hist, F.lit("2026-08-16"))
+            n_urls = out.count()
+        entry["recrawl_s"] = t.s
         entry["recrawl_history_rows"] = n1 * n * 4
         assert n_urls == n1 * n, (n_urls, n1 * n)
 
         # -- URL-parameter mining -------------------------------------------
-        t0 = time.time()
-        pages = d.select(
-            F.concat(F.lit("http://h/p?id="), (F.col("id") % 5000).cast("string"),
-                     F.lit("&sess="), (F.col("id") % 97).cast("string")).alias("url"),
-            F.md5(F.concat(F.lit("c"), (F.col("id") % 5000).cast("string"))).alias("fp"),
-        ).distinct()
-        res = {r.param_key: r.content_bearing
-               for r in mine_content_params(pages).collect()}
-        entry["param_mining_s"] = round(time.time() - t0, 2)
+        with h.timed() as t:
+            pages = d.select(
+                F.concat(F.lit("http://h/p?id="), (F.col("id") % 5000).cast("string"),
+                         F.lit("&sess="), (F.col("id") % 97).cast("string")).alias("url"),
+                F.md5(F.concat(F.lit("c"), (F.col("id") % 5000).cast("string"))).alias("fp"),
+            ).distinct()
+            res = {r.param_key: r.content_bearing
+                   for r in mine_content_params(pages).collect()}
+        entry["param_mining_s"] = t.s
         entry["param_mining_urls"] = n1 * n
         assert res.get("id") == 1 and res.get("sess") == 0, res
 
         # -- redirect resolution ---------------------------------------------
-        t0 = time.time()
-        chain = d.filter(F.col("id") % 97 != 0).select(
-            "id", F.explode(F.sequence(F.lit(0), F.col("id") % 4)).alias("k")
-        )
-        L = F.col("id") % 4
-        ce = chain.select(
-            F.concat(F.lit("/c/"), i, F.lit("/"), F.col("k").cast("string")).alias("src"),
-            F.when(F.col("k") < L,
-                   F.concat(F.lit("/c/"), i, F.lit("/"), (F.col("k") + 1).cast("string"))
-                   ).otherwise(F.concat(F.lit("/t/"), i)).alias("dst"),
-        )
-        cyc = d.filter(F.col("id") % 97 == 0).select(
-            "id", F.explode(F.array(F.lit(0), F.lit(1))).alias("k")
-        )
-        cye = cyc.select(
-            F.concat(F.lit("/c/"), i, F.lit("/"), F.col("k").cast("string")).alias("src"),
-            F.concat(F.lit("/c/"), i, F.lit("/"), (1 - F.col("k")).cast("string")).alias("dst"),
-        )
-        edges = ce.unionByName(cye)
-        n_edges = edges.count()
-        resolved = resolve_redirects(edges)
-        n_unres = resolved.filter("status = 'unresolved'").count()
-        n_ok = resolved.filter("status = 'ok'").count()
-        entry["redirect_s"] = round(time.time() - t0, 2)
+        with h.timed() as t:
+            chain = d.filter(F.col("id") % 97 != 0).select(
+                "id", F.explode(F.sequence(F.lit(0), F.col("id") % 4)).alias("k")
+            )
+            L = F.col("id") % 4
+            ce = chain.select(
+                F.concat(F.lit("/c/"), i, F.lit("/"), F.col("k").cast("string")).alias("src"),
+                F.when(F.col("k") < L,
+                       F.concat(F.lit("/c/"), i, F.lit("/"), (F.col("k") + 1).cast("string"))
+                       ).otherwise(F.concat(F.lit("/t/"), i)).alias("dst"),
+            )
+            cyc = d.filter(F.col("id") % 97 == 0).select(
+                "id", F.explode(F.array(F.lit(0), F.lit(1))).alias("k")
+            )
+            cye = cyc.select(
+                F.concat(F.lit("/c/"), i, F.lit("/"), F.col("k").cast("string")).alias("src"),
+                F.concat(F.lit("/c/"), i, F.lit("/"), (1 - F.col("k")).cast("string")).alias("dst"),
+            )
+            edges = ce.unionByName(cye)
+            n_edges = edges.count()
+            resolved = resolve_redirects(edges)
+            n_unres = resolved.filter("status = 'unresolved'").count()
+            n_ok = resolved.filter("status = 'ok'").count()
+        entry["redirect_s"] = t.s
         entry["redirect_edges"] = n_edges
         assert n_ok + n_unres == n_edges, (n_ok, n_unres, n_edges)
         # every row of a cycle is unresolved: 2 per 97th URL
         n_cyc = d.filter(F.col("id") % 97 == 0).count()
         assert n_unres == 2 * n_cyc, (n_unres, n_cyc)
 
-        report["copies"][str(n)] = entry
-        print(json.dumps({str(n): entry}), file=sys.stderr)
+        h.progress(report["copies"], str(n), entry)
 
     shutil.rmtree(FLEET, ignore_errors=True)
-    if "--merge" in sys.argv:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "CRAWL_SCALEBENCH.json",
-        )
-        with open(path) as f:
-            doc = json.load(f)
-        doc["maintenance"] = report
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=2)
-    else:
-        with open("/tmp/maintenance_scalebench.json", "w") as f:
-            json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("maintenance_scalebench", {"maintenance": report},
+                   artifact="CRAWL_SCALEBENCH.json")
 
 
 if __name__ == "__main__":

@@ -25,17 +25,72 @@ Usage: python tools/media_scalebench.py [--commit] [n_assets...]
 
 from __future__ import annotations
 
-import json
 import os
+import struct
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
+
+_ULAW_FMT = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
+_PCM_FMT = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+
+
+def _pack_bits(bits) -> bytes:
+    """LSB-first bit packing, the order of a GIF code stream."""
+    by = bytearray()
+    for i in range(0, len(bits), 8):
+        v = 0
+        for j, bit in enumerate(bits[i : i + 8]):
+            v |= bit << j
+        by.append(v)
+    return bytes(by)
+
+
+def _gif(w: int, h: int, flags: int, pal: bytes, mcs: int, stream: bytes) -> bytes:
+    """A one-frame GIF89a around an LZW code stream in 255-byte blocks."""
+    blocks = b"".join(
+        bytes([len(stream[i : i + 255])]) + stream[i : i + 255]
+        for i in range(0, len(stream), 255)
+    )
+    head = b"GIF89a" + struct.pack("<HHBBB", w, h, flags, 0, 0)
+    img = b"," + struct.pack("<HHHHB", 0, 0, w, h, 0)
+    return head + pal + img + bytes([mcs]) + blocks + b"\x00;"
+
+
+def _ulaw_payload(did: int, n: int) -> bytes:
+    return bytes((did * 37 + i * 11) % 256 for i in range(n))
+
+
+def _wav(fmt: bytes, payload: bytes) -> bytes:
+    body = (
+        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(payload)) + payload
+        + (b"\x00" if len(payload) % 2 else b"")
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _image_batches(gif, ppm):
+    """A mapInPandas body: a GIF for each odd ``id``, a PPM for each even."""
+
+    def build(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            ids = [int(i) for i in pdf["id"]]
+            yield pd.DataFrame({
+                "asset_id": pdf["id"],
+                "media": [gif(i) if i % 2 else ppm(i) for i in ids],
+                "media_type": [
+                    "image/gif" if i % 2 else "image/x-portable-pixmap" for i in ids
+                ],
+            })
+
+    return build
 
 
 def main() -> None:
-    import struct
-
     from pyspark.sql import functions as F
 
     from vmware_graph_spark.operators.multimodal import (
@@ -44,16 +99,9 @@ def main() -> None:
         audio_rms_windows,
         decode_images,
     )
-    from vmware_graph_spark.session import get_spark, tune
 
-    tiers = [int(c) for c in sys.argv[1:] if not c.startswith("-")] or [
-        20_000,
-        200_000,
-    ]
-
-    spark = get_spark("media-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    _words, tiers = h.cli([20_000, 200_000])
+    spark = h.spark("media-scalebench")
 
     def gif_bytes(did: int) -> bytes:
         w, h = 2 + did % 3, 2 + did % 2
@@ -66,27 +114,14 @@ def main() -> None:
             ))
             for j in range(4)
         )
-        head = b"GIF89a" + struct.pack("<HHBBB", w, h, 0x81, 0, 0)
-        img = b"," + struct.pack("<HHHHB", 0, 0, w, h, 0)
         bits = []
         for p in range(w * h):
-            code_pair = (4, p % 4)
-            for code in code_pair:
+            for code in (4, p % 4):  # clear, then the pixel's index
                 for k in range(3):
                     bits.append((code >> k) & 1)
         for k in range(3):
             bits.append((5 >> k) & 1)
-        by = bytearray()
-        for i in range(0, len(bits), 8):
-            v = 0
-            for j, bit in enumerate(bits[i : i + 8]):
-                v |= bit << j
-            by.append(v)
-        blocks = b""
-        for i in range(0, len(by), 255):
-            chunk = bytes(by[i : i + 255])
-            blocks += bytes([len(chunk)]) + chunk
-        return head + pal + img + b"\x02" + blocks + b"\x00;"
+        return _gif(w, h, 0x81, pal, 2, _pack_bits(bits))
 
     def ppm_bytes(did: int) -> bytes:
         w, h = 2 + did % 3, 2 + did % 2
@@ -99,18 +134,9 @@ def main() -> None:
     def wav_bytes(did: int) -> bytes:
         n = 64 + did % 32
         if did % 2:  # µ-law
-            payload = bytes((did * 37 + i * 11) % 256 for i in range(n))
-            fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-        else:  # 16-bit PCM
-            smps = [((did * 37 + i * 11) % 65536) - 32768 for i in range(n)]
-            payload = struct.pack(f"<{n}h", *smps)
-            fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(payload)) + payload
-            + (b"\x00" if len(payload) % 2 else b"")
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+            return _wav(_ULAW_FMT, _ulaw_payload(did, n))
+        smps = [((did * 37 + i * 11) % 65536) - 32768 for i in range(n)]  # 16-bit PCM
+        return _wav(_PCM_FMT, struct.pack(f"<{n}h", *smps))
 
     def expected_image_mean_r_sum(n: int) -> float:
         # GIF for odd ids (palette cycle), PPM for even (row ramp)
@@ -129,30 +155,14 @@ def main() -> None:
         # ---- image leg: mixed PPM/GIF fleet ----
         ids = spark.range(n)
 
-        def build_imgs(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                medias = [
-                    gif_bytes(int(i)) if int(i) % 2 else ppm_bytes(int(i))
-                    for i in pdf["id"]
-                ]
-                types = [
-                    "image/gif" if int(i) % 2 else "image/x-portable-pixmap"
-                    for i in pdf["id"]
-                ]
-                yield pd.DataFrame(
-                    {"asset_id": pdf["id"], "media": medias, "media_type": types}
-                )
-
         imgs = ids.mapInPandas(
-            build_imgs, "asset_id bigint, media binary, media_type string"
+            _image_batches(gif_bytes, ppm_bytes),
+            "asset_id bigint, media binary, media_type string",
         )
-        t0 = time.time()
-        out = decode_images(imgs).agg(
-            F.count("*").alias("n"), F.sum("mean_r").alias("s")
-        ).collect()[0]
-        img_s = round(time.time() - t0, 2)
+        with h.timed() as img:
+            out = decode_images(imgs).agg(
+                F.count("*").alias("n"), F.sum("mean_r").alias("s")
+            ).collect()[0]
         assert out["n"] == n, (out["n"], n)
         want = expected_image_mean_r_sum(n)
         assert abs(out["s"] - want) < 1e-6 * max(1.0, want), (out["s"], want)
@@ -175,11 +185,10 @@ def main() -> None:
             "media",
             "audio/wav",
         )
-        t0 = time.time()
-        a = audio_rms_windows(wavs, window=32, hop=16).agg(
-            F.count("*").alias("n"), F.sum("rms").alias("s")
-        ).collect()[0]
-        wav_s = round(time.time() - t0, 2)
+        with h.timed() as wav:
+            a = audio_rms_windows(wavs, window=32, hop=16).agg(
+                F.count("*").alias("n"), F.sum("rms").alias("s")
+            ).collect()[0]
         # windows per asset: ceil(n_samples/hop) with n = 64 + did%32
         exp_windows = sum(-(-(64 + did % 32) // 16) for did in range(n))
         assert a["n"] == exp_windows, (a["n"], exp_windows)
@@ -189,7 +198,7 @@ def main() -> None:
         def rms_sum_for(did: int) -> float:
             m = 64 + did % 32
             if did % 2:
-                smps = [_ulaw_expand((did * 37 + i * 11) % 256) for i in range(m)]
+                smps = [_ulaw_expand(b) for b in _ulaw_payload(did, m)]
             else:
                 smps = [((did * 37 + i * 11) % 65536) - 32768 for i in range(m)]
             tot = 0.0
@@ -212,15 +221,14 @@ def main() -> None:
         )
         assert abs(got_probe - probe) < 1e-6 * max(1.0, probe)
 
-        report["tiers"][str(n)] = {
+        h.progress(report["tiers"], str(n), {
             "assets": n,
-            "image_decode_s": img_s,
-            "image_assets_per_s": round(n / img_s, 0),
-            "audio_decode_s": wav_s,
-            "audio_assets_per_s": round(n / wav_s, 0),
+            "image_decode_s": img.s,
+            "image_assets_per_s": round(n / img.s, 0),
+            "audio_decode_s": wav.s,
+            "audio_assets_per_s": round(n / wav.s, 0),
             "audio_windows": int(a["n"]),
-        }
-        print(json.dumps({str(n): report["tiers"][str(n)]}), file=sys.stderr)
+        })
 
     # ------------------------------------------------------------------
     # REALISTIC-ASSET tier (round-12 directive #1): the tiny-fixture
@@ -274,13 +282,7 @@ def main() -> None:
         if cur:
             emit(table[cur], width)
         emit(eoi, width)
-        by = bytearray()
-        for i in range(0, len(bits), 8):
-            v = 0
-            for j, bit in enumerate(bits[i : i + 8]):
-                v |= bit << j
-            by.append(v)
-        return bytes(by)
+        return _pack_bits(bits)
 
     # fixed pixel-index pattern -> one shared LZW stream + histogram;
     # per-asset identity comes from the PALETTE (shifted by id), so the
@@ -288,10 +290,6 @@ def main() -> None:
     gif_idx = [((r * 7 + c * 3) % 16) for r in range(gif_h) for c in range(gif_w)]
     gif_hist = [gif_idx.count(j) for j in range(16)]
     gif_stream = lzw_encode_greedy(gif_idx, 4)
-    gif_blocks = b""
-    for i in range(0, len(gif_stream), 255):
-        chunk = gif_stream[i : i + 255]
-        gif_blocks += bytes([len(chunk)]) + chunk
 
     def gif_real(did: int) -> bytes:
         pal = b"".join(
@@ -302,9 +300,7 @@ def main() -> None:
             ))
             for j in range(16)
         )
-        head = b"GIF89a" + struct.pack("<HHBBB", gif_w, gif_h, 0x80 | 3, 0, 0)
-        img = b"," + struct.pack("<HHHHB", 0, 0, gif_w, gif_h, 0)
-        return head + pal + img + b"\x04" + gif_blocks + b"\x00;"
+        return _gif(gif_w, gif_h, 0x80 | 3, pal, 4, gif_stream)
 
     def ppm_real(did: int) -> bytes:
         # every pixel of row r has value (did + r) % 256 in all channels
@@ -315,36 +311,12 @@ def main() -> None:
 
     def wav_real(did: int) -> bytes:
         if did % 2:  # 1 s µ-law
-            payload = bytes((did * 37 + i * 11) % 256 for i in range(ulaw_n))
-            fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-        else:  # 2 s 16-bit PCM
-            arr = (np.arange(pcm_n, dtype=np.int64) * 37 + did) % 65536 - 32768
-            payload = arr.astype("<i2").tobytes()
-            fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(payload)) + payload
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+            return _wav(_ULAW_FMT, _ulaw_payload(did, ulaw_n))
+        arr = (np.arange(pcm_n, dtype=np.int64) * 37 + did) % 65536 - 32768  # 2 s PCM
+        return _wav(_PCM_FMT, arr.astype("<i2").tobytes())
 
     fx_dir = "/tmp/vgs_media_realistic"
     shutil.rmtree(fx_dir, ignore_errors=True)
-
-    def build_real_imgs(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            medias = [
-                gif_real(int(i)) if int(i) % 2 else ppm_real(int(i))
-                for i in pdf["id"]
-            ]
-            types = [
-                "image/gif" if int(i) % 2 else "image/x-portable-pixmap"
-                for i in pdf["id"]
-            ]
-            yield pd.DataFrame(
-                {"asset_id": pdf["id"], "media": medias, "media_type": types}
-            )
 
     def build_real_wavs(batches):
         import pandas as pd
@@ -359,7 +331,8 @@ def main() -> None:
             )
 
     spark.range(n_real).mapInPandas(
-        build_real_imgs, "asset_id bigint, media binary, media_type string"
+        _image_batches(gif_real, ppm_real),
+        "asset_id bigint, media binary, media_type string",
     ).write.parquet(f"{fx_dir}/images.parquet")
     spark.range(n_real).mapInPandas(
         build_real_wavs, "asset_id bigint, media binary, media_type string"
@@ -372,11 +345,10 @@ def main() -> None:
 
     # ---- timed image leg: read + decode, full-corpus mean_r checksum
     imgs = spark.read.parquet(f"{fx_dir}/images.parquet")
-    t0 = time.time()
-    out = decode_images(imgs).agg(
-        F.count("*").alias("n"), F.sum("mean_r").alias("s")
-    ).collect()[0]
-    img_s = round(time.time() - t0, 2)
+    with h.timed() as img:
+        out = decode_images(imgs).agg(
+            F.count("*").alias("n"), F.sum("mean_r").alias("s")
+        ).collect()[0]
     assert out["n"] == n_real
 
     def mean_r_real(did: int) -> float:
@@ -391,11 +363,10 @@ def main() -> None:
 
     # ---- timed audio leg: read + decode + RMS windows (40 ms / 20 ms)
     wavs = spark.read.parquet(f"{fx_dir}/wavs.parquet")
-    t0 = time.time()
-    a = audio_rms_windows(wavs, window=320, hop=160).agg(
-        F.count("*").alias("n"), F.sum("rms").alias("s")
-    ).collect()[0]
-    wav_s = round(time.time() - t0, 2)
+    with h.timed() as wav:
+        a = audio_rms_windows(wavs, window=320, hop=160).agg(
+            F.count("*").alias("n"), F.sum("rms").alias("s")
+        ).collect()[0]
     exp_windows = (n_real // 2) * (-(-ulaw_n // 160) + -(-pcm_n // 160))
     assert a["n"] == exp_windows, (a["n"], exp_windows)
 
@@ -404,10 +375,7 @@ def main() -> None:
 
     def rms_sum_real(did: int) -> float:
         if did % 2:
-            raw = np.frombuffer(
-                bytes((did * 37 + i * 11) % 256 for i in range(ulaw_n)), np.uint8
-            )
-            s = lut[raw]
+            s = lut[np.frombuffer(_ulaw_payload(did, ulaw_n), np.uint8)]
         else:
             s = (np.arange(pcm_n, dtype=np.int64) * 37 + did) % 65536 - 32768
         starts = np.arange(0, s.size, 160)
@@ -423,34 +391,25 @@ def main() -> None:
     )
     assert abs(got_probe - probe) < 1e-6 * max(1.0, probe), (got_probe, probe)
 
-    report["realistic"] = {
+    h.progress(report, "realistic", {
         "assets_per_leg": n_real,
         "image_shapes": f"{gif_w}x{gif_h} GIF (greedy LZW) / {ppm_w}x{ppm_h} PPM",
         "audio_shapes": "1s G.711 mu-law / 2s 16-bit PCM @ 8kHz",
         "image_input_bytes": img_bytes,
-        "image_decode_s": img_s,
-        "image_MB_per_s": round(img_bytes / img_s / 1e6, 1),
-        "image_assets_per_s": round(n_real / img_s, 0),
+        "image_decode_s": img.s,
+        "image_MB_per_s": round(img_bytes / img.s / 1e6, 1),
+        "image_assets_per_s": round(n_real / img.s, 0),
         "audio_input_bytes": wav_bytes,
-        "audio_decode_s": wav_s,
-        "audio_MB_per_s": round(wav_bytes / wav_s / 1e6, 1),
-        "audio_assets_per_s": round(n_real / wav_s, 0),
+        "audio_decode_s": wav.s,
+        "audio_MB_per_s": round(wav_bytes / wav.s / 1e6, 1),
+        "audio_assets_per_s": round(n_real / wav.s, 0),
         "audio_windows": int(a["n"]),
-    }
-    print(json.dumps({"realistic": report["realistic"]}), file=sys.stderr)
+    })
     shutil.rmtree(fx_dir, ignore_errors=True)
 
-    out_path = (
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "MEDIA_SCALEBENCH.json",
-        )
-        if "--commit" in sys.argv
-        else "/tmp/media_scalebench.json"
-    )
-    with open(out_path, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    commit = "--commit" in sys.argv
+    h.write_report("media_scalebench", report,
+                   os.path.join(h.REPO, "MEDIA_SCALEBENCH.json") if commit else None)
 
 
 if __name__ == "__main__":

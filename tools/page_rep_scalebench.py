@@ -10,20 +10,19 @@ followed-link total and the distinct-target count are exactly derivable
 and asserted per tier — the measured pages/s double as at-scale
 correctness checks (the crawl_scalebench discipline).
 
-Appends a ``page_rep`` section to CRAWL_SCALEBENCH.json with --merge,
-else writes /tmp/page_rep_scalebench.json.
+Sets the ``page_rep`` section of CRAWL_SCALEBENCH.json with --merge,
+else writes it to /tmp/page_rep_scalebench.json.
 
 Usage: python tools/page_rep_scalebench.py [--merge] [n_pages...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 N_TARGETS = 100_000
 
@@ -39,17 +38,10 @@ def main() -> None:
         url_scheme,
     )
     from vmware_graph_spark.operators.crawl import page_directives
-    from vmware_graph_spark.session import get_spark, tune
 
-    tiers = [int(c) for c in sys.argv[1:] if not c.startswith("-")] or [
-        200_000,
-        2_000_000,
-    ]
-
+    _words, tiers = h.cli([200_000, 2_000_000])
     load_at_start = round(os.getloadavg()[0], 2)
-    spark = get_spark("page-rep-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("page-rep-scalebench")
 
     report: dict = {"load_1m_at_start": load_at_start, "tiers": {}}
     for n in tiers:
@@ -80,28 +72,27 @@ def main() -> None:
             hdr.alias("x_robots"),
         )
 
-        t0 = time.time()
-        pd_ = page_directives(F.col("html"), F.col("x_robots"))
-        followable = pages.filter(~pd_["nofollow"])
-        links = followable.select(
-            url_scheme("url").alias("s"),
-            url_host("url").alias("h"),
-            F.explode(extract_links_rel("html")).alias("l"),
-        ).filter(~F.col("l.rel").rlike(r"(^|\s)nofollow($|\s)"))
-        resolved = links.select(
-            resolve_href(F.col("s"), F.col("h"), F.col("l.href")).alias("r")
-        ).filter(F.col("r").isNotNull())
-        agg = (
-            resolved.select(url_canonical("r").alias("target"))
-            .groupBy("target")
-            .agg(F.count("*").alias("c"))
-            .agg(
-                F.count("*").alias("targets"),
-                F.sum("c").alias("inlinks"),
+        with h.timed() as t:
+            pd_ = page_directives(F.col("html"), F.col("x_robots"))
+            followable = pages.filter(~pd_["nofollow"])
+            links = followable.select(
+                url_scheme("url").alias("s"),
+                url_host("url").alias("h"),
+                F.explode(extract_links_rel("html")).alias("l"),
+            ).filter(~F.col("l.rel").rlike(r"(^|\s)nofollow($|\s)"))
+            resolved = links.select(
+                resolve_href(F.col("s"), F.col("h"), F.col("l.href")).alias("r")
+            ).filter(F.col("r").isNotNull())
+            agg = (
+                resolved.select(url_canonical("r").alias("target"))
+                .groupBy("target")
+                .agg(F.count("*").alias("c"))
+                .agg(
+                    F.count("*").alias("targets"),
+                    F.sum("c").alias("inlinks"),
+                )
+                .collect()[0]
             )
-            .collect()[0]
-        )
-        wall = round(time.time() - t0, 2)
 
         # exactly derivable: arms 0 and 3 contribute ONE followed link
         # each. (page, arm) repeats with period lcm(N_TARGETS, 4) =
@@ -117,29 +108,16 @@ def main() -> None:
         assert agg["inlinks"] == want_inlinks, (agg["inlinks"], want_inlinks)
         assert agg["targets"] == want_targets, (agg["targets"], want_targets)
 
-        report["tiers"][str(n)] = {
+        h.progress(report["tiers"], str(n), {
             "pages": n,
-            "wall_s": wall,
-            "pages_per_s": round(n / wall, 0),
+            "wall_s": t.s,
+            "pages_per_s": round(n / t.s, 0),
             "followed_inlinks": int(agg["inlinks"]),
             "distinct_targets": int(agg["targets"]),
-        }
-        print(json.dumps({str(n): report["tiers"][str(n)]}), file=sys.stderr)
+        })
 
-    if "--merge" in sys.argv:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "CRAWL_SCALEBENCH.json",
-        )
-        with open(path) as f:
-            doc = json.load(f)
-        doc["page_rep"] = report
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=2)
-    else:
-        with open("/tmp/page_rep_scalebench.json", "w") as f:
-            json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("page_rep_scalebench", {"page_rep": report},
+                   artifact="CRAWL_SCALEBENCH.json")
 
 
 if __name__ == "__main__":

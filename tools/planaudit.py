@@ -17,6 +17,7 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 AUDIT = [
     "q1_pricing_summary",
@@ -158,11 +159,8 @@ def main() -> None:
     out_md = sys.argv[2] if len(sys.argv) > 2 else "PLANS.md"
 
     from vmware_graph_spark.queries import QUERIES
-    from vmware_graph_spark.session import get_spark, tune
 
-    spark = get_spark("planaudit")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("planaudit")
 
     lines = [
         "# PLANS — formatted physical plans of the headline queries",

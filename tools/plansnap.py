@@ -15,6 +15,7 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 
 def main() -> None:
@@ -22,18 +23,12 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     from bench import HEADLINE
     from vmware_graph_spark.queries import QUERIES
-    from vmware_graph_spark.session import get_spark
 
     names = sys.argv[3:] or list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           "plans", tag)
+    out_dir = os.path.join(h.REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
-    # a small driver heap: the JVM grows toward its cap, and at the
-    # engine's 12g default one sf0.1 ingest run reached 13.5 GB RSS
-    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
-    spark = get_spark("plansnap")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("plansnap")
     for name in names:
         df = QUERIES[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(

@@ -23,11 +23,11 @@ Usage: python tools/recall_weak_kernels.py [out_json]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 
 def _pairs_key(df):
@@ -35,14 +35,9 @@ def _pairs_key(df):
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "/tmp/recall_weak_kernels.json"
-
     from vmware_graph_spark.queries import QUERIES
-    from vmware_graph_spark.session import get_spark, tune
 
-    spark = get_spark("recall-weak-kernels")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("recall-weak-kernels")
 
     report: dict = {}
     for sf in ("0.01", "0.1"):
@@ -70,9 +65,7 @@ def main() -> None:
             "value_identical": key(unc) == key(cap),
         }
 
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report, indent=2))
+    h.write_report("recall_weak_kernels", report, *sys.argv[1:2])
 
 
 if __name__ == "__main__":

@@ -23,20 +23,22 @@ longer-literal allow override, wildcard-anchor disallow on 7th
 hosts) — so longest-match, tie-break, wildcard and rule-free
 resolution all execute at every tier.
 
-Appends a ``robots_gate`` section to CRAWL_SCALEBENCH.json with
---merge, else writes /tmp/robots_scalebench.json.
+Sets the ``robots_gate`` section of CRAWL_SCALEBENCH.json with
+--merge, else writes it to /tmp/robots_scalebench.json.
+
+The committed 10M-host tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
 
 Usage: python tools/robots_scalebench.py [--merge] [host_counts...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 
 def main() -> None:
@@ -47,17 +49,9 @@ def main() -> None:
         ROBOTS_BROADCAST_MAX_RULES,
         robots_filter,
     )
-    from vmware_graph_spark.session import get_spark, tune
 
-    tiers = [int(c) for c in sys.argv[1:] if not c.startswith("-")] or [
-        100_000,
-        1_000_000,
-        10_000_000,
-    ]
-
-    spark = get_spark("robots-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    _words, tiers = h.cli([100_000, 1_000_000, 10_000_000])
+    spark = h.spark("robots-scalebench")
 
     def fixture(n_hosts: int, n_urls: int):
         hosts = spark.range(n_hosts).select(
@@ -121,10 +115,9 @@ def main() -> None:
         n_urls = max(n_hosts, 2_000_000)
         rules, n_rules, urls = fixture(n_hosts, n_urls)
 
-        t0 = time.time()
-        out = robots_filter(urls, rules, rules_rows=n_rules)
-        allowed = out.filter(F.col("fetch_allowed")).count()
-        gate_s = round(time.time() - t0, 2)
+        with h.timed() as gate:
+            out = robots_filter(urls, rules, rules_rows=n_rules)
+            allowed = out.filter(F.col("fetch_allowed")).count()
         want = expected_allowed(n_hosts, n_urls)
         assert allowed == want, (n_hosts, allowed, want)
 
@@ -133,8 +126,8 @@ def main() -> None:
             "rule_rows": n_rules,
             "frontier_urls": n_urls,
             "regime": join_node(out),
-            "gate_s": gate_s,
-            "urls_per_s": round(n_urls / gate_s, 0),
+            "gate_s": gate.s,
+            "urls_per_s": round(n_urls / gate.s, 0),
             "allowed": allowed,
             "allowed_expected": want,
         }
@@ -146,26 +139,26 @@ def main() -> None:
         if n_hosts == 1_000_000:
             # regime parity, executed: force the fallback on the SAME
             # fixture and count (host, path) verdict disagreements.
-            t0 = time.time()
-            forced = robots_filter(
-                urls, rules, rules_rows=n_rules, broadcast_max_rules=0
-            )
-            assert join_node(forced) == "shuffle_hash"
-            disagree = (
-                out.withColumnRenamed("fetch_allowed", "a")
-                .join(
-                    forced.withColumnRenamed("fetch_allowed", "b"),
-                    ["host", "path"],
-                    "full",
+            with h.timed() as forced_t:
+                forced = robots_filter(
+                    urls, rules, rules_rows=n_rules, broadcast_max_rules=0
                 )
-                .filter(
-                    F.col("a").isNull()
-                    | F.col("b").isNull()
-                    | (F.col("a") != F.col("b"))
+                assert join_node(forced) == "shuffle_hash"
+                disagree = (
+                    out.withColumnRenamed("fetch_allowed", "a")
+                    .join(
+                        forced.withColumnRenamed("fetch_allowed", "b"),
+                        ["host", "path"],
+                        "full",
+                    )
+                    .filter(
+                        F.col("a").isNull()
+                        | F.col("b").isNull()
+                        | (F.col("a") != F.col("b"))
+                    )
+                    .count()
                 )
-                .count()
-            )
-            entry["forced_fallback_s"] = round(time.time() - t0, 2)
+            entry["forced_fallback_s"] = forced_t.s
             entry["verdict_disagreements_vs_broadcast"] = disagree
             assert disagree == 0, disagree
 
@@ -174,31 +167,18 @@ def main() -> None:
             # and counts input rows off it (the parse lineage runs
             # once). Same verdict total, and the wall records what the
             # self-counting gate costs at 1M hosts / 2.1M rules.
-            t0 = time.time()
-            self_counted = robots_filter(urls, rules)
-            allowed_sc = self_counted.filter(F.col("fetch_allowed")).count()
-            entry["self_counted_gate_s"] = round(time.time() - t0, 2)
+            with h.timed() as sc:
+                self_counted = robots_filter(urls, rules)
+                allowed_sc = self_counted.filter(F.col("fetch_allowed")).count()
+            entry["self_counted_gate_s"] = sc.s
             entry["self_counted_allowed"] = allowed_sc
             assert allowed_sc == want, (allowed_sc, want)
             spark.catalog.clearCache()  # drop the operator's persist
 
-        report["tiers"][str(n_hosts)] = entry
-        print(json.dumps({str(n_hosts): entry}), file=sys.stderr)
+        h.progress(report["tiers"], str(n_hosts), entry)
 
-    if "--merge" in sys.argv:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "CRAWL_SCALEBENCH.json",
-        )
-        with open(path) as f:
-            doc = json.load(f)
-        doc["robots_gate"] = report
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=2)
-    else:
-        with open("/tmp/robots_scalebench.json", "w") as f:
-            json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("robots_scalebench", {"robots_gate": report},
+                   artifact="CRAWL_SCALEBENCH.json")
 
 
 if __name__ == "__main__":

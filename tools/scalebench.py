@@ -21,18 +21,24 @@ Perturbations keep workload shape honest:
 - orders/lineitem: orderkey-shifted copies over the SAME customers
   (10× orders per customer).
 
-Usage: python tools/scalebench.py [n_copies] [out_json]
+The committed 100× tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
+
+Usage: python tools/scalebench.py [n_copies] [out_json [query ...]] [--work-only]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
+from vmware_graph_spark.sources.tables import load_table  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 SCALED = "/tmp/vgs_scale"
@@ -110,7 +116,6 @@ QUERIES_TO_TIME = [
 
 def _w_minhash(spark, sf_dir):
     from vmware_graph_spark.operators.dedup import minhash_lsh_candidates
-    from vmware_graph_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents")
     return {
@@ -122,7 +127,6 @@ def _w_minhash(spark, sf_dir):
 
 def _w_prefix_jaccard(spark, sf_dir):
     from vmware_graph_spark.operators.dedup import jaccard_pairs_prefix
-    from vmware_graph_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents")
     return {
@@ -133,10 +137,7 @@ def _w_prefix_jaccard(spark, sf_dir):
 
 
 def _w_decontaminate(spark, sf_dir):
-    from pyspark.sql import functions as F
-
     from vmware_graph_spark.functions.text import word_shingles
-    from vmware_graph_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents")
     g = d.select("source", F.explode(word_shingles("text", 5)).alias("gram"))
@@ -151,11 +152,7 @@ def _w_decontaminate(spark, sf_dir):
 
 
 def _w_bleu2(spark, sf_dir):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from vmware_graph_spark.functions.text import n_tokens
-    from vmware_graph_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source", "lang").orderBy("doc_id")
@@ -167,11 +164,8 @@ def _w_bleu2(spark, sf_dir):
 
 
 def _w_dup_span(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from vmware_graph_spark.sources.tables import load_table
-
     from vmware_graph_spark.queries_ext2 import _SPAN_K as K
+
     d = (
         load_table(spark, sf_dir, "documents")
         .select(
@@ -204,8 +198,6 @@ def _bucket_pair_stream(df, keycols) -> int:
     pair materialization, so it stays cheap even where the join itself
     would be infeasible (that infeasibility is exactly what the number
     is recorded to show)."""
-    from pyspark.sql import functions as F
-
     row = (
         df.groupBy(*keycols)
         .count()
@@ -216,10 +208,7 @@ def _bucket_pair_stream(df, keycols) -> int:
 
 
 def _simhash_piece_stream(spark, sf_dir, *, pieces: int, width: int) -> int:
-    from pyspark.sql import functions as F
-
     from vmware_graph_spark.operators.dedup import simhash
-    from vmware_graph_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents")
     sig = simhash(d, "doc_id", "text", bits=48)
@@ -262,10 +251,7 @@ def _w_simhash_scale_tier(spark, sf_dir):
 
 
 def _w_containment(spark, sf_dir):
-    from pyspark.sql import functions as F
-
     from vmware_graph_spark.operators.dedup import _shingle_table
-    from vmware_graph_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     corpus = d.select(F.col("doc_id").alias("id"), "text").unionByName(
@@ -278,11 +264,10 @@ def _w_containment(spark, sf_dir):
     return {"shared_shingle_pair_stream": _bucket_pair_stream(sh, ["shingle"])}
 
 
-def _w_behavior(spark, sf_dir):
-    from pyspark.sql import functions as F
-
+def _behavior_bigrams(spark, sf_dir):
+    """Per-user event-type bigram SET (every 20th user): the shingle
+    index the Jaccard work rides."""
     from vmware_graph_spark.operators.dedup import _shingle_table
-    from vmware_graph_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 20 == 0)
     seq = e.groupBy(F.col("user_id").alias("id")).agg(
@@ -294,31 +279,18 @@ def _w_behavior(spark, sf_dir):
             " ",
         ).alias("behavior")
     )
-    sh = _shingle_table(seq, "id", "behavior", 2)
-    # distinct per doc: Jaccard work rides the SET-shingle index
-    return {
-        "shared_bigram_pair_stream": _bucket_pair_stream(sh.distinct(), ["shingle"])
-    }
+    return seq, _shingle_table(seq, "id", "behavior", 2).distinct()
+
+
+def _w_behavior(spark, sf_dir):
+    _seq, sh = _behavior_bigrams(spark, sf_dir)
+    return {"shared_bigram_pair_stream": _bucket_pair_stream(sh, ["shingle"])}
 
 
 def _w_behavior_capped(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from vmware_graph_spark.operators.dedup import _shingle_table
     from vmware_graph_spark.queries import _BEHAVIOR_MAX_DF
-    from vmware_graph_spark.sources.tables import load_table
 
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 20 == 0)
-    seq = e.groupBy(F.col("user_id").alias("id")).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
-                lambda s: s["event_type"],
-            ),
-            " ",
-        ).alias("behavior")
-    )
-    sh = _shingle_table(seq, "id", "behavior", 2).distinct()
+    seq, sh = _behavior_bigrams(spark, sf_dir)
     keep = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("__df"))
@@ -338,7 +310,6 @@ def _w_knn_noise_nn_descent(spark, sf_dir):
     # construction (operators/similarity.py) — record the edge count
     # (= n·k when every node fills its list) as the linear work driver
     from vmware_graph_spark.operators.similarity import knn_graph_nn_descent
-    from vmware_graph_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     g = knn_graph_nn_descent(
@@ -348,11 +319,8 @@ def _w_knn_noise_nn_descent(spark, sf_dir):
 
 
 def _w_gazetteer(spark, sf_dir):
-    from pyspark.sql import functions as F
-
     from vmware_graph_spark.functions.text import tokens
     from vmware_graph_spark.queries_ext18 import _GAZETTEER_2, _GAZETTEER_3
-    from vmware_graph_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents").select(tokens("text").alias("__t"))
     t = F.col("__t")
@@ -372,8 +340,6 @@ def _w_gazetteer(spark, sf_dir):
 
 
 def _w_knn_noise(spark, sf_dir):
-    from vmware_graph_spark.sources.tables import load_table
-
     n = load_table(spark, sf_dir, "embeddings").count()
     return {"n_vectors": n, "brute_force_pairs": n * (n - 1) // 2}
 
@@ -401,104 +367,58 @@ WORK_METRICS = {
 COPY_AS_IS = ["region", "nation", "customer", "part", "supplier"]
 
 
+def _suffix_every_3rd_token(i: int):
+    if i == 0:
+        return F.col("text")
+    return F.array_join(
+        F.transform(
+            F.split(F.col("text"), " "),
+            lambda x, j: F.when(j % 3 == 0, F.concat(x, F.lit(f"~c{i}"))).otherwise(x),
+        ),
+        " ",
+    )
+
+
+def _nudge_embedding(i: int):
+    if i == 0:
+        return F.col("embedding")
+    return F.transform(
+        F.col("embedding"),
+        lambda x, j: (x + F.lit(0.0001 * i) * ((j % 7) - F.lit(3)).cast("float")).cast(
+            "float"
+        ),
+    )
+
+
 def build_scaled(spark, n_copies: int) -> None:
-    from pyspark.sql import functions as F
-
-    if os.path.isdir(SCALED):
-        shutil.rmtree(SCALED)
-    os.makedirs(SCALED, exist_ok=True)
-    for t in COPY_AS_IS:
-        spark.read.parquet(f"{BASE}/{t}.parquet").write.mode("overwrite").parquet(
-            f"{SCALED}/{t}.parquet"
-        )
-
-    def copies(df, shift_exprs):
-        parts = []
-        for i in range(n_copies):
-            c = df
-            for col, fn in shift_exprs.items():
-                c = c.withColumn(col, fn(i))
-            parts.append(c)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    orders = spark.read.parquet(f"{BASE}/orders.parquet")
-    copies(
-        orders, {"o_orderkey": lambda i: F.col("o_orderkey") + F.lit(i * 10_000_000)}
-    ).write.mode("overwrite").parquet(f"{SCALED}/orders.parquet")
-
-    li = spark.read.parquet(f"{BASE}/lineitem.parquet")
-    copies(
-        li, {"l_orderkey": lambda i: F.col("l_orderkey") + F.lit(i * 10_000_000)}
-    ).write.mode("overwrite").parquet(f"{SCALED}/lineitem.parquet")
-
-    ev = spark.read.parquet(f"{BASE}/events.parquet")
-    copies(
-        ev,
-        {
-            "event_id": lambda i: F.col("event_id") + F.lit(i * 1_000_000),
-            "user_id": lambda i: F.col("user_id") + F.lit(i * 100_000),
+    shifted = {
+        "orders": {"o_orderkey": h.shift("o_orderkey", 10_000_000)},
+        "lineitem": {"l_orderkey": h.shift("l_orderkey", 10_000_000)},
+        "events": {
+            "event_id": h.shift("event_id", 1_000_000),
+            "user_id": h.shift("user_id", 100_000),
         },
-    ).write.mode("overwrite").parquet(f"{SCALED}/events.parquet")
-
-    docs = spark.read.parquet(f"{BASE}/documents.parquet")
-
-    def perturb_text(i):
-        if i == 0:
-            return lambda _i: F.col("text")
-        return None
-
-    doc_parts = [docs]
-    for i in range(1, n_copies):
-        doc_parts.append(
-            docs.withColumn("doc_id", F.col("doc_id") + F.lit(i * 1_000_000)).withColumn(
-                "text",
-                F.array_join(
-                    F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda x, j: F.when(
-                            j % 3 == 0, F.concat(x, F.lit(f"~c{i}"))
-                        ).otherwise(x),
-                    ),
-                    " ",
-                ),
-            )
-        )
-    out = doc_parts[0]
-    for p in doc_parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{SCALED}/documents.parquet")
-
-    emb = spark.read.parquet(f"{BASE}/embeddings.parquet")
-    emb_parts = [emb]
-    for i in range(1, n_copies):
-        emb_parts.append(
-            emb.withColumn("vec_id", F.col("vec_id") + F.lit(i * 1_000_000)).withColumn(
-                "embedding",
-                F.transform(
-                    F.col("embedding"),
-                    lambda x, j: (
-                        x + F.lit(0.0001 * i) * ((j % 7) - F.lit(3)).cast("float")
-                    ).cast("float"),
-                ),
-            )
-        )
-    out = emb_parts[0]
-    for p in emb_parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{SCALED}/embeddings.parquet")
+        "documents": {
+            "doc_id": h.shift("doc_id", 1_000_000),
+            "text": _suffix_every_3rd_token,
+        },
+        "embeddings": {
+            "vec_id": h.shift("vec_id", 1_000_000),
+            "embedding": _nudge_embedding,
+        },
+    }
+    shutil.rmtree(SCALED, ignore_errors=True)
+    for t in COPY_AS_IS + list(shifted):
+        df = spark.read.parquet(f"{BASE}/{t}.parquet")
+        if t in shifted:
+            df = h.shifted_copies(df, range(n_copies), **shifted[t])
+        df.write.mode("overwrite").parquet(f"{SCALED}/{t}.parquet")
 
 
 def time_queries(spark, sf_dir: str, names) -> dict[str, float]:
-    from vmware_graph_spark.queries import QUERIES
-
     res = {}
     for name in names:
-        t0 = time.time()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        res[name] = round(time.time() - t0, 3)
+        res[name] = h.run_query(spark, name, sf_dir, "scalebench")[0]
         print(f"  {sf_dir.split('/')[-1]} {name}: {res[name]}s", file=sys.stderr)
     return res
 
@@ -519,29 +439,24 @@ def work_metrics(spark, sf_dir: str, names) -> dict[str, dict[str, int]]:
 
 
 def main() -> None:
-    n_copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_json = sys.argv[2] if len(sys.argv) > 2 else "/tmp/scalebench.json"
-    rest = sys.argv[3:]
     # --work-only: record work drivers WITHOUT executing the queries —
     # for kernels whose counted work at this scale is itself the
     # evidence that running them is infeasible (see QUERIES_TO_TIME
     # note). SCALEBENCH_SKIP_BUILD=1 reuses an existing scaled dir.
-    work_only = bool(rest) and rest[0] == "--work-only"
-    names = (rest[1:] if work_only else rest) or QUERIES_TO_TIME
+    words, tiers = h.cli([10])
+    n_copies = tiers[0]
+    out_json = words[0] if words else None
+    names = words[1:] or QUERIES_TO_TIME
+    work_only = "--work-only" in sys.argv
 
-    from vmware_graph_spark.session import get_spark, tune
-
-    spark = get_spark("scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = h.spark("scalebench")
     build_s = 0.0
     if os.environ.get("SCALEBENCH_SKIP_BUILD") == "1" and os.path.isdir(SCALED):
         print("reusing existing scaled fixtures", file=sys.stderr)
     else:
-        t0 = time.time()
-        build_scaled(spark, n_copies)
-        build_s = round(time.time() - t0, 1)
+        with h.timed(1) as t:
+            build_scaled(spark, n_copies)
+        build_s = t.s
 
     base = {} if work_only else time_queries(spark, BASE, names)
     scaled = {} if work_only else time_queries(spark, SCALED, names)
@@ -556,9 +471,7 @@ def main() -> None:
         "work_base": work_metrics(spark, BASE, names),
         "work_scaled": work_metrics(spark, SCALED, names),
     }
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("scalebench", report, out_json)
 
 
 if __name__ == "__main__":

@@ -19,6 +19,7 @@ import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -127,9 +128,8 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
-    from vmware_graph_spark.session import get_spark
 
-    spark = get_spark("check-queries")
+    spark = h.spark("check-queries")
     qs, sqls = entrymod.queries(), entrymod.oracle_sql()
 
     con = duckdb.connect()

@@ -24,12 +24,12 @@ Usage: python tools/simhash_counterfactual.py [n_copies] [out_json]
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 CF_DIR = "/tmp/vgs_simhash_cf"
@@ -38,41 +38,27 @@ CF_DIR = "/tmp/vgs_simhash_cf"
 def build_distinct_corpus(spark, n_copies: int) -> None:
     from pyspark.sql import functions as F
 
-    if os.path.isdir(CF_DIR):
-        shutil.rmtree(CF_DIR)
-    os.makedirs(CF_DIR, exist_ok=True)
-    docs = spark.read.parquet(f"{BASE}/documents.parquet")
-    parts = [docs]
-    for i in range(1, n_copies):
-        parts.append(
-            docs.withColumn("doc_id", F.col("doc_id") + F.lit(i * 1_000_000))
-            .withColumn(
-                "text",
-                F.array_join(
-                    F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda x: F.concat(x, F.lit(f"~c{i}")),  # EVERY token
-                    ),
-                    " ",
-                ),
-            )
+    def suffixed(i):  # EVERY token of copy i > 0
+        if i == 0:
+            return F.col("text")
+        return F.array_join(
+            F.transform(F.split("text", " "), lambda x: F.concat(x, F.lit(f"~c{i}"))), " "
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{CF_DIR}/documents.parquet")
+
+    shutil.rmtree(CF_DIR, ignore_errors=True)
+    docs = spark.read.parquet(f"{BASE}/documents.parquet")
+    h.shifted_copies(
+        docs, range(n_copies), doc_id=h.shift("doc_id", 1_000_000), text=suffixed
+    ).write.mode("overwrite").parquet(f"{CF_DIR}/documents.parquet")
 
 
 def main() -> None:
-    n_copies = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    out_json = sys.argv[2] if len(sys.argv) > 2 else "/tmp/simhash_cf.json"
+    words, tiers = h.cli([100])
+    n_copies = tiers[0]
 
     from tools.scalebench import _simhash_piece_stream
-    from vmware_graph_spark.session import get_spark, tune
 
-    spark = get_spark("simhash-counterfactual")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("simhash-counterfactual")
 
     build_distinct_corpus(spark, n_copies)
     n_docs = spark.read.parquet(f"{CF_DIR}/documents.parquet").count()
@@ -89,9 +75,7 @@ def main() -> None:
         "uniform_floor": floor,
         "stream_vs_linear_scaleup": round(stream / (base_stream * n_copies), 3),
     }
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report, indent=2))
+    h.write_report("simhash_cf", report, words[0] if words else None)
 
 
 if __name__ == "__main__":

@@ -25,19 +25,21 @@ Kernels:
 - interval    : stream-stream interval join (click→view attribution)
 - cms / kmv   : mergeable-sketch partial drains + merge read-back
 
+The committed 100× tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
+
 Usage: python tools/streaming_scalebench.py [out_json] [scales...]
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 BASE = "/root/testdata/sf0.1/events.parquet"
 ROOT = "/tmp/vgs_stream_scale"
@@ -77,8 +79,6 @@ def _progress_summary(queries) -> dict:
         for p in q.recentProgress:
             out["batches"] += 1
             out["input_rows"] += int(p.get("numInputRows") or 0)
-            ew = p.get("eventTime") or {}
-            _ = ew
             for so in p.get("stateOperators") or []:
                 out["dropped_by_watermark"] += int(
                     so.get("numRowsDroppedByWatermark") or 0
@@ -110,12 +110,12 @@ def kernel_windowed(spark, in_dir: str, work: str) -> dict:
         windowed_event_counts,
     )
 
-    t0 = time.time()
-    q = _drain_noop(
-        windowed_event_counts(read_event_stream(spark, in_dir)),
-        f"{work}/ckpt_windowed",
-    )
-    return {"wall_s": round(time.time() - t0, 1), **_progress_summary([q])}
+    with h.timed(1) as t:
+        q = _drain_noop(
+            windowed_event_counts(read_event_stream(spark, in_dir)),
+            f"{work}/ckpt_windowed",
+        )
+    return {"wall_s": t.s, **_progress_summary([q])}
 
 
 def kernel_late_phased(spark, in_dir: str, work: str) -> dict:
@@ -135,15 +135,15 @@ def kernel_late_phased(spark, in_dir: str, work: str) -> dict:
     ).write.mode("overwrite").parquet(d2)
     sdir, out, ckpt = f"{work}/late_src", f"{work}/late_out", f"{work}/late_ckpt"
     os.makedirs(sdir, exist_ok=True)
-    t0 = time.time()
-    qs = stream_windowed_counts_phased(
-        spark,
-        [glob.glob(d1 + "/part-*.parquet")[0], glob.glob(d2 + "/part-*.parquet")[0]],
-        sdir,
-        out,
-        ckpt,
-    )
-    return {"wall_s": round(time.time() - t0, 1), **_progress_summary(qs)}
+    with h.timed(1) as t:
+        qs = stream_windowed_counts_phased(
+            spark,
+            [glob.glob(d1 + "/part-*.parquet")[0], glob.glob(d2 + "/part-*.parquet")[0]],
+            sdir,
+            out,
+            ckpt,
+        )
+    return {"wall_s": t.s, **_progress_summary(qs)}
 
 
 def kernel_interval(spark, in_dir: str, work: str) -> dict:
@@ -163,15 +163,15 @@ def kernel_interval(spark, in_dir: str, work: str) -> dict:
     right = s.filter(F.col("event_type") == "view").select(
         "user_id", F.col("ts").alias("r_ts"), F.col("event_id").alias("r_id")
     )
-    t0 = time.time()
-    q = _drain_noop(
-        interval_join_stream(
-            left, right, "user_id", "l_ts", "r_ts",
-            max_delay_seconds=3600, watermark="2 hours",
-        ),
-        f"{work}/ckpt_interval",
-    )
-    return {"wall_s": round(time.time() - t0, 1), **_progress_summary([q])}
+    with h.timed(1) as t:
+        q = _drain_noop(
+            interval_join_stream(
+                left, right, "user_id", "l_ts", "r_ts",
+                max_delay_seconds=3600, watermark="2 hours",
+            ),
+            f"{work}/ckpt_interval",
+        )
+    return {"wall_s": t.s, **_progress_summary([q])}
 
 
 def kernel_cms(spark, in_dir: str, work: str) -> dict:
@@ -184,12 +184,12 @@ def kernel_cms(spark, in_dir: str, work: str) -> dict:
     )
 
     out, ckpt = f"{work}/cms_out", f"{work}/cms_ckpt"
-    t0 = time.time()
-    stream_cms_heavy_hitters(
-        read_event_stream(spark, in_dir), F.col("event_type"), out, ckpt
-    )
-    est = cms_merge_estimates(spark, out).count()
-    return {"wall_s": round(time.time() - t0, 1), "estimates": est}
+    with h.timed(1) as t:
+        stream_cms_heavy_hitters(
+            read_event_stream(spark, in_dir), F.col("event_type"), out, ckpt
+        )
+        est = cms_merge_estimates(spark, out).count()
+    return {"wall_s": t.s, "estimates": est}
 
 
 def kernel_kmv(spark, in_dir: str, work: str) -> dict:
@@ -202,18 +202,18 @@ def kernel_kmv(spark, in_dir: str, work: str) -> dict:
     )
 
     out, ckpt = f"{work}/kmv_out", f"{work}/kmv_ckpt"
-    t0 = time.time()
-    stream_kmv_partials(
-        read_event_stream(spark, in_dir),
-        F.col("event_type"),
-        F.col("user_id"),
-        out,
-        ckpt,
-        k=256,
-        seed=0,
-    )
-    est = kmv_merge_estimate(spark, out, k=256).count()
-    return {"wall_s": round(time.time() - t0, 1), "groups": est}
+    with h.timed(1) as t:
+        stream_kmv_partials(
+            read_event_stream(spark, in_dir),
+            F.col("event_type"),
+            F.col("user_id"),
+            out,
+            ckpt,
+            k=256,
+            seed=0,
+        )
+        est = kmv_merge_estimate(spark, out, k=256).count()
+    return {"wall_s": t.s, "groups": est}
 
 
 def kernel_stream_dedup(spark, in_dir: str, work: str) -> dict:
@@ -261,9 +261,9 @@ def kernel_stream_dedup(spark, in_dir: str, work: str) -> dict:
         .parquet(arr_dir)
     )
     out, ckpt = f"{work}/dedup_out", f"{work}/dedup_ckpt"
-    t0 = time.time()
-    stream_dedup_against(sdf, ref, "doc_id", "text", out, ckpt)
-    wall = round(time.time() - t0, 1)
+    with h.timed(1) as t:
+        stream_dedup_against(sdf, ref, "doc_id", "text", out, ckpt)
+    wall = t.s
     res = spark.read.parquet(out)
     decided = res.count()
     dup = res.filter(F.col("exact_dup") | F.col("near_dup")).count()
@@ -288,18 +288,12 @@ KERNELS = {
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "/tmp/streaming_scalebench.json"
-    # numeric argv entries are scales, non-numeric ones select a kernel
-    # subset (subset-run JSONs merge into the committed artifact, same
-    # convention as tools/scalebench.py)
-    scales = [int(s) for s in sys.argv[2:] if s.isdigit()] or [1, 10, 100]
-    only = {s for s in sys.argv[2:] if not s.isdigit()}
-
-    from vmware_graph_spark.session import get_spark, tune
-
-    spark = get_spark("streaming-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    # numeric argv entries are scales, the words after out_json select a
+    # kernel subset (subset-run JSONs merge into the committed artifact,
+    # same convention as tools/scalebench.py)
+    words, scales = h.cli([1, 10, 100])
+    only = set(words[1:])
+    spark = h.spark("streaming-scalebench")
 
     report: dict = {"scales": {}, "load_1m_at_start": round(os.getloadavg()[0], 2)}
     for n in scales:
@@ -316,9 +310,7 @@ def main() -> None:
             print(f"  {n}x {name}: {entry[name]}", file=sys.stderr)
         report["scales"][f"{n}x"] = entry
 
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("streaming_scalebench", report, words[0] if words else None)
 
 
 if __name__ == "__main__":

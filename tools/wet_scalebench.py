@@ -14,21 +14,23 @@ md5(text) comparison — 0 mismatches required — so the measured
 records/s double as at-scale correctness checks (the crawl_scalebench
 discipline).
 
-Appends a ``wet_sink`` section to CRAWL_SCALEBENCH.json with --merge,
-else writes /tmp/wet_scalebench.json.
+Sets the ``wet_sink`` section of CRAWL_SCALEBENCH.json with --merge,
+else writes it to /tmp/wet_scalebench.json.
+
+The committed 100x tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
 
 Usage: python tools/wet_scalebench.py [--merge] [copies...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 SRC_SF = os.environ.get("WET_SRC_SF", "/root/testdata/sf0.1")
 OUT = "/tmp/vgs_wet_sink"
@@ -37,14 +39,10 @@ OUT = "/tmp/vgs_wet_sink"
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from vmware_graph_spark.session import get_spark, tune
     from vmware_graph_spark.sources.warc import read_warc, write_wet
 
-    copies = [int(c) for c in sys.argv[1:] if not c.startswith("-")] or [1, 10, 100]
-
-    spark = get_spark("wet-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    _words, copies = h.cli([1, 10, 100])
+    spark = h.spark("wet-scalebench")
 
     base = spark.read.parquet(f"{SRC_SF}/documents.parquet").select("doc_id", "text")
 
@@ -78,66 +76,48 @@ def main() -> None:
             out_dir = os.path.join(OUT, tag)
             if os.path.isdir(out_dir):
                 shutil.rmtree(out_dir)
-            t0 = time.time()
-            written = write_wet(src, out_dir, gzip_members=gz)
-            wall = round(time.time() - t0, 2)
+            with h.timed() as write:
+                written = write_wet(src, out_dir, gzip_members=gz)
             assert written == n_records, (written, n_records)
-            out_bytes = sum(
-                os.path.getsize(os.path.join(out_dir, f))
-                for f in os.listdir(out_dir)
-            )
+            out_bytes = h.du_bytes(out_dir)
 
             # roundtrip decisions at THIS tier: read the sink's files
             # back and md5-compare every record's text against the
             # source by URI (full join; 0 mismatches).
             glob = os.path.join(out_dir, f"*.warc.wet{'.gz' if gz else ''}")
-            t0 = time.time()
-            back = read_warc(spark, glob, types=("conversion",)).select(
-                F.col("uri"), F.md5(F.col("body").cast("string")).alias("h_back")
-            )
-            mismatches = (
-                src.select("uri", F.md5("text").alias("h_src"))
-                .join(back, "uri", "full")
-                .filter(
-                    F.col("h_src").isNull()
-                    | F.col("h_back").isNull()
-                    | (F.col("h_src") != F.col("h_back"))
+            with h.timed() as verify:
+                back = read_warc(spark, glob, types=("conversion",)).select(
+                    F.col("uri"), F.md5(F.col("body").cast("string")).alias("h_back")
                 )
-                .count()
-            )
-            verify_s = round(time.time() - t0, 2)
+                mismatches = (
+                    src.select("uri", F.md5("text").alias("h_src"))
+                    .join(back, "uri", "full")
+                    .filter(
+                        F.col("h_src").isNull()
+                        | F.col("h_back").isNull()
+                        | (F.col("h_src") != F.col("h_back"))
+                    )
+                    .count()
+                )
             assert mismatches == 0, (tag, n, mismatches)
 
             entry[tag] = {
-                "write_s": wall,
-                "records_per_s": round(n_records / wall, 0),
+                "write_s": write.s,
+                "records_per_s": round(n_records / write.s, 0),
                 "bytes": out_bytes,
-                "mb_per_s": round(out_bytes / wall / 1e6, 1),
+                "mb_per_s": round(out_bytes / write.s / 1e6, 1),
                 "files": len(os.listdir(out_dir)),
-                "roundtrip_verify_s": verify_s,
+                "roundtrip_verify_s": verify.s,
                 "roundtrip_mismatches": mismatches,
             }
         entry["gz_compression"] = round(
             entry["plain"]["bytes"] / entry["gz"]["bytes"], 2
         )
-        report["tiers"][str(n)] = entry
-        print(json.dumps({str(n): entry}), file=sys.stderr)
+        h.progress(report["tiers"], str(n), entry)
 
     shutil.rmtree(OUT, ignore_errors=True)
-    if "--merge" in sys.argv:
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "CRAWL_SCALEBENCH.json",
-        )
-        with open(path) as f:
-            doc = json.load(f)
-        doc["wet_sink"] = report
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=2)
-    else:
-        with open("/tmp/wet_scalebench.json", "w") as f:
-            json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("wet_scalebench", {"wet_sink": report},
+                   artifact="CRAWL_SCALEBENCH.json")
 
 
 if __name__ == "__main__":

@@ -28,19 +28,21 @@ Measured per workbook count N in {1, 10, 100}:
   embarrassingly parallel, so fleet ingest cost = decode here +
   per-tenant refresh there).
 
+The committed 100-workbook tier was measured at the engine's old 12g default
+heap; set SPARK_DRIVER_MEM=12g to reproduce it.
+
 Usage: python tools/xlsx_scalebench.py [out_json] [counts...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 import zipfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools import _harness as h  # noqa: E402
 
 FLEET = "/tmp/vgs_xlsx_fleet"
 SHEET_PARQUET = "/tmp/vgs_xlsx_parquet"
@@ -181,22 +183,15 @@ def build_fleet(spark, n_books: int) -> dict[str, list[str]]:
     from pyspark.sql import functions as F
 
     for name, df in sheets_df.items():
-        reps = df.withColumn("_workbook", F.lit("rvtools_000"))
-        parts = [reps]
-        for t in range(1, n_books):
-            parts.append(df.withColumn("_workbook", F.lit(f"rvtools_{t:03d}")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("overwrite").parquet(os.path.join(SHEET_PARQUET, f"{name}.parquet"))
+        h.shifted_copies(
+            df, range(n_books), _workbook=lambda t: F.lit(f"rvtools_{t:03d}")
+        ).write.mode("overwrite").parquet(os.path.join(SHEET_PARQUET, f"{name}.parquet"))
     return columns
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "/tmp/xlsx_scalebench.json"
-    counts = [int(c) for c in sys.argv[2:]] or [1, 10, 100]
+    words, counts = h.cli([1, 10, 100])
 
-    from vmware_graph_spark.session import get_spark, tune
     from vmware_graph_spark.sources.workbook import (
         SHEETS,
         fleet_sheet,
@@ -204,36 +199,34 @@ def main() -> None:
         read_xlsx_many_all,
     )
 
-    spark = get_spark("xlsx-scalebench")
-    tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = h.spark("xlsx-scalebench")
 
     report: dict = {"load_1m_at_start": round(os.getloadavg()[0], 2), "counts": {}}
     for n in counts:
-        t0 = time.time()
-        columns = build_fleet(spark, n)
-        build_s = round(time.time() - t0, 1)
+        with h.timed(1) as t:
+            columns = build_fleet(spark, n)
+        build_s = t.s
         glob = f"{FLEET}/*.xlsx"
 
-        t0 = time.time()
-        total_rows = 0
-        for sheet in SHEETS:
-            df = read_xlsx_many(spark, glob, sheet, tuple(columns[sheet]))
-            total_rows += df.count()
-        per_sheet_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            total_rows = 0
+            for sheet in SHEETS:
+                df = read_xlsx_many(spark, glob, sheet, tuple(columns[sheet]))
+                total_rows += df.count()
+        per_sheet_s = t.s
 
-        t0 = time.time()
-        decoded = read_xlsx_many_all(spark, glob)
-        single_rows = decoded.count()
-        single_pass_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            decoded = read_xlsx_many_all(spark, glob)
+            single_rows = decoded.count()
+        single_pass_s = t.s
 
-        t0 = time.time()
-        pq_rows = 0
-        for sheet in SHEETS:
-            pq_rows += spark.read.parquet(
-                os.path.join(SHEET_PARQUET, f"{sheet}.parquet")
-            ).count()
-        parquet_s = round(time.time() - t0, 2)
+        with h.timed() as t:
+            pq_rows = 0
+            for sheet in SHEETS:
+                pq_rows += spark.read.parquet(
+                    os.path.join(SHEET_PARQUET, f"{sheet}.parquet")
+                ).count()
+        parquet_s = t.s
 
         entry = {
             "build_fleet_s": build_s,
@@ -257,17 +250,17 @@ def main() -> None:
             # (global dimension labels stay shared).
             from vmware_graph_spark.ingest.refresh import run_ingest
 
-            t0 = time.time()
-            decoded = read_xlsx_many_all(spark, glob).localCheckpoint(eager=True)
-            sheets = {
-                s: fleet_sheet(decoded, s, tuple(columns[s])) for s in SHEETS
-            }
-            snap = "/tmp/vgs_xlsx_snap"
-            if os.path.isdir(snap):
-                shutil.rmtree(snap)
-            store = run_ingest(spark, sheets)
-            store.publish(snap)
-            entry["xlsx_sourced_cold_build_s"] = round(time.time() - t0, 1)
+            with h.timed(1) as t:
+                decoded = read_xlsx_many_all(spark, glob).localCheckpoint(eager=True)
+                sheets = {
+                    s: fleet_sheet(decoded, s, tuple(columns[s])) for s in SHEETS
+                }
+                snap = "/tmp/vgs_xlsx_snap"
+                if os.path.isdir(snap):
+                    shutil.rmtree(snap)
+                store = run_ingest(spark, sheets)
+                store.publish(snap)
+            entry["xlsx_sourced_cold_build_s"] = t.s
             from vmware_graph_spark.store.graph import GraphStore
 
             counts_d = GraphStore.read(spark, snap).counts()
@@ -276,12 +269,9 @@ def main() -> None:
             )
             entry["xlsx_sourced_edges"] = counts_d.get("edges", 0)
 
-        report["counts"][f"{n}"] = entry
-        print(json.dumps({f"{n}": entry}), file=sys.stderr)
+        h.progress(report["counts"], f"{n}", entry)
 
-    with open(out_json, "w") as f:
-        json.dump(report, f, indent=2)
-    print(json.dumps(report))
+    h.write_report("xlsx_scalebench", report, words[0] if words else None)
 
 
 if __name__ == "__main__":

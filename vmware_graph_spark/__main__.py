@@ -40,7 +40,6 @@ def _refresh(workbook_dir: str, snapshot_dir: str) -> int:
     from vmware_graph_spark.store.graph import GraphStore
 
     spark = get_spark("vmware-graph-refresh")
-    spark.sparkContext.setLogLevel("ERROR")
 
     if os.path.isfile(workbook_dir) and workbook_dir.lower().endswith(".xlsx"):
         sheets = read_workbook_xlsx(spark, workbook_dir)
@@ -78,7 +77,6 @@ def _query(name: str, sf_dir: str, limit: int) -> int:
     if fn is None:
         return 2
     spark = get_spark("vmware-graph-query")
-    spark.sparkContext.setLogLevel("ERROR")
     fn(spark, sf_dir).show(limit, truncate=False)
     return 0
 
@@ -90,7 +88,6 @@ def _explain(name: str, sf_dir: str) -> int:
     if fn is None:
         return 2
     spark = get_spark("vmware-graph-explain")
-    spark.sparkContext.setLogLevel("ERROR")
     fn(spark, sf_dir).explain("formatted")
     return 0
 

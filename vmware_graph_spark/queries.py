@@ -2450,7 +2450,7 @@ def graph_vm_hw_upgrade_pending(spark, sf_dir):
     it back. The query runs against the WRITTEN-AND-REREAD snapshot,
     proving props survive persistence — round-2 VERDICT "What's
     missing" #1."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
 
     from vmware_graph_spark.ingest.stages import stage_vcluster, stage_vinfo_vms
     from vmware_graph_spark.store.graph import US, GraphStore
@@ -2466,7 +2466,7 @@ def graph_vm_hw_upgrade_pending(spark, sf_dir):
         ),
     )
     stage_vinfo_vms(store, {"vInfo": _vinfo_sheet(spark, sf_dir)})
-    path = tempfile.mkdtemp(prefix="vgs_hwprops_")
+    path = fresh_dir("vgs_hwprops_")
     store.write(path)
     back = GraphStore.read(spark, path)
     e = back.edges_with_props().filter(F.col("rel_type") == "HW_VERSION")
@@ -3145,14 +3145,14 @@ def snapshot_write_read_roundtrip(spark, sf_dir):
     round-trip. Returns cluster rows AND their CONTROLLED_BY_VC edges
     read back from the on-disk snapshot, proving both surfaces survive
     persistence bit-exactly."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
 
     from vmware_graph_spark.ingest.stages import stage_vcluster
     from vmware_graph_spark.store.graph import GraphStore
 
     store = GraphStore(spark, checkpoint=False)
     stage_vcluster(store, {"vCluster": _vcluster_sheet(spark, sf_dir)})
-    path = tempfile.mkdtemp(prefix="vgs_snapshot_")
+    path = fresh_dir("vgs_snapshot_")
     store.write(path)
     back = GraphStore.read(spark, path)
     clusters = back.vertices("Vcentercluster").select("name", "managedby", "hosts", "ha")
@@ -3209,7 +3209,7 @@ def streaming_hourly_event_counts(spark, sf_dir):
     tumbling-window agg, availableNow drain into a memory sink, read
     back as the result. Complete mode + decimal accumulation make the
     output identical to the batch oracle."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.streaming.events import (
@@ -3218,7 +3218,7 @@ def streaming_hourly_event_counts(spark, sf_dir):
         windowed_event_counts,
     )
 
-    path = tempfile.mkdtemp(prefix="vgs_stream_")
+    path = fresh_dir("vgs_stream_")
     load_table(spark, sf_dir, "events").repartition(3).write.mode("overwrite").parquet(path)
     sdf = windowed_event_counts(read_event_stream(spark, path), exact_sums=True)
     name = "stream_hourly_" + uuid.uuid4().hex[:8]
@@ -3702,7 +3702,7 @@ def incremental_merge_sweep(spark, sf_dir):
     (+100 balance) and omits the rest — sweep semantics must delete the
     omitted keys while every other tenant partition is untouched (and,
     thanks to dynamic partition overwrite, never rewritten)."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
 
     from vmware_graph_spark.store.incremental import IncrementalTable
 
@@ -3713,7 +3713,7 @@ def incremental_merge_sweep(spark, sf_dir):
         F.col("c_mktsegment").alias("tenant"),
     )
     tbl = IncrementalTable(
-        spark, tempfile.mkdtemp(prefix="vgs_incr_") + "/t", keys=["k"], tenant_col="tenant"
+        spark, fresh_dir("vgs_incr_") + "/t", keys=["k"], tenant_col="tenant"
     )
     tbl.merge(base)
     updates = base.filter(
@@ -3743,11 +3743,11 @@ def bucketed_colocated_join(spark, sf_dir):
     Exchange — the shuffle is paid once at layout time and amortized
     across every query that reuses it. 64 local buckets stand in for
     ~16k buckets at 100 TB."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
 
     from vmware_graph_spark.sources.bucketed import bucketed_join, write_bucketed
 
-    root = tempfile.mkdtemp(prefix="vgs_buckets_")
+    root = fresh_dir("vgs_buckets_")
     o = write_bucketed(
         load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"),
         "vgs_orders_bucketed", ["o_orderkey"], num_buckets=16, path=root + "/o",
@@ -6894,7 +6894,7 @@ def streaming_segment_hourly_counts(spark, sf_dir):
     (a refreshed dim is picked up live); the stream side never shuffles
     for the join. Drained with availableNow into a memory sink and
     compared to the batch SQL twin."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.streaming.events import (
@@ -6907,7 +6907,7 @@ def streaming_segment_hourly_counts(spark, sf_dir):
     dim = ev.select(
         "user_id", F.concat(F.lit("seg"), F.col("user_id") % 5).alias("segment")
     ).distinct()
-    path = tempfile.mkdtemp(prefix="vgs_stream_seg_")
+    path = fresh_dir("vgs_stream_seg_")
     ev.repartition(3).write.mode("overwrite").parquet(path)
     enriched = stream_static_enrich(read_event_stream(spark, path), dim, "user_id")
     agg = (

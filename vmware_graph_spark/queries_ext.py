@@ -444,7 +444,7 @@ def streaming_dedup_event_ids(spark, sf_dir):
     state stays bounded (the whole point of the Within-Watermark
     variant vs plain streaming dropDuplicates).
     """
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.streaming.events import (
@@ -453,7 +453,7 @@ def streaming_dedup_event_ids(spark, sf_dir):
         run_available_to_memory,
     )
 
-    path = tempfile.mkdtemp(prefix="vgs_sdedup_")
+    path = fresh_dir("vgs_sdedup_")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(2).write.mode("overwrite").parquet(path + "/a")
     ev.repartition(2).write.mode("append").parquet(path + "/a")  # the duplicate feed
@@ -495,12 +495,12 @@ def streaming_interval_join_views_clicks(spark, sf_dir):
     watermark can still reach them) — the unbounded-state hazard of a
     plain stream-stream equi-join never arises.
     """
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.streaming.events import read_event_stream
 
-    path = tempfile.mkdtemp(prefix="vgs_sjoin_")
+    path = fresh_dir("vgs_sjoin_")
     e = load_table(spark, sf_dir, "events")
     e.filter(F.col("event_type") == "view").repartition(2).write.mode(
         "overwrite"
@@ -1113,7 +1113,7 @@ def streaming_stateful_sessionize(spark, sf_dir):
     The oracle is the batch gaps-and-islands computation at the
     sessionizer's millisecond resolution.
     """
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.streaming.events import (
@@ -1122,7 +1122,7 @@ def streaming_stateful_sessionize(spark, sf_dir):
         sessionize_stream,
     )
 
-    path = tempfile.mkdtemp(prefix="vgs_ssess_") + "/ev"
+    path = fresh_dir("vgs_ssess_") + "/ev"
     ev = load_table(spark, sf_dir, "events")
     # same 0.33/0.66 percentile split this helper computes; batch order
     # carried by explicit mtime stamps (no sleeps)
@@ -1517,12 +1517,12 @@ def streaming_session_window_counts(spark, sf_dir):
     a drained backfill must bring its own watermark push. Oracle: the
     batch gaps-and-islands sessionization at millisecond resolution.
     """
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.streaming.events import read_event_stream
 
-    path = tempfile.mkdtemp(prefix="vgs_ssw_") + "/ev"
+    path = fresh_dir("vgs_ssw_") + "/ev"
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 0)
     maxts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
     sentinel = spark.createDataFrame(
@@ -1596,13 +1596,13 @@ def streaming_cdc_merge_into(spark, sf_dir):
     stage uses; partition pruning on the touched tenants shows up as
     PartitionFilters in the scan (asserted in test_incremental.py).
     """
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.store.incremental import IncrementalTable
     from vmware_graph_spark.streaming.events import read_event_stream
 
-    base = tempfile.mkdtemp(prefix="vgs_cdc_")
+    base = fresh_dir("vgs_cdc_")
     path, tbl_path, ckpt = base + "/ev", base + "/tbl", base + "/ckpt"
     ev = load_table(spark, sf_dir, "events")
     _write_time_ordered_batches(spark, sf_dir, path, ev, n=3)

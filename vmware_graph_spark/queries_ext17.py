@@ -11,8 +11,6 @@ are all on the hook at once.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -23,6 +21,7 @@ from vmware_graph_spark.queries import (
     _vhost_sheet,
     query,
 )
+from vmware_graph_spark.tmpcache import fresh_dir
 
 
 @query(
@@ -64,7 +63,7 @@ def snapshot_cc_membership_after_refresh(spark, sf_dir):
     prev = run_ingest(spark, sheets_a)
     final = refresh(spark, sheets_prime, prev=prev).store
 
-    path = tempfile.mkdtemp(prefix="vgs_snap_cc_")
+    path = fresh_dir("vgs_snap_cc_")
     final.write(path)
     back = GraphStore.read(spark, path)
 
@@ -805,7 +804,6 @@ def streaming_dedup_against_corpus(spark, sf_dir):
     boundaries, so the drained output must equal the batch twin
     ``dedup_new_against_corpus`` row-for-row — the oracle below is that
     twin's SQL, unchanged."""
-    import tempfile
 
     from vmware_graph_spark.sources.tables import load_table
     from vmware_graph_spark.streaming.events import stream_dedup_against
@@ -814,7 +812,7 @@ def streaming_dedup_against_corpus(spark, sf_dir):
     new = d.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
     ref = d.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text")
 
-    sdir = tempfile.mkdtemp(prefix="vgs_stream_docs_")
+    sdir = fresh_dir("vgs_stream_docs_")
     # two arrival files = two micro-batches (maxFilesPerTrigger=1)
     new.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(sdir)
     new.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(sdir)
@@ -824,8 +822,8 @@ def streaming_dedup_against_corpus(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(sdir)
     )
-    out_dir = tempfile.mkdtemp(prefix="vgs_stream_dedup_out_") + "/res"
-    ckpt = tempfile.mkdtemp(prefix="vgs_stream_dedup_ckpt_")
+    out_dir = fresh_dir("vgs_stream_dedup_out_") + "/res"
+    ckpt = fresh_dir("vgs_stream_dedup_ckpt_")
     stream_dedup_against(
         stream, ref, "doc_id", "text", out_dir, ckpt,
         n=3, num_hashes=8, bands=4, verify_threshold=0.5,
@@ -869,8 +867,6 @@ def streaming_cms_heavy_hitters(spark, sf_dir):
     oracle (shared with ``cms_heavy_hitter_props``) computes. The
     streaming-sketch shape: per-batch state is constant in batch size,
     merge is addition, estimates are read-side."""
-    import tempfile
-
     from vmware_graph_spark.sources.tables import load_table
     from vmware_graph_spark.streaming.events import (
         EVENT_SCHEMA,
@@ -882,14 +878,14 @@ def streaming_cms_heavy_hitters(spark, sf_dir):
     # arrival dir: three files = three micro-batches (sketch merge is
     # order/batching independent, so any split proves the property)
     ev = load_table(spark, sf_dir, "events")
-    sdir = tempfile.mkdtemp(prefix="vgs_stream_cms_in_")
+    sdir = fresh_dir("vgs_stream_cms_in_")
     for i in range(3):
         ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(sdir)
     stream = read_event_stream(spark, sdir)
-    out_dir = tempfile.mkdtemp(prefix="vgs_stream_cms_") + "/sketch"
-    ckpt = tempfile.mkdtemp(prefix="vgs_stream_cms_ckpt_")
+    out_dir = fresh_dir("vgs_stream_cms_") + "/sketch"
+    ckpt = fresh_dir("vgs_stream_cms_ckpt_")
     stream_cms_heavy_hitters(
         stream, F.get_json_object("props", "$.k"), out_dir, ckpt, width=64, depth=4
     )

@@ -8,13 +8,12 @@ paired with a DuckDB ANSI-SQL twin and hash-matches it at sf0.01.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from vmware_graph_spark.queries import _shingles, _toks, query
 from vmware_graph_spark.sources.tables import load_table
+from vmware_graph_spark.tmpcache import fresh_dir
 
 
 @query(
@@ -52,14 +51,14 @@ def streaming_kmv_distinct_users(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    sdir = tempfile.mkdtemp(prefix="vgs_stream_kmv_in_")
+    sdir = fresh_dir("vgs_stream_kmv_in_")
     for i in range(3):
         ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(sdir)
     stream = read_event_stream(spark, sdir)
-    out_dir = tempfile.mkdtemp(prefix="vgs_stream_kmv_") + "/sketch"
-    ckpt = tempfile.mkdtemp(prefix="vgs_stream_kmv_ckpt_")
+    out_dir = fresh_dir("vgs_stream_kmv_") + "/sketch"
+    ckpt = fresh_dir("vgs_stream_kmv_ckpt_")
     stream_kmv_partials(
         stream, F.col("event_type"), F.col("user_id"), out_dir, ckpt,
         k=256, seed=0,
@@ -706,7 +705,7 @@ def snapshot_version_diff_hosts(spark, sf_dir):
         "vCluster": _vcluster_sheet(spark, sf_dir),
         "vHost": _vhost_sheet(spark, sf_dir, prime=True),
     }
-    base = tempfile.mkdtemp(prefix="vgs_versions_")
+    base = fresh_dir("vgs_versions_")
     a = run_ingest(spark, sheets_a)
     a.publish_version(base)
     final = refresh(spark, sheets_prime, prev=a).store

@@ -1114,13 +1114,13 @@ def streaming_left_interval_join(spark, sf_dir):
     view's band closes before the drain terminates — the
     drained-backfill pattern streaming_session_window_counts documents.
     Oracle: the batch LEFT band join."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.queries_ext import _write_time_ordered_batches
     from vmware_graph_spark.streaming.events import read_event_stream
 
-    path = tempfile.mkdtemp(prefix="vgs_lsjoin_")
+    path = fresh_dir("vgs_lsjoin_")
     e = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 5 == 0)
     maxts = e.agg(F.max("ts").alias("m")).collect()[0]["m"]
 

@@ -53,7 +53,7 @@ def streaming_ohlc_daily_by_type(spark, sf_dir):
     is O(1) scalars and the watermark can evict closed bars. Complete
     mode + decimal accumulation makes the drained memory sink identical
     to the batch ``ohlc_daily_value_by_type`` oracle."""
-    import tempfile
+    from vmware_graph_spark.tmpcache import fresh_dir
     import uuid
 
     from vmware_graph_spark.streaming.events import (
@@ -61,7 +61,7 @@ def streaming_ohlc_daily_by_type(spark, sf_dir):
         run_available_to_memory,
     )
 
-    path = tempfile.mkdtemp(prefix="vgs_stream_ohlc_")
+    path = fresh_dir("vgs_stream_ohlc_")
     load_table(spark, sf_dir, "events").repartition(3).write.mode(
         "overwrite"
     ).parquet(path)

@@ -59,7 +59,7 @@ def shuffle_partitions() -> str:
 
 
 def get_spark(app_name: str = "vmware-graph-spark") -> SparkSession:
-    """Build (or reuse) the engine's SparkSession for local runs."""
+    """Build (or reuse) the engine's ERROR-logging SparkSession for local runs."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -70,7 +70,9 @@ def get_spark(app_name: str = "vmware-graph-spark") -> SparkSession:
     )
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def tune(spark: SparkSession) -> SparkSession:

@@ -34,6 +34,11 @@ def cache_root() -> str:
     return _ROOT
 
 
+def fresh_dir(prefix: str) -> str:
+    """A new empty directory under :func:`cache_root`, removed with it."""
+    return tempfile.mkdtemp(prefix=prefix, dir=cache_root())
+
+
 def data_key(sf_dir: str, table: str = "events") -> str:
     """Cache key pinning both the dataset path and its generation
     time — a regenerated fixture invalidates the cached artifact."""
