@@ -222,11 +222,12 @@ def test_streaming_late_audit_registry_query_end_to_end(spark):
     kernel) so cache-path refactors in the wrapper can't silently
     break it again — the tmpcache refactor shipped a wrapper that
     crashed on every call while the kernel test stayed green. Also
-    pins the reuse contract: a second invocation must hit the
-    _COMPLETE sentinel and return identical rows without rebuilding."""
+    pins the reuse contract: a second invocation must hit the cache's
+    commit marker and return identical rows without rebuilding."""
     import datetime
     import os
 
+    from vmware_graph_spark.commit import MARK
     from vmware_graph_spark.queries import QUERIES
     from vmware_graph_spark.sources.tables import load_table
     from vmware_graph_spark.tmpcache import cache_dir, data_key
@@ -235,7 +236,7 @@ def test_streaming_late_audit_registry_query_end_to_end(spark):
     assert len(rows1) > 0
 
     root = cache_dir("late_audit", data_key(SF, "events"))
-    sentinel = os.path.join(root, "_COMPLETE")
+    sentinel = os.path.join(root, MARK)
     assert os.path.exists(sentinel)
     mtime = os.path.getmtime(sentinel)
 

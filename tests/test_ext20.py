@@ -545,14 +545,14 @@ def test_lm_bigram_neglogprob_hand_model(spark):
 
 
 def test_compact_recovers_from_crash_inside_rename_window(spark, tmp_path):
-    """A crash between the two renames leaves src absent and the data
-    at .__old__ (or .__compact__); re-running compact must restore
-    and proceed, never delete the only surviving copy."""
+    """A compact that died inside its whole-index swap leaves the index
+    missing beside its parked original ``idx.old`` or beside the marked
+    compacted copy ``idx.staging``; re-running compact must restore and
+    proceed, never delete the only surviving copy."""
     import os
     import shutil
 
     from vmware_graph_spark.operators.dedup import (
-        INDEX_TABLES,
         compact_dedup_index,
         dedup_against_index,
         write_dedup_index,
@@ -566,19 +566,17 @@ def test_compact_recovers_from_crash_inside_rename_window(spark, tmp_path):
     write_dedup_index(ref, idx, "doc_id", "text")
     exp = sorted(map(tuple, dedup_against_index(probe, spark, idx, "doc_id", "text").collect()))
 
-    # crash state A: src gone, original parked at __old__
-    t0 = f"{idx}/buckets.parquet"
-    os.rename(t0, t0 + ".__old__")
+    # crash state A: index gone, original parked at idx.old
+    os.rename(idx, idx + ".old")
     compact_dedup_index(spark, idx)
-    assert os.path.exists(t0) and not os.path.exists(t0 + ".__old__")
+    assert os.path.exists(idx) and not os.path.exists(idx + ".old")
     got = sorted(map(tuple, dedup_against_index(probe, spark, idx, "doc_id", "text").collect()))
     assert got == exp
 
-    # crash state B: src gone, only the compacted copy at __compact__
-    t1 = f"{idx}/shingles.parquet"
-    shutil.move(t1, t1 + ".__compact__")
+    # crash state B: index gone, only the marked compacted copy at idx.staging
+    shutil.move(idx, idx + ".staging")
     compact_dedup_index(spark, idx)
-    assert os.path.exists(t1) and not os.path.exists(t1 + ".__compact__")
+    assert os.path.exists(idx) and not os.path.exists(idx + ".staging")
     got = sorted(map(tuple, dedup_against_index(probe, spark, idx, "doc_id", "text").collect()))
     assert got == exp
 

@@ -310,7 +310,8 @@ def test_all_vertex_keys_equal_node_key(spark, tmp_path):
     label — including NULL for a composite key with a null component."""
     import os
 
-    from vmware_graph_spark.store.graph import LABEL_KEYS, GraphStore, node_key
+    from vmware_graph_spark import commit
+    from vmware_graph_spark.store.graph import LABEL_KEYS, SNAPSHOT_MARK, GraphStore, node_key
 
     path = str(tmp_path / "snap")
     vdir = os.path.join(path, "vertices")
@@ -320,6 +321,7 @@ def test_all_vertex_keys_equal_node_key(spark, tmp_path):
     spark.createDataFrame(
         [("c1", "vc1", "x"), ("c2", None, "y")], "name string, managedby string, ha string"
     ).write.parquet(os.path.join(vdir, "Vcentercluster"))
+    commit.mark(path, SNAPSHOT_MARK)  # a hand-built snapshot commits like write()
     store = GraphStore.read(spark, path)
 
     got = store.all_vertex_keys()

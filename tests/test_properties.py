@@ -262,7 +262,7 @@ def test_dedup_lines_invariants(spark, texts):
         max_size=20,
     )
 )
-def test_token_entropy_matches_reference_formula(spark, texts):
+def test_token_entropy_matches_reference_formula(spark, tmp_path_factory, texts):
     """Engine entropy == a direct Python recomputation (Σ −p·log2 p),
     within the decimal-fold rounding, for arbitrary token multisets;
     permutation-invariant by construction of the formula."""
@@ -274,9 +274,8 @@ def test_token_entropy_matches_reference_formula(spark, texts):
     rows = [(i, t, "s") for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
     import os
-    import tempfile
 
-    sf = tempfile.mkdtemp(prefix="vgs_prop_ent_")
+    sf = str(tmp_path_factory.mktemp("vgs_prop_ent_"))
     df.write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
     out = {r.doc_id: r.entropy for r in token_entropy_quality(spark, sf).collect()}
     for i, t in enumerate(texts):
@@ -288,19 +287,18 @@ def test_token_entropy_matches_reference_formula(spark, texts):
 
 @PROP
 @given(st.integers(min_value=0, max_value=2**31 - 1), st.integers(1, 40))
-def test_packing_plan_bucket_arithmetic(spark, seed, n_docs):
+def test_packing_plan_bucket_arithmetic(spark, tmp_path_factory, seed, n_docs):
     """Per-bucket invariants hold for arbitrary token-count multisets:
     every doc's count fits [2^k, 2^(k+1)), padding_frac in [0, 1),
     batches cover the docs."""
     import os
-    import tempfile
 
     from vmware_graph_spark.queries_ext19 import length_bucket_packing_plan
 
     counts = [((seed * 31 + i * 977) % 4000) + 1 for i in range(n_docs)]
     rows = [(i, " ".join(["w"] * c), "s") for i, c in enumerate(counts)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
-    sf = tempfile.mkdtemp(prefix="vgs_prop_pack_")
+    sf = str(tmp_path_factory.mktemp("vgs_prop_pack_"))
     df.write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
     out = length_bucket_packing_plan(spark, sf).collect()
     assert sum(r.n_docs for r in out) == n_docs

@@ -7,9 +7,10 @@ Usage: python tools/qtime.py [-n REPS] [--noplan] query [query ...]
 Per guide §1.4: each query is forced with a noop write so the full
 computation (every column, every row) is timed without a real sink;
 wall and JVM CPU seconds are printed per rep (default 3 reps). After
-the run the FINAL adaptive plan (post-AQE, with ReusedExchange /
-AQEShuffleRead nodes) is printed — explain() before execution only
-shows the initial plan, which hides runtime exchange reuse.
+the run the INITIAL physical plan of the timed DataFrame is printed
+(``AdaptiveSparkPlan isFinalPlan=false``): the noop write ran its own
+query execution, so the post-AQE plan with its AQEShuffleRead /
+ReusedExchange nodes is in the Spark UI's SQL tab, not here.
 
 ``-c key=val`` A/B-tests a runtime SQL conf: variant A runs with the
 session's committed conf, variant B with the override, interleaved
@@ -113,7 +114,7 @@ def main() -> None:
             print(f"TIMES {name}: {[r[0] for r in runs]}")
             print(f"JVMCPU {name}: {[r[1] for r in runs]}")
             if show_plan:
-                print(f"===== FINAL PLAN {name} =====")
+                print(f"===== INITIAL PLAN {name} =====")
                 print(runs[-1][2]._jdf.queryExecution().executedPlan().toString())
                 sys.stdout.flush()
 

@@ -22,6 +22,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
 from vmware_graph_spark.sources.tables import load_table
 from vmware_graph_spark.tmpcache import cache_dir, data_key
 
@@ -88,8 +89,7 @@ def _warc_fixture_dir(spark, sf_dir: str) -> str:
     plus one HTTP response per document (deterministic shard/order,
     a 404 every 53rd doc, tracking params on every URI)."""
     root = cache_dir("warc_fleet", data_key(sf_dir, "documents"))
-    sentinel = os.path.join(root, "_COMPLETE")
-    if os.path.exists(sentinel):
+    if commit.marked(root):
         return root
 
     from vmware_graph_spark.sources.warc import write_warc_files
@@ -114,6 +114,5 @@ def _warc_fixture_dir(spark, sf_dir: str) -> str:
             }
         )
     write_warc_files(shards, root)
-    with open(sentinel, "w") as f:
-        f.write("ok")
+    commit.mark(root, {"kind": "warc_fleet"})
     return root

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 #: percent-normalization (RFC 3986 §6.2.2.2 unreserved-escape decode +
 #: query '+'→'%20', round 11); v1 = the byte-wise query era before it.
 #: Persisted artifacts KEYED on the canonical spelling (the crawled-URL
-#: index) stamp this into their format.json so a reader can detect an
+#: index) stamp this into their commit marker so a reader can detect an
 #: index built under an older canonical form instead of silently
 #: re-crawling URLs whose spelling changed (round-11 advice).
 URL_CANON_VERSION = 2

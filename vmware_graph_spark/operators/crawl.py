@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
+
 # Java-regex metacharacters to neutralize in a robots path pattern,
 # EXCEPT '*' (the RFC wildcard, rewritten to '.*' afterwards) and the
 # trailing '$' (stripped before escaping; any other '$' is literal).
@@ -479,19 +481,9 @@ _URL_BUCKETS = 32
 
 
 def _check_crawl_index(path: str) -> None:
-    import json
-    import os
-
     from vmware_graph_spark.functions.url import URL_CANON_VERSION
 
-    fp = os.path.join(path, "format.json")
-    if not os.path.exists(fp):
-        raise FileNotFoundError(
-            f"crawled-url index at {path} has no format.json marker — "
-            "half-built or not an index; rebuild with write_crawled_urls"
-        )
-    with open(fp) as fh:
-        got = json.load(fh)
+    got = commit.read_mark(path, "crawled-url index")
     if got.get("kind") != CRAWL_INDEX_KIND:
         raise ValueError(
             f"index at {path} is {got.get('kind')!r}, not {CRAWL_INDEX_KIND}"
@@ -514,7 +506,7 @@ def _check_crawl_index(path: str) -> None:
 def crawl_index_current(path: str) -> bool:
     """True when ``path`` holds a complete crawled-URL index whose keys
     were spelled under THIS engine's url_canonical version — the
-    predicate cache-or-rebuild callers gate on (a bare format.json
+    predicate cache-or-rebuild callers gate on (a bare marker
     existence check would keep serving an index keyed on an older
     canonical form; round-11 advice)."""
     try:
@@ -535,35 +527,22 @@ def _bucketed(urls: DataFrame, url_col: str) -> DataFrame:
 
 def write_crawled_urls(urls: DataFrame, path: str, *, url_col: str = "canon") -> None:
     """Persist the crawled canonical-URL set: distinct keys in a
-    bucket-partitioned parquet layout, ``format.json`` marker stamped
+    bucket-partitioned parquet layout, commit marker stamped
     LAST (the dedup/ANN crash-consistency rule: a crash mid-write
     leaves no marker, and readers fail loudly instead of probing a
     half-built index). Rebuild removes the marker FIRST. The marker
     records the url_canonical VERSION the keys were spelled under, so
     a reader on a newer canonical form fails loudly instead of
     re-fetching every re-spelled URL (round-11 advice)."""
-    import json
-    import os
-
     from vmware_graph_spark.functions.url import URL_CANON_VERSION
 
-    try:
-        os.remove(os.path.join(path, "format.json"))
-    except FileNotFoundError:
-        pass
+    commit.unmark(path)
     _bucketed(urls, url_col).write.mode("overwrite").partitionBy("bucket").parquet(
         f"{path}/urls.parquet"
     )
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "format.json"), "w") as fh:
-        json.dump(
-            {
-                "kind": CRAWL_INDEX_KIND,
-                "buckets": _URL_BUCKETS,
-                "url_canon": URL_CANON_VERSION,
-            },
-            fh,
-        )
+    commit.mark(
+        path, {"kind": CRAWL_INDEX_KIND, "buckets": _URL_BUCKETS, "url_canon": URL_CANON_VERSION}
+    )
 
 
 def extend_crawled_urls(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
 from vmware_graph_spark.functions.text import fingerprint, tokens, word_shingles
 from vmware_graph_spark.operators.pin import pinned, pinned_lazy
 
@@ -723,47 +724,18 @@ INDEX_TABLES = ("fingerprints", "buckets", "shingles", "sizes")
 INDEX_HASH_FAMILY = "md5-affine-v2"
 
 
-def _write_index_format(path: str, n: int, num_hashes: int, bands: int) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "format.json"), "w") as fh:
-        json.dump(
-            {
-                "hash_family": INDEX_HASH_FAMILY,
-                "n": n,
-                "num_hashes": num_hashes,
-                "bands": bands,
-            },
-            fh,
-        )
+def _index_format(n: int, num_hashes: int, bands: int) -> dict:
+    return {"hash_family": INDEX_HASH_FAMILY, "n": n, "num_hashes": num_hashes, "bands": bands}
 
 
 def _check_index_format(path: str, n: int, num_hashes: int, bands: int) -> None:
     """Fail loudly when an index was built under different parameters
     or a different hash family (round-6 review: a family mismatch
     makes every LSH bucket key miss, silently flagging every
-    near-duplicate as kept). A marker-less directory predates the
-    versioning and is equally unreadable — also an error."""
-    import json
-    import os
-
-    fp = os.path.join(path, "format.json")
-    if not os.path.exists(fp):
-        raise ValueError(
-            f"dedup index at {path} has no format.json marker — built "
-            "before hash-family versioning (or not an index); rebuild "
-            "with write_dedup_index"
-        )
-    with open(fp) as fh:
-        got = json.load(fh)
-    want = {
-        "hash_family": INDEX_HASH_FAMILY,
-        "n": n,
-        "num_hashes": num_hashes,
-        "bands": bands,
-    }
+    near-duplicate as kept). A marker-less directory is half-built,
+    predates the versioning or is not an index: ``commit.Unmarked``."""
+    got = commit.read_mark(path, "dedup index")
+    want = _index_format(n, num_hashes, bands)
     if got != want:
         raise ValueError(
             f"dedup index format mismatch at {path}: index={got}, "
@@ -792,18 +764,12 @@ def write_dedup_index(
     slices the batch's candidates hit; the index appends under the
     same layout when the corpus grows (``kept`` docs' rows union in).
     """
-    import os
-
     # A stale marker must never cover freshly-parameterized tables:
     # remove it first and stamp the new one only after ALL four tables
     # are written (round-6 review: marker-first meant a crash mid-
     # rebuild-with-new-params left a matching marker over a mix of
     # old- and new-parameter tables — silent zero-candidate reads).
-    # Marker absent ⇒ _check_index_format fails loudly ⇒ rebuild.
-    try:
-        os.remove(os.path.join(path, "format.json"))
-    except FileNotFoundError:
-        pass
+    commit.unmark(path)
     sh = _shingle_table(ref, id_col, text_col, n)
     tables = {
         "fingerprints": ref.select(fingerprint(text_col).alias("__fp")).distinct(),
@@ -813,7 +779,7 @@ def write_dedup_index(
     }
     for name, df in tables.items():
         df.write.mode("overwrite").parquet(f"{path}/{name}.parquet")
-    _write_index_format(path, n, num_hashes, bands)
+    commit.mark(path, _index_format(n, num_hashes, bands))
 
 
 def extend_dedup_index(
@@ -854,15 +820,15 @@ def extend_dedup_index(
     anti-join for the same ids and double-append them — decisions stay
     correct (every duplicated row class collapses at read, above) but
     the retry-idempotency accounting is voided and space leaks; an
-    extend racing a compact can append rows AFTER the compact derived
-    its rewrite, and the compact's table swap then drops them — a lost
+    extend racing a compact can append rows AFTER the compact read
+    its tables, and the compact's index swap then drops them — a lost
     update, the one genuinely unsafe interleaving. READERS need no
     coordination: appends only add rows (a reader that listed files
     earlier decides against the slightly older corpus — the same
     answer it would have produced a moment before), and compaction
     preserves each table's logical content, so even a reader that
     catches a MIX of pre- and post-compact tables computes identical
-    decisions; a reader that catches the compact's rename window or a
+    decisions; a reader that catches the compact's swap window or a
     deleted file fails LOUDLY (missing path/file) and succeeds on
     retry. Pinned by
     ``tests/test_ext20.py::test_reader_racing_compact_identical_or_loud``."""
@@ -922,53 +888,33 @@ def compact_dedup_index(spark, path: str) -> None:
     path already tolerates the duplicates; test-pinned in
     ``tests/test_ext20.py::test_crash_retried_index_tolerated_and_compacted``).
 
-    Each table compacts onto a SIBLING path and swaps in via rename —
-    never an in-place overwrite of the files being read (a mid-job
-    executor loss during an in-place overwrite would lose both the
-    lineage source and the already-deleted originals). The swap is
-    crash-safe per table: until the first rename the original is
-    intact, and if a prior run crashed INSIDE the rename window (src
-    absent) the entry step first restores the surviving copy —
-    ``.__old__`` (the untouched original) if present, else
-    ``.__compact__`` (complete by rename time: its write finished
-    before the window opened) — BEFORE clearing leftovers, so no
-    crash point deletes the only copy. On an object store (no atomic
-    dir rename) point a manifest at versioned table directories
-    instead — same two-phase shape.
+    The whole index compacts into the sibling ``path.staging``, is
+    marked, and replaces ``path`` in one ``commit.swap_in`` — never an
+    in-place overwrite of the files being read (a mid-job executor loss
+    during an in-place overwrite would lose both the lineage source and
+    the already-deleted originals). ``commit.stage`` first repairs a
+    compact that died inside the swap (restoring ``path.old``, else a
+    marked ``path.staging``), so no crash point deletes the only copy.
 
     Runs under the index's single-WRITER contract (see
     :func:`extend_dedup_index`): never concurrently with an extend —
-    rows appended after this compact derived a table's rewrite would
-    be dropped by the swap. Readers may overlap freely: the swap is
-    atomic per table, not per index, so an in-flight reader can see a
-    mix of pre- and post-compact tables — decision-identical, because
-    compaction only removes duplicate rows the read path already
-    collapses — or fail loudly on a vanished file, never answer
-    wrong."""
-    import os
-    import shutil
-
-    canon = {
-        "fingerprints": lambda df: df.distinct(),
-        "buckets": lambda df: df.distinct(),
-        "shingles": lambda df: df.distinct(),
-        "sizes": lambda df: df.groupBy("id").agg(F.max("n_ref").alias("n_ref")),
-    }
-    for name, fix in canon.items():
-        src = f"{path}/{name}.parquet"
-        tmp = f"{path}/{name}.parquet.__compact__"
-        old = f"{path}/{name}.parquet.__old__"
-        if not os.path.exists(src):
-            if os.path.exists(old):
-                os.rename(old, src)  # crash between the two renames
-            elif os.path.exists(tmp):
-                os.rename(tmp, src)  # crash after old was removed
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        fix(spark.read.parquet(src)).write.mode("overwrite").parquet(tmp)
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old)
+    rows appended after this compact read a table would be dropped by
+    the swap. Readers may overlap freely: the swap is atomic per index,
+    so an in-flight reader sees the pre- or the post-compact index —
+    decision-identical, because compaction only removes duplicate rows
+    the read path already collapses — or fails loudly on a vanished
+    file, never answers wrong."""
+    staging = commit.stage(path)
+    meta = commit.read_mark(path, "dedup index")
+    for name in INDEX_TABLES:
+        df = spark.read.parquet(f"{path}/{name}.parquet")
+        if name == "sizes":
+            df = df.groupBy("id").agg(F.max("n_ref").alias("n_ref"))
+        else:
+            df = df.distinct()
+        df.write.parquet(f"{staging}/{name}.parquet")
+    commit.mark(staging, meta)
+    commit.swap_in(staging, path)
 
 
 def dedup_against_index(
@@ -989,7 +935,7 @@ def dedup_against_index(
     reads only index parquet, never the corpus text. The ``n``/
     ``num_hashes``/``bands`` must match the index build (they
     parameterize what was persisted) — ENFORCED via the index's
-    ``format.json`` marker, which also pins the hash family."""
+    commit marker, which also pins the hash family."""
     _check_index_format(path, n, num_hashes, bands)
     return _dedup_decisions(
         new,

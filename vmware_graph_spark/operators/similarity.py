@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
 from vmware_graph_spark.functions.vector import as_double_vec, cosine
 from vmware_graph_spark.operators.merge import _bt
 
@@ -941,6 +942,14 @@ def hard_negatives(
 # similarity-search mirror of operators/dedup.write_dedup_index).
 # ---------------------------------------------------------------------------
 
+ANN_INDEX_MARK = {"kind": "ann_ivf_learned", "version": 1}
+
+
+def _check_ann_index(path: str) -> None:
+    fmt = commit.read_mark(path, "ANN index")
+    if fmt.get("kind") != ANN_INDEX_MARK["kind"]:
+        raise ValueError(f"not an ANN index: {fmt!r}")
+
 
 def write_ann_index(
     df: DataFrame, path: str, id_col: str, vec_col: str, label_col: str
@@ -951,18 +960,12 @@ def write_ann_index(
     :func:`ivf_learned_topk` re-derives from the corpus on every call.
     Day-2 ANN at 100 TB: arriving query batches probe reading ONLY the
     (cluster-keyed, partition-prunable) index slices their assigned
-    lists hit; the corpus embeddings are never re-scanned. ``format.json``
-    is removed first and stamped only after BOTH tables land (the
-    dedup-index crash-consistency rule: a marker must never cover a
-    partially rebuilt index).
+    lists hit; the corpus embeddings are never re-scanned. The commit
+    marker is removed first and stamped only after BOTH tables land
+    (the dedup-index crash-consistency rule: a marker must never cover
+    a partially rebuilt index).
     """
-    import json
-    import os
-
-    try:
-        os.remove(os.path.join(path, "format.json"))
-    except FileNotFoundError:
-        pass
+    commit.unmark(path)
     cent = centroids_by_label(df, label_col, vec_col)
     cent.write.mode("overwrite").parquet(f"{path}/centroids.parquet")
     # Assign against the PERSISTED codebook so the index is internally
@@ -979,8 +982,7 @@ def write_ann_index(
     corpus.repartition("assigned_label").write.mode("overwrite").partitionBy(
         "assigned_label"
     ).parquet(f"{path}/corpus.parquet")
-    with open(os.path.join(path, "format.json"), "w") as f:
-        json.dump({"kind": "ann_ivf_learned", "version": 1}, f)
+    commit.mark(path, ANN_INDEX_MARK)
 
 
 def ann_topk_against_index(
@@ -994,13 +996,7 @@ def ann_topk_against_index(
     (shared oracle + equality pytest). Readers are coordination-free;
     rebuild/probe concurrency follows the dedup index's single-writer
     contract. Raises loudly on a missing/foreign format marker."""
-    import json
-    import os
-
-    with open(os.path.join(path, "format.json")) as f:
-        fmt = json.load(f)
-    if fmt.get("kind") != "ann_ivf_learned":
-        raise ValueError(f"not an ANN index: {fmt!r}")
+    _check_ann_index(path)
     cent = spark.read.parquet(f"{path}/centroids.parquet")
     corpus = spark.read.parquet(f"{path}/corpus.parquet")
     qassign = assign_to_centroids(queries, id_col, vec_col, cent)
@@ -1033,13 +1029,7 @@ def extend_ann_index(
     the corpus are anti-joined away before anything is derived (the
     extend_dedup_index rule). Single-writer contract: one of
     write/extend at a time; probes are coordination-free."""
-    import json
-    import os
-
-    with open(os.path.join(path, "format.json")) as f:
-        fmt = json.load(f)
-    if fmt.get("kind") != "ann_ivf_learned":
-        raise ValueError(f"not an ANN index: {fmt!r}")
+    _check_ann_index(path)
     spark = new.sparkSession
     cent = spark.read.parquet(f"{path}/centroids.parquet")
     existing = spark.read.parquet(f"{path}/corpus.parquet").select(

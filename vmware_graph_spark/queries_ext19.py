@@ -292,6 +292,7 @@ def streaming_late_data_drop_audit(spark, sf_dir):
     import glob
     import os
 
+    from vmware_graph_spark import commit
     from vmware_graph_spark.streaming.events import stream_windowed_counts_phased
     from vmware_graph_spark.tmpcache import cache_dir, data_key
 
@@ -299,12 +300,11 @@ def streaming_late_data_drop_audit(spark, sf_dir):
     root = cache_dir("late_audit", data_key(sf_dir, "events"))
     out_dir = os.path.join(root, "res")
     # A streaming parquet file sink writes _spark_metadata, never
-    # _SUCCESS, so the completion marker must be our own sentinel —
+    # _SUCCESS, so the completion marker must be our own commit mark —
     # written only after BOTH phased drains finish (round-5 ADVICE:
     # keying on _SUCCESS meant the cache never hit, and the rebuild's
     # rmtree pulled files out from under earlier lazy DataFrames).
-    sentinel = os.path.join(root, "_COMPLETE")
-    if not os.path.exists(sentinel):
+    if not commit.marked(root):
         import shutil
 
         shutil.rmtree(root, ignore_errors=True)  # no half-run checkpoints
@@ -328,8 +328,7 @@ def streaming_late_data_drop_audit(spark, sf_dir):
             out_dir,
             ckpt,
         )
-        with open(sentinel, "w") as fh:
-            fh.write("ok\n")
+        commit.mark(root, {"kind": "late_audit"})
     return spark.read.parquet(out_dir).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",

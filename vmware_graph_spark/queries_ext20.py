@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
 from vmware_graph_spark.functions.text import lang_id, lang_id_sql
 from vmware_graph_spark.queries import _toks, query
 from vmware_graph_spark.queries import _NDP_PAIRS_CTE
@@ -396,10 +397,11 @@ def dedup_against_persisted_index(spark, sf_dir):
     new = d.filter(F.col("doc_id") % 5 == 0)
     ref = d.filter(F.col("doc_id") % 5 != 0)
     idx = _cached_index_dir(sf_dir)
-    # format.json is written LAST by write_dedup_index, so it doubles
-    # as the completion marker — keying on sizes/_SUCCESS would leave
-    # a crash-between-sizes-and-marker cache permanently erroring
-    if not os.path.exists(os.path.join(idx, "format.json")):
+    # write_dedup_index commits the index with its marker LAST, so it
+    # doubles as the cache's completion marker — keying on
+    # sizes/_SUCCESS would leave a crash-between-sizes-and-marker cache
+    # permanently erroring
+    if not commit.marked(idx):
         write_dedup_index(ref, idx, "doc_id", "text", n=3, num_hashes=8, bands=4)
     out = dedup_against_index(
         new, spark, idx, "doc_id", "text",

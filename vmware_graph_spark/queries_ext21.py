@@ -27,6 +27,7 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
 from vmware_graph_spark.functions.text import (
     html_to_text,
     html_to_text_sql,
@@ -295,8 +296,7 @@ def streaming_crawl_ingest(spark, sf_dir):
     root = _warc_fixture_dir(spark, sf_dir)
     run_dir = cache_dir("crawl_stream", data_key(sf_dir, "documents"))
     sink = os.path.join(run_dir, "pages")
-    sentinel = os.path.join(run_dir, "_COMPLETE")
-    if not os.path.exists(sentinel):
+    if not commit.marked(run_dir):
         os.makedirs(run_dir, exist_ok=True)
         recs = read_warc_stream(
             spark, os.path.join(root, "*.warc"), max_files_per_trigger=2
@@ -315,12 +315,11 @@ def streaming_crawl_ingest(spark, sf_dir):
             .start()
         )
         if not q.awaitTermination(600):
-            # A sentinel over a half-drained sink would cache a wrong
+            # A marker over a half-drained sink would cache a wrong
             # answer forever (round-9 review finding) — fail loudly.
             q.stop()
             raise TimeoutError("streaming crawl ingest did not drain in 600s")
-        with open(sentinel, "w") as f:
-            f.write("ok")
+        commit.mark(run_dir, {"kind": "crawl_stream"})
     pages = spark.read.parquet(sink)
     return (
         pages.filter(F.col("n_toks") >= 5)
@@ -477,8 +476,7 @@ def _jsonl_fixture_dir(spark, sf_dir: str) -> str:
     import json as _json
 
     root = cache_dir("jsonl_corpus", data_key(sf_dir, "documents"))
-    sentinel = os.path.join(root, "_COMPLETE")
-    if os.path.exists(sentinel):
+    if commit.marked(root):
         return root
     os.makedirs(root, exist_ok=True)
     rows = (
@@ -499,8 +497,7 @@ def _jsonl_fixture_dir(spark, sf_dir: str) -> str:
     for i, lines in shards.items():
         with open(os.path.join(root, f"part_{i}.jsonl"), "w") as f:
             f.write("\n".join(lines) + "\n")
-    with open(sentinel, "w") as f:
-        f.write("ok")
+    commit.mark(root, {"kind": "jsonl_corpus"})
     return root
 
 
@@ -988,8 +985,7 @@ def ann_topk_against_persisted_index(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     idx = _ann_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "format.json")):
-        os.makedirs(idx, exist_ok=True)
+    if not commit.marked(idx):
         write_ann_index(e, idx, "vec_id", "embedding", "label")
     qs = e.filter(F.col("vec_id") % 50 == 0).select("vec_id", "embedding")
     out = ann_topk_against_index(spark, idx, qs, "vec_id", "embedding", k=5)

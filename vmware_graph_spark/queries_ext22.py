@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
 from vmware_graph_spark.crawl_fixture import _expected_text_sql, _warc_fixture_dir
 from vmware_graph_spark.queries import query
 from vmware_graph_spark.sources.tables import load_table
@@ -42,8 +43,7 @@ def _sitemap_fixture_dir(spark, sf_dir: str) -> str:
     from vmware_graph_spark.sources.sitemap import write_sitemap_files
 
     root = cache_dir("sitemap_fleet", data_key(sf_dir, "documents"))
-    sentinel = os.path.join(root, "_COMPLETE")
-    if os.path.exists(sentinel):
+    if commit.marked(root):
         return root
     ids = [
         int(r.doc_id)
@@ -61,8 +61,7 @@ def _sitemap_fixture_dir(spark, sf_dir: str) -> str:
             }
         )
     write_sitemap_files(shards, root, gzip_files=True)
-    with open(sentinel, "w") as f:
-        f.write("ok")
+    commit.mark(root, {"kind": "sitemap_fleet"})
     return root
 
 
@@ -398,8 +397,7 @@ def wet_conversion_roundtrip(spark, sf_dir):
 
     root = _warc_fixture_dir(spark, sf_dir)
     out_dir = os.path.join(cache_dir("wet_sink", data_key(sf_dir, "documents")), "wet")
-    sentinel = os.path.join(out_dir, "_COMPLETE")
-    if not os.path.exists(sentinel):
+    if not commit.marked(out_dir):
         from vmware_graph_spark.functions.text import html_to_text
 
         recs = read_warc(spark, os.path.join(root, "*.warc"))
@@ -407,8 +405,7 @@ def wet_conversion_roundtrip(spark, sf_dir):
             "uri", html_to_text(F.col("body").cast("string")).alias("text")
         )
         write_wet(page, out_dir, gzip_members=True)
-        with open(sentinel, "w") as f:
-            f.write("ok")
+        commit.mark(out_dir, {"kind": "wet_sink"})
     wet = read_warc(spark, os.path.join(out_dir, "*.warc.wet.gz"),
                     types=("conversion",))
     t = F.col("body").cast("string")

@@ -686,14 +686,14 @@ def streaming_content_extract(spark, sf_dir):
         html_to_text,
     )
     from vmware_graph_spark.functions.url import url_host
+    from vmware_graph_spark import commit
     from vmware_graph_spark.sources.warc import read_warc_stream
     from vmware_graph_spark.tmpcache import cache_dir, data_key
 
     root = _warc_fixture_dir(spark, sf_dir)
     run_dir = cache_dir("content_extract_stream", data_key(sf_dir, "documents"))
     sink = _os.path.join(run_dir, "pages")
-    sentinel = _os.path.join(run_dir, "_COMPLETE")
-    if not _os.path.exists(sentinel):
+    if not commit.marked(run_dir):
         _os.makedirs(run_dir, exist_ok=True)
         recs = read_warc_stream(
             spark, _os.path.join(root, "*.warc"), max_files_per_trigger=2
@@ -725,12 +725,11 @@ def streaming_content_extract(spark, sf_dir):
             .start()
         )
         if not q.awaitTermination(600):
-            # a sentinel over a half-drained sink would cache a wrong
+            # a marker over a half-drained sink would cache a wrong
             # answer forever — fail loudly instead
             q.stop()
             raise TimeoutError("streaming content extract did not drain in 600s")
-        with open(sentinel, "w") as f:
-            f.write("ok")
+        commit.mark(run_dir, {"kind": "content_extract_stream"})
     pages = spark.read.parquet(sink)
     return pages.groupBy("host").agg(
         F.count("*").cast("long").alias("n_pages"),

@@ -34,6 +34,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vmware_graph_spark import commit
 from vmware_graph_spark.operators.merge import (
     EDGE_COLS,
     ORDER_COL,
@@ -216,15 +217,8 @@ def _fan_out(spark: SparkSession, tasks: Sequence[Callable[[], T]]) -> list[T]:
     return [f.result() for f in futs]
 
 
-def _recover_publish(path: str) -> None:
-    """Finish a ``publish`` that died between its two renames: the live
-    snapshot was already moved to ``path.old`` but staging never took
-    its place. Restoring ``.old`` keeps the previous graph readable —
-    without it ``read`` would see no snapshot, and the next refresh
-    would run as a first build and delete ``.old`` on publish."""
-    backup = path.rstrip("/") + ".old"
-    if not os.path.isdir(path) and os.path.isdir(backup):
-        os.rename(backup, path)
+# The commit marker every snapshot carries; ``write`` stamps it last.
+SNAPSHOT_MARK = {"kind": "graph-snapshot", "version": 1}
 
 
 def _latest(base: str) -> int | None:
@@ -475,7 +469,12 @@ class GraphStore:
         INDEX`` statements bought (refresh-vmware.cypher:2-20); the
         hash half is ``sources/bucketed.py``. Pay the sort once at
         publish, skip on every read after.
+
+        The snapshot commits through ``commit``: its marker is removed
+        before the first table is written and stamped after the last,
+        so ``read`` refuses a snapshot whose write did not finish.
         """
+        commit.unmark(path)
         # flush serially (mutates shared state), then submit the ~42
         # per-label write jobs concurrently (see _fan_out). Measured at
         # sf0.01: publish 17 s → ~6 s.
@@ -506,6 +505,7 @@ class GraphStore:
             self.spark,
             [lambda j=j: _write_label(*j) for j in jobs] + [_write_edges],
         )
+        commit.mark(path, SNAPSHOT_MARK)
 
     def publish(self, path: str) -> None:
         """Write the snapshot to a staging dir, then swap it into place.
@@ -516,23 +516,17 @@ class GraphStore:
         files mid-scan. On a cluster the same pattern is a new snapshot
         prefix plus a pointer flip — never overwrite-in-place.
         """
-        _recover_publish(path)
-        staging = path.rstrip("/") + ".staging"
-        backup = path.rstrip("/") + ".old"
-        for d in (staging, backup):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+        staging = commit.stage(path)
         self.write(staging)
-        if os.path.isdir(path):
-            os.rename(path, backup)
-        os.rename(staging, path)
-        if os.path.isdir(backup):
-            shutil.rmtree(backup)
+        commit.swap_in(staging, path)
 
     @classmethod
     def read(cls, spark: SparkSession, path: str) -> "GraphStore":
         """Open a published snapshot as plain scans. Label directories
-        open concurrently (each runs a schema-inference job).
+        open concurrently (each runs a schema-inference job). A
+        directory holding ``vertices/`` or ``edges/`` without the commit
+        marker raises ``commit.Unmarked``; an absent or empty one reads
+        as an empty graph (a first build).
 
         ``write`` is the only writer of ``edges/`` and it persists
         ``edges_with_props()``: null keys dropped, undirected types
@@ -540,9 +534,11 @@ class GraphStore:
         plain projections of the scan — no re-merge, no lineage cut. The
         scan is also queued as an edge batch, so a later ``add_edges``
         re-merges the union with full MERGE semantics."""
-        _recover_publish(path)
+        commit.recover(path)
         store = cls(spark)
-        vdir = os.path.join(path, "vertices")
+        vdir, edir = os.path.join(path, "vertices"), os.path.join(path, "edges")
+        if os.path.isdir(vdir) or os.path.isdir(edir):
+            commit.read_mark(path, "graph snapshot")
         if os.path.isdir(vdir):
             labels = sorted(os.listdir(vdir))
             dfs = _fan_out(
@@ -550,7 +546,6 @@ class GraphStore:
                 [lambda d=os.path.join(vdir, lb): spark.read.parquet(d) for lb in labels],
             )
             store._vertices.update(zip(labels, dfs))
-        edir = os.path.join(path, "edges")
         if os.path.isdir(edir):
             # Explicit schema: a snapshot written from an edge-less graph
             # has no parquet data files to infer from. Pre-props
@@ -577,25 +572,19 @@ class GraphStore:
 
     def publish_version(self, base: str) -> int:
         """Append-only versioned publish: write the snapshot to
-        ``base/v=N`` (N = latest + 1) via a staging rename, then flip
-        the ``_LATEST`` pointer file atomically (write-temp + rename).
-        Old versions stay readable — time travel — until ``vacuum``.
-        On a cluster the same protocol is a new object-store prefix
-        plus a pointer object swap; readers resolve the pointer first,
-        so a crashed publish leaves at worst an unreferenced prefix,
-        never a torn snapshot."""
+        ``base/v=N`` (N = latest + 1) through ``commit``'s staging swap,
+        then flip the ``_LATEST`` pointer file atomically. Old versions
+        stay readable — time travel — until ``vacuum``. On a cluster the
+        same protocol is a new object-store prefix plus a pointer object
+        swap; readers resolve the pointer first, so a crashed publish
+        leaves at worst an unreferenced prefix, never a torn snapshot."""
         os.makedirs(base, exist_ok=True)
         n = (self.versions(base) or [0])[-1] + 1
         vdir = os.path.join(base, f"v={n}")
-        staging = vdir + ".staging"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
+        staging = commit.stage(vdir)
         self.write(staging)
-        os.rename(staging, vdir)
-        ptr_tmp = os.path.join(base, "_LATEST.tmp")
-        with open(ptr_tmp, "w") as f:
-            f.write(str(n))
-        os.rename(ptr_tmp, os.path.join(base, "_LATEST"))
+        commit.swap_in(staging, vdir)
+        commit.write_atomic(os.path.join(base, "_LATEST"), str(n))
         return n
 
     @classmethod
@@ -613,14 +602,15 @@ class GraphStore:
                     raise FileNotFoundError(f"no published versions under {base}")
                 version = vs[-1]
         vdir = os.path.join(base, f"v={version}")
-        if not os.path.isdir(vdir):
-            raise FileNotFoundError(f"snapshot version {version} not found in {base}")
+        commit.read_mark(vdir, f"snapshot version {version}")
         return cls.read(spark, vdir)
 
     @staticmethod
     def vacuum(base: str, *, keep: int = 2) -> list[int]:
         """Drop all but the newest ``keep`` versions (never the one the
-        ``_LATEST`` pointer names). Returns the removed version ids."""
+        ``_LATEST`` pointer names). Returns the removed version ids. Each
+        version is unmarked before its files go, so one that a crash
+        leaves half-removed reads as ``commit.Unmarked``."""
         if keep < 1:
             raise ValueError("vacuum: keep must be >= 1")
         vs = GraphStore.versions(base)
@@ -629,7 +619,9 @@ class GraphStore:
         for v in vs[:-keep] if keep < len(vs) else []:
             if v == latest:
                 continue
-            shutil.rmtree(os.path.join(base, f"v={v}"))
+            vdir = os.path.join(base, f"v={v}")
+            commit.unmark(vdir)
+            shutil.rmtree(vdir)
             removed.append(v)
         return removed
 
