@@ -622,13 +622,12 @@ def test_index_format_marker_rejects_mismatch(spark, tmp_path):
 
 def test_reader_racing_compact_identical_or_loud(spark, tmp_path):
     """The index's reader/compact race contract (round-6 VERDICT #4):
-    compaction's swap is atomic per TABLE, not per index, so an
-    overlapping reader can observe (a) the pre-compact tables, (b) any
-    MIX of pre- and post-compact tables, or (c) a vanished file. The
-    contract: (a)/(b) produce decisions identical to pre-compact —
-    compaction only drops duplicate rows the read path already
-    collapses — and (c) fails loudly; a reader must never answer
-    silently wrong."""
+    compaction swaps the whole index in at once, so an overlapping
+    reader sees (a) the pre-compact index, (b) the post-compact index,
+    or (c) a loud failure on a vanished file. (a) and (b) decide
+    identically — compaction only drops duplicate rows the read path
+    already collapses — and a reader must never answer silently wrong.
+    Reader B also checks the stronger per-table form of that claim."""
     import shutil
 
     from vmware_graph_spark.operators.dedup import (
@@ -670,8 +669,7 @@ def test_reader_racing_compact_identical_or_loud(spark, tmp_path):
     else:
         assert got == expected  # (a)-ish: whatever it read, decisions match
 
-    # reader B: the rename-window interleaving made deterministic — an
-    # index view with fingerprints+buckets PRE-compact and
+    # reader B: an index view with fingerprints+buckets PRE-compact and
     # shingles+sizes POST-compact must decide identically
     mixed = str(tmp_path / "mixed")
     os.makedirs(mixed)

@@ -311,17 +311,30 @@ def test_all_vertex_keys_equal_node_key(spark, tmp_path):
     import os
 
     from vmware_graph_spark import commit
-    from vmware_graph_spark.store.graph import LABEL_KEYS, SNAPSHOT_MARK, GraphStore, node_key
+    from vmware_graph_spark.store.graph import (
+        EDGE_SCHEMA_PROPS,
+        LABEL_KEYS,
+        SNAPSHOT_MARK,
+        GraphStore,
+        node_key,
+    )
 
     path = str(tmp_path / "snap")
     vdir = os.path.join(path, "vertices")
-    spark.createDataFrame([("vc1",), ("vc2",)], "uid string").write.parquet(
+    labels = {
+        "Vcenterserver": "uid string",
+        "Vcentercluster": "name string, managedby string, ha string",
+    }
+    spark.createDataFrame([("vc1",), ("vc2",)], labels["Vcenterserver"]).write.parquet(
         os.path.join(vdir, "Vcenterserver")
     )
     spark.createDataFrame(
-        [("c1", "vc1", "x"), ("c2", None, "y")], "name string, managedby string, ha string"
+        [("c1", "vc1", "x"), ("c2", None, "y")], labels["Vcentercluster"]
     ).write.parquet(os.path.join(vdir, "Vcentercluster"))
-    commit.mark(path, SNAPSHOT_MARK)  # a hand-built snapshot commits like write()
+    spark.createDataFrame([], EDGE_SCHEMA_PROPS).write.parquet(os.path.join(path, "edges"))
+    # a hand-built snapshot commits like write(): its tables, then a
+    # marker naming each label's schema
+    commit.mark(path, {**SNAPSHOT_MARK, "labels": labels})
     store = GraphStore.read(spark, path)
 
     got = store.all_vertex_keys()
@@ -1054,6 +1067,74 @@ def test_write_and_read_jobs_keep_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert len(tracker.getJobIdsForGroup(group)) >= 3  # 2 label writes + edges
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_read_submits_no_jobs(spark, tmp_path):
+    """``read`` opens every table by the schema recorded for it (the
+    labels' in the commit marker, the edges' fixed), so it plans only
+    and submits no Spark job: no per-label schema inference."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    path = str(tmp_path / "snap")
+    _small_snapshot_store(spark).write(path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "snapshot-read"
+    sc.setJobGroup(group, "read a written snapshot")
+    try:
+        back = GraphStore.read(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup(group) == []
+    assert back.labels() == ["Vcentercluster", "Vcenterserver"]
+
+
+def test_read_label_schemas_equal_parquet_inference(built, spark, tmp_path):
+    """Every label of the workbook-A graph opens with the schema parquet
+    inference would give its directory."""
+    import os
+
+    from vmware_graph_spark.store.graph import GraphStore
+
+    store, _ = built
+    path = str(tmp_path / "snap")
+    store.write(path)
+    back = GraphStore.read(spark, path)
+    assert back.labels() == store.labels()
+    for label in back.labels():
+        inferred = spark.read.parquet(os.path.join(path, "vertices", label)).schema
+        assert back.vertices(label).schema == inferred, label
+
+
+def test_rewrite_to_same_path_drops_labels_it_lacks(spark, tmp_path):
+    """``read`` serves the labels of the last ``write`` to a path. A
+    label only an earlier write held stays on disk but is not read."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    path = str(tmp_path / "snap")
+    _small_snapshot_store(spark).write(path)
+    smaller = GraphStore(spark)
+    smaller.upsert_nodes("Vcenterserver", spark.createDataFrame([("vc2",)], ["uid"]))
+    smaller.write(path)
+    back = GraphStore.read(spark, path)
+    assert back.labels() == ["Vcenterserver"]
+    assert [r.uid for r in back.vertices("Vcenterserver").collect()] == ["vc2"]
+
+
+def test_read_refuses_version_1_snapshot(spark, tmp_path):
+    """A version-1 marker records no schemas. ``read`` refuses it, naming
+    the path, rather than inferring them."""
+    import re
+
+    from vmware_graph_spark import commit
+    from vmware_graph_spark.store.graph import GraphStore
+
+    path = str(tmp_path / "snap")
+    _small_snapshot_store(spark).write(path)
+    commit.mark(path, {"kind": "graph-snapshot", "version": 1})
+    with pytest.raises(ValueError, match=re.escape(path) + ".*rebuild"):
+        GraphStore.read(spark, path)
 
 
 def test_analytics_views_on_read_store_submits_no_jobs(spark, tmp_path):

@@ -199,60 +199,6 @@ def test_runtime_bloom_filter_available_for_selective_shuffle_joins(spark):
             spark.conf.set(k, v)
 
 
-def test_tenant_partitioned_snapshot_prunes_scan(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from vmware_graph_spark.store.graph import GraphStore
-
-    store = GraphStore(spark)
-    store.upsert_nodes(
-        "Vcentercluster",
-        spark.createDataFrame(
-            [("c1", "vc-A", "2"), ("c2", "vc-A", "3"), ("c3", "vc-B", "4")],
-            ["name", "managedby", "hosts"],
-        ),
-    )
-    path = str(tmp_path / "snap")
-    store.write(path, partition_vertices_by=("managedby",))
-
-    back = GraphStore.read(spark, path)
-    df = back.vertices("Vcentercluster").filter(F.col("managedby") == "vc-A")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # tenant filter becomes a partition filter on the scan, not a row filter
-    assert "PartitionFilters" in plan and "managedby" in plan.split("PartitionFilters", 1)[1][:200]
-    assert df.count() == 2
-    # dimension labels without the column still round-trip unpartitioned
-    store.upsert_nodes(
-        "Vconfigstatus", spark.createDataFrame([("green",)], ["name"])
-    )
-    store.write(path + "2", partition_vertices_by=("managedby",))
-    assert GraphStore.read(spark, path + "2").vertices("Vconfigstatus").count() == 1
-
-
-def test_clustered_write_produces_sorted_files(spark, tmp_path):
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from vmware_graph_spark.store.graph import GraphStore
-
-    store = GraphStore(spark)
-    rows = [(f"u{i:04d}", f"vc-{i % 2}", str(i)) for i in range(999, -1, -1)]
-    store.upsert_nodes(
-        "Vcentercluster",
-        spark.createDataFrame(rows, ["name", "managedby", "hosts"]),
-    )
-    path = str(tmp_path / "snap")
-    store.write(path, cluster_by_key=True)
-    files = glob.glob(path + "/vertices/Vcentercluster/*.parquet")
-    assert files
-    for f in files:
-        names = pq.read_table(f, columns=["name"]).column("name").to_pylist()
-        assert names == sorted(names), f  # in-file order backs min/max skipping
-    # and the snapshot still round-trips completely
-    assert GraphStore.read(spark, path).vertices("Vcentercluster").count() == 1000
-
-
 def test_pq_plans_broadcast_codebook_no_cartesian(spark):
     plan = executed_plan(spark, "pq_adc_topk_embeddings")
     assert "CartesianProduct" not in plan

@@ -6,10 +6,10 @@ equi-join, and the unique constraints become the merge discipline (one
 row per natural key, enforced by ``operators.merge``).
 
 Design for 100 TB:
-- vertex tables are columnar parquet, one directory per label; the big
-  labels (Virtualmachine, Virtualdisk) dominate and get hash layout on
-  their key via bucketed writes; dimension labels are tiny and always
-  broadcast into joins.
+- vertex tables are columnar parquet, one unpartitioned directory per
+  label; dimension labels are tiny and always broadcast into joins.
+  Nothing here buckets: ``sources/bucketed.py`` is the engine's one
+  bucketed (hash-layout) write.
 - the edge table is ONE DataFrame ``(src_label, src_key, rel_type,
   dst_label, dst_key)`` partitioned by rel_type on disk, so motif/hop
   queries prune to the relationship types they touch.
@@ -40,7 +40,6 @@ from vmware_graph_spark.operators.merge import (
     ORDER_COL,
     PROPS_COL,
     _bt,
-    _norm_props,
     merge_edges,
     merge_edges_with_props,
     merge_nodes,
@@ -191,10 +190,11 @@ T = TypeVar("T")
 
 def _fan_out(spark: SparkSession, tasks: Sequence[Callable[[], T]]) -> list[T]:
     """Run ``tasks`` concurrently on a small bounded pool; results in
-    task order. Each task is one tiny Spark job (a label write, a
-    label's schema inference), so serial submission is pure scheduler
-    latency — jobs from several threads share the scheduler (FAIR/FIFO
-    both fine for jobs with disjoint outputs). Each task inherits the
+    task order. A task is one tiny Spark job (a label write), so
+    serial submission is pure scheduler latency — jobs from several
+    threads share the scheduler (FAIR/FIFO both fine for jobs with
+    disjoint outputs) — or a label open, which lists files and plans
+    and runs no job, yet still overlaps well. Each task inherits the
     caller's local properties (job group, description, scheduler pool),
     which pinned-thread pool workers would otherwise drop.
 
@@ -217,8 +217,9 @@ def _fan_out(spark: SparkSession, tasks: Sequence[Callable[[], T]]) -> list[T]:
     return [f.result() for f in futs]
 
 
-# The commit marker every snapshot carries; ``write`` stamps it last.
-SNAPSHOT_MARK = {"kind": "graph-snapshot", "version": 1}
+# The commit marker every snapshot carries; ``write`` stamps it last,
+# adding ``labels``: each label's schema as DDL.
+SNAPSHOT_MARK = {"kind": "graph-snapshot", "version": 2}
 
 
 def _latest(base: str) -> int | None:
@@ -443,58 +444,24 @@ class GraphStore:
 
     # -- snapshot persistence (S4) -----------------------------------------
 
-    def write(
-        self,
-        path: str,
-        *,
-        partition_vertices_by: Sequence[str] = (),
-        cluster_by_key: bool = False,
-    ) -> None:
-        """Snapshot writer: one parquet dir per label + edges partitioned
-        by rel_type (partition pruning for per-type hop queries).
-
-        ``partition_vertices_by`` (typically ``("managedby",)``) adds
-        hive-style partitioning to every label that carries those
-        columns — the tenancy layout for scale: a per-vCenter refresh
-        or sweep then scans ONLY that tenant's directories (partition
-        pruning, asserted in tests/test_plans.py), instead of filtering
-        a full-corpus scan. Labels without the columns (global
-        dimension labels) write unpartitioned as before.
-
-        ``cluster_by_key`` additionally repartitions each label on its
-        natural key and sorts within partitions, so every parquet file
-        covers a tight, non-overlapping key range and its row-group
-        min/max statistics turn key lookups into file/row-group skips —
-        the sorted-layout half of what the reference's 17 ``CREATE
-        INDEX`` statements bought (refresh-vmware.cypher:2-20); the
-        hash half is ``sources/bucketed.py``. Pay the sort once at
-        publish, skip on every read after.
+    def write(self, path: str) -> None:
+        """Snapshot writer: one unpartitioned parquet dir per label +
+        edges partitioned by rel_type (partition pruning for per-type
+        hop queries).
 
         The snapshot commits through ``commit``: its marker is removed
         before the first table is written and stamped after the last,
-        so ``read`` refuses a snapshot whose write did not finish.
+        so ``read`` refuses a snapshot whose write did not finish. The
+        marker names the labels this write wrote, each with its schema
+        (known on the driver, so recording it runs no job).
         """
         commit.unmark(path)
         # flush serially (mutates shared state), then submit the ~42
         # per-label write jobs concurrently (see _fan_out). Measured at
         # sf0.01: publish 17 s → ~6 s.
-        jobs = []
-        for label in self.labels():
-            self._flush(label)
-            df = self._vertices[label]
-            if cluster_by_key:
-                keys = [k for k in LABEL_KEYS[label] if k in df.columns]
-                if keys:
-                    df = df.repartition(*keys).sortWithinPartitions(*keys)
-            cols = [c for c in partition_vertices_by if c in df.columns]
-            jobs.append((label, df, cols))
+        vertices = {label: self.vertices(label) for label in self.labels()}
         edges = self.edges_with_props()
-
-        def _write_label(label, df, cols):
-            w = df.write.mode("overwrite")
-            if cols:
-                w = w.partitionBy(*cols)
-            w.parquet(os.path.join(path, "vertices", label))
+        vdir = os.path.join(path, "vertices")
 
         def _write_edges():
             edges.write.mode("overwrite").partitionBy("rel_type").parquet(
@@ -503,9 +470,14 @@ class GraphStore:
 
         _fan_out(
             self.spark,
-            [lambda j=j: _write_label(*j) for j in jobs] + [_write_edges],
+            [
+                lambda lb=lb: vertices[lb].write.mode("overwrite").parquet(os.path.join(vdir, lb))
+                for lb in vertices
+            ]
+            + [_write_edges],
         )
-        commit.mark(path, SNAPSHOT_MARK)
+        labels = {lb: df.schema.toDDL() for lb, df in vertices.items()}
+        commit.mark(path, {**SNAPSHOT_MARK, "labels": labels})
 
     def publish(self, path: str) -> None:
         """Write the snapshot to a staging dir, then swap it into place.
@@ -522,39 +494,47 @@ class GraphStore:
 
     @classmethod
     def read(cls, spark: SparkSession, path: str) -> "GraphStore":
-        """Open a published snapshot as plain scans. Label directories
-        open concurrently (each runs a schema-inference job). A
-        directory holding ``vertices/`` or ``edges/`` without the commit
-        marker raises ``commit.Unmarked``; an absent or empty one reads
-        as an empty graph (a first build).
+        """Open a published snapshot as plain scans, running no Spark
+        job: the labels are those the commit marker names, each opened
+        by the schema ``write`` recorded for it, as the edge table is by
+        ``EDGE_SCHEMA_PROPS``. A directory holding ``vertices/`` or
+        ``edges/`` without the marker raises ``commit.Unmarked``, and one
+        whose marker is of another version raises ``ValueError``; both
+        name the path. An absent or empty directory reads as an empty
+        graph (a first build).
 
         ``write`` is the only writer of ``edges/`` and it persists
         ``edges_with_props()``: null keys dropped, undirected types
-        canonicalized, one row per 5-tuple. So both edge caches are
-        plain projections of the scan — no re-merge, no lineage cut. The
-        scan is also queued as an edge batch, so a later ``add_edges``
-        re-merges the union with full MERGE semantics."""
+        canonicalized, one row per 5-tuple, ``props`` never null. So
+        both edge caches are plain projections of the scan (which puts
+        the partition column ``rel_type`` last) — no re-merge, no
+        lineage cut. The scan is also queued as an edge
+        batch, so a later ``add_edges`` re-merges the union with full
+        MERGE semantics."""
         commit.recover(path)
         store = cls(spark)
-        vdir, edir = os.path.join(path, "vertices"), os.path.join(path, "edges")
-        if os.path.isdir(vdir) or os.path.isdir(edir):
-            commit.read_mark(path, "graph snapshot")
-        if os.path.isdir(vdir):
-            labels = sorted(os.listdir(vdir))
-            dfs = _fan_out(
-                spark,
-                [lambda d=os.path.join(vdir, lb): spark.read.parquet(d) for lb in labels],
+        if not any(os.path.isdir(os.path.join(path, d)) for d in ("vertices", "edges")):
+            return store
+        meta = commit.read_mark(path, "graph snapshot")
+        if meta.get("version") != SNAPSHOT_MARK["version"]:
+            raise ValueError(
+                f"graph snapshot at {path} has format version {meta.get('version')}, "
+                f"this engine reads version {SNAPSHOT_MARK['version']}; rebuild it"
             )
-            store._vertices.update(zip(labels, dfs))
-        if os.path.isdir(edir):
-            # Explicit schema: a snapshot written from an edge-less graph
-            # has no parquet data files to infer from. Pre-props
-            # snapshots simply yield an all-null props column, which
-            # _norm_props turns into empty maps.
-            edges = spark.read.schema(EDGE_SCHEMA_PROPS).parquet(edir)
-            store.add_edges(edges)
-            store._edges_cache = edges.select(*EDGE_COLS)
-            store._edges_props_cache = _norm_props(edges)
+        labels = meta["labels"]
+        vdir = os.path.join(path, "vertices")
+        dfs = _fan_out(
+            spark,
+            [
+                lambda lb=lb: spark.read.schema(labels[lb]).parquet(os.path.join(vdir, lb))
+                for lb in labels
+            ],
+        )
+        store._vertices.update(zip(labels, dfs))
+        edges = spark.read.schema(EDGE_SCHEMA_PROPS).parquet(os.path.join(path, "edges"))
+        store.add_edges(edges)
+        store._edges_cache = edges.select(*EDGE_COLS)
+        store._edges_props_cache = edges.select(*EDGE_COLS, PROPS_COL)
         return store
 
     # -- versioned snapshots (time travel) ---------------------------------
