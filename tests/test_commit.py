@@ -218,6 +218,20 @@ def test_graph_vacuum_crash_is_old_or_unmarked(spark, tmp_path, crash_at, graphs
     )
 
 
+def test_graph_write_failing_flush_raises_and_leaves_unmarked(spark, tmp_path, graphs):
+    """One label's flush fails inside ``write``'s concurrent tasks: the
+    error reaches the caller and the snapshot is left unmarked."""
+    old, new, _, _ = graphs
+    path = str(tmp_path / "snap")
+    old.write(path)
+    # a batch without the label's key column fails the label's merge
+    new.upsert_nodes("Vcentercluster", spark.createDataFrame([("c1",)], "ha string"))
+    with pytest.raises(Exception, match="managedby|name"):
+        new.write(path)
+    with pytest.raises(commit.Unmarked, match=re.escape(path)):
+        GraphStore.read(spark, path)
+
+
 def test_snapshot_read_absent_or_empty_is_first_build(spark, tmp_path):
     """The CLI's first build reads an absent or empty directory."""
     (tmp_path / "empty").mkdir()

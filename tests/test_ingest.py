@@ -333,8 +333,9 @@ def test_all_vertex_keys_equal_node_key(spark, tmp_path):
     ).write.parquet(os.path.join(vdir, "Vcentercluster"))
     spark.createDataFrame([], EDGE_SCHEMA_PROPS).write.parquet(os.path.join(path, "edges"))
     # a hand-built snapshot commits like write(): its tables, then a
-    # marker naming each label's schema
-    commit.mark(path, {**SNAPSHOT_MARK, "labels": labels})
+    # marker naming each label's schema and the graph's counts
+    counts = {"edges": 0, "v:Vcenterserver": 2, "v:Vcentercluster": 2}
+    commit.mark(path, {**SNAPSHOT_MARK, "labels": labels, "counts": counts})
     store = GraphStore.read(spark, path)
 
     got = store.all_vertex_keys()
@@ -1109,7 +1110,9 @@ def test_read_label_schemas_equal_parquet_inference(built, spark, tmp_path):
 
 def test_rewrite_to_same_path_drops_labels_it_lacks(spark, tmp_path):
     """``read`` serves the labels of the last ``write`` to a path. A
-    label only an earlier write held stays on disk but is not read."""
+    label only an earlier write held is neither read nor left on disk."""
+    import os
+
     from vmware_graph_spark.store.graph import GraphStore
 
     path = str(tmp_path / "snap")
@@ -1120,11 +1123,13 @@ def test_rewrite_to_same_path_drops_labels_it_lacks(spark, tmp_path):
     back = GraphStore.read(spark, path)
     assert back.labels() == ["Vcenterserver"]
     assert [r.uid for r in back.vertices("Vcenterserver").collect()] == ["vc2"]
+    assert not os.path.exists(os.path.join(path, "vertices", "Vcentercluster"))
 
 
 def test_read_refuses_version_1_snapshot(spark, tmp_path):
-    """A version-1 marker records no schemas. ``read`` refuses it, naming
-    the path, rather than inferring them."""
+    """A version-1 marker records no schemas, a version-2 marker no
+    counts. ``read`` refuses both, naming the path, rather than
+    inferring or recounting them."""
     import re
 
     from vmware_graph_spark import commit
@@ -1132,9 +1137,60 @@ def test_read_refuses_version_1_snapshot(spark, tmp_path):
 
     path = str(tmp_path / "snap")
     _small_snapshot_store(spark).write(path)
-    commit.mark(path, {"kind": "graph-snapshot", "version": 1})
-    with pytest.raises(ValueError, match=re.escape(path) + ".*rebuild"):
-        GraphStore.read(spark, path)
+    labels = commit.read_mark(path, "graph snapshot")["labels"]
+    for old in ({"version": 1}, {"version": 2, "labels": labels}):
+        commit.mark(path, {"kind": "graph-snapshot", **old})
+        with pytest.raises(ValueError, match=re.escape(path) + ".*rebuild"):
+            GraphStore.read(spark, path)
+
+
+def _described_jobs(spark) -> list[str]:
+    """Every job description in the driver's status store."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    descs = (jobs.apply(i).description() for i in range(jobs.length()))
+    return [d.get() for d in descs if d.isDefined()]
+
+
+def test_write_jobs_described_by_their_label(spark, tmp_path):
+    """Each concurrent ``write`` task names its work as the Spark job
+    description: ``write <Label>`` per label, ``write edges``."""
+    store = _small_snapshot_store(spark)
+    store.write(str(tmp_path / "snap"))
+    descs = set(_described_jobs(spark))
+    for work in ("write edges", *(f"write {lb}" for lb in store.labels())):
+        assert work in descs, (work, sorted(descs)[-20:])
+
+
+def test_counts_on_read_store_come_from_marker(spark, tmp_path):
+    """``counts()`` on a store unchanged since ``read`` answers from the
+    counts ``write`` recorded, with no Spark job, and they equal a
+    recount. Any ``upsert_nodes`` or ``add_edges`` recounts."""
+    from vmware_graph_spark.store.graph import GraphStore
+
+    path = str(tmp_path / "snap")
+    store = _small_snapshot_store(spark)
+    store.write(path)
+    want = {"edges": 1, "v:Vcentercluster": 1, "v:Vcenterserver": 1}
+    assert store.counts() == want  # the in-memory store recounts
+    sc = spark.sparkContext
+    group = "snapshot-counts"
+    sc.setJobGroup(group, "counts of a read snapshot")
+    try:
+        assert GraphStore.read(spark, path).counts() == want
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    upserted = GraphStore.read(spark, path)
+    upserted.upsert_nodes("Vcenterserver", spark.createDataFrame([("vc2",)], ["uid"]))
+    assert upserted.counts() == {**want, "v:Vcenterserver": 2}
+    added = GraphStore.read(spark, path)
+    added.add_edges(spark.createDataFrame(
+        [("Vcentercluster", k("c1", "vc1"), "IN_DC", "Vcenterserver", "vc1")],
+        ["src_label", "src_key", "rel_type", "dst_label", "dst_key"],
+    ))
+    assert added.counts() == {**want, "edges": 2}
 
 
 def test_analytics_views_on_read_store_submits_no_jobs(spark, tmp_path):

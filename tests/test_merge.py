@@ -258,10 +258,12 @@ def _windows(df):
     return df._jdf.queryExecution().executedPlan().toString().count("Window [")
 
 
-def test_graphstore_flush_runs_equal_sequential_merges(spark):
+def test_graphstore_flush_runs_equal_sequential_merges(spark, tmp_path):
     """Upserts queued as [s1, s1, s2, s1] (two column sets) read back
-    once equal merging them one at a time; a two-batch same-column run
-    onto a stored label with those columns adds ONE pick window."""
+    once equal merging them one at a time, whether each label is
+    flushed serially or all of them concurrently by ``write``; a
+    two-batch same-column run onto a stored label with those columns
+    adds ONE pick window."""
     from vmware_graph_spark.store.graph import GraphStore
 
     label, keys = "Vcenterserver", ["uid"]
@@ -279,9 +281,21 @@ def test_graphstore_flush_runs_equal_sequential_merges(spark):
         seq = merge_nodes(seq, b, keys)
     got = store.vertices(label)
     assert got.columns == seq.columns
-    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
-        map(tuple, seq.collect()), key=repr
-    )
+    want = sorted(map(tuple, seq.collect()), key=repr)
+    assert sorted(map(tuple, got.collect()), key=repr) == want
+
+    # the same queue on three labels (keyed uid, path, url), written by
+    # write()'s concurrent flush tasks, reads back the same rows
+    fanned = GraphStore(spark)
+    named = {"Vcenterserver": "uid", "Vfolder": "path", "Vdatastore": "url"}
+    for lb, key in named.items():
+        for b in (s1a, s1b, s2, s1c):
+            fanned.upsert_nodes(lb, b.withColumnRenamed("uid", key))
+    fanned.write(str(tmp_path / "snap"))
+    back = GraphStore.read(spark, str(tmp_path / "snap"))
+    for lb, key in named.items():
+        rows = back.vertices(lb).withColumnRenamed(key, "uid").select(*seq.columns)
+        assert sorted(map(tuple, rows.collect()), key=repr) == want, lb
 
     store = GraphStore(spark, checkpoint=False)
     store.upsert_nodes(label, s1a)

@@ -97,6 +97,9 @@ def refresh(
     # A null UID names no tenant (``managedby IN (NULL)`` matches nothing).
     tenants = sorted({r[0] for r in sheets["vCluster"].select(UID).collect()} - {None})
 
+    # materialize curr's labels concurrently (GraphStore.flush), so the
+    # loop below reads them back without a serial cut per label
+    curr.flush()
     final = GraphStore(spark)
     orphan_rows: dict[str, DataFrame] = {}
     marked_rows: dict[str, DataFrame] = {}
